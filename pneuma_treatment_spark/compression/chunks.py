@@ -3,20 +3,23 @@ byte-array chunks (north_star storage format).
 
 Tall layout: one row per (conv_id [, p_day], tier, metric) holding the
 Gorilla blob for that metric's (bucket_ts, value) series, plus chunk stats
-(n_points, start/end ts) for pruning. Encoding runs inside Arrow-batched
-``applyInPandas`` per series — executors each compress their own groups, no
-driver involvement; reading explodes chunks back to points via
-``mapInPandas``.
+(n_points, start/end ts) for pruning. Encoding runs as one sorted Arrow
+stream per task (``mapInArrow``) — executors each compress their own
+series, no driver involvement; reading explodes chunks back to points via
+``mapInArrow``. Timestamps cross to Python as epoch microseconds both ways,
+so the session time zone never shifts them.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from pneuma_treatment_spark.compression.gorilla import decode_chunks, encode_chunks
+from pneuma_treatment_spark.seriesmap import key_starts, map_sorted_series, series_units
 
 
 # Store the EXACT integer partials, never derived float rates: the XOR
@@ -70,94 +73,77 @@ POINT_SCHEMA = T.StructType(
 def write_chunks(
     rollup: DataFrame,
     metrics: tuple[str, ...] = DEFAULT_METRICS,
-    group_buckets: int = 256,
     window_days: dict[str, int] | None = None,
 ) -> DataFrame:
     """Compress a rollup tier DataFrame (conv_id, bucket_ts, tier, metrics…)
     into Gorilla chunk rows, one chunk per (conv_id, tier, window, metric).
 
-    Shuffles on a hash bucket of conv_id ONLY (the same single exchange as
-    ever — pinned by test_chunk_write_single_exchange; hash buckets, not
-    per-series or per-window groups, because per-group Arrow overhead
-    dominates with many small groups — a measured warm-JVM A/B of putting
-    (tier, p_day) into the group key cost +56-80% roundtrip wall,
-    BENCH/ab_chunk_window.json). The window boundary is enforced INSIDE the
-    kernel instead: every row of a conversation lands in one bucket, so
-    adding the tier's TIER_WINDOW_DAYS-aligned window id to the
-    series-change mask splits chunks at window starts with a few numpy ops.
+    One sorted Arrow stream per task (:mod:`..seriesmap`): a hash
+    repartition on conv_id ONLY (the single exchange — pinned by
+    test_chunk_write_single_exchange), a JVM sort by (conv_id, tier,
+    bucket_ts), and ``mapInArrow`` over units of whole series. The window
+    boundary is part of the series change mask, not of the shuffle key:
+    adding the tier's TIER_WINDOW_DAYS-aligned window id to the mask splits
+    chunks at window starts with a few numpy ops, and ONE batched
+    encode_chunks call per metric and unit encodes every series in it
+    (per-chunk numpy dispatch was ~260 µs on 2-8-point series — 28x).
     """
-    from pyspark.sql import functions as F
-
     windows = window_days if window_days is not None else TIER_WINDOW_DAYS
+    ts_type = pa.timestamp("us", tz=rollup.sparkSession.conf.get("spark.sql.session.timeZone"))
 
-    def enc_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one bucket-wide sort + numpy slice bounds instead of a pandas
-        # groupby over millions of tiny series (per-group frame construction
-        # dominated the stage, not the encoding), and ONE batched
-        # encode_chunks call per metric instead of a per-series encode
-        # (per-chunk numpy dispatch was ~260 µs on 2-8-point series — 28x)
-        pdf = pdf.sort_values(["conv_id", "tier", "bucket_ts"]).reset_index(drop=True)
-        conv = pdf["conv_id"].to_numpy()
-        tier = pdf["tier"].to_numpy()
-        ts64 = pdf["bucket_ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        # tier-dependent TTL window id: chunks never cross a window start
-        wd = pdf["tier"].map(windows).fillna(1).astype("int64").to_numpy()
-        eday = np.floor_divide(ts64, 86_400_000_000)
-        win = np.floor_divide(eday, wd) * wd
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        if n:
-            change[0] = True
-            change[1:] = (
-                (conv[1:] != conv[:-1])
-                | (tier[1:] != tier[:-1])
-                | (win[1:] != win[:-1])
+    def window_start_day(b: pa.RecordBatch) -> np.ndarray:
+        # tier-dependent TTL window id (epoch day of the window start)
+        tier = b.column("tier").dictionary_encode()
+        wd_of = np.array(
+            [windows.get(t, 1) for t in tier.dictionary.to_pylist()], dtype=np.int64
+        )
+        wd = wd_of[tier.indices.to_numpy(zero_copy_only=False)]
+        eday = np.floor_divide(_micros(b), 86_400_000_000)
+        return np.floor_divide(eday, wd) * wd
+
+    def starts(b: pa.RecordBatch) -> np.ndarray:
+        s = key_starts(b, ("conv_id", "tier"))
+        win = window_start_day(b)
+        s[1:] |= win[1:] != win[:-1]
+        return s
+
+    def enc(batches):
+        for unit, bounds in series_units(batches, starts):
+            ts64 = _micros(unit)
+            lengths = np.diff(bounds)
+            per_metric = [
+                encode_chunks(
+                    ts64,
+                    pc.cast(unit.column(m), pa.float64()).to_numpy(zero_copy_only=False),
+                    lengths,
+                )
+                for m in metrics
+            ]
+            # series-major rows: a series' metric chunks sit side by side
+            # (they share the timestamp stream, which page compression finds)
+            k = len(metrics)
+            first = np.repeat(bounds[:-1], k)
+            take = pa.array(first)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    unit.column("conv_id").take(take),
+                    unit.column("tier").take(take),
+                    pa.array(window_start_day(unit)[first].astype(np.int32), pa.date32()),
+                    pa.array(np.tile(np.array(metrics, dtype=object), len(lengths)), pa.string()),
+                    pa.array(np.repeat(lengths.astype(np.int32), k)),
+                    pa.array(ts64[first], ts_type),
+                    pa.array(ts64[np.repeat(bounds[1:] - 1, k)], ts_type),
+                    pa.array([c for row in zip(*per_metric) for c in row], pa.binary()),
+                ],
+                names=CHUNK_SCHEMA.names,
             )
-        firsts = np.flatnonzero(change)
-        bounds = np.append(firsts, n)
-        lengths = np.diff(bounds)
-        nseries = len(firsts)
-        lasts = bounds[1:] - 1
-        conv_s = conv[firsts] if nseries else conv[:0]
-        tier_s = tier[firsts] if nseries else tier[:0]
-        pday_s = (
-            pd.to_datetime(win[firsts] * 86400, unit="s").date
-            if nseries
-            else np.array([], dtype=object)
-        )
-        start_s = ts64[firsts] if nseries else ts64[:0]
-        end_s = ts64[lasts] if nseries else ts64[:0]
-        blobs: list = []
-        for m in metrics:
-            blobs.extend(encode_chunks(ts64, pdf[m].to_numpy(dtype=np.float64), lengths))
-        k = len(metrics)
-        return pd.DataFrame(
-            {
-                "conv_id": np.tile(conv_s, k),
-                "tier": np.tile(tier_s, k),
-                "p_day": np.tile(pday_s, k),
-                "metric": np.repeat(np.array(metrics, dtype=object), nseries),
-                "n_points": np.tile(lengths.astype(np.int32), k),
-                "start_ts": pd.to_datetime(np.tile(start_s, k), unit="us"),
-                "end_ts": pd.to_datetime(np.tile(end_s, k), unit="us"),
-                "chunk": blobs,
-            }
-        )
 
-    from pneuma_treatment_spark.session import pin_bucket_parallelism
+    return map_sorted_series(rollup, ["conv_id"], ["tier", "bucket_ts"], enc, CHUNK_SCHEMA)
 
-    # pin the encode stage's task count (AQE would coalesce the few-MB
-    # shuffle to 1-2 tasks and serialize the Python encode — see
-    # session.pin_bucket_parallelism)
-    keyed = pin_bucket_parallelism(
-        rollup.withColumn(
-            "__g", F.pmod(F.xxhash64("conv_id"), F.lit(group_buckets)).cast("int")
-        ),
-        group_buckets,
-    )
-    return keyed.groupBy("__g").applyInPandas(
-        lambda p: enc_bucket(p.drop(columns="__g")), CHUNK_SCHEMA
-    )
+
+def _micros(b: pa.RecordBatch) -> np.ndarray:
+    """``bucket_ts`` as int64 epoch microseconds."""
+    return b.column("bucket_ts").cast(pa.int64()).to_numpy(zero_copy_only=False)
 
 
 def chunk_ttl_sql_predicate(
@@ -193,22 +179,26 @@ def read_chunks(chunks: DataFrame) -> DataFrame:
     series) — per-chunk decode + per-chunk DataFrame construction was
     ~300 µs/chunk, the read path's wall for tiers storing millions of
     small chunks."""
+    ts_type = pa.timestamp("us", tz=chunks.sparkSession.conf.get("spark.sql.session.timeZone"))
+
     def dec(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            lens, ts, vals = decode_chunks(list(pdf["chunk"]))
-            yield pd.DataFrame(
-                {
-                    "conv_id": np.repeat(pdf["conv_id"].to_numpy(), lens),
-                    "tier": np.repeat(pdf["tier"].to_numpy(), lens),
-                    "metric": np.repeat(pdf["metric"].to_numpy(), lens),
-                    "bucket_ts": pd.to_datetime(ts, unit="us"),
-                    "value": vals,
-                }
+            lens, ts, vals = decode_chunks(b.column("chunk").to_pylist())
+            take = pa.array(np.repeat(np.arange(b.num_rows), lens))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("conv_id").take(take),
+                    b.column("tier").take(take),
+                    b.column("metric").take(take),
+                    pa.array(ts, ts_type),
+                    pa.array(vals, from_pandas=True),
+                ],
+                names=POINT_SCHEMA.names,
             )
 
-    return chunks.mapInPandas(dec, POINT_SCHEMA)
+    return chunks.mapInArrow(dec, POINT_SCHEMA)
 
 
 def read_chunks_range(chunks: DataFrame, start, end) -> DataFrame:

@@ -122,7 +122,7 @@ class TableIO:
             # file-open/commit-bound, not byte-bound — AQE's byte-sized
             # rebalance coalesces the writer to ONE task that opens every
             # p_day file serially (the same bytes-vs-fixed-cost mismatch
-            # pin_bucket_parallelism fixes for pandas kernels). A keyed
+            # seriesmap.map_sorted_series fixes for Python kernels). A keyed
             # repartition to the session's shuffle partitions is
             # AQE-exempt, keeps exactly one file per day dir, and measured
             # 1.6->1.1 s per tier write at bench size with identical file

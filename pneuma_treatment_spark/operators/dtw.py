@@ -5,18 +5,21 @@ euclidean DP cost matrix, optional Sakoe-Chiba band, distance = sqrt(D[n,m]),
 normalized by mean series length; NaNs dropped before the DP (``:46-50``).
 
 Series per key are short rollup outputs (≤ a few thousand points), so the
-O(n·m) DP runs vectorized-row-at-a-time numpy inside a bucket-grouped pandas
-stage — the distribution axis is the number of keys, exactly the
-embarrassingly-parallel shape the reference runs sequentially.
+O(n·m) DP runs vectorized-row-at-a-time numpy over one sorted Arrow stream
+per task (:mod:`..seriesmap`) — the distribution axis is the number of keys,
+exactly the embarrassingly-parallel shape the reference runs sequentially.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pneuma_treatment_spark.seriesmap import key_starts, map_sorted_series, series_units
 
 
 def dtw_distance(a: np.ndarray, b: np.ndarray, band: int | None = None) -> float:
@@ -161,7 +164,6 @@ def dtw_compare(
     time_col: str = "bucket_ts",
     value_col: str = "token_rate",
     band: int | None = None,
-    group_buckets: int = 64,
     with_path: bool = False,
     tie_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -178,31 +180,38 @@ def dtw_compare(
     jcols = [key, time_col, *tie_cols]
     a = truth.select(*jcols, F.col(value_col).alias("va"))
     b = model.select(*jcols, F.col(value_col).alias("vb"))
-    j = a.join(b, jcols, "full_outer").withColumn(
-        "__g", F.pmod(F.xxhash64(key), F.lit(group_buckets)).cast("int")
-    )
-    sort_cols = [time_col, *tie_cols]
+    j = a.join(b, jcols, "full_outer")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for k, g in pdf.groupby(key, sort=False):
-            g = g.sort_values(sort_cols)
-            va = g["va"].to_numpy(np.float64)
-            vb = g["vb"].to_numpy(np.float64)
-            va_c = va[~np.isnan(va)]
-            vb_c = vb[~np.isnan(vb)]
-            row = {
-                key: k,
-                "n_a": len(va_c),
-                "n_b": len(vb_c),
-                "dtw": dtw_distance(va, vb, band),
-                "dtw_normalized": dtw_normalized(va_c, vb_c, band),
-            }
-            if with_path:
-                row.update(path_error_stats(va_c, vb_c, band))
-            rows.append(row)
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def kernel(batches):
+        for unit, bounds in series_units(batches, lambda u: key_starts(u, [key])):
+            va_all = pc.cast(unit.column("va"), pa.float64()).to_numpy(zero_copy_only=False)
+            vb_all = pc.cast(unit.column("vb"), pa.float64()).to_numpy(zero_copy_only=False)
+            cols: dict[str, list] = {f.name: [] for f in schema.fields[1:]}
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                va, vb = va_all[s:e], vb_all[s:e]
+                va_c = va[~np.isnan(va)]
+                vb_c = vb[~np.isnan(vb)]
+                row = {
+                    "n_a": len(va_c),
+                    "n_b": len(vb_c),
+                    "dtw": dtw_distance(va, vb, band),
+                    "dtw_normalized": dtw_normalized(va_c, vb_c, band),
+                }
+                if with_path:
+                    row.update(path_error_stats(va_c, vb_c, band))
+                for c, v in cols.items():
+                    v.append(row[c])
+            yield pa.RecordBatch.from_arrays(
+                [unit.column(key).take(pa.array(bounds[:-1]))]
+                + [
+                    pa.array(
+                        cols[f.name],
+                        pa.int32() if isinstance(f.dataType, T.IntegerType) else pa.float64(),
+                        from_pandas=True,
+                    )
+                    for f in schema.fields[1:]
+                ],
+                names=schema.names,
+            )
 
-    return j.groupBy("__g").applyInPandas(
-        lambda p: kernel(p.drop(columns="__g")), schema
-    )
+    return map_sorted_series(j, [key], [time_col, *tie_cols], kernel, schema)

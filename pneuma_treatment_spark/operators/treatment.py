@@ -12,22 +12,23 @@ identical.
 Execution shape (vs the reference's sequential ``for v_id in ids`` loop):
 
 * **Stages A+B+C** (bounded-support kernels: SG window 25, median window 5,
-  run merge radius merge_gap, replacement) — ONE Arrow-batched
-  ``applyInPandas`` per conv_id, or **chunked** per (conv_id, chunk) with
+  run merge radius merge_gap, replacement) — ONE sorted Arrow stream per
+  task (``mapInArrow``, see :mod:`..seriesmap`) with conv_id as the series
+  key, or **chunked** with (conv_id, chunk) as the key and
   halo rows (halo_a + merge_gap) for mega-conversations whose full series
   must not land on one executor. Halo ≥ total dependency radius ⇒ chunked
   == unchunked bit-for-bit. (The run merge, ``processor.py:390-399``, was
   formerly a separate SQL window stage — two full-frame sorts and a
-  conv-partitioned exchange between the pandas stages; it is
+  conv-partitioned exchange between the Python stages; it is
   bounded-support, so round 5 fused it into the kernel.)
 * **conv_has_anomaly** — the one genuinely conv-global bit (== any
-  raw_anomaly). Non-chunked: in-slice any (groups hold whole convs), so
-  the WHOLE chain is one pandas stage / one exchange. Chunked: a tiny
+  raw_anomaly). Non-chunked: in-slice any (series are whole convs), so
+  the WHOLE chain is one Python stage / one exchange. Chunked: a tiny
   (conv_id, bool) flags side joins in — precomputed by the caller via
   :func:`raw_anomaly_col` + :func:`conv_anomaly_flags` (free when a prior
   stage already runs conv windows), else derived by a slim 3-column pass.
 * **Stage D** (Gaussian sigma-12 smooth + gradient, ``processor.py:401-448``
-  incl. the no-anomaly passthrough branch) — second pandas stage, chunkable
+  incl. the no-anomaly passthrough branch) — second Python stage, chunkable
   with halo ≥ the Gaussian truncation radius (49).
 """
 
@@ -36,13 +37,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pneuma_treatment_spark import kernels as K
-from pneuma_treatment_spark.session import pin_bucket_parallelism as _pin_bucket_parallelism
+from pneuma_treatment_spark.seriesmap import key_starts, map_sorted_series, series_units
 
 
 @dataclass(frozen=True)
@@ -53,7 +55,6 @@ class TreatmentConfig:
     merge_gap: int = 10          # merge anomaly runs < 10 apart (processor.py:303)
     gauss_sigma: float = 12.0    # processor.py:91 (gaussian_filter1d sigma=12)
     chunk_len: int = 4096        # chunked-mode segment length (mega-conversations)
-    group_buckets: int = 256     # pandas-stage task granularity (see _apply)
 
     @property
     def halo_a(self) -> int:
@@ -62,20 +63,6 @@ class TreatmentConfig:
     @property
     def halo_d(self) -> int:
         return int(4.0 * self.gauss_sigma + 0.5) + 1
-
-
-def _group_bounds(pdf: pd.DataFrame, group_cols: tuple[str, ...]) -> np.ndarray:
-    """Slice boundaries of consecutive equal-key runs in a pre-sorted frame:
-    returns indices [0, b1, ..., len]. Replaces a pandas groupby iteration —
-    at millions of ~20-row series the per-group DataFrame construction was
-    the dominant treatment cost, not the math."""
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for c in group_cols:
-        v = pdf[c].to_numpy()
-        change[1:] |= v[1:] != v[:-1]
-    return np.append(np.flatnonzero(change), n)
 
 
 def _run_merge_values(raw: np.ndarray, turns: np.ndarray, gap: int) -> np.ndarray:
@@ -102,11 +89,16 @@ def _run_merge_values(raw: np.ndarray, turns: np.ndarray, gap: int) -> np.ndarra
     return out
 
 
-def _abc_compute(pdf: pd.DataFrame, cfg: TreatmentConfig, bounds: np.ndarray):
+def _f64(b: pa.RecordBatch, name: str) -> np.ndarray:
+    """A column as float64 numpy (nulls → NaN, the kernels' missing value)."""
+    return pc.cast(b.column(name), pa.float64()).to_numpy(zero_copy_only=False)
+
+
+def _abc_compute(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray):
     """Shared A+B+C math over precomputed slice bounds: returns
     (filled, sg, med, raw, merged, treated) numpy arrays."""
-    x = pdf["token_count"].to_numpy(dtype=np.float64)
-    t = pdf["turn_idx"].to_numpy()
+    x = _f64(b, "token_count")
+    t = b.column("turn_idx").to_numpy(zero_copy_only=False)
     n = len(x)
     filled = np.empty(n)
     sg = np.empty(n)
@@ -128,98 +120,78 @@ def _abc_compute(pdf: pd.DataFrame, cfg: TreatmentConfig, bounds: np.ndarray):
     return filled, sg, med, raw, merged, treated
 
 
-def _stage_abc_kernel(
-    pdf: pd.DataFrame, cfg: TreatmentConfig, group_cols: tuple[str, ...]
-) -> pd.DataFrame:
-    """Whole-bucket stages A+B+C: per-series kernels, anomaly run-merge and
-    replacement over numpy slices (the bucket arrives sorted by
-    (*group_cols, turn_idx)). The merge is bounded-support (radius
-    merge_gap + mask radius), so fusing it here removes the former
-    full-frame conv-partitioned window exchange between stages A and D."""
-    b = _group_bounds(pdf, group_cols)
-    filled, sg, med, raw, merged, treated = _abc_compute(pdf, cfg, b)
-    pdf["tokens_filled"] = filled
-    pdf["sg_tokens"] = sg
-    pdf["med_tokens"] = med
-    pdf["raw_anomaly"] = raw
-    pdf["is_anomaly"] = merged
-    pdf["treated_tokens"] = treated
-    return pdf
+def _stage_abc_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
+    """Stages A+B+C: per-series kernels, anomaly run-merge and replacement
+    over numpy slices of a unit sorted by (series key, turn_idx). The
+    merge is bounded-support (radius merge_gap + mask radius), so fusing it
+    here removes the former full-frame conv-partitioned window exchange
+    between stages A and D."""
+    filled, sg, med, raw, merged, treated = _abc_compute(b, cfg, bounds)
+    return {
+        "tokens_filled": filled,
+        "sg_tokens": sg,
+        "med_tokens": med,
+        "raw_anomaly": raw,
+        "is_anomaly": merged,
+        "treated_tokens": treated,
+    }
 
 
-def _stage_full_kernel(
-    pdf: pd.DataFrame, cfg: TreatmentConfig, group_cols: tuple[str, ...]
-) -> pd.DataFrame:
+def _stage_full_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
     """Whole-series single-pass treatment (non-chunked): stages A+B+C+D in
-    one kernel — each group is a complete conversation, so the per-conv
+    one kernel — each series is a complete conversation, so the per-conv
     global ``conv_has_anomaly`` is an in-slice ``any`` and the whole chain
-    runs in ONE exchange (was three). One bounds pass and no
-    pandas→numpy round-trips between the sub-stages."""
-    b = _group_bounds(pdf, group_cols)
-    filled, sg, med, raw, merged, treated = _abc_compute(pdf, cfg, b)
-    n = len(filled)
+    runs in ONE exchange (was three)."""
+    out = _stage_abc_kernel(b, cfg, bounds)
+    merged, treated, sg = out["is_anomaly"], out["treated_tokens"], out["sg_tokens"]
+    n = len(merged)
     conv_has = np.empty(n, dtype=bool)
     g_ns = np.empty(n)
     g_na = np.empty(n)
-    for s, e in zip(b[:-1], b[1:]):
+    for s, e in zip(bounds[:-1], bounds[1:]):
         has = bool(merged[s:e].any())
         conv_has[s:e] = has
         seg = K.gaussian1d(treated[s:e], cfg.gauss_sigma) if has else sg[s:e]
         g_ns[s:e] = seg
         g_na[s:e] = K.gradient(seg, K.DT)
-    pdf["tokens_filled"] = filled
-    pdf["sg_tokens"] = sg
-    pdf["med_tokens"] = med
-    pdf["raw_anomaly"] = raw
-    pdf["is_anomaly"] = merged
-    pdf["treated_tokens"] = treated
-    pdf["conv_has_anomaly"] = conv_has
-    pdf["g_ns"] = g_ns
-    pdf["g_na"] = g_na
-    return pdf
+    out.update(conv_has_anomaly=conv_has, g_ns=g_ns, g_na=g_na)
+    return out
 
 
-def _slim_raw_kernel(
-    pdf: pd.DataFrame, cfg: TreatmentConfig, group_cols: tuple[str, ...]
-) -> pd.DataFrame:
+def _slim_raw_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
     """Raw anomaly mask only (interp + rolling median + tolerance mask) —
     the slim flags branch for chunked mode when no precomputed flags are
     supplied. conv_has_anomaly == any(raw_anomaly): the run merge only
     fills rows BETWEEN existing raw anomalies, so the per-conv any is
     identical on raw and merged masks."""
-    x = pdf["token_count"].to_numpy(dtype=np.float64)
-    n = len(x)
-    raw = np.empty(n, dtype=bool)
-    b = _group_bounds(pdf, group_cols)
-    for s, e in zip(b[:-1], b[1:]):
+    x = _f64(b, "token_count")
+    raw = np.empty(len(x), dtype=bool)
+    for s, e in zip(bounds[:-1], bounds[1:]):
         seg = K.interpolate_linear_both(x[s:e])
         m = K.rolling_median(seg, cfg.med_window)
         raw[s:e] = K.anomaly_mask(seg, m, cfg.tol)
-    pdf["raw_anomaly"] = raw
-    return pdf
+    return {"raw_anomaly": raw}
 
 
-def _stage_d_kernel(
-    pdf: pd.DataFrame, cfg: TreatmentConfig, group_cols: tuple[str, ...]
-) -> pd.DataFrame:
-    treated = pdf["treated_tokens"].to_numpy(np.float64)
-    sg = pdf["sg_tokens"].to_numpy(np.float64)
-    has_anom = pdf["conv_has_anomaly"].to_numpy()
+def _stage_d_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
+    treated = _f64(b, "treated_tokens")
+    sg = _f64(b, "sg_tokens")
+    flag = b.column("conv_has_anomaly")
+    is_null = flag.is_null().to_numpy(zero_copy_only=False)
+    has_anom = flag.fill_null(False).to_numpy(zero_copy_only=False)
     n = len(treated)
     g_ns = np.empty(n)
     g_na = np.empty(n)
-    b = _group_bounds(pdf, group_cols)
-    for s, e in zip(b[:-1], b[1:]):
-        v = has_anom[s]
-        if v is None or (isinstance(v, float) and np.isnan(v)):
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        if is_null[s]:
             # a null flag means the caller-supplied flags frame is missing
             # (or null for) this conversation — silently treating that as
             # "no anomaly" would route the conv down the wrong branch
             raise ValueError(
-                f"conv_has_anomaly is null for {pdf[group_cols[0]].iloc[s]!r}: "
+                f"conv_has_anomaly is null for {b.column('conv_id')[s].as_py()!r}: "
                 "flags= must cover every conversation with a non-null boolean"
             )
-        if bool(v):
+        if has_anom[s]:
             # anomalous branch: gaussian-smooth the treated series, derive
             # (processor.py:401-431: new_speed -> g_ns -> g_na)
             seg = K.gaussian1d(treated[s:e], cfg.gauss_sigma)
@@ -228,16 +200,7 @@ def _stage_d_kernel(
             seg = sg[s:e]
         g_ns[s:e] = seg
         g_na[s:e] = K.gradient(seg, K.DT)
-    pdf["g_ns"] = g_ns
-    pdf["g_na"] = g_na
-    return pdf
-
-
-def _added(schema: T.StructType, fields: list[tuple[str, T.DataType]]) -> T.StructType:
-    out = T.StructType(list(schema.fields))
-    for name, dtype in fields:
-        out = out.add(name, dtype, True)
-    return out
+    return {"g_ns": g_ns, "g_na": g_na}
 
 
 def _apply(df: DataFrame, kernel, added_fields, cfg: TreatmentConfig, halo: int, chunked: bool) -> DataFrame:
@@ -245,74 +208,64 @@ def _apply(df: DataFrame, kernel, added_fields, cfg: TreatmentConfig, halo: int,
     mode — per (conv_id, chunk) with ``halo`` overlap rows, keeping each
     row's own-chunk output only.
 
-    Execution granularity: Spark groups carry a fixed Arrow/scheduling
-    overhead (~ms each), so grouping BY series (millions of tiny groups at
-    scale) wastes most of the time on overhead. Instead we shuffle on a hash
-    bucket of the series key (``cfg.group_buckets`` groups — scale it with
-    the cluster) and iterate the actual series with a pandas groupby inside
-    the task: per-series overhead drops to microseconds, and task memory is
-    bounded by bucket size (chunked mode additionally bounds any single
-    series unit by chunk_len + 2·halo).
+    Execution: one sorted Arrow stream per task (:mod:`..seriesmap`) — a
+    hash repartition on the series key, a JVM sort by (key, turn_idx), and
+    ``mapInArrow`` running ``kernel(unit, cfg, bounds)`` over units of whole
+    series. Task memory is one Arrow batch plus one open series; chunked
+    mode bounds any single series unit by chunk_len + 2·halo.
 
     Chunked mode requires a dense ``turn_idx`` and pre-filled values (run
     :func:`...gapfill.gap_fill` first so in-kernel interpolation is a no-op);
     then halo ≥ kernel radius ⇒ identical to whole-series apply — this is
     what lets a 10^8-turn conversation flow through fixed-memory executors.
     """
-    G = cfg.group_buckets
+    out_schema = T.StructType(list(df.schema.fields))
+    for name, dtype in added_fields:
+        out_schema = out_schema.add(name, dtype, True)
+    passthrough = list(df.columns)
+    added = [name for name, _ in added_fields]
 
     if not chunked:
-        keyed = _pin_bucket_parallelism(
-            df.withColumn(
-                "__g", F.pmod(F.xxhash64("conv_id"), F.lit(G)).cast("int")
-            ),
-            G,
+        src, key = df, ["conv_id"]
+    else:
+        L, H = cfg.chunk_len, halo
+        if H > L:
+            # the explode only serves ±1 adjacent chunk, so the effective halo
+            # is capped at chunk_len — beyond it chunked output silently
+            # diverges from whole-series output. Fail loud instead.
+            raise ValueError(
+                f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
+                "kernel support (sg_window/merge_gap/gauss_sigma)"
+            )
+        own = F.floor(F.col("turn_idx") / L).cast("long")
+        pos = F.col("turn_idx") % L
+        chunks = F.array_compact(
+            F.array(
+                own,
+                F.when(pos < H, own - 1),          # serve previous chunk's right halo
+                F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
+            )
         )
-        out_schema = _added(keyed.schema, added_fields)
+        src = df.withColumn("__chunk", F.explode(chunks)).where(F.col("__chunk") >= 0)
+        key = ["conv_id", "__chunk"]
 
-        def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-            return kernel(pdf, cfg, ("conv_id",))
+    def run(batches):
+        for unit, bounds in series_units(batches, lambda b: key_starts(b, key)):
+            res = kernel(unit, cfg, bounds)
+            # from_pandas: a NaN result is a null cell (nulls are load-bearing)
+            out = pa.RecordBatch.from_arrays(
+                [unit.column(c) for c in passthrough]
+                + [pa.array(res[c], from_pandas=True) for c in added],
+                names=passthrough + added,
+            )
+            if chunked:
+                # keep each row's own-chunk output only (halo rows drop here)
+                t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
+                c = unit.column("__chunk").to_numpy(zero_copy_only=False)
+                out = out.filter(pa.array(t // L == c))
+            yield out
 
-        return keyed.groupBy("__g").applyInPandas(run_bucket, out_schema).drop("__g")
-
-    L, H = cfg.chunk_len, halo
-    if H > L:
-        # the explode only serves ±1 adjacent chunk, so the effective halo
-        # is capped at chunk_len — beyond it chunked output silently
-        # diverges from whole-series output. Fail loud instead.
-        raise ValueError(
-            f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
-            "kernel support (sg_window/merge_gap/gauss_sigma)"
-        )
-    own = F.floor(F.col("turn_idx") / L).cast("long")
-    pos = F.col("turn_idx") % L
-    chunks = F.array_compact(
-        F.array(
-            own,
-            F.when(pos < H, own - 1),          # serve previous chunk's right halo
-            F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
-        )
-    )
-    exploded = _pin_bucket_parallelism(
-        df.withColumn("__chunk", F.explode(chunks))
-        .where(F.col("__chunk") >= 0)
-        .withColumn(
-            "__g",
-            F.pmod(F.xxhash64("conv_id", "__chunk"), F.lit(G)).cast("int"),
-        ),
-        G,
-    )
-    grouped_schema = _added(exploded.schema, added_fields)
-
-    def run_bucket_chunked(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "__chunk", "turn_idx"]).reset_index(drop=True)
-        res = kernel(pdf, cfg, ("conv_id", "__chunk"))
-        # keep each row's own-chunk output only (halo rows drop here)
-        return res[(res["turn_idx"] // L) == res["__chunk"]]
-
-    res = exploded.groupBy("__g").applyInPandas(run_bucket_chunked, grouped_schema)
-    return res.drop("__chunk", "__g")
+    return map_sorted_series(src, key, ["turn_idx"], run, out_schema)
 
 
 def raw_anomaly_col(
@@ -376,12 +329,12 @@ def treat_transcripts(
     treated_tokens, conv_has_anomaly, g_ns (smoothed), g_na (derivative).
 
     Execution (round-5 fusion — the former SQL run-merge stage cost a
-    full-frame conv-partitioned window exchange between the two pandas
+    full-frame conv-partitioned window exchange between the two Python
     stages; the merge is bounded-support, so it now runs inside the first
     kernel):
 
-    * non-chunked: ONE pandas stage (A+B+C+D fused — each group holds whole
-      conversations, so the global ``conv_has_anomaly`` is an in-slice any).
+    * non-chunked: ONE Python stage (A+B+C+D fused — each series is a whole
+      conversation, so the global ``conv_has_anomaly`` is an in-slice any).
       One exchange total, was three.
     * chunked: fused A+B+C kernel (halo extends by merge_gap), then the
       per-conv ``conv_has_anomaly`` bit joins in and stage D runs chunked.
@@ -391,7 +344,7 @@ def treat_transcripts(
       tiny flags side broadcasts below the AQE threshold; above it — many
       billions of conversations per shard — it degrades to a narrow
       shuffle join, still strictly cheaper than the full-frame window
-      exchange it replaced). Without ``flags`` a slim 3-column pandas pass
+      exchange it replaced). Without ``flags`` a slim 3-column Python pass
       derives them (still cheaper than the old full-frame exchange).
       Two full-frame exchanges total, was three.
     """

@@ -348,6 +348,11 @@ def backfill_pipeline(
     """
     rec_cfg = _manifest_config(workdir, "filled")
     recorded = rec_cfg.get("treatment")
+    if recorded is not None:
+        # workdirs written before the Python stages became one Arrow stream
+        # per task record their hash-group count; it set execution
+        # granularity only, never the treated values
+        recorded = {k: v for k, v in recorded.items() if k != "group_buckets"}
     if cfg is None:
         # pre-config-recording manifests fall back to defaults (documented)
         cfg = TreatmentConfig(**recorded) if recorded else TreatmentConfig()

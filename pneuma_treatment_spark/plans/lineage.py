@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import time
 from dataclasses import dataclass
 from pathlib import Path
@@ -132,7 +133,10 @@ class PipelineRunner:
             )
             n_parts = self.io.spark.read.parquet(self._partitions_path(name)).count()
         wall = time.perf_counter() - t0
-        mpath.write_text(
+        # crash-atomic: a kill mid-write must never leave torn JSON for the
+        # next resume's json.loads — write aside, then rename into place
+        tmp_m = mpath.with_suffix(".json.tmp")
+        tmp_m.write_text(
             json.dumps(
                 {
                     "status": "COMPLETE",
@@ -152,6 +156,7 @@ class PipelineRunner:
                 default=str,
             )
         )
+        os.replace(tmp_m, mpath)
         self.results[name] = StageResult(name, sig, rows, False, wall, n_parts)
         return out
 

@@ -2230,8 +2230,8 @@ def multimodal_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chunk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gorilla chunk codec under the hash gate: build a per-user 1-minute
-    rollup slice, encode it to delta-of-delta + XOR chunks (bucket-grouped
-    applyInPandas), decode the chunks back to points, and return the points.
+    rollup slice, encode it to delta-of-delta + XOR chunks (one sorted Arrow
+    stream per task), decode the chunks back to points, and return the points.
     The oracle is the rollup slice computed directly — the roundtrip must be
     the identity, the same exact-recovery contract the reference applies to
     its rebuilt series (processor.py:373-380). Values are exact-integer
@@ -2252,7 +2252,7 @@ def chunk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("tier", F.lit("1m"))
     )
-    pts = read_chunks(write_chunks(r, metrics=("cents_sum", "n_events"), group_buckets=32))
+    pts = read_chunks(write_chunks(r, metrics=("cents_sum", "n_events")))
     return pts.select("conv_id", "tier", "metric", "bucket_ts", "value")
 
 

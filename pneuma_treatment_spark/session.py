@@ -42,8 +42,9 @@ def get_spark(
         # without starving parallelism.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for all pandas UDF / applyInPandas transport (the treatment
-        # kernels are Arrow-batched; row-at-a-time Python never runs).
+        # Arrow for all Python-stage transport (the treatment, chunk and DTW
+        # kernels run over mapInArrow batches; row-at-a-time Python never
+        # runs).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # UTC everywhere: stable semantics + DuckDB-comparable timestamps.
@@ -167,33 +168,6 @@ def _count_plan_nodes(jplan, cap: int) -> int:
 #: scan plus a handful of projections/filters/subquery-aliases stays under
 #: it; anything post-join/post-shuffle is already wide
 _PROBE_MAX_PLAN_NODES = 8
-
-
-def pin_bucket_parallelism(df, n_buckets: int, key: str = "__g"):
-    """Hash-repartition a bucket-keyed frame to ``min(n_buckets,
-    spark.sql.shuffle.partitions)`` partitions right before a
-    ``groupBy(key).applyInPandas`` stage.
-
-    Why: AQE's partition coalescing sizes reduce partitions by SHUFFLE
-    BYTES, but a pandas-kernel stage's cost is Python compute per row, not
-    bytes — on a mid-size input (a few MB of shuffle) AQE coalesces the
-    stage to 1-2 tasks and the whole kernel runs serially (measured: the
-    treatment kernel 1.96 s on ONE task at 100k rows, the chunk encode
-    2.3 s on two). A user-specified ``repartition(n, key)`` is exempt from
-    AQE coalescing, and its hash partitioning satisfies the groupBy's
-    clustered-distribution requirement, so the stage keeps exactly one
-    exchange (pinned by tests/test_plans.py) while the kernel gets the
-    session's full parallelism. At real scale the byte-sized partitioning
-    already exceeds the core count, so the pin is a no-op in the large
-    (n caps at the session's shuffle partitions — the same ceiling the
-    groupBy exchange had); per-task memory is bounded by bucket content
-    either way."""
-    sess = df.sparkSession
-    try:
-        shuffle_parts = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_parts = sess.sparkContext.defaultParallelism
-    return df.repartition(min(n_buckets, shuffle_parts), key)
 
 
 def fan_out(df, min_partitions: int | None = None, force_probe: bool = False):

@@ -366,7 +366,6 @@ def run_rollup_chunk_sink(
     chunk_path: str,
     checkpoint: str,
     metrics: tuple[str, ...] = ("turn_count", "token_sum", "tool_calls"),
-    group_buckets: int = 32,
     available_now: bool = True,
     trigger_seconds: int | None = None,
 ):
@@ -408,7 +407,7 @@ def run_rollup_chunk_sink(
         try:
             bdf.write.mode("overwrite").parquet(f"{rollup_path}/batch_id={batch_id}")
             (
-                write_chunks(bdf, metrics=metrics, group_buckets=group_buckets)
+                write_chunks(bdf, metrics=metrics)
                 .write.mode("overwrite")
                 .partitionBy("tier", "p_day")
                 .parquet(f"{chunk_path}/batch_id={batch_id}")
@@ -436,7 +435,6 @@ def run_chunk_append_sink(
     path: str,
     checkpoint: str,
     metrics: tuple[str, ...] = ("turn_count", "token_sum", "tool_calls"),
-    group_buckets: int = 32,
     available_now: bool = True,
     trigger_seconds: int | None = None,
 ):
@@ -486,7 +484,7 @@ def run_chunk_append_sink(
         if bdf.isEmpty():
             return  # a watermark-only epoch: no closed buckets, no dir
         (
-            write_chunks(bdf, metrics=metrics, group_buckets=group_buckets)
+            write_chunks(bdf, metrics=metrics)
             .write.mode("overwrite")
             .partitionBy("tier", "p_day")
             .parquet(f"{path}/batch_id={batch_id}")

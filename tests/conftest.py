@@ -31,6 +31,17 @@ def transcripts_df(spark, transcripts_pdf):
     return df
 
 
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Arrow batches of 7 rows (a prime) for one test, so the Python
+    stages' series straddle batch boundaries; the conf is restored after."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, old)
+
+
 def assert_pdf_equal(left: pd.DataFrame, right: pd.DataFrame, keys: list[str], **kw):
     """Order-insensitive exact comparison on shared columns."""
     cols = [c for c in left.columns if c in right.columns]

@@ -252,6 +252,45 @@ def test_backfill_rejects_contradicting_cfg(spark, env):
         )
 
 
+def test_backfill_adopts_manifest_with_group_buckets(spark, tmp_path):
+    """A workdir whose filled manifest still records the retired
+    ``group_buckets`` treatment knob must backfill (the key is dropped on
+    adoption) to the same tables as a rebuild on the updated input."""
+    import json
+
+    args = dict(n_convs=8, seed=3, mega_turns=0)
+    base_path = str(tmp_path / "raw")
+    generate_transcripts(spark, 8, seed=3).write.parquet(base_path)
+    base = spark.read.parquet(base_path)
+    c = base.select("conv_id").distinct().orderBy("conv_id").first()["conv_id"]
+    delta = base.where((F.col("conv_id") == c) & (F.col("turn_idx") == 1)).withColumn(
+        "text", F.lit("a corrected turn for the manifest compatibility test")
+    )
+    dpath = str(tmp_path / "delta")
+    delta.write.parquet(dpath)
+    upd_path = str(tmp_path / "upd")
+    base.join(
+        spark.read.parquet(dpath).select("conv_id", "turn_idx"),
+        ["conv_id", "turn_idx"], "left_anti",
+    ).unionByName(spark.read.parquet(dpath)).write.parquet(upd_path)
+
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, **args, input_table=base_path)
+    mpath = os.path.join(wd_a, "_manifest", "filled.json")
+    m = json.loads(open(mpath).read())
+    m["config"]["treatment"]["group_buckets"] = 256
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+    backfill_pipeline(spark, wd_a, spark.read.parquet(dpath))
+    run_pipeline(spark, wd_b, **args, input_table=upd_path)
+    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
+    for t in ("filled", "treated", "chunks"):
+        pd.testing.assert_frame_equal(
+            _sorted_pdf(io_a, t), _sorted_pdf(io_b, t), check_dtype=False
+        )
+
+
 def test_backfill_rejects_contradicting_buckets(spark, env):
     """ADVICE r6: a wrong --buckets prunes the wrong p_bucket set and
     silently duplicates affected conversations' old rows — must refuse

@@ -98,6 +98,47 @@ def test_spark_chunk_tables(spark, transcripts_df):
         np.testing.assert_array_equal(lhs.view(np.uint64), rhs.view(np.uint64), c)
 
 
+def test_chunks_straddling_arrow_batches(spark, transcripts_df):
+    """Encode with 7-row Arrow batches (a prime), so series straddle batch
+    boundaries: the chunks must be byte-identical to the default-batch
+    encode, and each must decode back to its tier rows."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
+    from pneuma_treatment_spark.compression.gorilla import decode_chunks
+    from pneuma_treatment_spark.operators.rollup import rollup_raw, with_turn_metrics
+
+    tier = rollup_raw(with_turn_metrics(transcripts_df), "1m")
+    tier.cache().count()
+    keys = ["conv_id", "tier", "p_day", "metric"]
+    want = write_chunks(tier).toPandas().sort_values(keys).reset_index(drop=True)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = write_chunks(tier).toPandas().sort_values(keys).reset_index(drop=True)
+    finally:
+        spark.conf.set(conf, old)
+        tier.unpersist()
+    pd.testing.assert_frame_equal(got, want)
+
+    rows = tier.select(
+        "conv_id", F.unix_micros("bucket_ts").alias("us"), *DEFAULT_METRICS
+    ).toPandas().sort_values(["conv_id", "us"])
+    lens, ts, vals = decode_chunks(list(got["chunk"]))
+    offs = np.concatenate([[0], np.cumsum(lens)])
+    for i, r in enumerate(got.itertuples(index=False)):
+        conv = rows[rows["conv_id"] == r.conv_id]
+        s_us = pd.Timestamp(r.start_ts).value // 1000
+        e_us = pd.Timestamp(r.end_ts).value // 1000
+        sel = conv[(conv["us"] >= s_us) & (conv["us"] <= e_us)]
+        np.testing.assert_array_equal(ts[offs[i]:offs[i + 1]], sel["us"].to_numpy())
+        np.testing.assert_array_equal(
+            vals[offs[i]:offs[i + 1]], sel[r.metric].to_numpy(np.float64)
+        )
+
+
 def test_chunk_compression_on_partials(spark, transcripts_df):
     """Storing int partials (not rate doubles) must actually compress: the
     whole chunk table, headers included, beats 16 bytes/point."""
@@ -382,7 +423,7 @@ def test_chunk_ttl_prunes_window_partitions(spark, tmp_path):
     ).withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
 
     io = TableIO(spark, str(tmp_path))
-    io.write(write_chunks(df, group_buckets=4), "chunks",
+    io.write(write_chunks(df), "chunks",
              partition_cols=["tier", "p_day"])
 
     before = io.read("chunks").toPandas()

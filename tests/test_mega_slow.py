@@ -42,7 +42,7 @@ CMP_COLS = [
 
 @pytest.mark.slow
 def test_mega_conversation_design_ratio_parity(spark):
-    cfg = TreatmentConfig(chunk_len=65536, group_buckets=64)
+    cfg = TreatmentConfig(chunk_len=65536)
 
     h = (F.col("id") * A + C) % M
     df = spark.range(N).select(

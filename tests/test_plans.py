@@ -158,8 +158,9 @@ def test_bucketed_tables_join_without_exchange(spark, transcripts_df, tmp_path):
 
 
 def test_chunk_write_single_exchange(spark):
-    """write_chunks must add exactly ONE exchange (the conv-bucket shuffle
-    feeding applyInPandas) on top of an already-aggregated rollup input."""
+    """write_chunks must add exactly ONE exchange (the conv-keyed shuffle
+    feeding the mapInArrow encode) on top of an already-aggregated rollup
+    input."""
     from pyspark.sql import functions as F
 
     from pneuma_treatment_spark.compression.chunks import write_chunks
@@ -176,7 +177,7 @@ def test_chunk_write_single_exchange(spark):
     # formatted explain mentions each node twice (tree + detail section);
     # count tree lines only
     base_exchanges = _plan(r).count("+- Exchange")
-    plan = _plan(write_chunks(r, metrics=("n_events",), group_buckets=8))
+    plan = _plan(write_chunks(r, metrics=("n_events",)))
     assert plan.count("+- Exchange") == base_exchanges + 1, plan
 
 
@@ -263,7 +264,7 @@ def test_text_rides_no_treatment_or_rollup_shuffle(spark):
 
 def test_treatment_fused_exchange_count(spark, transcripts_df):
     """Round-5 fusion guarantees: the non-chunked treatment chain is ONE
-    exchange end-to-end (A+B+C+D in a single pandas stage), and the chunked
+    exchange end-to-end (A+B+C+D in a single Python stage), and the chunked
     chain with precomputed flags is TWO full-frame exchanges with the tiny
     flags side broadcast — the former SQL run-merge window exchange must
     not reappear."""

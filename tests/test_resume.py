@@ -213,3 +213,36 @@ def test_surrogate_key_pipeline_equivalence(spark, workdir):
         import pandas as pd
 
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+def test_manifest_write_is_atomic(spark, workdir, monkeypatch):
+    """A crash while a stage manifest is being written leaves the previous
+    manifest whole (never torn JSON), and the next run completes the stage."""
+    import json
+    from pathlib import Path
+
+    from pneuma_treatment_spark.plans.lineage import PipelineRunner
+
+    io = TableIO(spark, workdir)
+    build = lambda _io: spark.range(5).selectExpr("id", "'c' AS conv_id")  # noqa: E731
+    PipelineRunner(io, config={"v": 1}).run_stage("t", build, partitioned=False)
+    mpath = Path(workdir) / "_manifest" / "t.json"
+    before = mpath.read_text()
+
+    real_write = Path.write_text
+
+    def torn_write(self, data, *a, **kw):
+        real_write(self, data[: len(data) // 2], *a, **kw)
+        raise KeyboardInterrupt("killed mid-write")
+
+    monkeypatch.setattr(Path, "write_text", torn_write)
+    with pytest.raises(KeyboardInterrupt):
+        PipelineRunner(io, config={"v": 2}).run_stage("t", build, partitioned=False)
+    monkeypatch.undo()
+
+    assert mpath.read_text() == before
+    assert json.loads(before)["status"] == "COMPLETE"
+    runner = PipelineRunner(io, config={"v": 2})
+    runner.run_stage("t", build, partitioned=False)
+    assert not runner.results["t"].skipped and runner.total_rows("t") == 5
+    assert json.loads(mpath.read_text())["signature"] == runner.results["t"].signature

@@ -60,6 +60,13 @@ def test_treatment_parity(filled_spark, filled_oracle, chunked):
     assert_pdf_equal(got[cols], want[cols], ["conv_id", "turn_idx"])
 
 
+@pytest.mark.parametrize("chunked", [False, True], ids=["whole-series", "chunked"])
+def test_treatment_parity_small_batches(filled_spark, filled_oracle, chunked, small_arrow_batches):
+    """Series straddling Arrow batch boundaries are carried into the next
+    batch whole: the result still equals the oracle bit for bit."""
+    test_treatment_parity(filled_spark, filled_oracle, chunked)
+
+
 def test_treatment_parity_precomputed_flags(filled_spark, filled_oracle):
     """The pipeline path: conv_has_anomaly flags precomputed via the SQL
     raw-anomaly twin (raw_anomaly_col — same exchange as gap-fill in the

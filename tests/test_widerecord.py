@@ -102,3 +102,23 @@ def test_stride6_matches_reference_loop(spark):
         ).collect()
     )
     assert got == sorted(want)
+
+
+def test_parsers_drop_short_lines_under_ansi(spark, tmp_path):
+    """Under ANSI mode (Spark 4's default) a header line and a 2-token line
+    are dropped by both parsers, never raised as INVALID_ARRAY_INDEX. The
+    lines come from a file: a local relation is folded on the driver, where
+    the out-of-bounds index never raises."""
+    path = tmp_path / "wide.txt"
+    path.write_text("\n".join([HEADER, "short; line", LINE_A]) + "\n")
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        lines = spark.read.text(str(path))
+        meta = parse_wide_meta(lines).collect()
+        recs = parse_wide_records(lines).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [r["id"] for r in meta] == ["veh1"]
+    assert sorted(r["j"] for r in recs) == [0, 1] and {r["id"] for r in recs} == {"veh1"}
