@@ -24,6 +24,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def read_schema(schema: T.StructType, partition_cols: list[str]) -> T.StructType:
+    """The schema Spark infers for a parquet table written from a frame of
+    ``schema`` partitioned by ``partition_cols``: the data columns in frame
+    order, then the partition columns in directory order, every field
+    nullable (a parquet scan drops non-null constraints, nested ones too)."""
+    fields = [f for f in schema.fields if f.name not in partition_cols]
+    fields += [schema[c] for c in partition_cols]
+    return _nullable(T.StructType(fields))
 
 
 class TableIO:
@@ -63,8 +86,10 @@ class TableIO:
         bucketed: bool = True,
         partition_cols: list[str] | None = None,
         pre_clustered: bool = False,
-    ) -> None:
-        """``bucketed=False`` partitions by day only — right for coarse
+    ) -> T.StructType:
+        """Write ``df`` and return the schema the table reads back with
+        (pass it to :meth:`read`). ``bucketed=False`` partitions by day
+        only — right for coarse
         rollup tiers whose row counts are 1/3600+ of raw (day x bucket dirs
         would be mostly tiny files). ``partition_cols`` overrides the
         default day/bucket layout with columns the caller already
@@ -74,6 +99,7 @@ class TableIO:
         ``rollup_raw_clustered``, whose aggregation exchange doubles as the
         write clustering) — the writer then adds no exchange of its own."""
         w = df
+        cols: list[str] = []
         if partitioned:
             if partition_cols is not None:
                 cols = list(partition_cols)
@@ -153,9 +179,14 @@ class TableIO:
             )
         else:
             w.write.mode("overwrite").parquet(self.path(table))
+        return read_schema(w.schema, cols)
 
-    def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+    def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
+        """Scan a table. With ``schema`` (as :meth:`write` returned it) Spark
+        infers nothing: no job reads a footer, and a table written from zero
+        rows — a directory with no data file — still reads, empty."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def _guard_rewrite(self, table: str, op: str) -> None:
         """Refuse in-place rewrites of layouts they would corrupt — shared

@@ -73,7 +73,12 @@ from pneuma_treatment_spark.operators.treatment import (
     raw_anomaly_col,
     treat_transcripts,
 )
-from pneuma_treatment_spark.plans.lineage import partition_counts
+from pneuma_treatment_spark.plans.lineage import (
+    manifest_schema,
+    partition_counts,
+    read_stage,
+    write_partition_counts,
+)
 
 #: chunked columns — must stay in lockstep with rollup_job.py's chunk stage
 _CHUNK_COLS = ["conv_id", "tier", "bucket_ts", "turn_count", "token_sum", "tool_calls"]
@@ -140,7 +145,7 @@ def merge_conv_scoped(
     """
     spark = io.spark
     pcols = io._partition_dirs(table)
-    old = io.read(table)
+    old = read_stage(io, table)
 
     nr = new_rows
     if "p_day" in pcols and "p_day" not in nr.columns:
@@ -236,17 +241,19 @@ def _update_lineage(io: TableIO, name: str, stats: dict) -> None:
     _heal_asides(mdir, f".aside.{name}_partitions")
     days = sorted(stats["aff_days"])
     if ppath.exists() and days:
-        old = io.spark.read.parquet(str(ppath))
-        recount = partition_counts(io.read(name).where(F.col("p_day").isin(days)))
+        recount = partition_counts(
+            io.read(name, schema=manifest_schema(m)).where(F.col("p_day").isin(days))
+        )
+        old = io.spark.read.schema(recount.schema).parquet(str(ppath))
         newc = old.where(~F.col("p_day").isin(days)).unionByName(recount)
         tmp = str(mdir / f".rewrite.{ppath.name}")
-        newc.repartition(1).write.mode("overwrite").parquet(tmp)
+        n_parts = write_partition_counts(newc, tmp)
         # swap via rename-aside, never delete-before-replace: a crash at
         # any point leaves either the old or the new table restorable
         # (_heal_asides above), so the documented re-run-the-delta
         # recovery actually recovers
         _swap_dir(ppath, tmp)
-        m["n_partitions"] = io.spark.read.parquet(str(ppath)).count()
+        m["n_partitions"] = n_parts
     m["backfilled_at"] = time.time()
     # crash-atomic: a kill mid-write must never leave truncated JSON (the
     # documented recovery — re-run the delta — would then die at json.loads)
@@ -395,7 +402,7 @@ def backfill_pipeline(
         affected.unpersist()
         return {"tables": {}, "affected_convs": 0}
 
-    filled_cols = io.read("filled").columns
+    filled_cols = read_stage(io, "filled").columns
     if chunked is None:
         # run_pipeline writes raw_anomaly into filled exactly when chunked
         # (rollup_job.py:196-203) — the table layout records the mode
@@ -407,7 +414,7 @@ def backfill_pipeline(
         )
 
     # --- new raw rows for the affected conversations (upsert) -------------
-    old_ing = io.read("ingest")
+    old_ing = read_stage(io, "ingest")
     pruned = old_ing.where(
         F.col("p_bucket").isin(_affected_buckets(affected, io.n_buckets))
     )
@@ -600,7 +607,7 @@ def delete_conversations(
 
     def _one(job):
         name, ts_col = job
-        empty = io.read(name).limit(0)
+        empty = read_stage(io, name).limit(0)
         stats = merge_conv_scoped(io, name, empty, affected, ts_col=ts_col)
         _update_lineage(io, name, stats)
         return name, {

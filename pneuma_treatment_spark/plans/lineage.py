@@ -9,7 +9,10 @@ de-facto checkpoint); here it is explicit and content-addressed:
   overwrite), a per-partition row-count TABLE (written distributed — the
   counts never materialize on the driver), and a manifest JSON: input
   signature (config + upstream stage signatures), row count, partition
-  count, wall-clock, status;
+  count, read-back schema, wall-clock, status;
+* the table is read back through the schema it was written with, fresh or
+  resumed — never re-inferred, so a stage commit launches no listing or
+  footer job, and a stage that wrote zero rows still reads;
 * on re-run, a stage whose signature matches a COMPLETE manifest is skipped
   and its table is read back — so a job killed after stage k resumes at
   stage k+1 and produces byte-identical output (tests/test_resume.py);
@@ -26,7 +29,9 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pneuma_treatment_spark.io.tableio import TableIO
 
@@ -102,10 +107,7 @@ class PipelineRunner:
                 self.results[name] = StageResult(
                     name, sig, m["rows"], True, 0.0, m.get("n_partitions", 0)
                 )
-                return self.io.read(name)
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
+                return self.io.read(name, schema=manifest_schema(m))
 
         t0 = time.perf_counter()
         df = build(self.io)
@@ -113,13 +115,13 @@ class PipelineRunner:
         # second pass over the table (the Iceberg-snapshot-metadata analog).
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        self.io.write(
+        schema = self.io.write(
             df, name, partitioned=partitioned, ts_col=ts_col, key_col=key_col,
             bucketed=bucketed, partition_cols=partition_cols,
             pre_clustered=pre_clustered,
         )
         rows = int(obs.get["rows"])
-        out = self.io.read(name)
+        out = self.io.read(name, schema=schema)
         n_parts = 0
         if self.stats == "full" and partitioned and "p_day" in out.columns:
             # Per-partition lineage counts are a TABLE, not driver state: at
@@ -127,11 +129,9 @@ class PipelineRunner:
             # is a driver-side list per write. The counts DataFrame writes
             # straight to parquet; only the O(1) partition COUNT crosses to
             # the driver (for the summary), never the rows.
-            pc = out.groupBy("p_day").agg(F.count(F.lit(1)).alias("rows"))
-            pc.repartition(1).write.mode("overwrite").parquet(
-                self._partitions_path(name)
+            n_parts = write_partition_counts(
+                partition_counts(out), self._partitions_path(name)
             )
-            n_parts = self.io.spark.read.parquet(self._partitions_path(name)).count()
         wall = time.perf_counter() - t0
         # crash-atomic: a kill mid-write must never leave torn JSON for the
         # next resume's json.loads — write aside, then rename into place
@@ -144,6 +144,7 @@ class PipelineRunner:
                     "signature": sig,
                     "rows": rows,
                     "n_partitions": n_parts,
+                    "schema": schema.json(),
                     "wall_sec": round(wall, 3),
                     "finished_at": time.time(),
                     # the raw config, not just its signature hash: ops
@@ -164,11 +165,35 @@ class PipelineRunner:
         return self.results[name].rows
 
 
+def manifest_schema(m: dict) -> StructType | None:
+    """The read-back schema a stage manifest recorded (None for manifests
+    written before it was recorded — those tables fall back to inference)."""
+    return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
+
+
+def read_stage(io: TableIO, name: str) -> DataFrame:
+    """A stage table read through the schema its manifest recorded; inferred
+    only when there is no manifest or it predates the recorded schema."""
+    mpath = Path(io.root) / "_manifest" / f"{name}.json"
+    m = json.loads(mpath.read_text()) if mpath.exists() else {}
+    return io.read(name, schema=manifest_schema(m))
+
+
 def partition_counts(df: DataFrame) -> DataFrame:
     """(p_day, rows) lineage counts as a DataFrame — never a driver dict."""
-    from pyspark.sql import functions as F
-
     return df.groupBy("p_day").agg(F.count(F.lit(1)).alias("rows"))
+
+
+def write_partition_counts(counts: DataFrame, path: str) -> int:
+    """Write a (p_day, rows) counts table as one file and return its row
+    count — the stage's partition count — observed on the write itself, so
+    the table is never read back to count it. ``coalesce(1)`` narrows the
+    aggregate's output to one writer task without another shuffle."""
+    obs = Observation()
+    counts.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return int(obs.get["n"])
 
 
 def verify_partition_lineage(io: TableIO, name: str) -> bool:
@@ -176,17 +201,16 @@ def verify_partition_lineage(io: TableIO, name: str) -> bool:
     (integrity check used by tests and ops tooling). The comparison is a
     distributed full-outer join — a partition missing from either side, or
     disagreeing on its count, fails it; only O(1) scalars (mismatch count,
-    total) ever reach the driver."""
-    from pyspark.sql import functions as F
-
+    total) ever reach the driver. Nothing is inferred: the table reads
+    through its manifest schema, the counts table through the recount's."""
     m = json.loads((Path(io.root) / "_manifest" / f"{name}.json").read_text())
     ppath = Path(io.root) / "_manifest" / f"{name}_partitions"
     if not ppath.exists():
         # stats="fast" runs (bench) and pre-table-format manifests have no
         # partitions table — that is a failed integrity check, not a crash
         return False
-    stored = io.spark.read.parquet(str(ppath))
-    actual = partition_counts(io.read(name))
+    actual = partition_counts(io.read(name, schema=manifest_schema(m)))
+    stored = io.spark.read.schema(actual.schema).parquet(str(ppath))
     j = stored.withColumnRenamed("rows", "m_rows").join(actual, "p_day", "full_outer")
     mismatches = j.where(
         F.col("m_rows").isNull()

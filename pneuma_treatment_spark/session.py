@@ -70,8 +70,6 @@ def get_spark(
         # default committer — with hundreds of partition dirs per stage this
         # is seconds of fixed (non-scaling) time per write.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # Parallelize partition-dir listing early (default threshold 32 dirs).
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4")
         # Let joins reuse a child partitioning on a SUBSET of the join keys:
         # the (conv_id, turn_idx) payload join-back then reuses the gap-fill
         # windows' hash(conv_id) exchange instead of reshuffling the narrow
