@@ -23,32 +23,28 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
-
 from pneuma_treatment_spark.compression.chunks import (
     TIER_WINDOW_DAYS,
     chunk_ttl_sql_predicate,
-    write_chunks,
 )
 from pneuma_treatment_spark.io.tableio import TableIO
-from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.retention import ttl_sql_predicate
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw_clustered,
     with_turn_metrics,
 )
-from pneuma_treatment_spark.operators.treatment import (
-    TreatmentConfig,
-    conv_anomaly_flags,
-    raw_anomaly_col,
-    treat_transcripts,
-)
+from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import PipelineRunner
+from pneuma_treatment_spark.plans.stages import build_chunks, build_filled, build_treated
 from pneuma_treatment_spark.synth import generate_transcripts
 
 #: tier TTLs (days) — finer tiers age out first (retention cascade)
 DEFAULT_TTLS = {"1m": 90, "1h": 365, "1d": 3650}
+
+#: the two branches below the ingest stage, each in stage order
+TREATMENT_STAGES = ("filled", "treated")
+ROLLUP_STAGES = ("rollup_1m", "rollup_1h", "rollup_1d", "chunks")
 
 
 def run_pipeline(
@@ -66,26 +62,20 @@ def run_pipeline(
     stats: str = "full",
     shard_index: int = 0,
     shard_count: int = 1,
-    stage_hook=None,
-    surrogate_key: bool = False,
     chunk_window_days: dict[str, int] | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns a stage→metrics summary.
 
     ``input_table``: optional path to an existing transcripts parquet table;
     default synthesizes deterministically. ``stop_after``: stage name to halt
-    after (used by the resume test to simulate a mid-job kill).
-    ``stage_hook(name)``: called after each stage completes — the seam the
-    bytes-per-stage instrumentation (BENCH/run_bytes.py) snapshots on.
-    ``surrogate_key``: route the filled/treated stages' shuffles through an
-    8-byte ``xxhash64(conv_id)`` surrogate instead of the conv_id string,
-    joining the string back from a per-conversation dim immediately before
-    each write — written table schemas are unchanged. A measured A/B lever
-    (BENCH/run_bytes.py --surrogate; adoption decision in
-    BENCH/BASELINE.md). The dim build fails fast on a hash collision
-    (probability ~n²/2⁶⁵ — negligible below billions of conversations;
-    past that, widen to a 128-bit surrogate).
+    after (used by the resume tests to simulate a mid-job kill) — only that
+    stage and its upstream stages run, on the same two-branch executor as a
+    full run; the branch not holding it is never submitted, and the TTL
+    sweep is skipped.
     """
+    stages = ("ingest", *TREATMENT_STAGES, *ROLLUP_STAGES)
+    if stop_after is not None and stop_after not in stages:
+        raise ValueError(f"stop_after={stop_after!r} is not a stage: {stages}")
     cfg = cfg or TreatmentConfig()
     windows = chunk_window_days or dict(TIER_WINDOW_DAYS)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
@@ -117,7 +107,6 @@ def run_pipeline(
             # data and clobber overlapping p_day partitions)
             "shard_index": shard_index,
             "shard_count": shard_count,
-            "surrogate_key": surrogate_key,
         },
     )
 
@@ -126,13 +115,10 @@ def run_pipeline(
     def stage(name, build, **kw):
         order.append(name)
         df = runner.run_stage(name, build, **kw)
-        if stage_hook is not None:
-            stage_hook(name)
         if stop_after == name:
             raise _StopPipeline(name)
         return df
 
-    _dim_cache: list = []  # persisted surrogate conv dim, released on exit
     try:
         first = shard_index * n_convs // shard_count
         cnt = (shard_index + 1) * n_convs // shard_count - first
@@ -147,104 +133,16 @@ def run_pipeline(
                 )
             ),
         )
-        if surrogate_key:
-            _sk = F.xxhash64("conv_id")
 
-            def conv_dim():
-                # (__sk, conv_id) — one row per conversation; built,
-                # collision-checked, and persisted ONCE (it is joined in
-                # both the filled and treated builds — rebuilding it per
-                # stage ran redundant distinct+count jobs inside exactly
-                # the stages the bytes A/B measures). Fails fast on a
-                # 64-bit collision (would silently merge two conversations).
-                if not _dim_cache:
-                    dim = ingest.select(
-                        _sk.alias("__sk"), "conv_id"
-                    ).distinct().persist()
-                    if dim.groupBy("__sk").count().where("count > 1").limit(1).count():
-                        raise RuntimeError(
-                            "xxhash64(conv_id) collision — widen the surrogate key"
-                        )
-                    _dim_cache.append(dim)
-                return _dim_cache[0]
-
-            def _restore(df):
-                # swap the surrogate back for the conv_id string just before
-                # the write; column order (and thus table schema) unchanged
-                cols = df.columns
-                return (
-                    df.withColumnRenamed("conv_id", "__sk")
-                    .join(conv_dim(), "__sk")
-                    .drop("__sk")
-                    .select(*cols)
-                )
-
-            def _with_sk(df, *cols):
-                return df.select(_sk.alias("conv_id"), *cols)
-        else:
-            def _restore(df):
-                return df
-
-            def _with_sk(df, *cols):
-                return df.select("conv_id", *cols)
-
-        # Gap-fill on the NARROW series only and join the payload columns
-        # back once: text/tool otherwise ride through the densify join plus
-        # two window sorts (~3x the bytes on this bandwidth-bound stage);
-        # the join-back moves them exactly once, and filled rows get null
-        # payloads either way. raw_anomaly rides along for free — the SQL
-        # mask reuses this stage's conv-partitioned windows — so the treated
-        # stage's conv_has_anomaly flags are a plain scan+aggregate instead
-        # of a full-frame window exchange (see treat_transcripts).
         def run_treatment_branch():
             filled = stage(
                 "filled",
-                lambda io: _restore(
-                    gap_fill(
-                        _with_sk(
-                            ingest, "turn_idx", "role", "ts", "token_count", "is_tool_call"
-                        ),
-                        lerp_cols=("token_count",),
-                        lerp_ts_cols=("ts",),
-                    ).join(
-                        _with_sk(ingest, "turn_idx", "text", "tool"),
-                        ["conv_id", "turn_idx"],
-                        "left",
-                    ).transform(
-                        # only the chunked treatment consumes the flags (the
-                        # non-chunked path computes conv_has_anomaly in-kernel)
-                        lambda d: d.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-                        if chunked
-                        else d
-                    )
-                ),
+                lambda io: build_filled(ingest, cfg, chunked),
                 deps=["ingest"],
-            )
-            # The kernels never read text/tool/role — shuttling payload or
-            # meta columns through the treatment's ~4 shuffle passes
-            # multiplies the stage's bytes. The treated table is a narrow
-            # metric series (measured: dropping `role` here cuts more
-            # shuffle bytes than dictionary-encoding it — ~20 B/row x 4
-            # passes — BENCH/BASELINE.md bytes table); text/tool/role live
-            # in `filled` and join back exactly on (conv_id, turn_idx) when
-            # needed. `ts` stays for the p_day write clustering; `is_filled`
-            # is load-bearing semantics.
-            narrow = _with_sk(filled, "turn_idx", "ts", "token_count", "is_filled")
-            # conv flags from the materialized filled table: map-side-combined
-            # aggregate over the stored raw_anomaly column — no window, no
-            # full-frame exchange, broadcast into the chunked stage-D join.
-            # A resumed pre-round-5 filled table has no raw_anomaly column:
-            # fall back to flags=None (treat_transcripts' slim pass).
-            flags = (
-                conv_anomaly_flags(_with_sk(filled, "raw_anomaly"))
-                if chunked and "raw_anomaly" in filled.columns
-                else None
             )
             stage(
                 "treated",
-                lambda io: _restore(
-                    treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
-                ),
+                lambda io: build_treated(filled, cfg, chunked),
                 deps=["filled"],
             )
 
@@ -274,23 +172,11 @@ def run_pipeline(
                 ts_col="bucket_ts",
                 bucketed=False,
             )
-            # chunk the INT partials only — rates re-derive exactly on read
-            # (compression/chunks.points_with_rates); full-entropy rate
-            # doubles barely XOR-compress while integer-valued doubles
-            # halve. Runs INSIDE this branch: chunks depends only on the
-            # tiers, so it must not wait for the treatment branch.
-            cols = [
-                "conv_id", "tier", "bucket_ts", "turn_count", "token_sum",
-                "tool_calls",
-            ]
+            # Runs INSIDE this branch: chunks depends only on the tiers, so
+            # it must not wait for the treatment branch.
             stage(
                 "chunks",
-                lambda io: write_chunks(
-                    m1.select(cols).unionByName(h1.select(cols)).unionByName(
-                        d1.select(cols)
-                    ),
-                    window_days=windows,
-                ),
+                lambda io: build_chunks(m1, h1, d1, windows),
                 deps=["rollup_1m", "rollup_1h", "rollup_1d"],
                 # (tier, window-start) dirs — the chunk TTL unit;
                 # write_chunks guarantees no chunk crosses a window, so
@@ -299,30 +185,27 @@ def run_pipeline(
             )
 
         # The treatment branch (filled → treated) and the rollup cascade
-        # (1m → 1h → 1d) both depend only on the ingest table — submit them
-        # from two driver threads so the second branch's jobs back-fill
-        # executor capacity the first branch's stage tails leave idle
-        # (guide §2.6 overlap; actions are sequential only because the
+        # (1m → 1h → 1d → chunks) both depend only on the ingest table —
+        # submit them from two driver threads so the second branch's jobs
+        # back-fill executor capacity the first branch's stage tails leave
+        # idle (guide §2.6 overlap; actions are sequential only because the
         # driver calls them sequentially). Stage signatures stay
-        # deterministic: each branch reads only _sigs of its own deps.
-        # Sequential fallbacks keep the two instrumented contracts intact:
-        # stop_after must halt BEFORE later stages ever run
-        # (tests/test_resume.py pins the stage set), and a stage_hook
-        # consumer (BENCH/run_bytes.py) attributes per-stage bytes, which
-        # overlapping stages would smear.
-        if stop_after is None and stage_hook is None:
-            from concurrent.futures import ThreadPoolExecutor
+        # deterministic: each branch reads only _sigs of its own deps. A
+        # stop_after run submits only the branch holding its stage, so no
+        # stage outside its upstream set ever starts.
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_treat = pool.submit(run_treatment_branch)
-                f_roll = pool.submit(run_rollup_branch)
-                # surface the FIRST branch failure even if the other also
-                # raised; .result() re-raises inside the caller's context
-                f_roll.result()
-                f_treat.result()
-        else:
-            run_treatment_branch()
-            run_rollup_branch()
+        branches = [
+            run
+            for run, names in (
+                (run_treatment_branch, TREATMENT_STAGES),
+                (run_rollup_branch, ROLLUP_STAGES),
+            )
+            if stop_after is None or stop_after in names
+        ]
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            for f in [pool.submit(run) for run in branches]:
+                f.result()  # re-raises a branch failure in the caller
         if ttl_now:
             for tier, days in DEFAULT_TTLS.items():
                 io.delete_where(f"rollup_{tier}", ttl_sql_predicate(days, ttl_now))
@@ -333,9 +216,6 @@ def run_pipeline(
                 )
     except _StopPipeline:
         pass
-    finally:
-        for d in _dim_cache:
-            d.unpersist()
 
     return {
         "stages": {
@@ -379,11 +259,6 @@ def main() -> None:
     ap.add_argument("--stats", default="full", choices=["full", "fast"])
     ap.add_argument("--shard-index", type=int, default=0)
     ap.add_argument("--shard-count", type=int, default=1)
-    ap.add_argument(
-        "--surrogate", action="store_true",
-        help="route filled/treated shuffles through an 8-byte xxhash64 "
-        "conv surrogate (A/B lever; see run_pipeline docstring)",
-    )
     ap.add_argument(
         "--backfill-table", default=None,
         help="path to a parquet delta of late/corrected raw turns "
@@ -471,7 +346,6 @@ def main() -> None:
         stats=args.stats,
         shard_index=args.shard_index,
         shard_count=args.shard_count,
-        surrogate_key=args.surrogate,
     )
     if args.compact:
         io = TableIO(

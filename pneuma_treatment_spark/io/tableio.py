@@ -22,7 +22,7 @@ idempotence. We keep the restartability, fix the layout.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,6 +37,14 @@ def _nullable(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.MapType):
         return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
     return dt
+
+
+def bucket_col(n_buckets: int, key_col: str = "conv_id") -> Column:
+    """The ``p_bucket`` value of a row: ``xxhash64(key) mod n_buckets``.
+    Every writer of a bucketed table and the backfill's bucket pruning
+    compute it here — a second spelling that drifted would prune the wrong
+    ``p_bucket`` dirs and silently duplicate rows."""
+    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
 def read_schema(schema: T.StructType, partition_cols: list[str]) -> T.StructType:
@@ -73,7 +81,7 @@ class TableIO:
         self, df: DataFrame, ts_col: str = "ts", key_col: str = "conv_id"
     ) -> DataFrame:
         return df.withColumn("p_day", F.to_date(F.col(ts_col))).withColumn(
-            "p_bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(self.n_buckets)).cast("int")
+            "p_bucket", bucket_col(self.n_buckets, key_col)
         )
 
     def write(

@@ -25,12 +25,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pneuma_treatment_spark.io.tableio import bucket_col
+
 #: tier name -> window length in seconds
 TIERS: dict[str, int] = {"1m": 60, "1h": 3600, "1d": 86400}
 _TIER_ORDER = ["1m", "1h", "1d"]
 
 #: additive (algebraic) metric columns carried through the cascade
-_PARTIAL_COLS = ["turn_count", "token_sum", "tool_calls", "user_turns", "assistant_turns"]
+PARTIAL_COLS = ["turn_count", "token_sum", "tool_calls", "user_turns", "assistant_turns"]
+
+
+def raw_partials() -> list[Column]:
+    """The :data:`PARTIAL_COLS` aggregates over raw turns (``with_turn_metrics``
+    columns plus ``role``) — the batch 1m tier and the streaming 1m rollup
+    both aggregate exactly these."""
+    role = F.col("role")
+    return [
+        F.count(F.lit(1)).alias("turn_count"),
+        F.sum("token_count").alias("token_sum"),
+        F.sum("is_tool_call").alias("tool_calls"),
+        F.sum(F.when(role == "user", 1).otherwise(0)).alias("user_turns"),
+        F.sum(F.when(role == "assistant", 1).otherwise(0)).alias("assistant_turns"),
+    ]
 
 
 def token_count_col(text: Column) -> Column:
@@ -79,15 +95,7 @@ def rollup_raw(df: DataFrame, tier: str = "1m") -> DataFrame:
             F.col("conv_id"),
             bucket_ts(F.col("ts"), tier).alias("bucket_ts"),
         )
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("token_count").alias("token_sum"),
-            F.sum("is_tool_call").alias("tool_calls"),
-            F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).alias("user_turns"),
-            F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).alias(
-                "assistant_turns"
-            ),
-        )
+        .agg(*raw_partials())
         .withColumn("tier", F.lit(tier))
     )
     return _with_rates(out, secs)
@@ -111,9 +119,7 @@ def rollup_raw_clustered(
     adds none — versus rollup_raw's agg exchange plus the writer's
     rebalance. Skew stays keyed on (day, bucket): one task aggregates one
     bucket-day of raw turns, the same unit every bucketed table already
-    pins, and ``n_buckets`` remains the scale-out knob. The p_bucket
-    expression must match ``TableIO.with_partition_cols`` exactly —
-    backfill prunes those dirs by recomputing it.
+    pins, and ``n_buckets`` remains the scale-out knob.
     """
     secs = TIERS[tier]
     b = bucket_ts(F.col("ts"), tier)
@@ -124,23 +130,12 @@ def rollup_raw_clustered(
         nparts = sess.sparkContext.defaultParallelism
     pre = (
         df.withColumn("p_day", F.to_date(b))
-        .withColumn(
-            "p_bucket",
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int"),
-        )
+        .withColumn("p_bucket", bucket_col(n_buckets))
         .repartition(nparts, "p_day", "p_bucket")
     )
     out = (
         pre.groupBy("p_day", "p_bucket", F.col("conv_id"), b.alias("bucket_ts"))
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("token_count").alias("token_sum"),
-            F.sum("is_tool_call").alias("tool_calls"),
-            F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).alias("user_turns"),
-            F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).alias(
-                "assistant_turns"
-            ),
-        )
+        .agg(*raw_partials())
         .withColumn("tier", F.lit(tier))
     )
     # same column order as rollup_raw, partition cols last (the read-back
@@ -167,7 +162,7 @@ def rollup_from_tier(finer: DataFrame, from_tier: str, to_tier: str) -> DataFram
             F.col("conv_id"),
             bucket_ts(F.col("bucket_ts"), to_tier).alias("bucket_ts"),
         )
-        .agg(*[F.sum(c).alias(c) for c in _PARTIAL_COLS])
+        .agg(*[F.sum(c).alias(c) for c in PARTIAL_COLS])
         .withColumn("tier", F.lit(to_tier))
     )
     return _with_rates(out, secs)

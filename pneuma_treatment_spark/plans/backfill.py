@@ -12,7 +12,7 @@ for only the conversations the delta touches, then splice the results
 into each table, rewriting only the partitions those conversations live
 in. This is the Iceberg copy-on-write ``MERGE INTO`` shape — TableIO's
 dynamic partition overwrite replaces exactly the partitions present in
-the written frame (`tableio.py:82-103`), and
+the written frame (``TableIO.write``), and
 :meth:`TableIO.drop_partitions` covers the one case dynamic overwrite
 cannot express (a partition whose last row moved away).
 
@@ -39,12 +39,6 @@ empty recompute side. Re-running the same delta is idempotent, which is
 also the crash-recovery story: a backfill killed between table merges is
 healed by re-running it (each per-table merge is independently
 idempotent).
-
-The recompute mirrors ``jobs/rollup_job.py:run_pipeline``'s stage builds
-(filled: `rollup_job.py:184-206`; treated: `rollup_job.py:207-232`;
-tiers/chunks: `rollup_job.py:233-270`) on the non-surrogate path; the
-anti-drift gate is ``tests/test_backfill.py``, which pins backfilled
-tables bit-equal to a from-scratch rebuild on the updated input.
 """
 
 from __future__ import annotations
@@ -59,29 +53,20 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.compression.chunks import write_chunks
-from pneuma_treatment_spark.io.tableio import TableIO
-from pneuma_treatment_spark.operators.gapfill import gap_fill
+from pneuma_treatment_spark.io.tableio import TableIO, bucket_col
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw,
     with_turn_metrics,
 )
-from pneuma_treatment_spark.operators.treatment import (
-    TreatmentConfig,
-    conv_anomaly_flags,
-    raw_anomaly_col,
-    treat_transcripts,
-)
+from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import (
     manifest_schema,
     partition_counts,
     read_stage,
     write_partition_counts,
 )
-
-#: chunked columns — must stay in lockstep with rollup_job.py's chunk stage
-_CHUNK_COLS = ["conv_id", "tier", "bucket_ts", "turn_count", "token_sum", "tool_calls"]
+from pneuma_treatment_spark.plans.stages import build_chunks, build_filled, build_treated
 
 #: the raw-transcript delta schema (input_hint shape) — extra columns are
 #: dropped so dead-letter sink dirs (which carry a batch_id partition level)
@@ -97,9 +82,7 @@ _MAX_LITERAL_PARTS = 64
 
 def _affected_buckets(affected: DataFrame, n_buckets: int) -> list[int]:
     rows = (
-        affected.select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int").alias("b")
-        )
+        affected.select(bucket_col(n_buckets).alias("b"))
         .distinct()
         .collect()
     )
@@ -151,10 +134,7 @@ def merge_conv_scoped(
     if "p_day" in pcols and "p_day" not in nr.columns:
         nr = nr.withColumn("p_day", F.to_date(F.col(ts_col)))
     if "p_bucket" in pcols and "p_bucket" not in nr.columns:
-        nr = nr.withColumn(
-            "p_bucket",
-            F.pmod(F.xxhash64(F.col(key)), F.lit(io.n_buckets)).cast("int"),
-        )
+        nr = nr.withColumn("p_bucket", bucket_col(io.n_buckets, key))
     nr = nr.persist()
 
     if not pcols:
@@ -404,8 +384,8 @@ def backfill_pipeline(
 
     filled_cols = read_stage(io, "filled").columns
     if chunked is None:
-        # run_pipeline writes raw_anomaly into filled exactly when chunked
-        # (rollup_job.py:196-203) — the table layout records the mode
+        # build_filled writes raw_anomaly exactly when chunked — the table
+        # layout records the mode
         chunked = "raw_anomaly" in filled_cols
     elif chunked != ("raw_anomaly" in filled_cols):
         raise ValueError(
@@ -428,37 +408,15 @@ def backfill_pipeline(
     raw_aff.count()  # materialize BEFORE any table rewrite invalidates scans
 
     # --- recompute every stage for the affected conversations only --------
-    # (mirrors run_pipeline's builds — see module docstring for citations)
-    filled_new = gap_fill(
-        raw_aff.select(
-            "conv_id", "turn_idx", "role", "ts", "token_count", "is_tool_call"
-        ),
-        lerp_cols=("token_count",),
-        lerp_ts_cols=("ts",),
-    ).join(
-        raw_aff.select("conv_id", "turn_idx", "text", "tool"),
-        ["conv_id", "turn_idx"],
-        "left",
-    )
-    if chunked:
-        filled_new = filled_new.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-    filled_new = filled_new.persist()
-    narrow = filled_new.select("conv_id", "turn_idx", "ts", "token_count", "is_filled")
-    flags = (
-        conv_anomaly_flags(filled_new.select("conv_id", "raw_anomaly"))
-        if chunked
-        else None
-    )
-    treated_new = treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
+    # (the pipeline's own stage builds, plans/stages.py; the 1m tier takes
+    # rollup_raw — rollup_raw_clustered's fused write clustering has no
+    # use here, merge_conv_scoped lays the rows out)
+    filled_new = build_filled(raw_aff, cfg, chunked).persist()
+    treated_new = build_treated(filled_new, cfg, chunked)
     m1 = rollup_raw(raw_aff, "1m").persist()
     h1 = rollup_from_tier(m1, "1m", "1h").persist()
     d1 = rollup_from_tier(h1, "1h", "1d").persist()
-    chunks_new = write_chunks(
-        m1.select(_CHUNK_COLS)
-        .unionByName(h1.select(_CHUNK_COLS))
-        .unionByName(d1.select(_CHUNK_COLS)),
-        window_days=chunk_windows,
-    )
+    chunks_new = build_chunks(m1, h1, d1, chunk_windows)
 
     # --- partition-scoped merges + lineage upkeep --------------------------
     # The seven table merges are independent (each rewrites only its own

@@ -32,7 +32,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.operators.rollup import _with_rates, with_turn_metrics
+from pneuma_treatment_spark.operators.rollup import (
+    PARTIAL_COLS,
+    _with_rates,
+    raw_partials,
+    with_turn_metrics,
+)
 from pneuma_treatment_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -49,21 +54,9 @@ def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFr
     m = with_turn_metrics(stream).withWatermark("ts", watermark)
     agg = m.groupBy(
         F.col("conv_id"), F.window("ts", "1 minute").alias("win")
-    ).agg(
-        F.count(F.lit(1)).alias("turn_count"),
-        F.sum("token_count").alias("token_sum"),
-        F.sum("is_tool_call").alias("tool_calls"),
-        F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).alias("user_turns"),
-        F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).alias("assistant_turns"),
-    )
+    ).agg(*raw_partials())
     out = agg.select(
-        "conv_id",
-        F.col("win.start").alias("bucket_ts"),
-        "turn_count",
-        "token_sum",
-        "tool_calls",
-        "user_turns",
-        "assistant_turns",
+        "conv_id", F.col("win.start").alias("bucket_ts"), *PARTIAL_COLS
     ).withColumn("tier", F.lit("1m"))
     return _with_rates(out, 60)
 
