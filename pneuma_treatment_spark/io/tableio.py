@@ -8,10 +8,10 @@ layout and write discipline on plain Parquet:
 * partition columns ``p_day`` (date) and ``p_bucket`` (xxhash64(conv_id) mod N)
   are materialized and used with ``write.partitionBy`` — readers get partition
   pruning on day ranges and bucket-local joins for free;
-* writes are idempotent **dynamic partition overwrites** (the resume/retry
-  story: re-running a stage replaces exactly the partitions it produces,
-  never appends duplicates) — same semantics as Iceberg's
-  ``overwritePartitions()``;
+* writes are idempotent overwrites: a stage write replaces the whole
+  table (re-running a stage never leaves rows of the old run behind), and
+  a caller that rewrites a subset of partitions on purpose asks for a
+  **dynamic partition overwrite** — Iceberg's ``overwritePartitions()``;
 * all methods take/return DataFrames only, so flipping to real Iceberg is a
   config change (``writeTo(...).using("iceberg")``), not a rewrite.
 
@@ -94,10 +94,16 @@ class TableIO:
         bucketed: bool = True,
         partition_cols: list[str] | None = None,
         pre_clustered: bool = False,
+        dynamic: bool = False,
     ) -> T.StructType:
         """Write ``df`` and return the schema the table reads back with
-        (pass it to :meth:`read`). ``bucketed=False`` partitions by day
-        only — right for coarse
+        (pass it to :meth:`read`). The write replaces the whole table.
+        ``dynamic=True`` replaces only the partitions present in ``df`` and
+        keeps every other one: for a caller that rewrites a chosen subset
+        (the backfill merge), never for a stage rebuild, whose stale
+        partitions would survive next to the new rows. The mode rides the
+        writer, not the session conf, so concurrent writes cannot race on
+        it. ``bucketed=False`` partitions by day only — right for coarse
         rollup tiers whose row counts are 1/3600+ of raw (day x bucket dirs
         would be mostly tiny files). ``partition_cols`` overrides the
         default day/bucket layout with columns the caller already
@@ -117,28 +123,6 @@ class TableIO:
                 cols = ["p_day", "p_bucket"] if bucketed else ["p_day"]
                 if not bucketed:
                     w = w.drop("p_bucket")
-            # Dynamic partition overwrite (replace exactly the partitions a
-            # re-run produces — the Iceberg overwritePartitions() resume
-            # semantics) ONLY when the table already exists: its commit
-            # stages every file and then moves partition dirs one by one on
-            # the driver, which measured 2.8x slower than a static write
-            # (16.1 s vs 5.8 s for the 150-day x 8-bucket ingest table). A
-            # fresh write has nothing to preserve, so it takes the fast
-            # static path — identical output, idempotence unaffected. The
-            # mode rides the WRITER (overrides the session conf per write),
-            # so concurrent TableIO writes in one session cannot race on a
-            # session-global setting, and nothing leaks to other writes.
-            # dynamic only when there are existing PARTITION DIRS to
-            # preserve: a fresh table has nothing to keep, and a
-            # fully-TTL-expired table holds only the flat schema-bearing
-            # empty file the rewrite fallback left — static overwrite
-            # replaces the whole path, so that stale file cannot survive
-            # next to regrown partition dirs (schema-drift hazard).
-            mode = (
-                "dynamic"
-                if self.exists(table) and self._partition_dirs(table)
-                else "static"
-            )
             # Cluster rows by their target partition before the write: without
             # this every task appends a file to every partition dir —
             # tasks x dirs tiny files, which then dominates downstream scan
@@ -181,7 +165,7 @@ class TableIO:
                 w = w.hint("rebalance", *cols) if aqe else w.repartition(*cols)
             (
                 w.write.mode("overwrite")
-                .option("partitionOverwriteMode", mode)
+                .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
                 .partitionBy(*cols)
                 .parquet(self.path(table))
             )

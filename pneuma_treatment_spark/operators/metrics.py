@@ -19,8 +19,15 @@ sort).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pneuma_treatment_spark.seriesmap import key_starts, map_sorted_series, series_units
 
 
 def compare_series(
@@ -132,6 +139,48 @@ def classification_report(
     return per, summary
 
 
+_DELAY_STATS = [
+    "mean_abs_delay", "median_abs_delay", "mean_delay", "median_delay", "std_delay",
+]
+
+
+def _greedy_match(gt_ts: list[int], pr_ts: list[int], max_delay: int) -> dict:
+    """TP/FN/FP and delay stats of one (key, type) unit: each prediction, in
+    time order, takes the nearest gt event within ``max_delay`` unless that
+    gt already holds a match at least as close."""
+    match: dict[int, int] = {}  # gt index -> pred index
+    dist: dict[int, float] = {}
+    for pi, pt in enumerate(pr_ts):
+        best, bestd = None, None
+        for gi, gtt in enumerate(gt_ts):
+            d = abs(pt - gtt)
+            if d <= max_delay and (bestd is None or d < bestd):
+                if gi in match and dist[gi] <= d:
+                    continue  # existing match is closer; can't steal
+                best, bestd = gi, d
+        if best is not None:
+            match[best] = pi
+            dist[best] = bestd
+    tp = len(match)
+    sdel = [pr_ts[pi] - gt_ts[gi] for gi, pi in match.items()]
+    delays = [abs(d) for d in sdel]
+    if sdel:
+        var_num = tp * sum(d * d for d in sdel) - sum(sdel) ** 2
+        stats = [
+            sum(delays) / tp,
+            float(np.median(delays)),
+            sum(sdel) / tp,
+            float(np.median(sdel)),
+            math.sqrt(var_num) / tp,
+        ]
+    else:
+        stats = [None] * len(_DELAY_STATS)
+    return {
+        "tp": tp, "fn": len(gt_ts) - tp, "fp": len(pr_ts) - tp,
+        **dict(zip(_DELAY_STATS, stats)),
+    }
+
+
 def match_events(
     gt_events: DataFrame,
     pred_events: DataFrame,
@@ -144,11 +193,14 @@ def match_events(
     ``23stateFscore.py:229-309``): per (key, type), each predicted event
     matches the closest ground-truth event within ±max_delay steps; a closer
     later prediction steals an earlier match. Unmatched gt → FN, unmatched
-    pred → FP; matched pairs report signed delay.
+    pred → FP; matched pairs report signed delay. Rows with a null key or
+    type match nothing and are dropped.
 
     Per-(key, type) event counts are tiny (they are transitions, not rows),
-    so the quadratic greedy runs in a grouped pandas kernel like the
-    reference — but across all keys at once.
+    so the quadratic greedy runs in Python like the reference — but across
+    all keys at once, as one sorted Arrow stream per task
+    (:func:`..seriesmap.map_sorted_series`): a unit is one (key, type), its
+    gt events then its predictions, each in time order.
 
     Delay distribution (23stateFscore.py:345-361): signed delay = pred − gt
     per matched pair; reports mean/median of |delay|, mean/median/std of the
@@ -158,20 +210,14 @@ def match_events(
     SQL oracle matches bit-for-bit. Empty matches report null, not 0 (the
     engine's load-bearing-null convention; the reference reports 0.0).
     """
-    import math
+    def side(events: DataFrame, is_pred: bool) -> DataFrame:
+        return events.select(
+            key, type_col, F.lit(is_pred).alias("__pred"), F.col(time_col).alias("__ts")
+        )
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    g = gt_events.select(key, type_col, F.col(time_col).alias("gt_ts")).withColumn(
-        "__side", F.lit("gt")
+    both = side(gt_events, False).unionByName(side(pred_events, True)).where(
+        F.col(key).isNotNull() & F.col(type_col).isNotNull()
     )
-    p = pred_events.select(key, type_col, F.col(time_col).alias("gt_ts")).withColumn(
-        "__side", F.lit("pred")
-    )
-    both = g.unionByName(p)
-
     schema = T.StructType(
         [
             T.StructField(key, T.StringType()),
@@ -179,67 +225,31 @@ def match_events(
             T.StructField("tp", T.IntegerType()),
             T.StructField("fn", T.IntegerType()),
             T.StructField("fp", T.IntegerType()),
-            T.StructField("mean_abs_delay", T.DoubleType()),
-            T.StructField("median_abs_delay", T.DoubleType()),
-            T.StructField("mean_delay", T.DoubleType()),
-            T.StructField("median_delay", T.DoubleType()),
-            T.StructField("std_delay", T.DoubleType()),
         ]
+        + [T.StructField(c, T.DoubleType()) for c in _DELAY_STATS]
     )
+    keys = [key, type_col]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (k, t), grp in pdf.groupby([key, type_col], sort=False):
-            def secs(side):
-                s = pd.to_datetime(grp.loc[grp.__side == side, "gt_ts"])
-                # unit-explicit: Arrow may hand us datetime64[us] or [ns]
-                return sorted(s.astype("datetime64[us]").astype("int64") // 10**6)
-
-            gt_ts = secs("gt")
-            pr_ts = secs("pred")
-            match: dict[int, int] = {}  # gt index -> pred index
-            dist: dict[int, float] = {}
-            for pi, pt in enumerate(pr_ts):
-                best, bestd = None, None
-                for gi, gtt in enumerate(gt_ts):
-                    d = abs(pt - gtt)
-                    if d <= max_delay and (bestd is None or d < bestd):
-                        if gi in match and dist[gi] <= d:
-                            continue  # existing match is closer; can't steal
-                        best, bestd = gi, d
-                if best is not None:
-                    match[best] = pi
-                    dist[best] = bestd
-            tp = len(match)
-            sdel = [pr_ts[pi] - gt_ts[gi] for gi, pi in match.items()]
-            delays = [abs(d) for d in sdel]
-            if sdel:
-                var_num = tp * sum(d * d for d in sdel) - sum(sdel) ** 2
-                stats = {
-                    "mean_abs_delay": sum(delays) / tp,
-                    "median_abs_delay": float(np.median(delays)),
-                    "mean_delay": sum(sdel) / tp,
-                    "median_delay": float(np.median(sdel)),
-                    "std_delay": math.sqrt(var_num) / tp,
-                }
-            else:
-                stats = dict.fromkeys(
-                    ["mean_abs_delay", "median_abs_delay", "mean_delay",
-                     "median_delay", "std_delay"]
-                )
-            out.append(
-                {
-                    key: k,
-                    type_col: t,
-                    "tp": tp,
-                    "fn": len(gt_ts) - tp,
-                    "fp": len(pr_ts) - tp,
-                    **stats,
-                }
+    def kernel(batches):
+        for unit, bounds in series_units(batches, lambda u: key_starts(u, keys)):
+            pred = unit.column("__pred").to_numpy(zero_copy_only=False)
+            # unit-explicit: whole seconds since the epoch
+            secs = (
+                unit.column("__ts").to_numpy(zero_copy_only=False)
+                .astype("datetime64[us]").astype("int64") // 10**6
             )
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+            rows = [
+                _greedy_match(
+                    secs[s:e][~pred[s:e]].tolist(), secs[s:e][pred[s:e]].tolist(), max_delay
+                )
+                for s, e in zip(bounds[:-1], bounds[1:])
+            ]
+            firsts = pa.array(bounds[:-1])
+            yield pa.RecordBatch.from_arrays(
+                [unit.column(c).take(firsts) for c in keys]
+                + [pa.array([r[c] for r in rows], pa.int32()) for c in ("tp", "fn", "fp")]
+                + [pa.array([r[c] for r in rows], pa.float64()) for c in _DELAY_STATS],
+                names=schema.names,
+            )
 
-    keyed = both.withColumn("__g", F.pmod(F.xxhash64(key), F.lit(64)).cast("int"))
-    return keyed.groupBy("__g").applyInPandas(
-        lambda pdf: kernel(pdf.drop(columns="__g")), schema
-    )
+    return map_sorted_series(both, keys, ["__pred", "__ts"], kernel, schema)

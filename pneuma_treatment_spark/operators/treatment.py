@@ -2,7 +2,7 @@
 tolerance anomaly mask → run merge → replace → Gaussian smooth → derivative.
 
 Faithful re-expression of the reference's per-vehicle loop
-(``/root/reference/src/processor.py:314-465``) over transcript token-count
+(reference ``src/processor.py:314-465``) over transcript token-count
 series, with the one documented substitution (SURVEY.md §7.1): the
 non-deterministic per-vehicle XGBoost reconstruction (``processor.py:112-133``)
 is replaced by a centered rolling median, keeping the tolerance-mask,
@@ -10,26 +10,23 @@ run-merge and replacement logic (``processor.py:366-399``) semantically
 identical.
 
 Execution shape (vs the reference's sequential ``for v_id in ids`` loop):
+ONE kernel, :func:`_treat_kernel`, runs the whole chain — stages A+B+C
+(SG window 25, median window 5, run merge radius merge_gap, replacement)
+then stage D (Gaussian sigma-12 smooth + gradient, ``processor.py:401-448``
+incl. the no-anomaly passthrough branch) — per series slice, in ONE sorted
+Arrow stream per task (``mapInArrow``, see :mod:`..seriesmap`). The series
+key is conv_id, or — **chunked**, for mega-conversations whose full series
+must not land on one executor — (conv_id, chunk) with halo rows
+halo_a + merge_gap + halo_d on either side. Every stage is bounded-support,
+so halo ≥ the chain's total dependency radius ⇒ chunked == unchunked
+bit-for-bit.
 
-* **Stages A+B+C** (bounded-support kernels: SG window 25, median window 5,
-  run merge radius merge_gap, replacement) — ONE sorted Arrow stream per
-  task (``mapInArrow``, see :mod:`..seriesmap`) with conv_id as the series
-  key, or **chunked** with (conv_id, chunk) as the key and
-  halo rows (halo_a + merge_gap) for mega-conversations whose full series
-  must not land on one executor. Halo ≥ total dependency radius ⇒ chunked
-  == unchunked bit-for-bit. (The run merge, ``processor.py:390-399``, was
-  formerly a separate SQL window stage — two full-frame sorts and a
-  conv-partitioned exchange between the Python stages; it is
-  bounded-support, so round 5 fused it into the kernel.)
-* **conv_has_anomaly** — the one genuinely conv-global bit (== any
-  raw_anomaly). Non-chunked: in-slice any (series are whole convs), so
-  the WHOLE chain is one Python stage / one exchange. Chunked: a tiny
-  (conv_id, bool) flags side joins in — precomputed by the caller via
-  :func:`raw_anomaly_col` + :func:`conv_anomaly_flags` (free when a prior
-  stage already runs conv windows), else derived by a slim 3-column pass.
-* **Stage D** (Gaussian sigma-12 smooth + gradient, ``processor.py:401-448``
-  incl. the no-anomaly passthrough branch) — second Python stage, chunkable
-  with halo ≥ the Gaussian truncation radius (49).
+The one conv-global bit is ``conv_has_anomaly`` (== any raw_anomaly: the
+run merge only fills rows between existing raw anomalies). Non-chunked it
+is the in-slice any. Chunked, a tiny (conv_id, bool) flags side joins in
+before the pass: the caller's, via :func:`raw_anomaly_col` +
+:func:`conv_anomaly_flags` (free when a prior stage already runs conv
+windows), else derived from the input with the same two functions.
 """
 
 from __future__ import annotations
@@ -94,96 +91,52 @@ def _f64(b: pa.RecordBatch, name: str) -> np.ndarray:
     return pc.cast(b.column(name), pa.float64()).to_numpy(zero_copy_only=False)
 
 
-def _abc_compute(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray):
-    """Shared A+B+C math over precomputed slice bounds: returns
-    (filled, sg, med, raw, merged, treated) numpy arrays."""
+# the kernel's output columns, in table order
+_ADDED = [
+    ("tokens_filled", T.DoubleType()),
+    ("sg_tokens", T.DoubleType()),
+    ("med_tokens", T.DoubleType()),
+    ("raw_anomaly", T.BooleanType()),
+    ("is_anomaly", T.BooleanType()),
+    ("treated_tokens", T.DoubleType()),
+    ("conv_has_anomaly", T.BooleanType()),
+    ("g_ns", T.DoubleType()),
+    ("g_na", T.DoubleType()),
+]
+
+
+def _treat_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
+    """Stages A–D per series slice of a unit sorted by (series key,
+    turn_idx): interpolate, SG smooth, rolling-median reconstruction,
+    tolerance mask, run merge, replacement (A+B+C), then the Gaussian
+    smooth + gradient of stage D.
+
+    ``conv_has_anomaly`` picks D's branch. A unit that carries the column
+    (chunked: a slice is one chunk of a conversation) takes it from there;
+    otherwise each slice is a whole conversation and the bit is the
+    in-slice ``any`` of the merged mask."""
     x = _f64(b, "token_count")
     t = b.column("turn_idx").to_numpy(zero_copy_only=False)
+    joined = "conv_has_anomaly" in b.schema.names
+    if joined:
+        flag = b.column("conv_has_anomaly")
+        is_null = flag.is_null().to_numpy(zero_copy_only=False)
+        flag_val = flag.fill_null(False).to_numpy(zero_copy_only=False)
     n = len(x)
-    filled = np.empty(n)
-    sg = np.empty(n)
-    med = np.empty(n)
-    raw = np.empty(n, dtype=bool)
-    merged = np.empty(n, dtype=bool)
-    treated = np.empty(n)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        seg = K.interpolate_linear_both(x[s:e])
-        filled[s:e] = seg
-        sg[s:e] = K.savgol_poly1(seg, cfg.sg_window)
-        m = K.rolling_median(seg, cfg.med_window)
-        med[s:e] = m
-        r = K.anomaly_mask(seg, m, cfg.tol)
-        raw[s:e] = r
-        mr = _run_merge_values(r, t[s:e], cfg.merge_gap)
-        merged[s:e] = mr
-        treated[s:e] = np.where(mr, m, seg)
-    return filled, sg, med, raw, merged, treated
-
-
-def _stage_abc_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
-    """Stages A+B+C: per-series kernels, anomaly run-merge and replacement
-    over numpy slices of a unit sorted by (series key, turn_idx). The
-    merge is bounded-support (radius merge_gap + mask radius), so fusing it
-    here removes the former full-frame conv-partitioned window exchange
-    between stages A and D."""
-    filled, sg, med, raw, merged, treated = _abc_compute(b, cfg, bounds)
-    return {
-        "tokens_filled": filled,
-        "sg_tokens": sg,
-        "med_tokens": med,
-        "raw_anomaly": raw,
-        "is_anomaly": merged,
-        "treated_tokens": treated,
+    out = {
+        name: np.empty(n, dtype=bool if isinstance(dtype, T.BooleanType) else float)
+        for name, dtype in _ADDED
     }
-
-
-def _stage_full_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
-    """Whole-series single-pass treatment (non-chunked): stages A+B+C+D in
-    one kernel — each series is a complete conversation, so the per-conv
-    global ``conv_has_anomaly`` is an in-slice ``any`` and the whole chain
-    runs in ONE exchange (was three)."""
-    out = _stage_abc_kernel(b, cfg, bounds)
-    merged, treated, sg = out["is_anomaly"], out["treated_tokens"], out["sg_tokens"]
-    n = len(merged)
-    conv_has = np.empty(n, dtype=bool)
-    g_ns = np.empty(n)
-    g_na = np.empty(n)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        has = bool(merged[s:e].any())
-        conv_has[s:e] = has
-        seg = K.gaussian1d(treated[s:e], cfg.gauss_sigma) if has else sg[s:e]
-        g_ns[s:e] = seg
-        g_na[s:e] = K.gradient(seg, K.DT)
-    out.update(conv_has_anomaly=conv_has, g_ns=g_ns, g_na=g_na)
-    return out
-
-
-def _slim_raw_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
-    """Raw anomaly mask only (interp + rolling median + tolerance mask) —
-    the slim flags branch for chunked mode when no precomputed flags are
-    supplied. conv_has_anomaly == any(raw_anomaly): the run merge only
-    fills rows BETWEEN existing raw anomalies, so the per-conv any is
-    identical on raw and merged masks."""
-    x = _f64(b, "token_count")
-    raw = np.empty(len(x), dtype=bool)
     for s, e in zip(bounds[:-1], bounds[1:]):
         seg = K.interpolate_linear_both(x[s:e])
-        m = K.rolling_median(seg, cfg.med_window)
-        raw[s:e] = K.anomaly_mask(seg, m, cfg.tol)
-    return {"raw_anomaly": raw}
-
-
-def _stage_d_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
-    treated = _f64(b, "treated_tokens")
-    sg = _f64(b, "sg_tokens")
-    flag = b.column("conv_has_anomaly")
-    is_null = flag.is_null().to_numpy(zero_copy_only=False)
-    has_anom = flag.fill_null(False).to_numpy(zero_copy_only=False)
-    n = len(treated)
-    g_ns = np.empty(n)
-    g_na = np.empty(n)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        if is_null[s]:
+        sg = K.savgol_poly1(seg, cfg.sg_window)
+        med = K.rolling_median(seg, cfg.med_window)
+        raw = K.anomaly_mask(seg, med, cfg.tol)
+        merged = _run_merge_values(raw, t[s:e], cfg.merge_gap)
+        treated = np.where(merged, med, seg)
+        if not joined:
+            has = bool(merged.any())
+        elif is_null[s]:
             # a null flag means the caller-supplied flags frame is missing
             # (or null for) this conversation — silently treating that as
             # "no anomaly" would route the conv down the wrong branch
@@ -191,81 +144,20 @@ def _stage_d_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray)
                 f"conv_has_anomaly is null for {b.column('conv_id')[s].as_py()!r}: "
                 "flags= must cover every conversation with a non-null boolean"
             )
-        if has_anom[s]:
-            # anomalous branch: gaussian-smooth the treated series, derive
-            # (processor.py:401-431: new_speed -> g_ns -> g_na)
-            seg = K.gaussian1d(treated[s:e], cfg.gauss_sigma)
         else:
-            # passthrough branch (processor.py:433-448): keep the SG series
-            seg = sg[s:e]
-        g_ns[s:e] = seg
-        g_na[s:e] = K.gradient(seg, K.DT)
-    return {"g_ns": g_ns, "g_na": g_na}
-
-
-def _apply(df: DataFrame, kernel, added_fields, cfg: TreatmentConfig, halo: int, chunked: bool) -> DataFrame:
-    """Run a bounded-support per-series kernel per conv_id, or — in chunked
-    mode — per (conv_id, chunk) with ``halo`` overlap rows, keeping each
-    row's own-chunk output only.
-
-    Execution: one sorted Arrow stream per task (:mod:`..seriesmap`) — a
-    hash repartition on the series key, a JVM sort by (key, turn_idx), and
-    ``mapInArrow`` running ``kernel(unit, cfg, bounds)`` over units of whole
-    series. Task memory is one Arrow batch plus one open series; chunked
-    mode bounds any single series unit by chunk_len + 2·halo.
-
-    Chunked mode requires a dense ``turn_idx`` and pre-filled values (run
-    :func:`...gapfill.gap_fill` first so in-kernel interpolation is a no-op);
-    then halo ≥ kernel radius ⇒ identical to whole-series apply — this is
-    what lets a 10^8-turn conversation flow through fixed-memory executors.
-    """
-    out_schema = T.StructType(list(df.schema.fields))
-    for name, dtype in added_fields:
-        out_schema = out_schema.add(name, dtype, True)
-    passthrough = list(df.columns)
-    added = [name for name, _ in added_fields]
-
-    if not chunked:
-        src, key = df, ["conv_id"]
-    else:
-        L, H = cfg.chunk_len, halo
-        if H > L:
-            # the explode only serves ±1 adjacent chunk, so the effective halo
-            # is capped at chunk_len — beyond it chunked output silently
-            # diverges from whole-series output. Fail loud instead.
-            raise ValueError(
-                f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
-                "kernel support (sg_window/merge_gap/gauss_sigma)"
-            )
-        own = F.floor(F.col("turn_idx") / L).cast("long")
-        pos = F.col("turn_idx") % L
-        chunks = F.array_compact(
-            F.array(
-                own,
-                F.when(pos < H, own - 1),          # serve previous chunk's right halo
-                F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
-            )
-        )
-        src = df.withColumn("__chunk", F.explode(chunks)).where(F.col("__chunk") >= 0)
-        key = ["conv_id", "__chunk"]
-
-    def run(batches):
-        for unit, bounds in series_units(batches, lambda b: key_starts(b, key)):
-            res = kernel(unit, cfg, bounds)
-            # from_pandas: a NaN result is a null cell (nulls are load-bearing)
-            out = pa.RecordBatch.from_arrays(
-                [unit.column(c) for c in passthrough]
-                + [pa.array(res[c], from_pandas=True) for c in added],
-                names=passthrough + added,
-            )
-            if chunked:
-                # keep each row's own-chunk output only (halo rows drop here)
-                t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
-                c = unit.column("__chunk").to_numpy(zero_copy_only=False)
-                out = out.filter(pa.array(t // L == c))
-            yield out
-
-    return map_sorted_series(src, key, ["turn_idx"], run, out_schema)
+            has = bool(flag_val[s])
+        # anomalous branch: gaussian-smooth the treated series, derive
+        # (processor.py:401-431: new_speed -> g_ns -> g_na); passthrough
+        # branch (processor.py:433-448): keep the SG series
+        g = K.gaussian1d(treated, cfg.gauss_sigma) if has else sg
+        for name, v in (
+            ("tokens_filled", seg), ("sg_tokens", sg), ("med_tokens", med),
+            ("raw_anomaly", raw), ("is_anomaly", merged),
+            ("treated_tokens", treated), ("conv_has_anomaly", has),
+            ("g_ns", g), ("g_na", K.gradient(g, K.DT)),
+        ):
+            out[name][s:e] = v
+    return out
 
 
 def raw_anomaly_col(
@@ -286,8 +178,8 @@ def raw_anomaly_col(
     Use case: a pipeline whose gap-fill stage already runs conv-partitioned
     windows can add this column FOR FREE (same exchange), so
     ``conv_has_anomaly`` flags become a plain scan+aggregate over the
-    materialized table and the chunked treatment skips its slim flags pass
-    (pass ``flags=`` to :func:`treat_transcripts`)."""
+    materialized table instead of a second conv-partitioned window in the
+    chunked treatment (pass ``flags=`` to :func:`treat_transcripts`)."""
     cfg = cfg or TreatmentConfig()
     w = Window.partitionBy(key).orderBy(idx)
     c = F.col(value_col)
@@ -328,63 +220,80 @@ def treat_transcripts(
     Adds: tokens_filled, sg_tokens, med_tokens, raw_anomaly, is_anomaly,
     treated_tokens, conv_has_anomaly, g_ns (smoothed), g_na (derivative).
 
-    Execution (round-5 fusion — the former SQL run-merge stage cost a
-    full-frame conv-partitioned window exchange between the two Python
-    stages; the merge is bounded-support, so it now runs inside the first
-    kernel):
+    One Python pass either way: a hash repartition on the series key, a JVM
+    sort by (key, turn_idx), and ``mapInArrow`` running :func:`_treat_kernel`
+    over units of whole series (:mod:`..seriesmap`). Task memory is one
+    Arrow batch plus one open series.
 
-    * non-chunked: ONE Python stage (A+B+C+D fused — each series is a whole
-      conversation, so the global ``conv_has_anomaly`` is an in-slice any).
-      One exchange total, was three.
-    * chunked: fused A+B+C kernel (halo extends by merge_gap), then the
-      per-conv ``conv_has_anomaly`` bit joins in and stage D runs chunked.
-      ``flags`` supplies it precomputed — (conv_id, conv_has_anomaly),
-      e.g. from :func:`conv_anomaly_flags` over a table carrying
-      :func:`raw_anomaly_col` — with no extra full-frame exchange (the
-      tiny flags side broadcasts below the AQE threshold; above it — many
-      billions of conversations per shard — it degrades to a narrow
-      shuffle join, still strictly cheaper than the full-frame window
-      exchange it replaced). Without ``flags`` a slim 3-column Python pass
-      derives them (still cheaper than the old full-frame exchange).
-      Two full-frame exchanges total, was three.
+    * non-chunked: a series is a conversation, so ``conv_has_anomaly`` is
+      an in-slice any. ``flags`` is not read.
+    * chunked: a series is (conv_id, turn_idx // chunk_len) plus halo rows
+      on either side — mega-conversations never land whole on one task.
+      The halo covers the whole chain's support, halo_a + merge_gap +
+      halo_d, so own-chunk rows equal whole-series output bit for bit and
+      halo rows are dropped after the kernel. The per-conv
+      ``conv_has_anomaly`` bit joins in before the pass: ``flags`` supplies
+      it as (conv_id, conv_has_anomaly), e.g. :func:`conv_anomaly_flags`
+      over a table carrying :func:`raw_anomaly_col`; the tiny flags side
+      broadcasts, so the pass is the one full-frame exchange. Without
+      ``flags`` they are derived from ``df`` the same way (one more
+      conv-partitioned window exchange). Requires pre-filled values
+      (:func:`...gapfill.gap_fill`) so in-kernel interpolation is a no-op.
     """
     cfg = cfg or TreatmentConfig()
-
-    abc_fields = [
-        ("tokens_filled", T.DoubleType()),
-        ("sg_tokens", T.DoubleType()),
-        ("med_tokens", T.DoubleType()),
-        ("raw_anomaly", T.BooleanType()),
-        ("is_anomaly", T.BooleanType()),
-        ("treated_tokens", T.DoubleType()),
-    ]
+    passthrough = list(df.columns)
+    added = [name for name, _ in _ADDED]
+    out_schema = T.StructType(list(df.schema.fields))
+    for name, dtype in _ADDED:
+        out_schema = out_schema.add(name, dtype, True)
 
     if not chunked:
-        full_fields = abc_fields + [
-            ("conv_has_anomaly", T.BooleanType()),
-            ("g_ns", T.DoubleType()),
-            ("g_na", T.DoubleType()),
-        ]
-        return _apply(df, _stage_full_kernel, full_fields, cfg, 0, chunked=False)
-
-    halo_abc = cfg.halo_a + cfg.merge_gap
-    abc = _apply(df, _stage_abc_kernel, abc_fields, cfg, halo_abc, chunked=True)
-
-    if flags is None:
-        slim = df.select("conv_id", "turn_idx", "token_count")
-        rawed = _apply(
-            slim,
-            _slim_raw_kernel,
-            [("raw_anomaly", T.BooleanType())],
-            cfg,
-            cfg.med_window // 2 + 1,
-            chunked=True,
+        src, key = df, ["conv_id"]
+    else:
+        L = cfg.chunk_len
+        H = cfg.halo_a + cfg.merge_gap + cfg.halo_d
+        if H > L:
+            # the explode only serves ±1 adjacent chunk, so the effective halo
+            # is capped at chunk_len — beyond it chunked output silently
+            # diverges from whole-series output. Fail loud instead.
+            raise ValueError(
+                f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
+                "kernel support (sg_window/merge_gap/gauss_sigma)"
+            )
+        if flags is None:
+            flags = conv_anomaly_flags(df.withColumn("raw_anomaly", raw_anomaly_col(cfg)))
+        own = F.floor(F.col("turn_idx") / L).cast("long")
+        pos = F.col("turn_idx") % L
+        chunks = F.array_compact(
+            F.array(
+                own,
+                F.when(pos < H, own - 1),          # serve previous chunk's right halo
+                F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
+            )
         )
-        flags = conv_anomaly_flags(rawed)
+        # LEFT join: a flags frame that misses conversations must not silently
+        # drop their rows — the null flag fails loudly in _treat_kernel
+        src = (
+            df.join(flags, "conv_id", "left")
+            .withColumn("__chunk", F.explode(chunks))
+            .where(F.col("__chunk") >= 0)
+        )
+        key = ["conv_id", "__chunk"]
 
-    # LEFT join: a flags frame that misses conversations must not silently
-    # drop their rows — the null flag fails loudly in _stage_d_kernel
-    c = abc.join(flags, "conv_id", "left")
+    def run(batches):
+        for unit, bounds in series_units(batches, lambda b: key_starts(b, key)):
+            res = _treat_kernel(unit, cfg, bounds)
+            # from_pandas: a NaN result is a null cell (nulls are load-bearing)
+            out = pa.RecordBatch.from_arrays(
+                [unit.column(c) for c in passthrough]
+                + [pa.array(res[c], from_pandas=True) for c in added],
+                names=passthrough + added,
+            )
+            if chunked:
+                # keep each row's own-chunk output only (halo rows drop here)
+                t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
+                c = unit.column("__chunk").to_numpy(zero_copy_only=False)
+                out = out.filter(pa.array(t // L == c))
+            yield out
 
-    d_fields = [("g_ns", T.DoubleType()), ("g_na", T.DoubleType())]
-    return _apply(c, _stage_d_kernel, d_fields, cfg, cfg.halo_d, chunked=True)
+    return map_sorted_series(src, key, ["turn_idx"], run, out_schema)

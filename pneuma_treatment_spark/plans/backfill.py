@@ -185,7 +185,7 @@ def merge_conv_scoped(
     # frame BEFORE the write: afterwards `keep`'s captured file index
     # points at files the overwrite just replaced.
     present = {tuple(r) for r in out.select(*pcols).distinct().collect()}
-    io.write(out, table, partition_cols=pcols)  # dynamic overwrite: aff parts only
+    io.write(out, table, partition_cols=pcols, dynamic=True)  # aff parts only
     stale = [p for p in aff_parts if p not in present]
     if stale:
         io.drop_partitions(table, stale, pcols)

@@ -29,10 +29,9 @@ def build_filled(raw: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFra
     them exactly once, and filled rows get null payloads either way. When
     ``chunked``, ``raw_anomaly`` rides along for free — the SQL mask reuses
     this stage's conv-partitioned windows — so the treated stage's
-    ``conv_has_anomaly`` flags are a plain scan+aggregate instead of a
-    full-frame window exchange (see ``treat_transcripts``). Only the
-    chunked treatment consumes the flags; the non-chunked path computes
-    ``conv_has_anomaly`` in-kernel.
+    ``conv_has_anomaly`` flags are a plain scan+aggregate (see
+    :func:`build_treated`). The non-chunked treatment computes
+    ``conv_has_anomaly`` in-kernel and needs no flags.
     """
     filled = gap_fill(
         raw.select("conv_id", "turn_idx", "role", "ts", "token_count", "is_tool_call"),
@@ -51,22 +50,19 @@ def build_filled(raw: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFra
 def build_treated(filled: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFrame:
     """Treat the narrow metric series of a ``filled`` frame.
 
-    The kernels never read text/tool/role — shuttling payload or meta
-    columns through the treatment's ~4 shuffle passes multiplies the
-    stage's bytes (measured: dropping ``role`` cuts more shuffle bytes than
+    The kernel never reads text/tool/role — shuttling payload or meta
+    columns through the treatment's shuffle multiplies the stage's bytes
+    (measured: dropping ``role`` cuts more shuffle bytes than
     dictionary-encoding it — BENCH/BASELINE.md bytes table); they live in
     ``filled`` and join back exactly on (conv_id, turn_idx) when needed.
     ``ts`` stays for the p_day write clustering; ``is_filled`` is
-    load-bearing semantics. The conv flags are a map-side-combined
-    aggregate over the stored ``raw_anomaly`` column, broadcast into the
-    chunked stage-D join; a filled table without that column (written
-    before it existed) falls back to ``treat_transcripts``' slim pass.
+    load-bearing semantics. Chunked, the conv flags are a
+    map-side-combined aggregate over the ``raw_anomaly`` column
+    :func:`build_filled` stored, broadcast into the treatment's one pass.
     """
     narrow = filled.select("conv_id", "turn_idx", "ts", "token_count", "is_filled")
     flags = (
-        conv_anomaly_flags(filled.select("conv_id", "raw_anomaly"))
-        if chunked and "raw_anomaly" in filled.columns
-        else None
+        conv_anomaly_flags(filled.select("conv_id", "raw_anomaly")) if chunked else None
     )
     return treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
 

@@ -49,8 +49,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # UTC everywhere: stable semantics + DuckDB-comparable timestamps.
         .config("spark.sql.session.timeZone", "UTC")
-        # Deterministic float behavior for tests (no ANSI surprises).
-        .config("spark.sql.ansi.enabled", "false")
         # Whole-stage-codegen class cache: the default 100 entries thrash on
         # any workload that cycles through more than ~two dozen distinct
         # query shapes (the pipeline + query suite generates several hundred

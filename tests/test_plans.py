@@ -263,11 +263,11 @@ def test_text_rides_no_treatment_or_rollup_shuffle(spark):
 
 
 def test_treatment_fused_exchange_count(spark, transcripts_df):
-    """Round-5 fusion guarantees: the non-chunked treatment chain is ONE
-    exchange end-to-end (A+B+C+D in a single Python stage), and the chunked
-    chain with precomputed flags is TWO full-frame exchanges with the tiny
-    flags side broadcast — the former SQL run-merge window exchange must
-    not reappear."""
+    """Fusion guarantees: the treatment chain is ONE full-frame exchange
+    end-to-end in both modes (A+B+C+D in a single Python pass). Chunked,
+    with precomputed flags, the tiny flags side is broadcast — neither the
+    former SQL run-merge window exchange nor a second Python pass for
+    stage D may reappear."""
     from pneuma_treatment_spark.operators.gapfill import gap_fill
     from pneuma_treatment_spark.operators.rollup import with_turn_metrics
     from pneuma_treatment_spark.operators.treatment import (
@@ -295,14 +295,14 @@ def test_treatment_fused_exchange_count(spark, transcripts_df):
         assert one.count("Exchange hashpartitioning") == 1, one
 
         rawed = filled.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-        two = above_cache(
+        chunked = above_cache(
             treat_transcripts(
                 filled, cfg, chunked=True, flags=conv_anomaly_flags(rawed)
             )
         )
         # flags ride a broadcast, not a full-frame hash exchange
-        assert two.count("Exchange hashpartitioning") == 2, two
-        assert "BroadcastExchange" in two or "BroadcastHashJoin" in two
+        assert chunked.count("Exchange hashpartitioning") == 1, chunked
+        assert "BroadcastExchange" in chunked or "BroadcastHashJoin" in chunked
     finally:
         filled.unpersist()
 

@@ -70,9 +70,26 @@ def test_partition_lineage_manifest(spark, workdir):
 
 
 def test_config_change_invalidates_downstream(spark, workdir):
+    """A rerun with a changed seed recomputes every stage and REPLACES its
+    table: all seven tables equal a fresh run of the new seed, with lineage
+    green on each. A write that kept the old run's partitions would leave
+    its rows next to the new ones."""
     run_pipeline(spark, workdir, **ARGS)
     s2 = run_pipeline(spark, workdir, **{**ARGS, "seed": 12})
     assert not any(st["skipped"] for st in s2["stages"].values())
+
+    fresh_dir = workdir + "_fresh"
+    run_pipeline(spark, fresh_dir, **{**ARGS, "seed": 12})
+    io, fresh = TableIO(spark, workdir), TableIO(spark, fresh_dir)
+    try:
+        for table in sorted(ALL_STAGES):
+            rerun = io.read(table)
+            want = fresh.read(table).select(*rerun.columns)
+            assert rerun.exceptAll(want).count() == 0, table
+            assert want.exceptAll(rerun).count() == 0, table
+            assert verify_partition_lineage(io, table), table
+    finally:
+        shutil.rmtree(fresh_dir, ignore_errors=True)
 
 
 def test_lineage_detects_tampered_table(spark, workdir):

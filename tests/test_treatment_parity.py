@@ -13,6 +13,9 @@ from pneuma_treatment_spark.reference_impl import oracle as O
 from tests.conftest import assert_pdf_equal
 
 CFG = TreatmentConfig(chunk_len=256)  # small chunks so the mega-conv spans many
+# chunk_len == the fused halo (halo_a + merge_gap + halo_d = 72): every row
+# also serves both neighbour chunks, the tightest chunking the guard allows
+HALO_CFG = TreatmentConfig(chunk_len=72)
 
 
 def _token_counts(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -48,9 +51,13 @@ def test_gap_fill_parity(filled_spark, filled_oracle):
     assert_pdf_equal(got, filled_oracle, ["conv_id", "turn_idx"])
 
 
-@pytest.mark.parametrize("chunked", [False, True], ids=["whole-series", "chunked"])
-def test_treatment_parity(filled_spark, filled_oracle, chunked):
-    got = treat_transcripts(filled_spark, CFG, chunked=chunked).toPandas()
+@pytest.mark.parametrize(
+    "chunked, cfg",
+    [(False, CFG), (True, CFG), (True, HALO_CFG)],
+    ids=["whole-series", "chunked", "chunked-at-halo"],
+)
+def test_treatment_parity(filled_spark, filled_oracle, chunked, cfg):
+    got = treat_transcripts(filled_spark, cfg, chunked=chunked).toPandas()
     want = O.oracle_treat(filled_oracle, CFG)
     cols = [
         "conv_id", "turn_idx", "tokens_filled", "sg_tokens", "med_tokens",
@@ -64,7 +71,7 @@ def test_treatment_parity(filled_spark, filled_oracle, chunked):
 def test_treatment_parity_small_batches(filled_spark, filled_oracle, chunked, small_arrow_batches):
     """Series straddling Arrow batch boundaries are carried into the next
     batch whole: the result still equals the oracle bit for bit."""
-    test_treatment_parity(filled_spark, filled_oracle, chunked)
+    test_treatment_parity(filled_spark, filled_oracle, chunked, CFG)
 
 
 def test_treatment_parity_precomputed_flags(filled_spark, filled_oracle):
