@@ -128,8 +128,7 @@ def run_transcript_pipeline(spark, n_convs: int = 60000, seed: int = 42):
     wd = tempfile.mkdtemp(prefix="bench_ptsw_")
     try:
         summary = run_pipeline(
-            spark, wd, n_convs=n_convs, seed=seed, mega_turns=100000, chunked=True,
-            stats="fast",
+            spark, wd, n_convs=n_convs, seed=seed, mega_turns=100000, stats="fast",
         )
         return summary["stages"]["ingest"]["rows"]
     finally:

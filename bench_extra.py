@@ -2,12 +2,12 @@
 
 NOT the driver bench — bench.py is frozen for measurement. This tool exists
 to (a) time individual queries warm with more reps, (b) dump
-``explain("formatted")`` plans to plans/r08/, (c) count Spark jobs + stages
+``explain("formatted")`` plans to a directory, (c) count Spark jobs + stages
 per query via a status listener, so optimization work targets the real cost
 (job launches / planning / exchanges vs executor compute).
 
 Usage:
-    python bench_extra.py --reps 5 [--explain plans/r08 --suffix _before] [q1 q2 ...]
+    python bench_extra.py --reps 5 [--explain plans/dump --suffix _before] [q1 q2 ...]
     python bench_extra.py --pipeline            # per-stage pipeline walls
 """
 
@@ -59,7 +59,7 @@ def main() -> None:
             t0 = time.perf_counter()
             summary = run_pipeline(
                 spark, wd, n_convs=args.pipe_convs, seed=42, mega_turns=100000,
-                chunked=True, stats="fast",
+                stats="fast",
             )
             wall = time.perf_counter() - t0
         finally:

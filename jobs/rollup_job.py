@@ -36,7 +36,12 @@ from pneuma_treatment_spark.operators.rollup import (
 )
 from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import PipelineRunner
-from pneuma_treatment_spark.plans.stages import build_chunks, build_filled, build_treated
+from pneuma_treatment_spark.plans.stages import (
+    build_chunks,
+    build_filled,
+    build_treated,
+    check_transcripts,
+)
 from pneuma_treatment_spark.synth import generate_transcripts
 
 #: tier TTLs (days) — finer tiers age out first (retention cascade)
@@ -67,7 +72,9 @@ def run_pipeline(
     """Run (or resume) the full pipeline; returns a stage→metrics summary.
 
     ``input_table``: optional path to an existing transcripts parquet table;
-    default synthesizes deterministically. ``stop_after``: stage name to halt
+    default synthesizes deterministically; malformed rows are rejected
+    before any write (``stages.check_transcripts``). ``chunked=True`` is
+    the only accepted value. ``stop_after``: stage name to halt
     after (used by the resume tests to simulate a mid-job kill) — only that
     stage and its upstream stages run, on the same two-branch executor as a
     full run; the branch not holding it is never submitted, and the TTL
@@ -76,6 +83,8 @@ def run_pipeline(
     stages = ("ingest", *TREATMENT_STAGES, *ROLLUP_STAGES)
     if stop_after is not None and stop_after not in stages:
         raise ValueError(f"stop_after={stop_after!r} is not a stage: {stages}")
+    if not chunked:
+        raise ValueError("chunked=False is gone: the treatment always runs chunk+halo")
     cfg = cfg or TreatmentConfig()
     windows = chunk_window_days or dict(TIER_WINDOW_DAYS)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
@@ -86,7 +95,6 @@ def run_pipeline(
             "n_convs": n_convs,
             "seed": seed,
             "mega_turns": mega_turns,
-            "chunked": chunked,
             "input_table": input_table,
             "treatment": cfg.__dict__,
             # ops tooling (plans/backfill.py) ADOPTS these two from the
@@ -119,30 +127,30 @@ def run_pipeline(
             raise _StopPipeline(name)
         return df
 
-    try:
+    def read_input():
+        if input_table:
+            raw = spark.read.parquet(input_table)
+            check_transcripts(raw, "input_table")
+            return raw
         first = shard_index * n_convs // shard_count
         cnt = (shard_index + 1) * n_convs // shard_count - first
-        ingest = stage(
-            "ingest",
-            lambda io: with_turn_metrics(
-                spark.read.parquet(input_table)
-                if input_table
-                else generate_transcripts(
-                    spark, cnt, seed=seed, mega_turns=mega_turns,
-                    first_conv=first, total_convs=n_convs,
-                )
-            ),
+        return generate_transcripts(
+            spark, cnt, seed=seed, mega_turns=mega_turns,
+            first_conv=first, total_convs=n_convs,
         )
+
+    try:
+        ingest = stage("ingest", lambda io: with_turn_metrics(read_input()))
 
         def run_treatment_branch():
             filled = stage(
                 "filled",
-                lambda io: build_filled(ingest, cfg, chunked),
+                lambda io: build_filled(ingest, cfg),
                 deps=["ingest"],
             )
             stage(
                 "treated",
-                lambda io: build_treated(filled, cfg, chunked),
+                lambda io: build_treated(filled, cfg),
                 deps=["filled"],
             )
 
@@ -242,7 +250,6 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--mega-turns", type=int, default=20000)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--no-chunked", action="store_true")
     ap.add_argument("--input-table", default=None)
     ap.add_argument("--ttl-now", default=None)
     ap.add_argument(
@@ -339,7 +346,6 @@ def main() -> None:
         n_convs=args.n_convs,
         seed=args.seed,
         mega_turns=args.mega_turns,
-        chunked=not args.no_chunked,
         input_table=args.input_table,
         ttl_now=args.ttl_now,
         n_buckets=args.buckets if args.buckets is not None else 8,

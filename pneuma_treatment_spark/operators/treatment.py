@@ -14,19 +14,18 @@ ONE kernel, :func:`_treat_kernel`, runs the whole chain — stages A+B+C
 (SG window 25, median window 5, run merge radius merge_gap, replacement)
 then stage D (Gaussian sigma-12 smooth + gradient, ``processor.py:401-448``
 incl. the no-anomaly passthrough branch) — per series slice, in ONE sorted
-Arrow stream per task (``mapInArrow``, see :mod:`..seriesmap`). The series
-key is conv_id, or — **chunked**, for mega-conversations whose full series
-must not land on one executor — (conv_id, chunk) with halo rows
-halo_a + merge_gap + halo_d on either side. Every stage is bounded-support,
-so halo ≥ the chain's total dependency radius ⇒ chunked == unchunked
-bit-for-bit.
+Arrow stream per task (``mapInArrow``, see :mod:`..seriesmap`). A slice
+is one chunk (conv_id, turn_idx // chunk_len) plus halo rows halo_a +
+merge_gap + halo_d on either side, so no conversation lands whole on one
+executor. Every stage is bounded-support, so halo ≥ the chain's total
+dependency radius ⇒ own rows equal the whole-series output bit-for-bit.
 
 The one conv-global bit is ``conv_has_anomaly`` (== any raw_anomaly: the
-run merge only fills rows between existing raw anomalies). Non-chunked it
-is the in-slice any. Chunked, a tiny (conv_id, bool) flags side joins in
-before the pass: the caller's, via :func:`raw_anomaly_col` +
-:func:`conv_anomaly_flags` (free when a prior stage already runs conv
-windows), else derived from the input with the same two functions.
+run merge only fills rows between existing raw anomalies), resolved per
+slice: halo rows only → skipped; own rows only → the whole conversation
+(the input is dense), so the in-slice any; both → a conversation longer
+than a chunk, which reads the caller's ``flags`` (:func:`raw_anomaly_col`
++ :func:`conv_anomaly_flags`) and raises without them.
 """
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ class TreatmentConfig:
     tol: float = 6.0             # tolerance mask threshold (processor.py:302: 0.1 on accel)
     merge_gap: int = 10          # merge anomaly runs < 10 apart (processor.py:303)
     gauss_sigma: float = 12.0    # processor.py:91 (gaussian_filter1d sigma=12)
-    chunk_len: int = 4096        # chunked-mode segment length (mega-conversations)
+    chunk_len: int = 4096        # series slice length (mega-conversations span many)
 
     @property
     def halo_a(self) -> int:
@@ -69,7 +68,7 @@ def _run_merge_values(raw: np.ndarray, turns: np.ndarray, gap: int) -> np.ndarra
     formulation (``last(anom_idx) over asc`` / ``over desc``); equals
     :func:`kernels.merge_anomaly_runs` (position-based) on dense turn_idx.
     Bounded support: a row's decision only reads raw flags within ``gap``
-    turn values, so chunked execution with halo ≥ gap + mask radius is
+    turn values, so chunk+halo execution with halo ≥ gap + mask radius is
     exact."""
     idx = np.flatnonzero(raw)
     out = raw.copy()
@@ -105,16 +104,15 @@ _ADDED = [
 ]
 
 
-def _treat_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -> dict:
+def _treat_kernel(
+    b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray, own: np.ndarray
+) -> dict:
     """Stages A–D per series slice of a unit sorted by (series key,
     turn_idx): interpolate, SG smooth, rolling-median reconstruction,
     tolerance mask, run merge, replacement (A+B+C), then the Gaussian
-    smooth + gradient of stage D.
-
-    ``conv_has_anomaly`` picks D's branch. A unit that carries the column
-    (chunked: a slice is one chunk of a conversation) takes it from there;
-    otherwise each slice is a whole conversation and the bit is the
-    in-slice ``any`` of the merged mask."""
+    smooth + gradient of stage D. ``own`` marks the slice's own-chunk
+    rows; ``conv_has_anomaly`` (D's branch) follows the module's per-slice
+    rule, and a skipped halo-only slice leaves its (dropped) rows unset."""
     x = _f64(b, "token_count")
     t = b.column("turn_idx").to_numpy(zero_copy_only=False)
     joined = "conv_has_anomaly" in b.schema.names
@@ -128,21 +126,24 @@ def _treat_kernel(b: pa.RecordBatch, cfg: TreatmentConfig, bounds: np.ndarray) -
         for name, dtype in _ADDED
     }
     for s, e in zip(bounds[:-1], bounds[1:]):
+        mine = own[s:e]
+        if not mine.any():
+            continue
         seg = K.interpolate_linear_both(x[s:e])
         sg = K.savgol_poly1(seg, cfg.sg_window)
         med = K.rolling_median(seg, cfg.med_window)
         raw = K.anomaly_mask(seg, med, cfg.tol)
         merged = _run_merge_values(raw, t[s:e], cfg.merge_gap)
         treated = np.where(merged, med, seg)
-        if not joined:
+        if mine.all():
             has = bool(merged.any())
-        elif is_null[s]:
-            # a null flag means the caller-supplied flags frame is missing
-            # (or null for) this conversation — silently treating that as
-            # "no anomaly" would route the conv down the wrong branch
+        elif not joined or is_null[s]:
+            # the in-slice any sees one chunk only: guessing would route
+            # the conversation down the wrong branch silently
             raise ValueError(
-                f"conv_has_anomaly is null for {b.column('conv_id')[s].as_py()!r}: "
-                "flags= must cover every conversation with a non-null boolean"
+                f"conv_has_anomaly is null for {b.column('conv_id')[s].as_py()!r}, "
+                f"which is longer than chunk_len {cfg.chunk_len}: pass flags= "
+                "covering every such conversation with a non-null boolean"
             )
         else:
             has = bool(flag_val[s])
@@ -178,8 +179,9 @@ def raw_anomaly_col(
     Use case: a pipeline whose gap-fill stage already runs conv-partitioned
     windows can add this column FOR FREE (same exchange), so
     ``conv_has_anomaly`` flags become a plain scan+aggregate over the
-    materialized table instead of a second conv-partitioned window in the
-    chunked treatment (pass ``flags=`` to :func:`treat_transcripts`)."""
+    materialized table, and conversations longer than a chunk get their
+    bit without a second conv-partitioned window (pass ``flags=`` to
+    :func:`treat_transcripts`)."""
     cfg = cfg or TreatmentConfig()
     w = Window.partitionBy(key).orderBy(idx)
     c = F.col(value_col)
@@ -211,7 +213,6 @@ def conv_anomaly_flags(rawed: DataFrame, key: str = "conv_id") -> DataFrame:
 def treat_transcripts(
     df: DataFrame,
     cfg: TreatmentConfig | None = None,
-    chunked: bool = False,
     flags: DataFrame | None = None,
 ) -> DataFrame:
     """Full treatment chain. Input: transcripts with ``token_count`` (from
@@ -220,25 +221,20 @@ def treat_transcripts(
     Adds: tokens_filled, sg_tokens, med_tokens, raw_anomaly, is_anomaly,
     treated_tokens, conv_has_anomaly, g_ns (smoothed), g_na (derivative).
 
-    One Python pass either way: a hash repartition on the series key, a JVM
-    sort by (key, turn_idx), and ``mapInArrow`` running :func:`_treat_kernel`
-    over units of whole series (:mod:`..seriesmap`). Task memory is one
-    Arrow batch plus one open series.
+    One Python pass: rows explode into their chunk and, within the halo
+    of a boundary, the neighbour's; a hash repartition on (conv_id,
+    chunk), a JVM sort by (key, turn_idx), and ``mapInArrow`` running
+    :func:`_treat_kernel` over whole slices (:mod:`..seriesmap`); halo
+    rows drop after the kernel. Task memory is one Arrow batch plus one
+    open slice.
 
-    * non-chunked: a series is a conversation, so ``conv_has_anomaly`` is
-      an in-slice any. ``flags`` is not read.
-    * chunked: a series is (conv_id, turn_idx // chunk_len) plus halo rows
-      on either side — mega-conversations never land whole on one task.
-      The halo covers the whole chain's support, halo_a + merge_gap +
-      halo_d, so own-chunk rows equal whole-series output bit for bit and
-      halo rows are dropped after the kernel. The per-conv
-      ``conv_has_anomaly`` bit joins in before the pass: ``flags`` supplies
-      it as (conv_id, conv_has_anomaly), e.g. :func:`conv_anomaly_flags`
-      over a table carrying :func:`raw_anomaly_col`; the tiny flags side
-      broadcasts, so the pass is the one full-frame exchange. Without
-      ``flags`` they are derived from ``df`` the same way (one more
-      conv-partitioned window exchange). Requires pre-filled values
-      (:func:`...gapfill.gap_fill`) so in-kernel interpolation is a no-op.
+    ``flags`` — (conv_id, conv_has_anomaly), e.g. :func:`conv_anomaly_flags`
+    over :func:`raw_anomaly_col` — is required only for conversations
+    longer than a chunk; it broadcasts, so the pass stays the one
+    full-frame exchange. Requires gap-filled input
+    (:func:`...gapfill.gap_fill`): dense turns make in-kernel
+    interpolation a no-op and a slice without halo rows a whole
+    conversation.
     """
     cfg = cfg or TreatmentConfig()
     passthrough = list(df.columns)
@@ -247,53 +243,42 @@ def treat_transcripts(
     for name, dtype in _ADDED:
         out_schema = out_schema.add(name, dtype, True)
 
-    if not chunked:
-        src, key = df, ["conv_id"]
-    else:
-        L = cfg.chunk_len
-        H = cfg.halo_a + cfg.merge_gap + cfg.halo_d
-        if H > L:
-            # the explode only serves ±1 adjacent chunk, so the effective halo
-            # is capped at chunk_len — beyond it chunked output silently
-            # diverges from whole-series output. Fail loud instead.
-            raise ValueError(
-                f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
-                "kernel support (sg_window/merge_gap/gauss_sigma)"
-            )
-        if flags is None:
-            flags = conv_anomaly_flags(df.withColumn("raw_anomaly", raw_anomaly_col(cfg)))
-        own = F.floor(F.col("turn_idx") / L).cast("long")
-        pos = F.col("turn_idx") % L
-        chunks = F.array_compact(
-            F.array(
-                own,
-                F.when(pos < H, own - 1),          # serve previous chunk's right halo
-                F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
-            )
+    L = cfg.chunk_len
+    H = cfg.halo_a + cfg.merge_gap + cfg.halo_d
+    if H > L:
+        # the explode only serves ±1 adjacent chunk, so the effective halo
+        # is capped at chunk_len — beyond it chunk output silently
+        # diverges from whole-series output. Fail loud instead.
+        raise ValueError(
+            f"halo {H} exceeds chunk_len {L}: raise chunk_len or shrink the "
+            "kernel support (sg_window/merge_gap/gauss_sigma)"
         )
-        # LEFT join: a flags frame that misses conversations must not silently
-        # drop their rows — the null flag fails loudly in _treat_kernel
-        src = (
-            df.join(flags, "conv_id", "left")
-            .withColumn("__chunk", F.explode(chunks))
-            .where(F.col("__chunk") >= 0)
-        )
-        key = ["conv_id", "__chunk"]
+    own = F.floor(F.col("turn_idx") / L).cast("long")
+    pos = F.col("turn_idx") % L
+    chunks = F.array(
+        own,
+        F.when(pos < H, own - 1),          # serve previous chunk's right halo
+        F.when(pos >= L - H, own + 1),     # serve next chunk's left halo
+    )
+    # LEFT join: a flags frame that misses conversations must not silently
+    # drop their rows — the null flag fails loudly in _treat_kernel
+    src = df if flags is None else df.join(flags, "conv_id", "left")
+    # the filter drops the unserved (null) and chunk -1 entries
+    src = src.withColumn("__chunk", F.explode(chunks)).where(F.col("__chunk") >= 0)
+    key = ["conv_id", "__chunk"]
 
     def run(batches):
         for unit, bounds in series_units(batches, lambda b: key_starts(b, key)):
-            res = _treat_kernel(unit, cfg, bounds)
+            t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
+            mine = t // L == unit.column("__chunk").to_numpy(zero_copy_only=False)
+            res = _treat_kernel(unit, cfg, bounds, mine)
             # from_pandas: a NaN result is a null cell (nulls are load-bearing)
             out = pa.RecordBatch.from_arrays(
                 [unit.column(c) for c in passthrough]
                 + [pa.array(res[c], from_pandas=True) for c in added],
                 names=passthrough + added,
             )
-            if chunked:
-                # keep each row's own-chunk output only (halo rows drop here)
-                t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
-                c = unit.column("__chunk").to_numpy(zero_copy_only=False)
-                out = out.filter(pa.array(t // L == c))
-            yield out
+            # keep each row's own-chunk output only (halo rows drop here)
+            yield out.filter(pa.array(mine))
 
     return map_sorted_series(src, key, ["turn_idx"], run, out_schema)

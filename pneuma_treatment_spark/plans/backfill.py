@@ -66,7 +66,12 @@ from pneuma_treatment_spark.plans.lineage import (
     read_stage,
     write_partition_counts,
 )
-from pneuma_treatment_spark.plans.stages import build_chunks, build_filled, build_treated
+from pneuma_treatment_spark.plans.stages import (
+    build_chunks,
+    build_filled,
+    build_treated,
+    check_transcripts,
+)
 
 #: the raw-transcript delta schema (input_hint shape) — extra columns are
 #: dropped so dead-letter sink dirs (which carry a batch_id partition level)
@@ -312,19 +317,19 @@ def backfill_pipeline(
     workdir: str,
     delta: DataFrame,
     cfg: TreatmentConfig | None = None,
-    chunked: bool | None = None,
     n_buckets: int | None = None,
 ) -> dict:
     """Apply a late/corrected-turn delta through every pipeline table.
 
     ``delta``: raw transcript rows ``(conv_id, turn_idx, role, text, tool,
     ts)`` — upsert keyed on (conv_id, turn_idx); extra columns (e.g. a
-    dead-letter sink's ``batch_id`` partition level) are dropped. ``chunked=
-    None`` infers the treatment mode from the existing ``filled`` table's
-    layout; ``cfg=None`` adopts the treatment config recorded in the
-    ``filled`` manifest (an explicit ``cfg`` that contradicts the recorded
-    one is a loud error — recomputing affected conversations under different
-    parameters would silently mix treatment semantics within one table).
+    dead-letter sink's ``batch_id`` partition level) are dropped; malformed
+    rows are rejected before any table is touched
+    (:func:`.stages.check_transcripts`). ``cfg=None`` adopts the treatment
+    config recorded in the ``filled`` manifest (an explicit ``cfg`` that
+    contradicts the recorded one is a loud error — recomputing affected
+    conversations under different parameters would silently mix treatment
+    semantics within one table).
     ``n_buckets`` and the chunk window map follow the same adopt-or-error
     rule (ADVICE r6): a wrong bucket count would prune the wrong p_bucket
     set and silently DUPLICATE affected conversations' old rows, and a
@@ -361,37 +366,11 @@ def backfill_pipeline(
         raise ValueError(f"backfill delta is missing columns: {missing}")
     io = TableIO(spark, workdir, n_buckets=n_buckets)
     delta = with_turn_metrics(delta.select(*_DELTA_COLS))
-    # Loud contract on the upsert key: a duplicate (conv_id, turn_idx) in
-    # the delta would survive the anti-join and insert BOTH rows — silent
-    # duplication through every downstream table. Null keys would vanish
-    # from the joins instead of erroring. One counting job checks both.
-    chk = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("conv_id", "turn_idx").alias("d"),
-        F.count(F.when(F.col("conv_id").isNull() | F.col("turn_idx").isNull(), 1)).alias("nulls"),
-    ).first()
-    if chk["nulls"]:
-        raise ValueError(f"backfill delta has {chk['nulls']} rows with null (conv_id, turn_idx)")
-    if chk["n"] != chk["d"]:
-        raise ValueError(
-            f"backfill delta has {chk['n'] - chk['d']} duplicate (conv_id, turn_idx) keys "
-            "— resolve to one row per key before applying"
-        )
-    affected = delta.select("conv_id").distinct().persist()
-    if chk["n"] == 0:
-        affected.unpersist()
+    # a duplicate upsert key would survive the anti-join and insert BOTH
+    # rows; a null key would vanish from the joins
+    if check_transcripts(delta, "backfill delta") == 0:
         return {"tables": {}, "affected_convs": 0}
-
-    filled_cols = read_stage(io, "filled").columns
-    if chunked is None:
-        # build_filled writes raw_anomaly exactly when chunked — the table
-        # layout records the mode
-        chunked = "raw_anomaly" in filled_cols
-    elif chunked != ("raw_anomaly" in filled_cols):
-        raise ValueError(
-            "chunked flag contradicts the existing filled table layout "
-            f"(raw_anomaly {'present' if not chunked else 'absent'})"
-        )
+    affected = delta.select("conv_id").distinct().persist()
 
     # --- new raw rows for the affected conversations (upsert) -------------
     old_ing = read_stage(io, "ingest")
@@ -411,8 +390,8 @@ def backfill_pipeline(
     # (the pipeline's own stage builds, plans/stages.py; the 1m tier takes
     # rollup_raw — rollup_raw_clustered's fused write clustering has no
     # use here, merge_conv_scoped lays the rows out)
-    filled_new = build_filled(raw_aff, cfg, chunked).persist()
-    treated_new = build_treated(filled_new, cfg, chunked)
+    filled_new = build_filled(raw_aff, cfg).persist()
+    treated_new = build_treated(filled_new, cfg)
     m1 = rollup_raw(raw_aff, "1m").persist()
     h1 = rollup_from_tier(m1, "1m", "1h").persist()
     d1 = rollup_from_tier(h1, "1h", "1d").persist()

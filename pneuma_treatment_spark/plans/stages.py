@@ -10,6 +10,7 @@ backfilled table bit-equal to a rebuild (``tests/test_backfill.py``).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
 from pneuma_treatment_spark.operators.gapfill import gap_fill
@@ -21,19 +22,42 @@ from pneuma_treatment_spark.operators.treatment import (
 )
 
 
-def build_filled(raw: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFrame:
+def check_transcripts(df: DataFrame, what: str) -> int:
+    """Return the row count of raw transcripts, or raise a ``ValueError``
+    naming ``what``, the first rule broken and its row count. One
+    aggregate job: a null or duplicate (conv_id, turn_idx) key is lost or
+    doubled by the key joins, a null ts has no partition, and a negative
+    turn_idx falls outside every treatment chunk."""
+    key_null = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+    chk = df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when(key_null, 1)).alias("null key"),
+        (
+            F.count(F.when(~key_null, 1)) - F.count_distinct("conv_id", "turn_idx")
+        ).alias("duplicate key"),
+        F.count(F.when(F.col("ts").isNull(), 1)).alias("null ts"),
+        F.count(F.when(F.col("turn_idx") < 0, 1)).alias("negative turn_idx"),
+    ).first()
+    for rule in ("null key", "duplicate key", "null ts", "negative turn_idx"):
+        if chk[rule]:
+            raise ValueError(
+                f"{what}: {rule} in {chk[rule]} of {chk['rows']} rows — "
+                "fix or drop those rows first"
+            )
+    return chk["rows"]
+
+
+def build_filled(raw: DataFrame, cfg: TreatmentConfig) -> DataFrame:
     """Gap-fill the NARROW series and join the payload columns back once.
 
     text/tool would otherwise ride through the densify join plus two window
     sorts (~3x the bytes on this bandwidth-bound stage); the join-back moves
-    them exactly once, and filled rows get null payloads either way. When
-    ``chunked``, ``raw_anomaly`` rides along for free — the SQL mask reuses
-    this stage's conv-partitioned windows — so the treated stage's
-    ``conv_has_anomaly`` flags are a plain scan+aggregate (see
-    :func:`build_treated`). The non-chunked treatment computes
-    ``conv_has_anomaly`` in-kernel and needs no flags.
+    them exactly once, and filled rows get null payloads either way.
+    ``raw_anomaly`` rides along for free — the SQL mask reuses this stage's
+    conv-partitioned windows — so the treated stage's ``conv_has_anomaly``
+    flags are a plain scan+aggregate (see :func:`build_treated`).
     """
-    filled = gap_fill(
+    return gap_fill(
         raw.select("conv_id", "turn_idx", "role", "ts", "token_count", "is_tool_call"),
         lerp_cols=("token_count",),
         lerp_ts_cols=("ts",),
@@ -41,13 +65,10 @@ def build_filled(raw: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFra
         raw.select("conv_id", "turn_idx", "text", "tool"),
         ["conv_id", "turn_idx"],
         "left",
-    )
-    if chunked:
-        filled = filled.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-    return filled
+    ).withColumn("raw_anomaly", raw_anomaly_col(cfg))
 
 
-def build_treated(filled: DataFrame, cfg: TreatmentConfig, chunked: bool) -> DataFrame:
+def build_treated(filled: DataFrame, cfg: TreatmentConfig) -> DataFrame:
     """Treat the narrow metric series of a ``filled`` frame.
 
     The kernel never reads text/tool/role — shuttling payload or meta
@@ -56,15 +77,14 @@ def build_treated(filled: DataFrame, cfg: TreatmentConfig, chunked: bool) -> Dat
     dictionary-encoding it — BENCH/BASELINE.md bytes table); they live in
     ``filled`` and join back exactly on (conv_id, turn_idx) when needed.
     ``ts`` stays for the p_day write clustering; ``is_filled`` is
-    load-bearing semantics. Chunked, the conv flags are a
-    map-side-combined aggregate over the ``raw_anomaly`` column
-    :func:`build_filled` stored, broadcast into the treatment's one pass.
+    load-bearing semantics. The conv flags — needed by conversations
+    longer than a chunk — are a map-side-combined aggregate over the
+    ``raw_anomaly`` column :func:`build_filled` stored, broadcast into the
+    treatment's one pass.
     """
     narrow = filled.select("conv_id", "turn_idx", "ts", "token_count", "is_filled")
-    flags = (
-        conv_anomaly_flags(filled.select("conv_id", "raw_anomaly")) if chunked else None
-    )
-    return treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
+    flags = conv_anomaly_flags(filled.select("conv_id", "raw_anomaly"))
+    return treat_transcripts(narrow, cfg, flags=flags)
 
 
 def build_chunks(

@@ -166,7 +166,7 @@ def _count_plan_nodes(jplan, cap: int) -> int:
 _PROBE_MAX_PLAN_NODES = 8
 
 
-def fan_out(df, min_partitions: int | None = None, force_probe: bool = False):
+def fan_out(df):
     """Round-robin repartition a DataFrame UP to the session's parallelism —
     only when it has fewer partitions than that.
 
@@ -183,8 +183,7 @@ def fan_out(df, min_partitions: int | None = None, force_probe: bool = False):
     traversal, not plan rendering) — a scan plus a few projections/filters,
     the single-split case this helper exists for. Deep plans are
     post-shuffle and already wide; they pass through untouched, with a
-    debug log so a serial stage stays diagnosable. Callers that KNOW they
-    sit on a compact scan under a deep plan pass ``force_probe=True``.
+    debug log so a serial stage stays diagnosable.
 
     Probe results are memoized per (application, analyzed-plan semantic
     hash): repeated queries over the same table re-pay physical planning
@@ -195,18 +194,16 @@ def fan_out(df, min_partitions: int | None = None, force_probe: bool = False):
     redundant) repartition, the same staleness class as Spark's own
     file-listing cache.
     """
-    if not force_probe:
-        nodes = _count_plan_nodes(
-            df._jdf.queryExecution().analyzed(), _PROBE_MAX_PLAN_NODES + 1
+    nodes = _count_plan_nodes(
+        df._jdf.queryExecution().analyzed(), _PROBE_MAX_PLAN_NODES + 1
+    )
+    if nodes > _PROBE_MAX_PLAN_NODES:
+        logging.getLogger(__name__).debug(
+            "fan_out: plan has >%d logical nodes — skipping the partition probe",
+            _PROBE_MAX_PLAN_NODES,
         )
-        if nodes > _PROBE_MAX_PLAN_NODES:
-            logging.getLogger(__name__).debug(
-                "fan_out: plan has >%d logical nodes — skipping the partition "
-                "probe (pass force_probe=True if this sits on a compact scan)",
-                _PROBE_MAX_PLAN_NODES,
-            )
-            return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     key = None
     try:
         key = (

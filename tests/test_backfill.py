@@ -181,37 +181,6 @@ def test_backfill_rejects_duplicate_keys(spark, env):
         backfill_pipeline(spark, env["wd_a"], delta.unionByName(delta.limit(1)))
 
 
-def test_backfill_unchunked_pipeline(spark, tmp_path):
-    """chunked=False pipelines (no raw_anomaly column in filled) must be
-    inferred from the table layout and recomputed through the slim path."""
-    args = dict(n_convs=12, seed=5, mega_turns=0)
-    base_path = str(tmp_path / "raw")
-    generate_transcripts(spark, 12, seed=5).write.parquet(base_path)
-    base = spark.read.parquet(base_path)
-    c = base.select("conv_id").distinct().orderBy("conv_id").first()["conv_id"]
-    delta = base.where((F.col("conv_id") == c) & (F.col("turn_idx") == 1)).withColumn(
-        "text", F.lit("unchunked corrected row with extra words")
-    )
-    dpath = str(tmp_path / "delta")
-    delta.write.parquet(dpath)
-    upd_path = str(tmp_path / "upd")
-    base.join(delta.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_anti").unionByName(
-        spark.read.parquet(dpath)
-    ).write.parquet(upd_path)
-
-    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
-    run_pipeline(spark, wd_a, **args, input_table=base_path, chunked=False)
-    backfill_pipeline(spark, wd_a, spark.read.parquet(dpath))
-    run_pipeline(spark, wd_b, **args, input_table=upd_path, chunked=False)
-    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
-    for t in ("treated", "rollup_1d"):
-        pd.testing.assert_frame_equal(
-            _sorted_pdf(io_a, t), _sorted_pdf(io_b, t), check_dtype=False
-        ), t
-    shutil.rmtree(wd_a, ignore_errors=True)
-    shutil.rmtree(wd_b, ignore_errors=True)
-
-
 def test_merge_drops_emptied_partition(spark, tmp_path):
     """A corrected ts that pulls the ONLY conversation out of a day must
     drop that (day, bucket) dir — dynamic overwrite alone cannot (it only

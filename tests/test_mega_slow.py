@@ -1,10 +1,9 @@
 """Design-ratio mega-conversation stress (COVERAGE.md §2.10, marked slow).
 
 ONE synthetic conversation of 6M turns — ~2000x the bench's per-series
-median and far past the point where the UNCHUNKED path would materialize
-the whole series as a single pandas group per stage — runs through the
-chunk+halo treatment and must match the whole-series pandas oracle
-bit-for-bit. The fixture is sf-independent (generated distributed via
+median and far past what one task should hold whole — runs through the
+chunk+halo treatment, with the pipeline's SQL-twin flags, and must match
+the whole-series pandas oracle bit-for-bit. The fixture is sf-independent (generated distributed via
 ``spark.range`` + integer-LCG expressions; the identical numpy arithmetic
 rebuilds it for the oracle — integer ops are exact in both engines, so no
 cross-engine float drift can leak into the input).
@@ -27,6 +26,8 @@ from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.operators.treatment import (
     TreatmentConfig,
+    conv_anomaly_flags,
+    raw_anomaly_col,
     treat_transcripts,
 )
 from pneuma_treatment_spark.reference_impl import oracle as O
@@ -54,7 +55,11 @@ def test_mega_conversation_design_ratio_parity(spark):
         ).alias("token_count"),
     )
     got = (
-        treat_transcripts(df, cfg, chunked=True)
+        treat_transcripts(
+            df,
+            cfg,
+            flags=conv_anomaly_flags(df.withColumn("raw_anomaly", raw_anomaly_col(cfg))),
+        )
         .select("turn_idx", *CMP_COLS)
         .toPandas()
         .sort_values("turn_idx")
@@ -74,4 +79,4 @@ def test_mega_conversation_design_ratio_parity(spark):
     for col in CMP_COLS:
         g = got[col].to_numpy()
         w = want.sort_values("turn_idx")[col].to_numpy()
-        assert np.array_equal(g, w), f"{col}: chunked != whole-series oracle"
+        assert np.array_equal(g, w), f"{col}: chunk+halo != whole-series oracle"

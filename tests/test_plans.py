@@ -185,7 +185,7 @@ def test_fan_out_probe_gating(spark):
     """fan_out must (a) widen a compact single-split scan, (b) pass a deep
     post-shuffle plan through UNTOUCHED without running the partition probe
     (the probe forces physical planning — the node-count gate, not a
-    rendered-plan string, decides), and (c) probe anyway under force_probe."""
+    rendered-plan string, decides)."""
     from pneuma_treatment_spark import session as sess
 
     shallow = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -203,9 +203,6 @@ def test_fan_out_probe_gating(spark):
         deep._jdf.queryExecution().analyzed(), sess._PROBE_MAX_PLAN_NODES + 1
     ) > sess._PROBE_MAX_PLAN_NODES
     assert sess.fan_out(deep) is deep  # identical object: no probe, no exchange
-    # force_probe overrides the gate for callers that know their input is
-    # compact; the deep plan then probes and widens
-    assert sess.fan_out(deep, force_probe=True) is not deep
 
 
 def test_text_rides_no_treatment_or_rollup_shuffle(spark):
@@ -247,7 +244,6 @@ def test_text_rides_no_treatment_or_rollup_shuffle(spark):
                     "conv_id", "turn_idx", "ts", "token_count", "is_filled"
                 ),
                 TreatmentConfig(),
-                chunked=True,
             )
         )
         rollup_plan = _plan(rollup_raw(io.read("ingest"), "1m"))
@@ -264,8 +260,8 @@ def test_text_rides_no_treatment_or_rollup_shuffle(spark):
 
 def test_treatment_fused_exchange_count(spark, transcripts_df):
     """Fusion guarantees: the treatment chain is ONE full-frame exchange
-    end-to-end in both modes (A+B+C+D in a single Python pass). Chunked,
-    with precomputed flags, the tiny flags side is broadcast — neither the
+    end-to-end with or without flags (A+B+C+D in a single Python pass).
+    With precomputed flags, the tiny flags side is broadcast — neither the
     former SQL run-merge window exchange nor a second Python pass for
     stage D may reappear."""
     from pneuma_treatment_spark.operators.gapfill import gap_fill
@@ -295,14 +291,12 @@ def test_treatment_fused_exchange_count(spark, transcripts_df):
         assert one.count("Exchange hashpartitioning") == 1, one
 
         rawed = filled.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-        chunked = above_cache(
-            treat_transcripts(
-                filled, cfg, chunked=True, flags=conv_anomaly_flags(rawed)
-            )
+        flagged = above_cache(
+            treat_transcripts(filled, cfg, flags=conv_anomaly_flags(rawed))
         )
         # flags ride a broadcast, not a full-frame hash exchange
-        assert chunked.count("Exchange hashpartitioning") == 1, chunked
-        assert "BroadcastExchange" in chunked or "BroadcastHashJoin" in chunked
+        assert flagged.count("Exchange hashpartitioning") == 1, flagged
+        assert "BroadcastExchange" in flagged or "BroadcastHashJoin" in flagged
     finally:
         filled.unpersist()
 

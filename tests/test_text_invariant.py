@@ -8,7 +8,12 @@ from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.rollup import with_turn_metrics
-from pneuma_treatment_spark.operators.treatment import TreatmentConfig, treat_transcripts
+from pneuma_treatment_spark.operators.treatment import (
+    TreatmentConfig,
+    conv_anomaly_flags,
+    raw_anomaly_col,
+    treat_transcripts,
+)
 
 
 def test_text_preserved_through_pipeline(spark, transcripts_df, transcripts_pdf):
@@ -17,7 +22,9 @@ def test_text_preserved_through_pipeline(spark, transcripts_df, transcripts_pdf)
         lerp_cols=("token_count",),
         lerp_ts_cols=("ts",),
     )
-    treated = treat_transcripts(filled, TreatmentConfig(chunk_len=512), chunked=True)
+    cfg = TreatmentConfig(chunk_len=512)
+    flags = conv_anomaly_flags(filled.withColumn("raw_anomaly", raw_anomaly_col(cfg)))
+    treated = treat_transcripts(filled, cfg, flags=flags)
     out = (
         treated.where(~F.col("is_filled"))
         .select("conv_id", "turn_idx", "text", "role", "tool")

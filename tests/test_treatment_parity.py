@@ -8,7 +8,12 @@ import pytest
 
 from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.rollup import rollup_cascade, rollup_raw, with_turn_metrics
-from pneuma_treatment_spark.operators.treatment import TreatmentConfig, treat_transcripts
+from pneuma_treatment_spark.operators.treatment import (
+    TreatmentConfig,
+    conv_anomaly_flags,
+    raw_anomaly_col,
+    treat_transcripts,
+)
 from pneuma_treatment_spark.reference_impl import oracle as O
 from tests.conftest import assert_pdf_equal
 
@@ -16,6 +21,10 @@ CFG = TreatmentConfig(chunk_len=256)  # small chunks so the mega-conv spans many
 # chunk_len == the fused halo (halo_a + merge_gap + halo_d = 72): every row
 # also serves both neighbour chunks, the tightest chunking the guard allows
 HALO_CFG = TreatmentConfig(chunk_len=72)
+# the longest fixture conversation (turns 0..2999) fits one chunk, but its
+# last turns lie in the halo zone, so they also form a halo-only chunk-1
+# slice: treated without flags, that slice must be skipped, not flagged
+TAIL_CFG = TreatmentConfig(chunk_len=3036)
 
 
 def _token_counts(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -51,13 +60,23 @@ def test_gap_fill_parity(filled_spark, filled_oracle):
     assert_pdf_equal(got, filled_oracle, ["conv_id", "turn_idx"])
 
 
+def _flags(filled, cfg):
+    """The pipeline's flags: the SQL raw-anomaly twin, aggregated per conv."""
+    return conv_anomaly_flags(filled.withColumn("raw_anomaly", raw_anomaly_col(cfg)))
+
+
 @pytest.mark.parametrize(
-    "chunked, cfg",
-    [(False, CFG), (True, CFG), (True, HALO_CFG)],
-    ids=["whole-series", "chunked", "chunked-at-halo"],
+    "cfg, flags",
+    [(TreatmentConfig(), False), (CFG, True), (HALO_CFG, True), (TAIL_CFG, False)],
+    ids=["whole-series", "chunked", "chunked-at-halo", "one-chunk-halo-tail"],
 )
-def test_treatment_parity(filled_spark, filled_oracle, chunked, cfg):
-    got = treat_transcripts(filled_spark, cfg, chunked=chunked).toPandas()
+def test_treatment_parity(filled_spark, filled_oracle, cfg, flags):
+    if cfg is TAIL_CFG:
+        span = int(filled_oracle["turn_idx"].max()) + 1
+        assert cfg.chunk_len - (cfg.halo_a + cfg.merge_gap + cfg.halo_d) < span <= cfg.chunk_len
+    got = treat_transcripts(
+        filled_spark, cfg, flags=_flags(filled_spark, cfg) if flags else None
+    ).toPandas()
     want = O.oracle_treat(filled_oracle, CFG)
     cols = [
         "conv_id", "turn_idx", "tokens_filled", "sg_tokens", "med_tokens",
@@ -67,28 +86,25 @@ def test_treatment_parity(filled_spark, filled_oracle, chunked, cfg):
     assert_pdf_equal(got[cols], want[cols], ["conv_id", "turn_idx"])
 
 
-@pytest.mark.parametrize("chunked", [False, True], ids=["whole-series", "chunked"])
-def test_treatment_parity_small_batches(filled_spark, filled_oracle, chunked, small_arrow_batches):
+@pytest.mark.parametrize(
+    "cfg, flags", [(TreatmentConfig(), False), (CFG, True)], ids=["whole-series", "chunked"]
+)
+def test_treatment_parity_small_batches(
+    filled_spark, filled_oracle, cfg, flags, small_arrow_batches
+):
     """Series straddling Arrow batch boundaries are carried into the next
     batch whole: the result still equals the oracle bit for bit."""
-    test_treatment_parity(filled_spark, filled_oracle, chunked, CFG)
+    test_treatment_parity(filled_spark, filled_oracle, cfg, flags)
 
 
 def test_treatment_parity_precomputed_flags(filled_spark, filled_oracle):
     """The pipeline path: conv_has_anomaly flags precomputed via the SQL
     raw-anomaly twin (raw_anomaly_col — same exchange as gap-fill in the
-    real pipeline) + conv_anomaly_flags, passed into the chunked treatment.
+    real pipeline) + conv_anomaly_flags, passed into the treatment.
     Must equal the oracle bit-for-bit, and the SQL mask itself must equal
     the kernel mask row-for-row."""
-    from pneuma_treatment_spark.operators.treatment import (
-        conv_anomaly_flags,
-        raw_anomaly_col,
-    )
-
     rawed = filled_spark.withColumn("raw_anomaly", raw_anomaly_col(CFG))
-    got = treat_transcripts(
-        filled_spark, CFG, chunked=True, flags=conv_anomaly_flags(rawed)
-    ).toPandas()
+    got = treat_transcripts(filled_spark, CFG, flags=conv_anomaly_flags(rawed)).toPandas()
     want = O.oracle_treat(filled_oracle, CFG)
     cols = [
         "conv_id", "turn_idx", "tokens_filled", "sg_tokens", "med_tokens",
@@ -109,18 +125,20 @@ def test_treatment_parity_precomputed_flags(filled_spark, filled_oracle):
 
 def test_fusion_guards(spark, filled_spark):
     """Silent-corruption guards: halo > chunk_len refuses eagerly, and a
-    flags frame missing conversations fails loudly instead of dropping
-    rows or routing convs down the no-anomaly branch."""
+    conversation longer than a chunk without its flag — no flags at all,
+    or a flags frame missing it — fails loudly instead of dropping rows or
+    routing the conversation down the wrong branch."""
     with pytest.raises(ValueError, match="halo"):
-        treat_transcripts(filled_spark, TreatmentConfig(chunk_len=16), chunked=True)
+        treat_transcripts(filled_spark, TreatmentConfig(chunk_len=16))
+
+    with pytest.raises(Exception, match="pass flags="):
+        treat_transcripts(filled_spark, CFG).collect()
 
     partial = spark.createDataFrame(
         [("conv00000000", True)], "conv_id string, conv_has_anomaly boolean"
     )
     with pytest.raises(Exception, match="conv_has_anomaly is null"):
-        treat_transcripts(
-            filled_spark, CFG, chunked=True, flags=partial
-        ).collect()
+        treat_transcripts(filled_spark, CFG, flags=partial).collect()
 
 
 def test_rollup_parity(spark, transcripts_df, transcripts_pdf):
