@@ -4,9 +4,7 @@ spark-submit surface.
 Each CYCLE is an ``availableNow`` drain of the arriving transcript files
 through three exactly-once sinks driven by TWO queries — one per
 sink-class, so each arrival file is scanned once for the aggregated sinks
-and once for the raw capture (r8 fusion of the former three-query cycle,
-which scanned the source three times and ran the 1-minute aggregation
-twice):
+and once for the raw capture:
 
 * ``rollup_1m_stream/`` + ``chunks_stream/`` — ONE watermarked query
   (``run_rollup_chunk_sink``, checkpoint ``checkpoints/rollup_chunks``)
@@ -19,7 +17,9 @@ twice):
   (``--prune-epochs``); the rollup sink prunes by the same dir rule.
 * ``deadletter/``       — rows the rollup watermark would drop
   (``run_deadletter_capture``, its own raw scan + checkpoint), in the
-  backfill delta schema.
+  backfill delta schema. ``--strict-capture`` is the one over-capture
+  control: it makes the captured set a superset of the dropped set under
+  every micro-batch interleaving of the two queries.
 
 ``--heal-into <batch workdir>`` then runs the captured dead-letter delta
 through :func:`pneuma_treatment_spark.plans.backfill.backfill_pipeline`
@@ -51,7 +51,6 @@ def run_stream_cycle(
     source: str,
     workdir: str,
     watermark: str = "10 minutes",
-    margin: str = "0 seconds",
     max_files: int = 8,
     strict_capture: bool = False,
 ) -> dict:
@@ -95,7 +94,7 @@ def run_stream_cycle(
         )
 
     # ONE query → both hot-end sinks: one source scan, one windowed
-    # aggregation, one batching order for rollup+chunks (VERDICT r7 item 1).
+    # aggregation, one batching order for rollup+chunks.
     q1 = run_rollup_chunk_sink(
         stream_rollup_1m(
             read_transcript_stream(spark, source, max_files=max_files),
@@ -111,7 +110,6 @@ def run_stream_cycle(
         sinks["deadletter"],
         ck["deadletter"],
         watermark=watermark,
-        margin=margin,
         max_files=max_files,
         strict=strict_capture,
     )
@@ -133,19 +131,19 @@ def run_stream_cycle(
         return len(list(Path(path).glob("batch_id=*"))) if os.path.isdir(path) else 0
 
     p1, p3 = progress(q1), progress(q3)
-    # ADVICE r7: in non-strict mode a drain spanning several micro-batches
-    # can under-capture on mtime-tie batching skew between the (fused)
-    # aggregation query and the capture query — and an under-captured
-    # watermark-dropped row is lost for good. Surface it loudly instead of
-    # leaving the risk in a docstring.
+    # In non-strict mode a drain spanning several micro-batches can
+    # under-capture on mtime-tie batching skew between the aggregation
+    # query and the capture query — and an under-captured watermark-dropped
+    # row is lost for good. Surface it loudly instead of leaving the risk
+    # in a docstring.
     data_batches = sum(1 for p in p3 if int(p.get("numInputRows") or 0) > 0)
     if not strict_capture and data_batches > 1:
         print(
             f"stream_ingest: WARNING — drain spanned {data_batches} "
             "micro-batches in non-strict capture mode; if the aggregation "
             "batched these files differently, late rows can be missed. "
-            "Pass strict_capture=True (over-capture is harmless: the heal "
-            "upsert is idempotent) or a margin.",
+            "Pass strict_capture=True (--strict-capture; over-capture is "
+            "harmless: the heal upsert is idempotent).",
             file=sys.stderr,
         )
     return {
@@ -163,10 +161,6 @@ def main() -> None:
     ap.add_argument("--source", required=True, help="dir of arriving transcript parquet files")
     ap.add_argument("--workdir", required=True, help="streaming sink + checkpoint root")
     ap.add_argument("--watermark", default="10 minutes")
-    ap.add_argument(
-        "--margin", default="0 seconds",
-        help="dead-letter over-capture margin (see run_deadletter_capture)",
-    )
     ap.add_argument(
         "--strict-capture", action="store_true",
         help="include the current batch's max event time in the capture "
@@ -208,8 +202,8 @@ def main() -> None:
         summary["cycles"].append(
             run_stream_cycle(
                 spark, args.source, args.workdir,
-                watermark=args.watermark, margin=args.margin,
-                max_files=args.max_files, strict_capture=args.strict_capture,
+                watermark=args.watermark, max_files=args.max_files,
+                strict_capture=args.strict_capture,
             )
         )
     dead = os.path.join(args.workdir, "deadletter")

@@ -263,13 +263,22 @@ def treat_transcripts(
     # LEFT join: a flags frame that misses conversations must not silently
     # drop their rows — the null flag fails loudly in _treat_kernel
     src = df if flags is None else df.join(flags, "conv_id", "left")
-    # the filter drops the unserved (null) and chunk -1 entries
-    src = src.withColumn("__chunk", F.explode(chunks)).where(F.col("__chunk") >= 0)
+    # the filter drops the unserved (null) and chunk -1 halo entries; a
+    # row's own chunk always stays, so a negative turn_idx reaches the
+    # kernel pass and fails there instead of vanishing
+    src = src.withColumn("__chunk", F.explode(chunks)).where(
+        (F.col("__chunk") >= 0) | (F.col("__chunk") == own)
+    )
     key = ["conv_id", "__chunk"]
 
     def run(batches):
         for unit, bounds in series_units(batches, lambda b: key_starts(b, key)):
             t = unit.column("turn_idx").to_numpy(zero_copy_only=False)
+            if t.size and t.min() < 0:
+                raise ValueError(
+                    f"negative turn_idx {int(t.min())}: treatment needs "
+                    "gap-filled turns numbered from 0"
+                )
             mine = t // L == unit.column("__chunk").to_numpy(zero_copy_only=False)
             res = _treat_kernel(unit, cfg, bounds, mine)
             # from_pandas: a NaN result is a null cell (nulls are load-bearing)

@@ -48,6 +48,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -398,39 +399,16 @@ def backfill_pipeline(
     chunks_new = build_chunks(m1, h1, d1, chunk_windows)
 
     # --- partition-scoped merges + lineage upkeep --------------------------
-    # The seven table merges are independent (each rewrites only its own
-    # table; the recomputes read the persisted upstream frames, never the
-    # tables being rewritten) — run them concurrently so the ops wall is
-    # max(table merge), not the sum of ~30 driver-synchronous small jobs
-    # (backfill wall is fixed-overhead-dominated at small deltas; concurrent
-    # jobs interleave at task granularity even under the default FIFO
-    # scheduler, so idle driver-sync gaps overlap other tables' work).
-    jobs = [
-        (name, df, ts_col)
-        for name, df, ts_col in (
-            ("ingest", raw_aff, "ts"),
-            ("filled", filled_new, "ts"),
-            ("treated", treated_new, "ts"),
-            ("rollup_1m", m1, "bucket_ts"),
-            ("rollup_1h", h1, "bucket_ts"),
-            ("rollup_1d", d1, "bucket_ts"),
-            ("chunks", chunks_new, "start_ts"),
-        )
-        if io.exists(name)
-    ]
-
-    def _one(job):
-        name, df, ts_col = job
-        stats = merge_conv_scoped(io, name, df, affected, ts_col=ts_col)
-        _update_lineage(io, name, stats)
-        return name, {
-            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
-        }
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
-        tables = dict(ex.map(_one, jobs))
+    new_rows = {
+        "ingest": raw_aff,
+        "filled": filled_new,
+        "treated": treated_new,
+        "rollup_1m": m1,
+        "rollup_1h": h1,
+        "rollup_1d": d1,
+        "chunks": chunks_new,
+    }
+    tables = _merge_tables(io, affected, new_rows.__getitem__)
 
     n_aff = affected.count()
     for p in (raw_aff, filled_new, m1, h1, d1, affected):
@@ -449,6 +427,37 @@ _TABLE_TS = (
     ("rollup_1d", "bucket_ts"),
     ("chunks", "start_ts"),
 )
+
+
+def _merge_tables(
+    io: TableIO, affected: DataFrame, new_rows: Callable[[str], DataFrame]
+) -> dict:
+    """Merge every existing pipeline table over the ``affected``
+    conversations — ``new_rows(table)`` gives the table's recomputed rows
+    (empty for a deletion) — and re-splice its lineage. Returns each
+    table's merge counts.
+
+    The merges are independent (each rewrites only its own table; the
+    recomputes read persisted upstream frames, never the tables being
+    rewritten), so they run concurrently: the ops wall is max(table merge),
+    not the sum of ~30 driver-synchronous small jobs (the wall is
+    fixed-overhead-dominated at small deltas; concurrent jobs interleave at
+    task granularity even under the default FIFO scheduler, so idle
+    driver-sync gaps overlap other tables' work)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    jobs = [(name, ts_col) for name, ts_col in _TABLE_TS if io.exists(name)]
+
+    def _one(job):
+        name, ts_col = job
+        stats = merge_conv_scoped(io, name, new_rows(name), affected, ts_col=ts_col)
+        _update_lineage(io, name, stats)
+        return name, {
+            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
+        }
+
+    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
+        return dict(ex.map(_one, jobs))
 
 
 def scrub_deadletter(spark: SparkSession, dead_path: str, convs: DataFrame) -> dict:
@@ -525,8 +534,7 @@ def delete_conversations(
     streaming sinks (``rollup_1m_stream/``, ``chunks_stream/``) are
     rebuildable hot-end caches re-owned by the batch cascade: complete an
     erasure by pruning/resetting them (``prune_stream_epochs`` /
-    checkpoint reset), not by in-place rewrites that would corrupt the
-    sinks' ``_spark_metadata`` transaction logs."""
+    checkpoint reset), not by in-place rewrites of their epoch dirs."""
     if "conv_id" not in convs.columns:
         raise ValueError("delete_conversations needs a conv_id column")
     n_buckets = _adopt_recorded_buckets(_manifest_config(workdir, "filled"), n_buckets)
@@ -540,21 +548,7 @@ def delete_conversations(
         affected.unpersist()
         return {"tables": {}, "affected_convs": 0}
 
-    jobs = [(name, ts_col) for name, ts_col in _TABLE_TS if io.exists(name)]
-
-    def _one(job):
-        name, ts_col = job
-        empty = read_stage(io, name).limit(0)
-        stats = merge_conv_scoped(io, name, empty, affected, ts_col=ts_col)
-        _update_lineage(io, name, stats)
-        return name, {
-            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
-        }
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
-        tables = dict(ex.map(_one, jobs))
+    tables = _merge_tables(io, affected, lambda name: read_stage(io, name).limit(0))
     scrubbed = {d: scrub_deadletter(spark, d, affected) for d in deadletter_dirs}
     affected.unpersist()
     out = {"tables": tables, "affected_convs": n_aff}

@@ -9,7 +9,7 @@ backfilled table bit-equal to a rebuild (``tests/test_backfill.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
@@ -24,20 +24,28 @@ from pneuma_treatment_spark.operators.treatment import (
 
 def check_transcripts(df: DataFrame, what: str) -> int:
     """Return the row count of raw transcripts, or raise a ``ValueError``
-    naming ``what``, the first rule broken and its row count. One
-    aggregate job: a null or duplicate (conv_id, turn_idx) key is lost or
-    doubled by the key joins, a null ts has no partition, and a negative
-    turn_idx falls outside every treatment chunk."""
+    naming ``what``, the first rule broken and its row count. A null or
+    duplicate (conv_id, turn_idx) key is lost or doubled by the key joins,
+    a null ts has no partition, and a negative turn_idx falls outside every
+    treatment chunk. One group-by on the key gives per-key row counts; an
+    ``Observation`` folds the five totals over the grouped rows during a
+    ``noop`` write (a distinct count would plan an Expand and a second
+    exchange)."""
     key_null = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-    chk = df.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.count(F.when(key_null, 1)).alias("null key"),
-        (
-            F.count(F.when(~key_null, 1)) - F.count_distinct("conv_id", "turn_idx")
-        ).alias("duplicate key"),
-        F.count(F.when(F.col("ts").isNull(), 1)).alias("null ts"),
-        F.count(F.when(F.col("turn_idx") < 0, 1)).alias("negative turn_idx"),
-    ).first()
+    n = F.col("n")
+    obs = Observation()
+    df.groupBy("conv_id", "turn_idx").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("ts").isNull(), 1)).alias("null_ts"),
+    ).observe(
+        obs,
+        F.sum(n).alias("rows"),
+        F.sum(F.when(key_null, n)).alias("null key"),
+        F.sum(F.when(~key_null, n - 1)).alias("duplicate key"),
+        F.sum("null_ts").alias("null ts"),
+        F.sum(F.when(F.col("turn_idx") < 0, n)).alias("negative turn_idx"),
+    ).write.format("noop").mode("overwrite").save()
+    chk = {k: v or 0 for k, v in obs.get.items()}
     for rule in ("null key", "duplicate key", "null ts", "negative turn_idx"):
         if chk[rule]:
             raise ValueError(

@@ -78,63 +78,7 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    _prewarm(spark)
-    return spark
-
-
-def _prewarm(spark) -> None:
-    """One-time per-session infrastructure warmup (same cost-shift rationale
-    as AlwaysPreTouch above: first-use machinery costs otherwise land inside
-    the first real query of a long-lived session):
-
-    * fork the FULL Python-worker pool once — a daemon fork plus
-      numpy/pandas import per worker is ~1-2 CPU-s each, and a first
-      Arrow-batched stage at full width pays all of them at once (a small
-      warmup query coalesced to one task forks only one worker, which is
-      why the first wide pandas stage used to absorb the rest);
-    * touch the partitioned-parquet writer + committer classes once.
-
-    Costs ~2-4 s at session build on local[32]; skipped on re-entry
-    (getOrCreate returns the same session) and best-effort — a failure
-    here must never block session construction. Disable with
-    SPARK_GRAFT_NO_PREWARM=1 (e.g. for micro-benchmarks of cold paths).
-    """
-    if getattr(spark, "_ptsw_prewarmed", False) or os.environ.get(
-        "SPARK_GRAFT_NO_PREWARM"
-    ):
-        return
-    spark._ptsw_prewarmed = True
-    import shutil
-    import tempfile
-
-    try:
-        n = max(spark.sparkContext.defaultParallelism, 2)
-
-        def gen(batches):
-            import numpy as np  # noqa: F401 — per-worker import is the point
-            import pandas as pd
-
-            for pdf in batches:
-                yield pd.DataFrame({"id": pdf["id"].to_numpy()})
-
-        (
-            spark.range(0, n * 4, numPartitions=n)
-            .mapInPandas(gen, "id long")
-            .write.format("noop").mode("overwrite").save()
-        )
-        tmp = tempfile.mkdtemp(prefix="ptsw_warm_")
-        try:
-            (
-                spark.range(2)
-                .selectExpr("id", "CAST(id % 2 AS INT) AS p")
-                .write.mode("overwrite").partitionBy("p").parquet(f"{tmp}/t")
-            )
-            spark.read.parquet(f"{tmp}/t").collect()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:  # pragma: no cover — warmup is advisory only
-        logging.getLogger(__name__).debug("session prewarm failed", exc_info=True)
+    return b.getOrCreate()
 
 
 def _count_plan_nodes(jplan, cap: int) -> int:

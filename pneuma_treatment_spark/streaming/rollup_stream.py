@@ -1,5 +1,5 @@
 """Streaming 1-minute rollup: ``readStream`` → watermarked tumbling window →
-append sink.
+``availableNow`` drains into exactly-once sinks.
 
 The reference is pure batch (SURVEY.md §2.9) — its only late-data analog is
 trimming output to complete windows (``09lane_node.py:303-318``). The
@@ -8,9 +8,13 @@ emitted once its watermark passes (complete-window semantics), with the
 identical metric set as :mod:`..operators.rollup`, so streamed buckets equal
 batch buckets for closed windows (tests/test_streaming.py).
 
-At scale this runs as a continuous ingest job feeding the raw tier; the
-batch cascade (1m→1h→1d) then reads closed buckets — streaming only ever
-owns the hot end of the timeline.
+Every sink runs as one ``availableNow`` drain per arrival batch
+(``jobs/stream_ingest_job.py`` runs one cycle): :func:`run_rollup_chunk_sink`
+writes the closed buckets as rollup rows and Gorilla chunks from one query,
+:func:`run_deadletter_capture` tees the raw rows, and
+:func:`run_to_memory_sink` backs the query registry and tests. The batch
+cascade (1m→1h→1d) re-owns closed ranges — streaming only ever owns the hot
+end of the timeline.
 
 Rows the watermark drops are not lost: :func:`run_deadletter_capture`
 tees the raw source and writes every row at risk of being
@@ -31,6 +35,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from pneuma_treatment_spark.operators.rollup import (
     PARTIAL_COLS,
@@ -81,78 +86,22 @@ def stream_tumbling_rollup(
     return agg.withColumn("bucket_ts", F.col("win.start")).drop("win")
 
 
-def run_to_memory_sink(
-    rollup_stream: DataFrame, name: str = "stream_rollup", mode: str = "append"
-):
-    """Drain all available input (availableNow) into an in-memory table —
-    the test/demo sink; production uses :func:`run_to_parquet_sink`."""
-    q = (
-        rollup_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` as an ``availableNow`` query and wait until it has
+    drained every file that existed at start — the per-cycle mode every
+    sink here runs in (the pipeline's scheduler invokes one drain per
+    arrival batch). Returns the terminated query for its progress."""
+    q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     return q
 
 
-def run_to_parquet_sink(
-    rollup_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_cols: tuple[str, ...] = (),
-    available_now: bool = True,
-    trigger_seconds: int | None = None,
+def run_to_memory_sink(
+    rollup_stream: DataFrame, name: str = "stream_rollup", mode: str = "append"
 ):
-    """Production sink: append-mode parquet with a checkpoint — the raw-tier
-    landing the batch cascade (1m→1h→1d) reads closed buckets from.
-
-    Exactly-once across restarts rides the checkpoint: the file-source
-    offsets and the sink's transaction log (``_spark_metadata``) commit
-    together, so a killed job re-run with the SAME ``checkpoint`` resumes
-    at the first unprocessed micro-batch and never double-writes a bucket
-    (tests/test_streaming.py pins this by running, adding late input,
-    and re-running against the same checkpoint). ``available_now=True``
-    drains what exists and stops (the batch-boundary mode the pipeline's
-    scheduler invokes per cycle); pass ``False`` with
-    ``trigger_seconds`` for a continuous micro-batch job — the returned
-    query is RUNNING and the caller owns awaitTermination/stop. The two
-    knobs are mutually exclusive and validated. At scale,
-    partition by the same day/bucket layout as TableIO so the batch
-    cascade's scans prune (pass ``partition_cols``); readers must use
-    the streaming-aware listing (Spark reads ``_spark_metadata``
-    automatically when scanning the sink directory)."""
-    _validate_trigger(available_now, trigger_seconds)
-    w = (
-        rollup_stream.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = w.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def _validate_trigger(available_now: bool, trigger_seconds: int | None) -> None:
-    if available_now and trigger_seconds is not None:
-        raise ValueError(
-            "available_now=True ignores trigger_seconds — pass "
-            "available_now=False for a continuous micro-batch job"
-        )
-    if not available_now and (trigger_seconds is None or trigger_seconds <= 0):
-        raise ValueError(
-            "available_now=False requires a POSITIVE trigger_seconds (the "
-            "micro-batch interval); None or <=0 would poll as-fast-as-possible"
-        )
+    """Drain all available input into an in-memory table — the test/demo
+    sink; production uses :func:`run_rollup_chunk_sink`."""
+    return _drain(rollup_stream.writeStream.format("memory").queryName(name).outputMode(mode))
 
 
 _DURATION_US = {
@@ -179,10 +128,7 @@ def run_deadletter_capture(
     dead_path: str,
     checkpoint: str,
     watermark: str = "10 minutes",
-    margin: str = "0 seconds",
     max_files: int = 8,
-    available_now: bool = True,
-    trigger_seconds: int | None = None,
     strict: bool = False,
 ):
     """Capture watermark-droppable raw rows into a backfill delta dir —
@@ -197,26 +143,23 @@ def run_deadletter_capture(
     bound, so matching on raw max never under-captures a batch-aligned
     row) — and writes rows older than that bound to
     ``dead_path/batch_id=<epoch>`` with ``mode("overwrite")`` (the same
-    replayed-epoch idempotence pattern as :func:`run_chunk_append_sink`).
+    replayed-epoch idempotence pattern as :func:`run_rollup_chunk_sink`).
     Per-batch max event times persist in a tiny JSON next to the
     checkpoint (atomic tmp+rename; one long per batch — bounded driver
     metadata), so a killed capture resumes with the same bounds and
     rewrites its epoch byte-for-byte.
 
-    Alignment contract: under the per-cycle ``availableNow`` operation
-    (the mode the pipeline's scheduler invokes — each cycle drains the
-    files that exist), the capture sees the same arrival boundaries as
-    the aggregation, so the captured set equals the dropped set. If the
-    two queries' micro-batches can interleave differently WITHIN a cycle
-    (a drain spanning more than ``max_files`` files where
+    Alignment contract: each ``availableNow`` drain (one per cycle —
+    it processes the files that exist) shows the capture the same arrival
+    boundaries as the aggregation, so the captured set equals the dropped
+    set. If the two queries' micro-batches interleave differently WITHIN
+    a drain (one spanning more than ``max_files`` files, where
     FileStreamSource's arbitrary mtime tie-break orders them
     differently), the prior-batches rule can UNDER-capture — for those
-    deployments either pass a ``margin`` (subtracted from the delay,
-    i.e. the bound moves LATER — covers bounded tie-skew) or set
-    ``strict=True``: the bound then also includes the CURRENT batch's
-    max event time, which upper-bounds any watermark the aggregation can
-    hold while processing these rows, making the captured set a
-    GUARANTEED superset of the dropped set under every interleaving.
+    deployments set ``strict=True``: the bound then also includes the
+    CURRENT batch's max event time, which upper-bounds any watermark the
+    aggregation can hold while processing these rows, making the captured
+    set a GUARANTEED superset of the dropped set under every interleaving.
     Strict cost: rows kept by the agg but older than (cycle max − delay)
     are captured too — on the first drain that is the whole pre-horizon
     backlog (harmless: the heal upsert is idempotent, and a first drain
@@ -233,8 +176,7 @@ def run_deadletter_capture(
     computes a (weakly) HIGHER bound — more capture, never less, so the
     superset guarantee survives every crash point.
     """
-    _validate_trigger(available_now, trigger_seconds)
-    delay_us = _parse_duration_us(watermark) - _parse_duration_us(margin)
+    delay_us = _parse_duration_us(watermark)
     state_path = os.path.join(checkpoint, "deadletter_maxts.json")
 
     def emit(bdf: DataFrame, batch_id: int) -> None:
@@ -260,10 +202,10 @@ def run_deadletter_capture(
                 F.unix_micros(F.col("ts").cast("timestamp")) < F.lit(bound_us)
             )
             # one epoch dir per batch, overwritten on replay (exactly-once);
-            # written ONLY when non-empty — continuous mode would otherwise
-            # litter one empty dir per trigger and make every heal re-read
-            # all history. Safe under replay: the bound is weakly higher on
-            # a replay, so a non-empty epoch can never become empty-skipped.
+            # written ONLY when non-empty — an empty dir per drain would make
+            # every heal re-read all history. Safe under replay: the bound is
+            # weakly higher on a replay, so a non-empty epoch can never
+            # become empty-skipped.
             if late.limit(1).count():
                 late.write.mode("overwrite").parquet(f"{dead_path}/batch_id={batch_id}")
         bdf.unpersist()
@@ -284,20 +226,12 @@ def run_deadletter_capture(
                 json.dump(state, f)
             os.replace(tmp, state_path)
 
-    w = (
+    return _drain(
         read_transcript_stream(spark, source_path, max_files=max_files)
         .writeStream.foreachBatch(emit)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = w.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
 def read_dead_letter(spark: SparkSession, dead_path: str) -> DataFrame:
@@ -310,7 +244,7 @@ def read_dead_letter(spark: SparkSession, dead_path: str) -> DataFrame:
 def prune_stream_epochs(stream_chunk_path: str, batch_high_water_day: str) -> dict:
     """Discard streaming chunk epoch dirs the batch cascade has re-owned —
     the delete step of the hot/cold handoff documented on
-    :func:`run_chunk_append_sink`.
+    :func:`run_rollup_chunk_sink`.
 
     An epoch dir is removable only when EVERY (tier, p_day) partition under
     it starts strictly before ``batch_high_water_day`` (ISO date: the day
@@ -358,40 +292,47 @@ def run_rollup_chunk_sink(
     rollup_path: str,
     chunk_path: str,
     checkpoint: str,
-    metrics: tuple[str, ...] = ("turn_count", "token_sum", "tool_calls"),
-    available_now: bool = True,
-    trigger_seconds: int | None = None,
 ):
-    """ONE streaming query feeding BOTH hot-end sinks: each micro-batch of
-    closed buckets is persisted once and written (a) as plain parquet rows
-    under ``rollup_path/batch_id=<epoch>`` and (b) Gorilla-encoded under
-    ``chunk_path/batch_id=<epoch>`` — the fusion of ``run_to_parquet_sink``
-    + ``run_chunk_append_sink`` the ingest job composes (VERDICT r7 item 1:
-    the unfused cycle scanned the raw source twice and ran the windowed
-    aggregation twice for these two sinks, and FileStreamSource's arbitrary
-    mtime tie-break meant the two queries could even batch the same files
-    differently).
+    """The production sink for closed buckets: ONE streaming query feeding
+    both hot-end stores. Each micro-batch of closed buckets (e.g.
+    :func:`stream_rollup_1m` output) is persisted once and written (a) as
+    plain parquet rows under ``rollup_path/batch_id=<epoch>`` and (b)
+    Gorilla-encoded under ``chunk_path/batch_id=<epoch>``. One scan, one
+    windowed aggregation and one batching order serve both, so rollup rows
+    and chunk contents are always mutually consistent per epoch; only the
+    dead-letter capture is a separate scan (its bound recompute composes
+    with any batching — see :func:`run_deadletter_capture`). The
+    per-batch ``persist`` is what makes it ONE aggregation: foreachBatch
+    re-executes the micro-batch plan per action.
 
-    Exactly-once: both sinks use the epoch-dir overwrite pattern (a
-    replayed epoch rewrites its own ``batch_id=`` dir byte-for-byte), which
-    composes with the shared checkpoint exactly as in
-    :func:`run_chunk_append_sink`. The rollup sink therefore has NO
-    ``_spark_metadata`` transaction log — read it with
-    ``spark.read.parquet(rollup_path)`` (partition discovery adds the
-    ``batch_id`` rider column; ignore it) and prune re-owned epochs with
-    the same dir-level discipline as the chunk sink. Because one query
-    feeds both sinks, rollup rows and chunk contents are ALWAYS mutually
-    consistent per epoch — the cross-sink interleaving hazard is gone by
-    construction; only the dead-letter capture remains a separate scan
-    (its bound recompute composes with any batching — see
-    :func:`run_deadletter_capture`).
+    Exactly-once rides two layers that compose with the checkpoint:
 
-    The per-batch ``persist`` is what makes it ONE aggregation: foreachBatch
-    re-executes the micro-batch plan per action, so two unpersisted writes
-    would re-read the batch's files and re-aggregate."""
+    - append mode emits each closed (conv, window) bucket in exactly ONE
+      micro-batch (the watermark contract), so different epochs never
+      overlap in content;
+    - ``foreachBatch`` is only at-least-once on retry, so each epoch writes
+      under its own ``batch_id=<epoch>`` dir with ``mode("overwrite")`` — a
+      replayed epoch replaces its own output byte-for-byte instead of
+      appending a duplicate.
+
+    A re-run with the SAME ``checkpoint`` resumes at the first unprocessed
+    file. Neither store has a ``_spark_metadata`` log: read either with
+    ``spark.read.option("basePath", path).parquet(path)`` (partition
+    discovery adds the ``batch_id`` rider column; drop it). Within each
+    chunk epoch dir the chunks are partitioned (tier, p_day) — the batch
+    chunk table's TTL layout, so ``chunk_ttl_sql_predicate`` retention and
+    stat-pruned range reads work unchanged.
+
+    Hot/cold handoff: epoch dirs are the HOT end only and are never merged
+    by :mod:`..plans.backfill` — the batch cascade re-owns every closed
+    window when it runs (its chunk stage re-encodes the full tier from the
+    rollup tables), so epoch dirs behind the batch high-water mark are
+    DISCARDABLE (:func:`prune_stream_epochs`; the checkpoint is unaffected
+    because a replayed epoch rewrites its own dir regardless).
+    ``tests/test_streaming.py::test_stream_chunk_dirs_discardable_after_batch_cascade``
+    pins it: every point decoded from the streaming sink also decodes,
+    value-equal, from the batch chunk table built over the same input."""
     from pneuma_treatment_spark.compression.chunks import write_chunks
-
-    _validate_trigger(available_now, trigger_seconds)
 
     def emit(bdf: DataFrame, batch_id: int) -> None:
         if bdf.isEmpty():
@@ -400,7 +341,7 @@ def run_rollup_chunk_sink(
         try:
             bdf.write.mode("overwrite").parquet(f"{rollup_path}/batch_id={batch_id}")
             (
-                write_chunks(bdf, metrics=metrics)
+                write_chunks(bdf)
                 .write.mode("overwrite")
                 .partitionBy("tier", "p_day")
                 .parquet(f"{chunk_path}/batch_id={batch_id}")
@@ -408,91 +349,8 @@ def run_rollup_chunk_sink(
         finally:
             bdf.unpersist()
 
-    w = (
+    return _drain(
         rollup_stream.writeStream.foreachBatch(emit)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = w.start()
-    if available_now:
-        q.awaitTermination()
-    return q
-
-
-def run_chunk_append_sink(
-    rollup_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    metrics: tuple[str, ...] = ("turn_count", "token_sum", "tool_calls"),
-    available_now: bool = True,
-    trigger_seconds: int | None = None,
-):
-    """Append closed rollup windows to a Gorilla CHUNK table incrementally —
-    what a real TSDB does with the hot end of the timeline (write_chunks is
-    otherwise batch-only; VERDICT r5 item 7).
-
-    Exactly-once rides two layers that compose with the checkpoint:
-
-    - append mode emits each closed (conv, window) bucket in exactly ONE
-      micro-batch (the watermark contract), so chunks encoded by different
-      epochs can never overlap in content;
-    - ``foreachBatch`` is only at-least-once on retry, so each epoch writes
-      its chunks under its own ``batch_id=<epoch>`` directory with
-      ``mode("overwrite")`` — a replayed epoch replaces its own output
-      byte-for-byte instead of appending a duplicate (the standard
-      foreachBatch idempotence pattern).
-
-    Within each epoch dir the chunks are partitioned (tier, p_day) — the
-    same TTL layout as the batch chunk table, so
-    ``chunk_ttl_sql_predicate`` retention and stat-pruned range reads work
-    unchanged (partition discovery just sees one extra outer ``batch_id``
-    level). Read the sink with
-    ``spark.read.option("basePath", path).parquet(path)``.
-
-    The input must carry ``conv_id``/``tier``/``bucket_ts`` plus
-    ``metrics`` columns (e.g. :func:`stream_rollup_1m` output).
-
-    Hot/cold handoff (the backfill story for streaming chunks): epoch
-    dirs are the HOT end only and are never merged by
-    :mod:`..plans.backfill` — the batch cascade re-owns every closed
-    window when it runs (its chunk stage re-encodes the full tier from
-    the rollup tables), so after a batch cycle the epoch dirs for the
-    covered range are redundant and DISCARDABLE (delete dirs older than
-    the batch high-water mark; the exactly-once checkpoint is unaffected
-    because replayed epochs rewrite their own dirs regardless).
-    ``tests/test_streaming.py::test_stream_chunk_dirs_discardable_after_batch_cascade``
-    pins the contract: every point decoded from the streaming sink also
-    decodes, value-equal, from the batch chunk table built over the same
-    input.
-    """
-    from pneuma_treatment_spark.compression.chunks import write_chunks
-
-    _validate_trigger(available_now, trigger_seconds)
-
-    def emit(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return  # a watermark-only epoch: no closed buckets, no dir
-        (
-            write_chunks(bdf, metrics=metrics)
-            .write.mode("overwrite")
-            .partitionBy("tier", "p_day")
-            .parquet(f"{path}/batch_id={batch_id}")
-        )
-
-    w = (
-        rollup_stream.writeStream.foreachBatch(emit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = w.start()
-    if available_now:
-        q.awaitTermination()
-    return q

@@ -320,11 +320,23 @@ def test_stream_tumbling_rollup_closed_window_rule(spark, tmp_path):
     assert got == want and len(want) > 5
 
 
+def _forget_last_commit(ckpt: str) -> None:
+    """Simulate a crash after the sink wrote its last epoch but before the
+    commit log recorded it: the next run on ``ckpt`` replays that epoch."""
+    from pathlib import Path
+
+    commits = Path(ckpt, "commits")
+    last = max((p for p in commits.iterdir() if p.name.isdigit()), key=lambda p: int(p.name))
+    last.unlink()
+    (commits / f".{last.name}.crc").unlink(missing_ok=True)
+
+
 def test_parquet_sink_resumes_exactly_once(spark, transcripts_df, tmp_path):
     """Production sink contract: a second availableNow run against the SAME
     checkpoint processes only the newly-arrived input — no closed bucket is
-    ever emitted twice — and the combined sink equals the batch rollup on
-    the closed-window region of all data."""
+    ever emitted twice, not even by an epoch replayed after a crash — and
+    the combined sink equals the batch rollup on the closed-window region
+    of all data."""
     import os
     import time as _time
 
@@ -333,13 +345,18 @@ def test_parquet_sink_resumes_exactly_once(spark, transcripts_df, tmp_path):
 
     from pneuma_treatment_spark.streaming.rollup_stream import (
         read_transcript_stream,
-        run_to_parquet_sink,
+        run_rollup_chunk_sink,
         stream_rollup_1m,
     )
 
     src = str(tmp_path / "psink_src")
     sink = str(tmp_path / "psink_out")
+    chunk_sink = str(tmp_path / "psink_chunks")
     ckpt = str(tmp_path / "psink_ckpt")
+
+    def read_sink():
+        return spark.read.option("basePath", sink).parquet(sink).drop("batch_id").toPandas()
+
     os.makedirs(src)
 
     # arrival batch 1: everything before the split point
@@ -360,10 +377,10 @@ def test_parquet_sink_resumes_exactly_once(spark, transcripts_df, tmp_path):
     now = _time.time()
     os.utime(f"{src}/000.parquet", (now - 60, now - 60))
 
-    run_to_parquet_sink(
-        stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt
+    run_rollup_chunk_sink(
+        stream_rollup_1m(read_transcript_stream(spark, src)), sink, chunk_sink, ckpt
     )
-    first = spark.read.parquet(sink).toPandas()
+    first = read_sink()
     assert len(first) > 0
 
     # arrival batch 2: the rest lands later; SAME checkpoint
@@ -372,10 +389,12 @@ def test_parquet_sink_resumes_exactly_once(spark, transcripts_df, tmp_path):
     _sh.rmtree(f"{src}/b2")
     os.utime(f"{src}/001.parquet", (now - 30, now - 30))
 
-    run_to_parquet_sink(
-        stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt
+    # the second run first replays run 1's last epoch, then drains 001
+    _forget_last_commit(ckpt)
+    run_rollup_chunk_sink(
+        stream_rollup_1m(read_transcript_stream(spark, src)), sink, chunk_sink, ckpt
     )
-    got = spark.read.parquet(sink).toPandas()
+    got = read_sink()
 
     # exactly-once: no (conv, bucket) appears twice across the two runs
     assert not got.duplicated(["conv_id", "bucket_ts"]).any()
@@ -399,7 +418,7 @@ def test_stream_chunk_dirs_discardable_after_batch_cascade(
     streaming chunk sink holds also decodes, value-equal, from the batch
     chunk table built over the same input — the batch cascade re-owns
     closed windows, so epoch dirs behind its high-water mark are
-    discardable."""
+    discardable. A replayed epoch rewrites its dir, so no point doubles."""
     import glob as _glob
     import os
     import shutil as _sh
@@ -410,11 +429,12 @@ def test_stream_chunk_dirs_discardable_after_batch_cascade(
     from pneuma_treatment_spark.compression.chunks import read_chunks, write_chunks
     from pneuma_treatment_spark.streaming.rollup_stream import (
         read_transcript_stream,
-        run_chunk_append_sink,
+        run_rollup_chunk_sink,
         stream_rollup_1m,
     )
 
     src = str(tmp_path / "hc_src")
+    rollup_sink = str(tmp_path / "hc_rollup")
     sink = str(tmp_path / "hc_sink")
     ckpt = str(tmp_path / "hc_ckpt")
     os.makedirs(src)
@@ -423,9 +443,12 @@ def test_stream_chunk_dirs_discardable_after_batch_cascade(
     _sh.rmtree(f"{src}/b")
     now = _time.time()
     os.utime(f"{src}/000.parquet", (now - 60, now - 60))
-    run_chunk_append_sink(
-        stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt
-    )
+    for replay in (False, True):  # the second run replays the last epoch
+        if replay:
+            _forget_last_commit(ckpt)
+        run_rollup_chunk_sink(
+            stream_rollup_1m(read_transcript_stream(spark, src)), rollup_sink, sink, ckpt
+        )
     stream_pts = read_chunks(
         spark.read.option("basePath", sink).parquet(sink)
     ).toPandas()
@@ -438,6 +461,7 @@ def test_stream_chunk_dirs_discardable_after_batch_cascade(
     ).toPandas()
 
     keys = ["conv_id", "tier", "metric", "bucket_ts"]
+    assert not stream_pts.duplicated(keys).any()  # the replay rewrote its epoch
     j = stream_pts.merge(
         batch_pts, on=keys, how="left", suffixes=("_s", "_b"), indicator=True
     )
@@ -483,7 +507,7 @@ def test_deadletter_capture_heals_batch_tables(spark, tmp_path):
         read_dead_letter,
         read_transcript_stream,
         run_deadletter_capture,
-        run_to_parquet_sink,
+        run_rollup_chunk_sink,
         stream_rollup_1m,
     )
     from pneuma_treatment_spark.synth import generate_transcripts
@@ -508,6 +532,7 @@ def test_deadletter_capture_heals_batch_tables(spark, tmp_path):
     # ---- stream: cycle 1 drains the on-time arrival, cycle 2 the late one
     src = str(tmp_path / "dl_src")
     sink = str(tmp_path / "dl_sink")
+    chunk_sink = str(tmp_path / "dl_chunks")
     dead = str(tmp_path / "dl_dead")
     ckpt_r = str(tmp_path / "dl_ckpt_rollup")
     ckpt_c = str(tmp_path / "dl_ckpt_capture")
@@ -521,8 +546,8 @@ def test_deadletter_capture_heals_batch_tables(spark, tmp_path):
         os.utime(f"{src}/{name}", (mt, mt))
 
     def cycle():
-        run_to_parquet_sink(
-            stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt_r
+        run_rollup_chunk_sink(
+            stream_rollup_1m(read_transcript_stream(spark, src)), sink, chunk_sink, ckpt_r
         )
         run_deadletter_capture(spark, src, dead, ckpt_c)
 
@@ -544,7 +569,7 @@ def test_deadletter_capture_heals_batch_tables(spark, tmp_path):
 
     # the rollup sink really dropped them: every emitted turn is an on-time
     # turn of a closed window — sum(turn_count) equals exactly that count
-    got_sink = spark.read.parquet(sink).toPandas()
+    got_sink = spark.read.option("basePath", sink).parquet(sink).drop("batch_id").toPandas()
     ot = on_time.select(
         F.col("conv_id"), F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     ).toPandas()
@@ -792,11 +817,12 @@ def test_chunk_append_sink_exactly_once(spark, transcripts_df, tmp_path):
     from pneuma_treatment_spark.compression.chunks import read_chunks
     from pneuma_treatment_spark.streaming.rollup_stream import (
         read_transcript_stream,
-        run_chunk_append_sink,
+        run_rollup_chunk_sink,
         stream_rollup_1m,
     )
 
     src = str(tmp_path / "csink_src")
+    rollup_sink = str(tmp_path / "csink_rollup")
     sink = str(tmp_path / "csink_out")
     ckpt = str(tmp_path / "csink_ckpt")
     os.makedirs(src)
@@ -816,8 +842,8 @@ def test_chunk_append_sink_exactly_once(spark, transcripts_df, tmp_path):
     _sh.rmtree(f"{src}/b0")
     os.utime(f"{src}/000.parquet", (now - 60, now - 60))
 
-    run_chunk_append_sink(
-        stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt
+    run_rollup_chunk_sink(
+        stream_rollup_1m(read_transcript_stream(spark, src)), rollup_sink, sink, ckpt
     )
     first = spark.read.option("basePath", sink).parquet(sink).toPandas()
     assert len(first) > 0
@@ -826,8 +852,8 @@ def test_chunk_append_sink_exactly_once(spark, transcripts_df, tmp_path):
     _sh.rmtree(f"{src}/b1")
     os.utime(f"{src}/001.parquet", (now - 30, now - 30))
 
-    run_chunk_append_sink(
-        stream_rollup_1m(read_transcript_stream(spark, src)), sink, ckpt
+    run_rollup_chunk_sink(
+        stream_rollup_1m(read_transcript_stream(spark, src)), rollup_sink, sink, ckpt
     )
     chunks = spark.read.option("basePath", sink).parquet(sink)
     got_chunks = chunks.toPandas()

@@ -124,10 +124,11 @@ def test_treatment_parity_precomputed_flags(filled_spark, filled_oracle):
 
 
 def test_fusion_guards(spark, filled_spark):
-    """Silent-corruption guards: halo > chunk_len refuses eagerly, and a
+    """Silent-corruption guards: halo > chunk_len refuses eagerly; a
     conversation longer than a chunk without its flag — no flags at all,
     or a flags frame missing it — fails loudly instead of dropping rows or
-    routing the conversation down the wrong branch."""
+    routing the conversation down the wrong branch; and a negative
+    turn_idx fails loudly instead of dropping its rows."""
     with pytest.raises(ValueError, match="halo"):
         treat_transcripts(filled_spark, TreatmentConfig(chunk_len=16))
 
@@ -139,6 +140,15 @@ def test_fusion_guards(spark, filled_spark):
     )
     with pytest.raises(Exception, match="conv_has_anomaly is null"):
         treat_transcripts(filled_spark, CFG, flags=partial).collect()
+
+    # turns -5..19: the negative rows' own chunk is -1; dropping them
+    # would return 20 of 25 rows without an error
+    negative = spark.createDataFrame(
+        [("c", t, float(t % 7)) for t in range(-5, 20)],
+        "conv_id string, turn_idx long, token_count double",
+    )
+    with pytest.raises(Exception, match="negative turn_idx"):
+        treat_transcripts(negative, CFG).collect()
 
 
 def test_rollup_parity(spark, transcripts_df, transcripts_pdf):
