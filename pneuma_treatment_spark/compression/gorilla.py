@@ -17,19 +17,21 @@ Timestamps (delta-of-delta, zigzag-free bucket classes):
 Values (XOR with predecessor):
   v0: 64 bits raw. For each xor = bits(v_i) ^ bits(v_{i-1}):
     xor == 0 -> '0'
-    else '1' + (  '0' + meaningful bits if the meaningful window fits the
-                  previous window (same leading zeros / length reuse)
-                | '1' + 6 bits leading-zero count + 6 bits length-1
-                      + that many meaningful bits )
+    else '11' + 6 bits leading-zero count + 6 bits length-1
+              + that many meaningful bits
 
 (The paper stores 5 leading bits / 6 length bits with 64 meaning "use 32";
-we use a flat 6+6 with length-1 so a full 64-bit payload is representable —
-a documented deviation, this is our own codec not a wire-format port.)
+we use a flat 6+6 with length-1 so a full 64-bit payload is representable.
+The paper's '10' previous-window-reuse record is never written and is
+rejected on decode: without it every record's length is readable at its own
+start. Documented deviations — this is our own codec, not a wire-format
+port.)
 
-Encoding is fully vectorized: per-element (code, bitlen) pairs are computed
-with numpy, then packed in one shot via a searchsorted scatter + packbits —
-no per-point Python in the encode hot path. Decode is a sequential bit
-reader (used on the read/verify path).
+Both directions run over MANY chunks at once. Encode computes per-element
+(code, bitlen) pairs with numpy and packs them in one searchsorted scatter +
+packbits. Decode walks the concatenated record boundaries (one scalar index
+per record) and does all field extraction, delta/XOR reconstruction and
+output scatter once over the batch. Any malformed blob raises ValueError.
 
 NaN-safe: NaN payload bits round-trip exactly (XOR operates on raw bit
 patterns) — required because empty rollup windows are null, not 0
@@ -44,9 +46,15 @@ import numpy as np
 
 _MAGIC = b"GOR1"
 
+_TS_BOUNDS = (64, 256, 2048)  # class upper bounds (inclusive) on dod
+_TS_OFFS = (63, 255, 2047)
+_TS_PAYLOAD = (7, 9, 12)
+_TS_PREFIX = (0b10, 0b110, 0b1110)
+_TS_PREFIX_LEN = (2, 3, 4)
+
 
 # --------------------------------------------------------------------------
-# bit packing helpers (vectorized)
+# bit helpers (vectorized)
 # --------------------------------------------------------------------------
 
 def _pack_codes(codes: np.ndarray, bitlens: np.ndarray) -> bytes:
@@ -64,69 +72,6 @@ def _pack_codes(codes: np.ndarray, bitlens: np.ndarray) -> bytes:
     return np.packbits(bits).tobytes()
 
 
-class _BitReader:
-    __slots__ = ("bits", "pos")
-
-    def __init__(self, data: bytes):
-        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        b = self.bits
-        p = self.pos
-        for i in range(n):
-            out = (out << 1) | int(b[p + i])
-        self.pos = p + n
-        return out
-
-
-# --------------------------------------------------------------------------
-# timestamps
-# --------------------------------------------------------------------------
-
-_TS_BOUNDS = (64, 256, 2048)  # class upper bounds (inclusive) on dod
-_TS_OFFS = (63, 255, 2047)
-_TS_PAYLOAD = (7, 9, 12)
-_TS_PREFIX = (0b10, 0b110, 0b1110)
-_TS_PREFIX_LEN = (2, 3, 4)
-
-
-def _encode_ts(ts: np.ndarray) -> tuple[bytes, bytes]:
-    n = len(ts)
-    head = struct.pack("<Iqq", n, int(ts[0]) if n else 0, int(ts[1] - ts[0]) if n > 1 else 0)
-    if n <= 2:
-        return head, b""
-    deltas = np.diff(ts.astype(np.int64))
-    dod = np.diff(deltas)
-    n = len(dod)
-    codes = np.zeros(n, dtype=np.uint64)
-    lens = np.ones(n, dtype=np.int64)  # default class '0' (dod==0)
-    done = dod == 0
-    for bound, off, pay, pre, prelen in zip(
-        _TS_BOUNDS, _TS_OFFS, _TS_PAYLOAD, _TS_PREFIX, _TS_PREFIX_LEN
-    ):
-        sel = (~done) & (dod >= -(bound - 1)) & (dod <= bound)
-        codes[sel] = (np.uint64(pre) << np.uint64(pay)) | (dod[sel] + off).astype(np.uint64)
-        lens[sel] = prelen + pay
-        done |= sel
-    rest = ~done
-    # 4-bit prefix + 64-bit raw payload won't fit one uint64 code → the
-    # escape class occupies TWO pack entries; scatter-build (vectorized).
-    n_entries = n + int(rest.sum())
-    starts = np.concatenate([[0], np.cumsum(np.where(rest, 2, 1))])[:-1]
-    out_codes = np.zeros(n_entries, dtype=np.uint64)
-    out_lens = np.empty(n_entries, dtype=np.int64)
-    out_codes[starts] = codes
-    out_lens[starts] = lens
-    s_r = starts[rest]
-    out_codes[s_r] = 0b1111
-    out_lens[s_r] = 4
-    out_codes[s_r + 1] = dod[rest].astype(np.uint64)
-    out_lens[s_r + 1] = 64
-    return head, _pack_codes(out_codes, out_lens)
-
-
 def _gather_fields(bits: np.ndarray, starts: np.ndarray, width: int) -> np.ndarray:
     """Vectorized fixed-width MSB-first field extraction from a bit array:
     value_r = Σ_j bits[starts_r + j] << (width-1-j). One (m, width) gather
@@ -137,178 +82,6 @@ def _gather_fields(bits: np.ndarray, starts: np.ndarray, width: int) -> np.ndarr
     g = bits[starts[:, None] + j[None, :]].astype(np.uint64)
     w = (np.uint64(1) << (width - 1 - j).astype(np.uint64))
     return (g * w[None, :]).sum(axis=1, dtype=np.uint64)
-
-
-def _record_starts(
-    record_len_at: np.ndarray, n_records: int, limit: int | None = None
-) -> np.ndarray | None:
-    """Walk the record chain: starts_{i+1} = starts_i + len(starts_i).
-    Record lengths are position-local for both streams (the encoder never
-    emits the value stream's window-reuse class), so the only sequential
-    work left is one scalar index per RECORD — the per-BIT Python reader
-    remains only as the legacy fallback. Returns None when the walk runs
-    past ``limit`` — a foreign '10'-class record desyncs the lengths, and
-    the caller must fall back to the sequential reader."""
-    starts = np.empty(n_records, dtype=np.int64)
-    p = 0
-    lim = limit if limit is not None else len(record_len_at)
-    ln = record_len_at  # local name: tight loop
-    for i in range(n_records):
-        if p >= lim:
-            return None
-        starts[i] = p
-        p += ln[p]
-    if p > lim:  # final record claims bits past the payload end
-        return None
-    return starts
-
-
-def _decode_ts(head: bytes, payload: bytes) -> np.ndarray:
-    n, t0, d0 = struct.unpack("<Iqq", head)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    if n == 1:
-        return np.array([t0], dtype=np.int64)
-    out = np.empty(n, dtype=np.int64)
-    out[0], out[1] = t0, t0 + d0
-    if n == 2:
-        return out
-    bits = np.unpackbits(np.frombuffer(payload, dtype=np.uint8))
-    m = n - 2
-    L = _ts_record_lengths(bits)
-    starts = _record_starts(L, m)
-    if starts is None:
-        raise ValueError("corrupt Gorilla timestamp stream")
-    rl = L[starts]
-    dod = np.zeros(m, dtype=np.int64)
-    for length, prelen, pay, off in ((9, 2, 7, 63), (12, 3, 9, 255), (16, 4, 12, 2047)):
-        sel = rl == length
-        dod[sel] = _gather_fields(bits, starts[sel] + prelen, pay).astype(np.int64) - off
-    raw_sel = rl == 68
-    if raw_sel.any():
-        raw = _gather_fields(bits, starts[raw_sel] + 4, 64)
-        dod[raw_sel] = raw.view(np.int64)  # two's complement
-    deltas = d0 + np.cumsum(dod)
-    out[2:] = (t0 + d0) + np.cumsum(deltas)
-    return out
-
-
-# --------------------------------------------------------------------------
-# values
-# --------------------------------------------------------------------------
-
-def _encode_vals(vals: np.ndarray) -> tuple[bytes, bytes]:
-    n = len(vals)
-    bits = vals.astype(np.float64).view(np.uint64)
-    head = struct.pack("<Q", int(bits[0]) if n else 0)
-    if n <= 1:
-        return head, b""
-    xor = bits[1:] ^ bits[:-1]
-    nz = xor != 0
-    # leading/trailing zero counts (vectorized via bit tricks)
-    lead = (64 - _bit_length_u64(xor)).astype(np.uint64)
-    trail = _trailing_zeros_u64(xor).astype(np.uint64)
-    mlen = np.where(nz, 64 - lead - trail, 0).astype(np.uint64)
-
-    # Fully vectorized: this encoder always emits the explicit-window form
-    # ('11' + 6b lead + 6b len-1 + payload) for changed values and '0' for
-    # repeats — it never emits the paper's '10' previous-window-reuse case
-    # (the decoder still accepts it), trading ≤12 bits per changed point for
-    # a branch-free numpy encode. Control bits and payload are separate pack
-    # entries so no single code exceeds 64 bits.
-    n_entries = int(nz.sum()) * 4 + int((~nz).sum())
-    out_codes = np.zeros(n_entries, dtype=np.uint64)
-    out_lens = np.empty(n_entries, dtype=np.int64)
-    starts = np.concatenate([[0], np.cumsum(np.where(nz, 4, 1))])[:-1]
-    # zero-xor points: single '0' bit (code already 0)
-    out_lens[starts[~nz]] = 1
-    # changed points: 4 consecutive entries
-    s_nz = starts[nz]
-    payload = xor[nz] >> trail[nz]
-    cols = (
-        (np.full(len(s_nz), 0b11, dtype=np.uint64), np.full(len(s_nz), 2)),
-        (lead[nz], np.full(len(s_nz), 6)),
-        (mlen[nz] - np.uint64(1), np.full(len(s_nz), 6)),
-        (payload, mlen[nz].astype(np.int64)),
-    )
-    for j, (c, ln) in enumerate(cols):
-        out_codes[s_nz + j] = c
-        out_lens[s_nz + j] = ln
-    return head, _pack_codes(out_codes, out_lens)
-
-
-def _extract_xors(bits: np.ndarray, s_ch: np.ndarray) -> np.ndarray:
-    """Vectorized variable-width XOR payload extraction for '11'-class value
-    records starting at ``s_ch``: xor_r = Σ_{j<mlen} bit[p+14+j] <<
-    (63 - lead_r - j) — the shift depends only on (lead, j), so one masked
-    (m, 64) gather covers all widths at once. Shared by the single-chunk and
-    batched decoders (one kernel, one place)."""
-    lead = _gather_fields(bits, s_ch + 2, 6).astype(np.int64)
-    mlen = _gather_fields(bits, s_ch + 8, 6).astype(np.int64) + 1
-    j = np.arange(64, dtype=np.int64)
-    mask = j[None, :] < mlen[:, None]
-    idx = np.where(mask, s_ch[:, None] + 14 + j[None, :], 0)
-    g = bits[idx].astype(np.uint64) * mask
-    shift = np.where(mask, 63 - lead[:, None] - j[None, :], 0).astype(np.uint64)
-    return (g << shift).sum(axis=1, dtype=np.uint64)
-
-
-def _decode_vals_slow(n: int, b0: int, payload: bytes) -> np.ndarray:
-    """Sequential bit-reader decode — kept ONLY for foreign chunks using the
-    paper's '10' previous-window-reuse class, which our encoder never emits
-    (its record lengths are not position-local, so the vectorized chain walk
-    cannot apply)."""
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = b0
-    r = _BitReader(payload)
-    cur_lead, cur_mlen = -1, -1
-    try:
-        return _decode_vals_slow_inner(n, out, r, cur_lead, cur_mlen)
-    except IndexError as e:  # reader ran off the payload
-        raise ValueError("corrupt Gorilla value stream") from e
-
-
-def _decode_vals_slow_inner(n, out, r, cur_lead, cur_mlen):
-    for i in range(1, n):
-        if r.read(1) == 0:
-            out[i] = out[i - 1]
-            continue
-        if r.read(1) == 0:
-            mlen, lead = cur_mlen, cur_lead
-        else:
-            lead = r.read(6)
-            mlen = r.read(6) + 1
-            cur_lead, cur_mlen = lead, mlen
-        payload_bits = r.read(mlen)
-        xor = payload_bits << (64 - lead - mlen)
-        out[i] = out[i - 1] ^ np.uint64(xor)
-    return out.view(np.float64)
-
-
-def _decode_vals(n: int, head: bytes, payload: bytes) -> np.ndarray:
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    (b0,) = struct.unpack("<Q", head)
-    if n == 1:
-        return np.array([b0], dtype=np.uint64).view(np.float64)
-    bits = np.unpackbits(np.frombuffer(payload, dtype=np.uint8))
-    m = n - 1
-    L = _val_record_lengths(bits)
-    starts = _record_starts(L, m)
-    if starts is None:
-        # a '10' reuse-class record desynced the position-local lengths
-        return _decode_vals_slow(n, b0, payload)
-    changed = bits[starts] == 1
-    s_ch = starts[changed]
-    if len(s_ch) and not bits[s_ch + 1].all():
-        return _decode_vals_slow(n, b0, payload)  # '10' reuse class present
-    xors = np.zeros(m, dtype=np.uint64)
-    if len(s_ch):
-        xors[changed] = _extract_xors(bits, s_ch)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = b0
-    out[1:] = xors
-    return np.bitwise_xor.accumulate(out).view(np.float64)
 
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
@@ -325,41 +98,6 @@ def _bit_length_u64(x: np.ndarray) -> np.ndarray:
 def _trailing_zeros_u64(x: np.ndarray) -> np.ndarray:
     lsb = x & (~x + np.uint64(1))
     return np.where(x == 0, 64, _bit_length_u64(lsb) - 1)
-
-
-# --------------------------------------------------------------------------
-# public chunk API
-# --------------------------------------------------------------------------
-
-def encode_chunk(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode one (sorted-by-ts) series chunk into a self-describing blob."""
-    ts_us = np.asarray(ts_us, dtype=np.int64)
-    values = np.asarray(values, dtype=np.float64)
-    assert len(ts_us) == len(values)
-    th, tp = _encode_ts(ts_us)
-    vh, vp = _encode_vals(values)
-    return b"".join(
-        [_MAGIC, th, struct.pack("<I", len(tp)), tp, vh, struct.pack("<I", len(vp)), vp]
-    )
-
-
-def decode_chunk(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    assert blob[:4] == _MAGIC, "bad chunk magic"
-    off = 4
-    th = blob[off : off + 20]
-    off += 20
-    (tplen,) = struct.unpack("<I", blob[off : off + 4])
-    off += 4
-    tp = blob[off : off + tplen]
-    off += tplen
-    vh = blob[off : off + 8]
-    off += 8
-    (vplen,) = struct.unpack("<I", blob[off : off + 4])
-    off += 4
-    vp = blob[off : off + vplen]
-    ts = _decode_ts(th, tp)
-    vals = _decode_vals(len(ts), vh, vp)
-    return ts, vals
 
 
 # --------------------------------------------------------------------------
@@ -385,36 +123,57 @@ def _val_record_lengths(bits: np.ndarray) -> np.ndarray:
     return np.where(bp[:B] == 0, 1, 15 + mlen_at)
 
 
+def _payload_bits(
+    payloads: list, lens: np.ndarray, idx: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The payloads of chunks ``idx`` unpacked into one bit array, with each
+    chunk's first bit and one-past-last bit in it."""
+    sel_lens = lens[idx]
+    bits = np.unpackbits(
+        np.frombuffer(b"".join(payloads[i] for i in idx), dtype=np.uint8)
+    )
+    offs = 8 * np.concatenate([[0], np.cumsum(sel_lens)[:-1]])
+    return bits, offs, offs + 8 * sel_lens
+
+
 def _walk_records(
-    L: np.ndarray, offsets: np.ndarray, counts: np.ndarray, ends: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
+    L: np.ndarray, offsets: np.ndarray, counts: np.ndarray, ends: np.ndarray,
+    stream: str,
+) -> np.ndarray:
     """Concatenated record-boundary walk: one scalar index per record, with
     the cursor reset to each chunk's bit offset. The ONLY per-record Python
-    in the batched decode. Returns ``(starts, ok)``: ``ok[c]`` is False when
-    chunk c's walk crossed its payload end — a foreign '10'-class record
-    desyncs the position-local lengths — and that chunk's ``starts`` entries
-    are zero-filled placeholders the caller must not trust. The caller
-    slow-decodes exactly the not-ok chunks; good chunks keep their
-    vectorized results (one foreign chunk must not cost O(batch))."""
-    starts = np.zeros(int(counts.sum()), dtype=np.int64)
-    ok = np.ones(len(counts), dtype=bool)
+    in the decode. ``L[p]`` is the length of a record starting at bit p —
+    readable at p itself, since no record this codec writes refers to an
+    earlier one. A walk that reaches its chunk's payload end with records
+    left, or whose final record runs past it, raises ValueError: the
+    payload is truncated or holds records this codec does not write."""
+    starts = np.empty(int(counts.sum()), dtype=np.int64)
     k = 0
-    for c, (off, m, end) in enumerate(
-        zip(offsets.tolist(), counts.tolist(), ends.tolist())
-    ):
-        p = off
-        m = int(m)
-        for j in range(m):
+    for p, m, end in zip(offsets.tolist(), counts.tolist(), ends.tolist()):
+        for j in range(k, k + m):
             if p >= end:
-                ok[c] = False
-                break
-            starts[k + j] = p
+                raise ValueError(f"corrupt Gorilla {stream} stream")
+            starts[j] = p
             p += L[p]
-        else:
-            if p > end:  # final record of the chunk overran its payload
-                ok[c] = False
+        if p > end:
+            raise ValueError(f"corrupt Gorilla {stream} stream")
         k += m
-    return starts, ok
+    return starts
+
+
+def _extract_xors(bits: np.ndarray, s_ch: np.ndarray) -> np.ndarray:
+    """Vectorized variable-width XOR payload extraction for '11'-class value
+    records starting at ``s_ch``: xor_r = Σ_{j<mlen} bit[p+14+j] <<
+    (63 - lead_r - j) — the shift depends only on (lead, j), so one masked
+    (m, 64) gather covers all widths at once."""
+    lead = _gather_fields(bits, s_ch + 2, 6).astype(np.int64)
+    mlen = _gather_fields(bits, s_ch + 8, 6).astype(np.int64) + 1
+    j = np.arange(64, dtype=np.int64)
+    mask = j[None, :] < mlen[:, None]
+    idx = np.where(mask, s_ch[:, None] + 14 + j[None, :], 0)
+    g = bits[idx].astype(np.uint64) * mask
+    shift = np.where(mask, 63 - lead[:, None] - j[None, :], 0).astype(np.uint64)
+    return (g << shift).sum(axis=1, dtype=np.uint64)
 
 
 def _segmented_cumsum(x: np.ndarray, seg_starts: np.ndarray, seg_counts: np.ndarray) -> np.ndarray:
@@ -429,29 +188,35 @@ def decode_chunks(blobs: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
     Returns ``(lengths, ts, vals)`` where ``lengths[i]`` is chunk i's point
     count and ``ts``/``vals`` are the concatenated series. Per-chunk numpy
-    dispatch overhead (~300 µs/chunk for :func:`decode_chunk`) is the read
-    path's wall at chunk-table scale — a rollup tier stores millions of
-    small chunks — so all field extraction, delta/XOR reconstruction and
-    output scatter here run once over the whole batch; the only per-record
-    Python is one scalar index in the boundary walk."""
+    dispatch (~300 µs per chunk) would be the read path's wall at
+    chunk-table scale — a rollup tier stores millions of small chunks — so
+    all field extraction, delta/XOR reconstruction and output scatter run
+    once over the whole batch; the only per-record Python is one scalar
+    index in the boundary walk. Any malformed blob raises ValueError for
+    the whole batch."""
     nchunks = len(blobs)
     # header fields parse VECTORIZED from one gathered buffer (structured
-    # dtype over the packed "<Iqq…Q" layout); the python loop only slices
-    # payload views — ~3 ops per chunk
+    # dtype over the packed "<Iqq…Q" layout); the python loop only checks
+    # the framing and slices payload views
     head_buf = bytearray(nchunks * 32)
     tps: list = []
     vps: list = []
     u32 = struct.Struct("<I")
     for i, blob in enumerate(blobs):
         blob = bytes(blob)
-        assert blob[:4] == _MAGIC, "bad chunk magic"
-        head_buf[i * 32:i * 32 + 20] = blob[4:24]
+        if len(blob) < 28 or blob[:4] != _MAGIC:
+            raise ValueError("not a Gorilla chunk: bad magic or short header")
         (tplen,) = u32.unpack_from(blob, 24)
-        tps.append(blob[28:28 + tplen])
         vh_off = 28 + tplen
-        head_buf[i * 32 + 20:i * 32 + 28] = blob[vh_off:vh_off + 8]
+        if len(blob) < vh_off + 12:
+            raise ValueError("Gorilla chunk truncated before its value header")
         (vplen,) = u32.unpack_from(blob, vh_off + 8)
-        vps.append(blob[vh_off + 12:vh_off + 12 + vplen])
+        if len(blob) != vh_off + 12 + vplen:
+            raise ValueError("Gorilla chunk length does not match its header")
+        head_buf[i * 32:i * 32 + 20] = blob[4:24]
+        tps.append(blob[28:vh_off])
+        head_buf[i * 32 + 20:i * 32 + 28] = blob[vh_off:vh_off + 8]
+        vps.append(blob[vh_off + 12:])
     hdt = np.dtype(
         {"names": ["n", "t0", "d0", "b0"],
          "formats": ["<u4", "<i8", "<i8", "<u8"],
@@ -462,6 +227,12 @@ def decode_chunks(blobs: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     t0_arr = heads["t0"].astype(np.int64)
     d0_arr = heads["d0"].astype(np.int64)
     b0_arr = heads["b0"].astype(np.uint64)
+    tp_len = np.fromiter(map(len, tps), np.int64, nchunks)
+    vp_len = np.fromiter(map(len, vps), np.int64, nchunks)
+    # every record is at least one bit: refuse a point count the payloads
+    # cannot hold before sizing any output by it
+    if (n_arr - 2 > 8 * tp_len).any() or (n_arr - 1 > 8 * vp_len).any():
+        raise ValueError("Gorilla chunk counts more points than its payloads hold")
 
     out_starts = np.concatenate([[0], np.cumsum(n_arr)[:-1]])
     total = int(n_arr.sum())
@@ -476,20 +247,10 @@ def decode_chunks(blobs: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     tsel = n_arr > 2
     if tsel.any():
         sel_idx = np.flatnonzero(tsel)
-        sel_lens = np.array([len(tps[i]) for i in sel_idx], dtype=np.int64)
-        bits = (
-            np.unpackbits(np.frombuffer(b"".join(tps[i] for i in sel_idx), dtype=np.uint8))
-            if int(sel_lens.sum())
-            else np.zeros(0, np.uint8)
-        )
-        sel_off = 8 * np.concatenate([[0], np.cumsum(sel_lens)[:-1]])
-        ms = (n_arr[sel_idx] - 2).astype(np.int64)
+        bits, sel_off, sel_ends = _payload_bits(tps, tp_len, sel_idx)
+        ms = n_arr[sel_idx] - 2
         L = _ts_record_lengths(bits)
-        sel_ends = sel_off + 8 * sel_lens
-        starts, walk_ok = _walk_records(L, sel_off, ms, sel_ends)
-        if not walk_ok.all():
-            # the ts stream has no reuse class, so a desync is corruption
-            raise ValueError("corrupt Gorilla timestamp stream")
+        starts = _walk_records(L, sel_off, ms, sel_ends, "timestamp")
         rl = L[starts]
         dod = np.zeros(len(starts), dtype=np.int64)
         for length, prelen, pay, offv in ((9, 2, 7, 63), (12, 3, 9, 255), (16, 4, 12, 2047)):
@@ -512,68 +273,30 @@ def decode_chunks(blobs: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     vsel = n_arr >= 1
     if vsel.any():
         sel_idx = np.flatnonzero(vsel)
-        vp_lens = np.array([len(vps[i]) for i in sel_idx], dtype=np.int64)
-        bits = (
-            np.unpackbits(np.frombuffer(b"".join(vps[i] for i in sel_idx), dtype=np.uint8))
-            if int(vp_lens.sum())
-            else np.zeros(0, np.uint8)
-        )
-        sel_off = 8 * np.concatenate([[0], np.cumsum(vp_lens)[:-1]])
-        ms = (n_arr[sel_idx] - 1).astype(np.int64)
+        bits, sel_off, sel_ends = _payload_bits(vps, vp_len, sel_idx)
+        ms = n_arr[sel_idx] - 1
         L = _val_record_lengths(bits)
-        starts, good = _walk_records(L, sel_off, ms, sel_off + 8 * vp_lens)
-        # a '10' reuse-class record ANYWHERE in a chunk invalidates that
-        # chunk's walk (its length is not position-local); map the per-record
-        # detection back to its chunk so ONLY that chunk takes the slow path
-        rec_chunk = np.repeat(np.arange(len(sel_idx)), ms)
-        changed = np.zeros(len(starts), dtype=bool)
-        if len(starts) and len(bits):
-            trusted = good[rec_chunk]
-            changed = (bits[np.where(trusted, starts, 0)] == 1) & trusted
-            s_ch = starts[changed]
-            if len(s_ch):
-                reuse = np.zeros(len(starts), dtype=bool)
-                # a trusted changed record has >= 15 bits, so s_ch+1 is in range
-                reuse[changed] = bits[s_ch + 1] == 0
-                good[np.unique(rec_chunk[reuse])] = False
-        gm = good[rec_chunk]
-        changed &= gm
+        starts = _walk_records(L, sel_off, ms, sel_ends, "value")
+        changed = bits[starts] == 1
+        s_ch = starts[changed]
+        # a walked changed record has >= 15 bits, so s_ch + 1 is in range;
+        # the first '10' reuse record of a chunk sits at a true record start
+        if not bits[s_ch + 1].all():
+            raise ValueError("Gorilla '10' window-reuse value records are not supported")
         xors = np.zeros(len(starts), dtype=np.uint64)
-        if changed.any():
-            xors[changed] = _extract_xors(bits, starts[changed])
-        g_idx = np.flatnonzero(good)
-        if len(g_idx):
-            # per-chunk XOR-accumulate in ONE global pass over the GOOD
-            # chunks: accumulate with the raw b0 at each chunk start, then
-            # cancel the cross-chunk prefix (P_c = acc[start_c] ^ b0_c; XOR
-            # is its own inverse)
-            ms_g = ms[g_idx]
-            b0_g = b0_arr[sel_idx[g_idx]]
-            arr = np.empty(int((ms_g + 1).sum()), dtype=np.uint64)
-            astarts = np.concatenate([[0], np.cumsum(ms_g + 1)[:-1]])
-            arr[astarts] = b0_g
-            inner = np.arange(len(arr))
-            fill = np.ones(len(arr), dtype=bool)
-            fill[astarts] = False
-            arr[fill] = xors[gm]
-            acc = np.bitwise_xor.accumulate(arr)
-            prefix = acc[astarts] ^ b0_g
-            true_vals = acc ^ np.repeat(prefix, ms_g + 1)
-            oidx = np.repeat(out_starts[sel_idx[g_idx]], ms_g + 1) + (
-                inner - np.repeat(astarts, ms_g + 1)
-            )
-            vals_out[oidx] = true_vals
-        for c in np.flatnonzero(~good):
-            # legacy '10' window-reuse chunks (or a desynced walk): sequential
-            # decode of EXACTLY these chunks — O(1 chunk), not O(batch); the
-            # single-chunk path re-detects the class record-exactly and
-            # raises ValueError on genuine corruption
-            i = int(sel_idx[c])
-            o = int(out_starts[i])
-            n_i = int(n_arr[i])
-            vals_out[o:o + n_i] = _decode_vals(
-                n_i, struct.pack("<Q", int(b0_arr[i])), bytes(vps[i])
-            ).view(np.uint64)
+        xors[changed] = _extract_xors(bits, s_ch)
+        # per-chunk XOR-accumulate in ONE global pass: the chunks with points
+        # tile the output, so lay out b0 at each chunk start and its xors
+        # after it, accumulate, then cancel the cross-chunk prefix
+        # (P_c = acc[start_c] ^ b0_c; XOR is its own inverse)
+        b0 = b0_arr[sel_idx]
+        astarts = out_starts[sel_idx]
+        fill = np.ones(total, dtype=bool)
+        fill[astarts] = False
+        vals_out[astarts] = b0
+        vals_out[fill] = xors
+        acc = np.bitwise_xor.accumulate(vals_out)
+        vals_out = acc ^ np.repeat(acc[astarts] ^ b0, ms + 1)
 
     return n_arr, ts_out, vals_out.view(np.float64)
 
@@ -596,8 +319,8 @@ def _pack_segmented(
     codes: np.ndarray, lens: np.ndarray, entry_starts: np.ndarray, entry_counts: np.ndarray
 ) -> tuple[bytes, np.ndarray]:
     """Pack per-chunk entry runs into ONE bit stream, padding each chunk to a
-    byte boundary so its payload slices out byte-aligned and BYTE-IDENTICAL
-    to a per-chunk :func:`_pack_codes`. Returns (packed, byte_offsets) with
+    byte boundary so its payload slices out byte-aligned, exactly as if the
+    chunk were packed alone. Returns (packed, byte_offsets) with
     ``byte_offsets`` of length nchunks+1."""
     n = len(entry_starts)
     seg_bits = np.zeros(n, dtype=np.int64)
@@ -625,8 +348,8 @@ def _pack_segmented(
 
 
 def _ts_entries(dod: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized delta-of-delta entry construction (same classes as
-    :func:`_encode_ts`). Returns (codes, lens, entries_per_dod)."""
+    """Vectorized delta-of-delta entry construction (the timestamp classes
+    of the module docstring). Returns (codes, lens, entries_per_dod)."""
     n = len(dod)
     codes = np.zeros(n, dtype=np.uint64)
     lens = np.ones(n, dtype=np.int64)
@@ -658,8 +381,11 @@ def _ts_entries(dod: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def _val_entries(xor: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized XOR entry construction (same form as :func:`_encode_vals`:
-    '0' for repeats, explicit '11'+6+6+payload for changes)."""
+    """Vectorized XOR entry construction: '0' for repeats, explicit
+    '11'+6+6+payload for changes (never the '10' window-reuse record, which
+    would save ≤12 bits per changed point at the cost of a sequential
+    encode). Control bits and payload are separate pack entries so no single
+    code exceeds 64 bits."""
     nz = xor != 0
     lead = (64 - _bit_length_u64(xor)).astype(np.uint64)
     trail = _trailing_zeros_u64(xor).astype(np.uint64)
@@ -691,13 +417,15 @@ def encode_chunks(
     ts_concat: np.ndarray, vals_concat: np.ndarray, lengths: np.ndarray
 ) -> list:
     """Encode MANY series (concatenated, with per-series ``lengths``) in one
-    vectorized pass; returns one blob per series, BYTE-IDENTICAL to
-    :func:`encode_chunk` per chunk (pinned by tests/test_gorilla.py).
-    Per-chunk numpy dispatch (~260 µs on 2-8-point series) is the write
-    path's wall when a tier stores millions of tiny chunks."""
+    vectorized pass; returns one blob per series. The blob bytes are the
+    on-disk format, pinned by a golden digest in tests/test_gorilla.py.
+    Per-chunk numpy dispatch (~260 µs on 2-8-point series) would be the
+    write path's wall when a tier stores millions of tiny chunks."""
     ts_concat = np.asarray(ts_concat, dtype=np.int64)
     vals_concat = np.asarray(vals_concat, dtype=np.float64)
     lengths = np.asarray(lengths, dtype=np.int64)
+    if len(ts_concat) != len(vals_concat) or int(lengths.sum()) != len(ts_concat):
+        raise ValueError("series lengths must tile the ts and value arrays exactly")
     nch = len(lengths)
     starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
 

@@ -94,18 +94,6 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_TOKEN_RE = r"'(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s']+|'"
 
 
-def token_count_bpe(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Subword-style token counting: the number of BPE-ish pre-tokenizer
-    matches (a deterministic proxy for tokenizer cost — whitespace counting
-    undercounts punctuation-heavy text badly)."""
-    # F.lit keeps the pattern out of SQL string-literal escaping (it holds
-    # quotes and backslashes)
-    n = F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), F.lit(0)))
-    return docs.where(F.col(text_col).isNotNull()).select(
-        id_col, n.alias("n_bpe_tokens")
-    )
-
-
 #: rolling-hash parameters (Rabin-Karp polynomial, winnowing per the public
 #: MOSS scheme): char k-grams, window of minima
 FP_K, FP_W, FP_BASE, FP_MOD = 5, 4, 257, 1_000_000_007

@@ -815,6 +815,8 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.withColumn("__toks", toks)
     stop = F.size(F.filter(F.col("__toks"), lambda x: x.isin(_STOPWORDS)))
     n = F.size(F.col("__toks"))
+    # subword-style token count: BPE-ish pre-tokenizer matches; F.lit keeps
+    # the pattern out of SQL string-literal escaping (quotes, backslashes)
     nbpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), F.lit(0)))
     return d.select(
         "doc_id",

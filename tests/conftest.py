@@ -48,3 +48,40 @@ def assert_pdf_equal(left: pd.DataFrame, right: pd.DataFrame, keys: list[str], *
     l = left[cols].sort_values(keys).reset_index(drop=True)
     r = right[cols].sort_values(keys).reset_index(drop=True)
     pd.testing.assert_frame_equal(l, r, check_dtype=False, check_like=True, **kw)
+
+
+def splice_chunk(blob: bytes, tp: bytes | None = None, vp: bytes | None = None) -> bytes:
+    """A Gorilla chunk blob with its timestamp and/or value payload replaced
+    (lengths re-declared to match): builds foreign or corrupt chunks on top
+    of a real encoder header."""
+    import struct
+
+    (tplen,) = struct.unpack_from("<I", blob, 24)
+    vh = 28 + tplen
+    tp = blob[28:vh] if tp is None else tp
+    vp = blob[vh + 12:] if vp is None else vp
+    return b"".join([blob[:24], struct.pack("<I", len(tp)), tp,
+                     blob[vh:vh + 8], struct.pack("<I", len(vp)), vp])
+
+
+def reuse_class_chunk(ts, vals) -> bytes:
+    """Hand-encode a 4-point chunk [v0, v1, v2, v2] whose value stream uses
+    the paper's '10' previous-window-reuse record, which this codec never
+    writes: a '11' record for v1 opens a (lead=0, mlen=64) window, v2 reuses
+    it, v3 repeats. v1 must differ from v0."""
+    import numpy as np
+
+    from pneuma_treatment_spark.compression.gorilla import encode_chunks
+
+    bits_v = np.asarray(vals, dtype=np.float64).view(np.uint64)
+    x1 = int(bits_v[1] ^ bits_v[0])
+    x2 = int(bits_v[2] ^ bits_v[1])
+    stream = (
+        "11" + format(0, "06b") + format(63, "06b") + format(x1, "064b")
+        + "10" + format(x2, "064b")
+        + "0"
+    )
+    stream += "0" * ((-len(stream)) % 8)
+    vp = bytes(int(stream[i:i + 8], 2) for i in range(0, len(stream), 8))
+    (native,) = encode_chunks(ts, vals, [4])
+    return splice_chunk(bytes(native), vp=vp)

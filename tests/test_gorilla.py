@@ -2,17 +2,21 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
-from pneuma_treatment_spark.compression.gorilla import decode_chunk, encode_chunk
+from pneuma_treatment_spark.compression.gorilla import decode_chunks, encode_chunks
+from tests.conftest import reuse_class_chunk, splice_chunk
 
 rng = np.random.default_rng(99)
 
 
 def _roundtrip(ts, vals):
-    blob = encode_chunk(ts, vals)
-    ts2, vals2 = decode_chunk(blob)
+    (blob,) = encode_chunks(ts, vals, [len(ts)])
+    lens, ts2, vals2 = decode_chunks([blob])
+    assert list(lens) == [len(ts)]
     np.testing.assert_array_equal(np.asarray(ts, dtype=np.int64), ts2)
     # bit-exact including NaN payloads
     np.testing.assert_array_equal(
@@ -69,7 +73,7 @@ def test_compression_ratio_rollup_like():
     n = 2000
     ts = np.arange(n, dtype=np.int64) * 60_000_000
     vals = np.round(np.cumsum(rng.normal(0, 0.05, n)) + 10, 2)
-    blob = encode_chunk(ts, vals)
+    (blob,) = encode_chunks(ts, vals, [n])
     assert len(blob) < n * 16 * 0.6
 
 
@@ -106,7 +110,6 @@ def test_chunks_straddling_arrow_batches(spark, transcripts_df):
     from pyspark.sql import functions as F
 
     from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
-    from pneuma_treatment_spark.compression.gorilla import decode_chunks
     from pneuma_treatment_spark.operators.rollup import rollup_raw, with_turn_metrics
 
     tier = rollup_raw(with_turn_metrics(transcripts_df), "1m")
@@ -156,22 +159,13 @@ def test_chunk_compression_on_partials(spark, transcripts_df):
     assert r["b"] < r["p"] * 16
 
 
-def test_decode_chunks_batch_equals_single():
-    """Batched decode must be bit-identical to per-chunk decode across edge
-    shapes: empty, 1-, 2-, n-point chunks; NaN payloads; constant series;
-    int-valued and full-entropy doubles."""
-    import numpy as np
-
-    from pneuma_treatment_spark.compression.gorilla import (
-        decode_chunk,
-        decode_chunks,
-        encode_chunk,
-    )
-
-    rng = np.random.default_rng(99)
-    blobs, refs = [], []
-    for i in range(300):
-        n = int(rng.integers(0, 40)) if i % 5 else int(rng.choice([0, 1, 2]))
+def _edge_shape_series(seed: int, count: int, tiny: list) -> list:
+    """(ts, vals) series across edge shapes: empty, 1-3-point and n-point
+    chunks; int-valued, ±1e9-scale, constant and NaN-laced doubles."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for i in range(count):
+        n = int(rng.integers(0, 40)) if i % 5 else int(rng.choice(tiny))
         ts = np.sort(rng.integers(0, 10**12, n)).astype(np.int64)
         kind = i % 4
         if kind == 0:
@@ -183,8 +177,23 @@ def test_decode_chunks_batch_equals_single():
         else:
             vals = rng.normal(0, 1, n)
             vals[rng.random(n) < 0.3] = np.nan
-        blobs.append(encode_chunk(ts, vals))
-        refs.append((ts, vals))
+        out.append((ts, vals))
+    return out
+
+
+def _encode_all(series: list) -> list:
+    return encode_chunks(
+        np.concatenate([t for t, _ in series]),
+        np.concatenate([v for _, v in series]),
+        np.array([len(t) for t, _ in series]),
+    )
+
+
+def test_decode_chunks_batch_equals_single():
+    """Batched decode must return every series bit-exactly across edge
+    shapes, and equal what each blob decodes to alone."""
+    refs = _edge_shape_series(99, 300, [0, 1, 2])
+    blobs = _encode_all(refs)
     lens, tsb, vb = decode_chunks(blobs)
     off = 0
     for i, (ts, vals) in enumerate(refs):
@@ -194,145 +203,84 @@ def test_decode_chunks_batch_equals_single():
         assert np.array_equal(
             vb[off:off + nl].view(np.uint64), vals.view(np.uint64)
         )
-        t1, v1 = decode_chunk(blobs[i])
+        _, t1, v1 = decode_chunks([blobs[i]])
         assert np.array_equal(t1, ts)
+        assert np.array_equal(v1.view(np.uint64), vals.view(np.uint64))
         off += nl
 
 
+#: sha256 over the concatenated blobs of the 400 seed-13 edge-shape series,
+#: as written by the codec's original per-chunk encoder: chunk tables
+#: written by earlier builds must keep decoding, so the bytes must not move
+GOLDEN_SHA256 = "cfc4d66fd24bbb177d71b1cc4912650dcf6d44acd32aee420a3ca9a5176a4539"
+
+
 def test_encode_chunks_batch_byte_identical():
-    """Batched encode must produce BYTE-IDENTICAL blobs to per-chunk
-    encode_chunk across edge shapes."""
-    import numpy as np
-
-    from pneuma_treatment_spark.compression.gorilla import encode_chunk, encode_chunks
-
-    rng = np.random.default_rng(13)
-    lens, ts_l, vs_l, singles = [], [], [], []
-    for i in range(400):
-        n = int(rng.integers(0, 40)) if i % 5 else int(rng.choice([0, 1, 2, 3]))
-        ts = np.sort(rng.integers(0, 10**12, n)).astype(np.int64)
-        kind = i % 4
-        if kind == 0:
-            vals = rng.integers(-5000, 5000, n).astype(np.float64)
-        elif kind == 1:
-            vals = rng.normal(0, 1e9, n)
-        elif kind == 2:
-            vals = np.full(n, -2.5)
-        else:
-            vals = rng.normal(0, 1, n)
-            vals[rng.random(n) < 0.3] = np.nan
-        lens.append(n)
-        ts_l.append(ts)
-        vs_l.append(vals)
-        singles.append(encode_chunk(ts, vals))
-    batch = encode_chunks(
-        np.concatenate(ts_l), np.concatenate(vs_l), np.array(lens)
-    )
-    assert all(bytes(batch[i]) == singles[i] for i in range(len(singles)))
+    """Batched encode writes the pinned on-disk bytes, and each blob is
+    BYTE-IDENTICAL to encoding its series alone."""
+    series = _edge_shape_series(13, 400, [0, 1, 2, 3])
+    batch = _encode_all(series)
+    assert hashlib.sha256(b"".join(map(bytes, batch))).hexdigest() == GOLDEN_SHA256
+    for (ts, vals), blob in zip(series[:40], batch):
+        assert bytes(encode_chunks(ts, vals, [len(ts)])[0]) == bytes(blob)
+    # lengths that do not tile the arrays are refused, not silently cut
+    for ts, vals, lens in (([1, 2, 3], [1.0, 2.0, 3.0], [2]), ([1, 2], [1.0], [2])):
+        with pytest.raises(ValueError):
+            encode_chunks(ts, vals, lens)
     # empty batches are valid no-ops on both sides
-    from pneuma_treatment_spark.compression.gorilla import decode_chunks
-
     assert encode_chunks(np.zeros(0), np.zeros(0), np.zeros(0, dtype=np.int64)) == []
     l0, t0, v0 = decode_chunks([])
     assert len(l0) == 0 and len(t0) == 0 and len(v0) == 0
 
 
-def test_decode_falls_back_on_paper_reuse_class():
+def test_decode_rejects_paper_reuse_class():
     """A foreign chunk using the paper's '10' previous-window-reuse value
-    class (our encoder never emits it) must decode correctly via the
-    sequential fallback in BOTH the single and the batched path — the
-    vectorized walk desyncs on it and must detect that, not crash."""
-    import struct
-
-    import numpy as np
-
-    from pneuma_treatment_spark.compression import gorilla as g
-
-    vals = np.array([1.5, 2.5, 3.5, 3.5])
-    bits_v = vals.view(np.uint64)
-    x1 = int(bits_v[1] ^ bits_v[0])
-    x2 = int(bits_v[2] ^ bits_v[1])
-    stream = (
-        "11" + format(0, "06b") + format(63, "06b") + format(x1, "064b")
-        + "10" + format(x2, "064b")
-        + "0"
-    )
-    stream += "0" * ((-len(stream)) % 8)
-    vp = bytes(int(stream[i:i + 8], 2) for i in range(0, len(stream), 8))
+    record (this codec never writes it) raises ValueError, alone and
+    between native chunks, instead of decoding to wrong values."""
     ts = np.array([0, 60, 120, 180], dtype=np.int64)
-    th, tp = g._encode_ts(ts)
-    blob = b"".join(
-        [
-            b"GOR1", th, struct.pack("<I", len(tp)), tp,
-            struct.pack("<Q", int(bits_v[0])), struct.pack("<I", len(vp)), vp,
-        ]
-    )
-    t2, v2 = g.decode_chunk(blob)
-    assert np.array_equal(t2, ts) and np.array_equal(v2, vals)
-    lens, t3, v3 = g.decode_chunks([blob, g.encode_chunk(ts, vals)])
-    assert list(lens) == [4, 4]
-    assert np.array_equal(t3[:4], ts) and np.array_equal(v3[:4], vals)
-    assert np.array_equal(t3[4:], ts) and np.array_equal(v3[4:], vals)
-
-    # the fallback must be per-CHUNK: one foreign chunk among many native
-    # ones slow-decodes alone; the rest keep their vectorized results
+    foreign = reuse_class_chunk(ts, np.array([1.5, 2.5, 3.5, 3.5]))
+    with pytest.raises(ValueError):
+        decode_chunks([foreign])
     rng = np.random.default_rng(3)
     native = [
-        g.encode_chunk(
-            np.arange(i + 2, dtype=np.int64) * 60 + i,
-            rng.normal(0, 1, i + 2),
-        )
+        bytes(encode_chunks(np.arange(i + 2, dtype=np.int64) * 60 + i,
+                            rng.normal(0, 1, i + 2), [i + 2])[0])
         for i in range(10)
     ]
-    calls = []
-    orig = g._decode_vals
-    try:
-        g._decode_vals = lambda n, h, p: calls.append(n) or orig(n, h, p)
-        lens4, t4, v4 = g.decode_chunks(native[:5] + [blob] + native[5:])
-    finally:
-        g._decode_vals = orig
-    assert calls == [4]  # exactly the foreign chunk took the slow path
-    expected_t = np.concatenate(
-        [g.decode_chunk(b)[0] for b in native[:5] + [blob] + native[5:]]
-    )
-    expected_v = np.concatenate(
-        [g.decode_chunk(b)[1] for b in native[:5] + [blob] + native[5:]]
-    )
-    assert np.array_equal(t4, expected_t) and np.array_equal(v4, expected_v)
+    with pytest.raises(ValueError):
+        decode_chunks(native[:5] + [foreign] + native[5:])
+    lens, _, _ = decode_chunks(native)
+    assert list(lens) == [i + 2 for i in range(10)]
 
 
 def test_corrupt_chunks_raise_value_error():
-    """Truncated payloads must surface as ValueError (module contract), not
-    a numpy IndexError from deep inside the vectorized decode — including
-    when the FINAL record claims bits past the payload end."""
-    import struct
+    """Malformed blobs must surface as ValueError (module contract), not a
+    numpy IndexError, struct.error or assert from inside the decode —
+    including when the FINAL record claims bits past the payload end, and
+    for a blob truncated at any length, alone or ahead of a good blob."""
+    (ts3,) = encode_chunks([0, 60, 120], [0.0, 0.0, 0.0], [3])
+    (ts2,) = encode_chunks([0, 60], [0.0, 1.0], [2])
+    ts3, ts2 = bytes(ts3), bytes(ts2)
+    bad = [
+        # ts stream: n=3 but the payload opens with '1111' (claims 68 bits)
+        # in 2 bytes
+        splice_chunk(ts3, tp=bytes([0b11110000, 0])),
+        # value stream: '11' lead=0 mlen-1=63 inside a 2-byte payload
+        splice_chunk(ts2, vp=bytes([0b11000000 | 0b00111111, 0b11000000])),
+        b"GOR2" + ts2[4:],       # bad magic
+        ts2 + b"\0",             # trailing bytes past the declared payloads
+        ts3[:4] + (1 << 20).to_bytes(4, "little") + ts3[8:],  # n overclaims
+    ]
+    for blob in bad:
+        with pytest.raises(ValueError):
+            decode_chunks([blob])
 
-    import numpy as np
-    import pytest
-
-    from pneuma_treatment_spark.compression import gorilla as g
-
-    # ts stream: n=3 but payload opens with '1111' (claims 68 bits) in 2 bytes
-    th = struct.pack("<Iqq", 3, 0, 60)
-    tp = bytes([0b11110000, 0])
-    blob = b"".join(
-        [b"GOR1", th, struct.pack("<I", len(tp)), tp,
-         struct.pack("<Q", 0), struct.pack("<I", 0)]
-    )
-    with pytest.raises(ValueError):
-        g.decode_chunk(blob)
-    with pytest.raises(ValueError):
-        g.decode_chunks([blob])
-    # value stream: record claims mlen=64 inside a 2-byte payload
-    ts = np.array([0, 60], dtype=np.int64)
-    th2, tp2 = g._encode_ts(ts)
-    vp = bytes([0b11000000 | 0b00111111, 0b11000000])  # '11' lead=0 mlen-1=63...
-    blob2 = b"".join(
-        [b"GOR1", th2, struct.pack("<I", len(tp2)), tp2,
-         struct.pack("<Q", 0), struct.pack("<I", len(vp)), vp]
-    )
-    with pytest.raises(ValueError):
-        g.decode_chunk(blob2)
+    ts = np.arange(20, dtype=np.int64) * 60_000_000 + np.arange(20) ** 3
+    good = bytes(encode_chunks(ts, np.random.default_rng(5).normal(0, 1, 20), [20])[0])
+    for cut in range(len(good)):
+        for batch in ([good[:cut]], [good[:cut], good]):
+            with pytest.raises(ValueError):
+                decode_chunks(batch)
 
 
 def test_read_chunks_range_prunes_before_decode(spark, transcripts_df):

@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
 from pneuma_treatment_spark import kernels as K
-from pneuma_treatment_spark.compression.gorilla import decode_chunk, encode_chunk
+from pneuma_treatment_spark.compression.gorilla import decode_chunks, encode_chunks
+from tests.conftest import reuse_class_chunk
 
 finite_or_special = st.floats(
     allow_nan=True, allow_infinity=True, allow_subnormal=True, width=64
@@ -30,19 +32,11 @@ def test_gorilla_roundtrip_any_floats(ts0, deltas, data):
     vals = data.draw(
         arrays(np.float64, shape=len(ts), elements=finite_or_special)
     )
-    blob = encode_chunk(ts, vals)
-    ts2, vals2 = decode_chunk(blob)
-    assert np.array_equal(ts, ts2)
+    (blob,) = encode_chunks(ts, vals, np.array([len(ts)]))
+    lens, ts2, vals2 = decode_chunks([blob])
+    assert lens[0] == len(ts) and np.array_equal(ts, ts2)
     # bit-level equality: NaN payloads and signed zeros must survive
     assert np.array_equal(vals.view(np.uint64), vals2.view(np.uint64))
-    # the batched paths must agree bit-for-bit on the same series
-    from pneuma_treatment_spark.compression.gorilla import decode_chunks, encode_chunks
-
-    (batch_blob,) = encode_chunks(ts, vals, np.array([len(ts)]))
-    assert bytes(batch_blob) == blob
-    lens, ts3, vals3 = decode_chunks([blob])
-    assert lens[0] == len(ts) and np.array_equal(ts3, ts)
-    assert np.array_equal(vals3.view(np.uint64), vals.view(np.uint64))
 
 
 def _merge_reference(mask: np.ndarray, max_gap: int = 10) -> np.ndarray:
@@ -132,31 +126,6 @@ def test_gaussian1d_equals_direct_weighted_sum(vals, sigma):
         assert abs(got[i] - direct) <= 1e-9 * max(1.0, abs(direct))
 
 
-def _foreign_reuse_chunk(v: np.ndarray, ts: np.ndarray) -> bytes:
-    """Hand-encode [v0, v1, v2, v2] using the paper's '10' previous-window
-    reuse class (our encoder never emits it): '11'-record for v1 opens a
-    (lead=0, mlen=64) window, v2 reuses it, v3 repeats."""
-    import struct
-
-    from pneuma_treatment_spark.compression import gorilla as g
-
-    bits_v = v.view(np.uint64)
-    x1 = int(bits_v[1] ^ bits_v[0])
-    x2 = int(bits_v[2] ^ bits_v[1])
-    stream = (
-        "11" + format(0, "06b") + format(63, "06b") + format(x1, "064b")
-        + "10" + format(x2, "064b")
-        + "0"
-    )
-    stream += "0" * ((-len(stream)) % 8)
-    vp = bytes(int(stream[i:i + 8], 2) for i in range(0, len(stream), 8))
-    th, tp = g._encode_ts(ts)
-    return b"".join(
-        [b"GOR1", th, struct.pack("<I", len(tp)), tp,
-         struct.pack("<Q", int(bits_v[0])), struct.pack("<I", len(vp)), vp]
-    )
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     sizes=st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=12),
@@ -164,30 +133,21 @@ def _foreign_reuse_chunk(v: np.ndarray, ts: np.ndarray) -> bytes:
     data=st.data(),
 )
 def test_decode_chunks_mixed_foreign_batches(sizes, foreign_at, data):
-    """Batched decode must equal per-chunk decode for ANY interleaving of
-    native chunks and foreign '10'-reuse-class chunks — the per-chunk
-    fallback path must neither corrupt its neighbors' vectorized results
-    nor misplace output offsets."""
-    from pneuma_treatment_spark.compression.gorilla import (
-        decode_chunk,
-        decode_chunks,
-        encode_chunk,
-    )
-
-    blobs = []
+    """ANY batch holding at least one foreign '10'-reuse-class chunk raises
+    ValueError wherever the chunk sits, and the same native chunks without
+    it round-trip bit-exactly (batch offsets stay right at every size)."""
+    blobs, series = [], []
     for i, n in enumerate(sizes):
         if i in foreign_at:
             v = data.draw(
                 arrays(np.float64, shape=4, elements=finite_or_special)
             )
-            # a '10' record needs a usable previous window: lead=0/mlen=64
-            # covers any payload, but v1 must differ from v0 so the '11'
-            # record is emitted (xor of equal bits is 0 -> '0' class)
+            # v1 must differ from v0 so the '11' record that opens the
+            # reused window is emitted (xor of equal bits is the '0' class)
             if v.view(np.uint64)[1] == v.view(np.uint64)[0]:
                 v = v.copy()
                 v[1] = 1.5 if v.view(np.uint64)[0] != np.float64(1.5).view(np.uint64) else 2.5  # noqa: E501
-            ts = np.arange(4, dtype=np.int64) * 7 + i
-            blobs.append(_foreign_reuse_chunk(v, ts))
+            blobs.append(reuse_class_chunk(np.arange(4, dtype=np.int64) * 7 + i, v))
         else:
             ts = np.cumsum(
                 np.array(
@@ -203,13 +163,18 @@ def test_decode_chunks_mixed_foreign_batches(sizes, foreign_at, data):
             vals = data.draw(
                 arrays(np.float64, shape=n, elements=finite_or_special)
             )
-            blobs.append(encode_chunk(ts, vals))
+            (blob,) = encode_chunks(ts, vals, [n])
+            blobs.append(blob)
+            series.append((ts, vals))
+    if any(i in foreign_at for i in range(len(sizes))):
+        with pytest.raises(ValueError):
+            decode_chunks(blobs)
+        blobs = [b for i, b in enumerate(blobs) if i not in foreign_at]
     lens, tsb, vb = decode_chunks(blobs)
-    exp = [decode_chunk(b) for b in blobs]
-    assert list(lens) == [len(t) for t, _ in exp]
+    assert list(lens) == [len(t) for t, _ in series]
     if len(tsb):
-        assert np.array_equal(tsb, np.concatenate([t for t, _ in exp]))
+        assert np.array_equal(tsb, np.concatenate([t for t, _ in series]))
         assert np.array_equal(
             vb.view(np.uint64),
-            np.concatenate([v for _, v in exp]).view(np.uint64),
+            np.concatenate([v for _, v in series]).view(np.uint64),
         )
