@@ -4,7 +4,9 @@ spark-submit surface.
 Each CYCLE is an ``availableNow`` drain of the arriving transcript files
 through three exactly-once sinks driven by TWO queries — one per
 sink-class, so each arrival file is scanned once for the aggregated sinks
-and once for the raw capture:
+and once for the raw capture. The two queries share no state, so the cycle
+starts them together from two driver threads and returns when both have
+drained; the capture's wall hides inside the aggregation's:
 
 * ``rollup_1m_stream/`` + ``chunks_stream/`` — ONE watermarked query
   (``run_rollup_chunk_sink``, checkpoint ``checkpoints/rollup_chunks``)
@@ -20,6 +22,10 @@ and once for the raw capture:
   backfill delta schema. ``--strict-capture`` is the one over-capture
   control: it makes the captured set a superset of the dropped set under
   every micro-batch interleaving of the two queries.
+
+Malformed arrival rows (null key, null ts, negative turn_idx) are dropped
+from every sink; the capture prints a WARNING naming the epoch and the
+count.
 
 ``--heal-into <batch workdir>`` then runs the captured dead-letter delta
 through :func:`pneuma_treatment_spark.plans.backfill.backfill_pipeline`
@@ -41,6 +47,7 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -56,7 +63,13 @@ def run_stream_cycle(
 ) -> dict:
     """One availableNow drain through all three sinks; returns per-sink
     progress counts. Safe to call repeatedly — each sink's checkpoint
-    resumes at its first unprocessed file."""
+    resumes at its first unprocessed file.
+
+    The rollup+chunk drain and the dead-letter capture run concurrently,
+    one driver thread each, so both snapshot the source listing at almost
+    the same instant. If either fails, its error is re-raised once the
+    other has finished; the finished drain's epochs stay committed and a
+    re-run resumes each query at its own checkpoint."""
     from pneuma_treatment_spark.streaming.rollup_stream import (
         read_transcript_stream,
         run_deadletter_capture,
@@ -93,26 +106,35 @@ def run_stream_cycle(
             "discardable after a batch run)"
         )
 
-    # ONE query → both hot-end sinks: one source scan, one windowed
-    # aggregation, one batching order for rollup+chunks.
-    q1 = run_rollup_chunk_sink(
-        stream_rollup_1m(
-            read_transcript_stream(spark, source, max_files=max_files),
-            watermark=watermark,
-        ),
-        sinks["rollup_1m_stream"],
-        sinks["chunks_stream"],
-        ck["rollup_chunks"],
-    )
-    q3 = run_deadletter_capture(
-        spark,
-        source,
-        sinks["deadletter"],
-        ck["deadletter"],
-        watermark=watermark,
-        max_files=max_files,
-        strict=strict_capture,
-    )
+    # The two drains share no state (own checkpoint, own output dirs).
+    # Leaving the pool waits for both, so a failure in one re-raises here
+    # only after the other has finished its drain.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            # ONE query → both hot-end sinks: one source scan, one windowed
+            # aggregation, one batching order for rollup+chunks.
+            pool.submit(
+                run_rollup_chunk_sink,
+                stream_rollup_1m(
+                    read_transcript_stream(spark, source, max_files=max_files),
+                    watermark=watermark,
+                ),
+                sinks["rollup_1m_stream"],
+                sinks["chunks_stream"],
+                ck["rollup_chunks"],
+            ),
+            pool.submit(
+                run_deadletter_capture,
+                spark,
+                source,
+                sinks["deadletter"],
+                ck["deadletter"],
+                watermark=watermark,
+                max_files=max_files,
+                strict=strict_capture,
+            ),
+        ]
+        q1, q3 = [f.result() for f in futures]
 
     def progress(q):
         return [json.loads(p if isinstance(p, str) else p.json) for p in q.recentProgress]

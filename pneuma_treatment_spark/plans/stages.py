@@ -9,7 +9,7 @@ backfilled table bit-equal to a rebuild (``tests/test_backfill.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
@@ -22,6 +22,20 @@ from pneuma_treatment_spark.operators.treatment import (
 )
 
 
+def _null_key() -> Column:
+    return F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+
+
+def malformed_row() -> Column:
+    """True (never null) on a transcript row that breaks one of
+    :func:`check_transcripts`' per-row rules: a null key, a null ts or a
+    negative turn_idx. A batch input with such a row is rejected; the
+    streaming tier cannot reject an arrival file, so it drops these rows
+    from every sink instead and the dead-letter capture counts them
+    (:mod:`..streaming.rollup_stream`)."""
+    return _null_key() | F.col("ts").isNull() | (F.col("turn_idx") < 0)
+
+
 def check_transcripts(df: DataFrame, what: str) -> int:
     """Return the row count of raw transcripts, or raise a ``ValueError``
     naming ``what``, the first rule broken and its row count. A null or
@@ -31,7 +45,7 @@ def check_transcripts(df: DataFrame, what: str) -> int:
     ``Observation`` folds the five totals over the grouped rows during a
     ``noop`` write (a distinct count would plan an Expand and a second
     exchange)."""
-    key_null = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
+    key_null = _null_key()
     n = F.col("n")
     obs = Observation()
     df.groupBy("conv_id", "turn_idx").agg(

@@ -9,12 +9,15 @@ identical metric set as :mod:`..operators.rollup`, so streamed buckets equal
 batch buckets for closed windows (tests/test_streaming.py).
 
 Every sink runs as one ``availableNow`` drain per arrival batch
-(``jobs/stream_ingest_job.py`` runs one cycle): :func:`run_rollup_chunk_sink`
-writes the closed buckets as rollup rows and Gorilla chunks from one query,
+(``jobs/stream_ingest_job.py`` runs one cycle, starting its two drains
+together): :func:`run_rollup_chunk_sink` writes the closed buckets as rollup
+rows and Gorilla chunks from one query, persisting each epoch before its
+emptiness probe so the probe and both writes read one materialization;
 :func:`run_deadletter_capture` tees the raw rows, and
-:func:`run_to_memory_sink` backs the query registry and tests. The batch
-cascade (1m→1h→1d) re-owns closed ranges — streaming only ever owns the hot
-end of the timeline.
+:func:`run_to_memory_sink` backs the query registry and tests. Malformed
+rows (:func:`..plans.stages.malformed_row`) are dropped by both queries
+and counted, loudly, by the capture. The batch cascade (1m→1h→1d) re-owns
+closed ranges — streaming only ever owns the hot end of the timeline.
 
 Rows the watermark drops are not lost: :func:`run_deadletter_capture`
 tees the raw source and writes every row at risk of being
@@ -31,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +47,7 @@ from pneuma_treatment_spark.operators.rollup import (
     raw_partials,
     with_turn_metrics,
 )
+from pneuma_treatment_spark.plans.stages import malformed_row
 from pneuma_treatment_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -55,8 +60,11 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files: int = 8) -
 
 
 def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling 1-minute rollup with the batch tier's metrics."""
-    m = with_turn_metrics(stream).withWatermark("ts", watermark)
+    """Watermarked tumbling 1-minute rollup with the batch tier's metrics.
+    Malformed rows (:func:`..plans.stages.malformed_row`) are dropped
+    before the watermark, so they neither reach a bucket nor move the
+    watermark; :func:`run_deadletter_capture` counts them."""
+    m = with_turn_metrics(stream.where(~malformed_row())).withWatermark("ts", watermark)
     agg = m.groupBy(
         F.col("conv_id"), F.window("ts", "1 minute").alias("win")
     ).agg(*raw_partials())
@@ -144,6 +152,12 @@ def run_deadletter_capture(
     row) — and writes rows older than that bound to
     ``dead_path/batch_id=<epoch>`` with ``mode("overwrite")`` (the same
     replayed-epoch idempotence pattern as :func:`run_rollup_chunk_sink`).
+    Malformed rows (:func:`..plans.stages.malformed_row`) are never
+    captured — the backfill delta check would reject the whole heal — and
+    never count toward the max (:func:`stream_rollup_1m` drops them before
+    its watermark). The max aggregate also counts them, so a clean batch
+    runs no extra job; a non-zero count prints a stderr WARNING naming the
+    epoch and the count.
     Per-batch max event times persist in a tiny JSON next to the
     checkpoint (atomic tmp+rename; one long per batch — bounded driver
     metadata), so a killed capture resumes with the same bounds and
@@ -152,10 +166,12 @@ def run_deadletter_capture(
     Alignment contract: each ``availableNow`` drain (one per cycle —
     it processes the files that exist) shows the capture the same arrival
     boundaries as the aggregation, so the captured set equals the dropped
-    set. If the two queries' micro-batches interleave differently WITHIN
-    a drain (one spanning more than ``max_files`` files, where
-    FileStreamSource's arbitrary mtime tie-break orders them
-    differently), the prior-batches rule can UNDER-capture — for those
+    set. ``run_stream_cycle`` starts both drains together, so both list
+    the source at almost the same instant and a file landing mid-cycle is
+    rarely seen by one drain but not the other. If the two queries'
+    micro-batches interleave differently WITHIN a drain (one spanning
+    more than ``max_files`` files, where FileStreamSource's arbitrary
+    mtime tie-break orders them differently), the prior-batches rule can UNDER-capture — for those
     deployments set ``strict=True``: the bound then also includes the
     CURRENT batch's max event time, which upper-bounds any watermark the
     aggregation can hold while processing these rows, making the captured
@@ -192,15 +208,24 @@ def run_deadletter_capture(
         if state["floor"] is not None:
             prior.append(state["floor"])
         bdf = bdf.persist()  # the max job + late filter read ONE materialization
-        row = bdf.agg(F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("mx")).first()
+        bad = malformed_row()
+        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+        row = bdf.agg(
+            F.max(F.when(~bad, ts_us)).alias("mx"), F.count(F.when(bad, 1)).alias("bad")
+        ).first()
         mx = row["mx"]
+        if row["bad"]:
+            print(
+                f"stream capture: WARNING — epoch {batch_id}: dropped {row['bad']} "
+                "malformed rows (null key, null ts or negative turn_idx) from "
+                "every sink",
+                file=sys.stderr,
+            )
         if strict and mx is not None:
             prior.append(int(mx))
         if prior:
             bound_us = max(prior) - delay_us
-            late = bdf.where(
-                F.unix_micros(F.col("ts").cast("timestamp")) < F.lit(bound_us)
-            )
+            late = bdf.where(~bad & (ts_us < F.lit(bound_us)))
             # one epoch dir per batch, overwritten on replay (exactly-once);
             # written ONLY when non-empty — an empty dir per drain would make
             # every heal re-read all history. Safe under replay: the bound is
@@ -303,7 +328,9 @@ def run_rollup_chunk_sink(
     dead-letter capture is a separate scan (its bound recompute composes
     with any batching — see :func:`run_deadletter_capture`). The
     per-batch ``persist`` is what makes it ONE aggregation: foreachBatch
-    re-executes the micro-batch plan per action.
+    re-executes the micro-batch plan per action, so the epoch is persisted
+    before the emptiness probe, which then fills the cache both writes
+    read.
 
     Exactly-once rides two layers that compose with the checkpoint:
 
@@ -335,10 +362,12 @@ def run_rollup_chunk_sink(
     from pneuma_treatment_spark.compression.chunks import write_chunks
 
     def emit(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return  # watermark-only epoch: no closed buckets, no dirs
+        # persist first: the emptiness probe then fills the cache both
+        # writes read, instead of running the scan + aggregation on its own
         bdf = bdf.persist()
         try:
+            if bdf.isEmpty():
+                return  # watermark-only epoch: no closed buckets, no dirs
             bdf.write.mode("overwrite").parquet(f"{rollup_path}/batch_id={batch_id}")
             (
                 write_chunks(bdf)

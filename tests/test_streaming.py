@@ -944,3 +944,152 @@ def test_fused_cycle_single_scan_and_consistent_sinks(spark, transcripts_df, tmp
     os.makedirs(f"{legacy_wd}/checkpoints/rollup_1m_stream")
     with _pytest.raises(ValueError, match="pre-fusion"):
         run_stream_cycle(spark, src, legacy_wd)
+
+
+def _land_pdf(src: str, name: str, pdf, mtime: float) -> None:
+    """Write a pandas transcript frame as one arrival file (nullable
+    columns, as a foreign producer would write it) with a fixed mtime."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
+        ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us")),
+    ])
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, name)
+    pq.write_table(pa.Table.from_pandas(pdf[schema.names], schema=schema, preserve_index=False), path)
+    os.utime(path, (mtime, mtime))
+
+
+def test_stream_cycle_runs_drains_concurrently(spark, transcripts_pdf, tmp_path, monkeypatch):
+    """run_stream_cycle starts the rollup+chunk drain and the dead-letter
+    capture together: their walls overlap, and both still return their
+    terminated queries to the cycle summary."""
+    import threading
+    import time as _time
+
+    from jobs.stream_ingest_job import run_stream_cycle
+    from pneuma_treatment_spark.streaming import rollup_stream
+
+    spans, lock = [], threading.Lock()
+    drain = rollup_stream._drain
+
+    def timed(writer):
+        t0 = _time.monotonic()
+        try:
+            return drain(writer)
+        finally:
+            with lock:
+                spans.append((t0, _time.monotonic()))
+
+    monkeypatch.setattr(rollup_stream, "_drain", timed)
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    _land_pdf(src, "000.parquet", transcripts_pdf.head(2000), _time.time() - 60)
+    s = run_stream_cycle(spark, src, wd)
+    assert s["rollup_input_rows"] == s["deadletter_input_rows"] == 2000
+    assert len(spans) == 2
+    (a0, a1), (b0, b1) = spans
+    assert max(a0, b0) < min(a1, b1), f"drains ran one after the other: {spans}"
+
+
+def test_stream_cycle_capture_failure_reraises(spark, transcripts_pdf, tmp_path):
+    """A failing capture fails the cycle, but only after the concurrent
+    rollup drain committed its epoch; no query is left running."""
+    import json as _json
+    import os
+    import time as _time
+
+    import pytest as _pytest
+
+    from jobs.stream_ingest_job import run_stream_cycle
+
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    now = _time.time()
+    pdf = transcripts_pdf.sort_values("ts")
+    _land_pdf(src, "000.parquet", pdf.head(1000), now - 60)
+    run_stream_cycle(spark, src, wd)
+    commits = os.path.join(wd, "checkpoints", "rollup_chunks", "commits")
+    n_commits = len([p for p in os.listdir(commits) if p.isdigit()])
+    state = os.path.join(wd, "checkpoints", "deadletter", "deadletter_maxts.json")
+    assert os.path.exists(state)
+    with open(state, "w") as f:
+        f.write("{not json")
+
+    _land_pdf(src, "001.parquet", pdf.iloc[1000:2000], now - 30)
+    with _pytest.raises(Exception, match="JSONDecodeError|Expecting property name"):
+        run_stream_cycle(spark, src, wd)
+    assert len([p for p in os.listdir(commits) if p.isdigit()]) > n_commits
+    assert not spark.streams.active
+    with _pytest.raises(_json.JSONDecodeError):
+        _json.loads(open(state).read())  # the failed capture wrote no state
+
+
+def test_malformed_arrival_rows_dropped_loudly(spark, tmp_path, capsys):
+    """Malformed arrival rows stop neither the hot end nor the heal: an
+    on-time null key, a late null key, a null ts and a late negative
+    turn_idx are dropped from both sinks with one WARNING naming the epoch
+    and the count; the genuine late row is captured and heals."""
+    import os
+    import time as _time
+
+    import pandas as pd
+
+    from jobs.rollup_job import run_pipeline
+    from jobs.stream_ingest_job import run_stream_cycle
+    from pneuma_treatment_spark.plans.backfill import backfill_pipeline
+    from pneuma_treatment_spark.streaming.rollup_stream import read_dead_letter
+    from pneuma_treatment_spark.synth import generate_transcripts_pdf
+
+    base = generate_transcripts_pdf(n_convs=6, seed=5)
+    mx = base.ts.max()
+    held = base.sort_values("ts").iloc[[0]]  # a genuine late turn
+    assert held.ts.iloc[0] < mx - pd.Timedelta(minutes=11)
+    on_time = base.drop(held.index)
+
+    last = base[base.conv_id == base.conv_id.iloc[-1]]
+    ext = pd.DataFrame({
+        "conv_id": last.conv_id.iloc[0],
+        "turn_idx": last.turn_idx.max() + 1 + pd.RangeIndex(30),
+        "role": "user", "text": "x", "tool": None,
+        "ts": mx + pd.to_timedelta(1 + pd.RangeIndex(30), unit="min"),
+    })
+    bad = pd.DataFrame({
+        "conv_id": [None, None, base.conv_id.iloc[0], base.conv_id.iloc[0]],
+        "turn_idx": [0, 1, 10_000, -1],
+        "role": "user", "text": "x", "tool": None,
+        "ts": [mx + pd.Timedelta(minutes=5), mx - pd.Timedelta(minutes=30), pd.NaT,
+               mx - pd.Timedelta(minutes=30)],
+    })
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    now = _time.time()
+    _land_pdf(src, "000.parquet", on_time, now - 60)
+    run_stream_cycle(spark, src, wd)
+    _land_pdf(src, "001.parquet", pd.concat([ext, bad, held], ignore_index=True), now - 30)
+    capsys.readouterr()
+    s2 = run_stream_cycle(spark, src, wd)
+    assert "dropped 4 malformed rows" in capsys.readouterr().err
+    assert s2["deadletter_epoch_dirs"] == 1
+    _land_pdf(src, "002.parquet", ext.assign(ts=ext.ts + pd.Timedelta(hours=1)), now - 10)
+    run_stream_cycle(spark, src, wd)  # the stream keeps going
+
+    sink = f"{wd}/rollup_1m_stream"
+    rollup = spark.read.option("basePath", sink).parquet(sink)
+    assert rollup.where("conv_id IS NULL").count() == 0
+    # the null-key on-time bucket was closed by cycle 2's watermark: had it
+    # not been dropped, it would be in the sink now
+    assert rollup.where(f"bucket_ts > '{mx}'").count() > 0
+
+    cap = read_dead_letter(spark, f"{wd}/deadletter")
+    got = sorted((r.conv_id, r.turn_idx) for r in cap.select("conv_id", "turn_idx").collect())
+    assert got == [(held.conv_id.iloc[0], int(held.turn_idx.iloc[0]))]
+
+    on_path = str(tmp_path / "on_raw")
+    _land_pdf(on_path, "part-0.parquet", on_time, now)
+    batch = str(tmp_path / "batch")
+    run_pipeline(spark, batch, input_table=on_path)
+    out = backfill_pipeline(spark, batch, cap)
+    assert out["affected_convs"] == 1
+    assert os.path.isdir(os.path.join(batch, "ingest"))
