@@ -35,8 +35,14 @@ from pneuma_treatment_spark.operators.rollup import (
     with_turn_metrics,
 )
 from pneuma_treatment_spark.operators.treatment import TreatmentConfig
-from pneuma_treatment_spark.plans.lineage import PipelineRunner
+from pneuma_treatment_spark.plans.backfill import update_lineage
+from pneuma_treatment_spark.plans.lineage import (
+    PipelineRunner,
+    partition_counts,
+    read_stage,
+)
 from pneuma_treatment_spark.plans.stages import (
+    LAYOUTS,
     build_chunks,
     build_filled,
     build_treated,
@@ -122,7 +128,10 @@ def run_pipeline(
 
     def stage(name, build, **kw):
         order.append(name)
-        df = runner.run_stage(name, build, **kw)
+        ts_col, partition_cols = LAYOUTS[name]
+        df = runner.run_stage(
+            name, build, ts_col=ts_col, partition_cols=partition_cols, **kw
+        )
         if stop_after == name:
             raise _StopPipeline(name)
         return df
@@ -163,22 +172,17 @@ def run_pipeline(
                 # the single-Exchange plan)
                 lambda io: rollup_raw_clustered(ingest, "1m", n_buckets=n_buckets),
                 deps=["ingest"],
-                ts_col="bucket_ts",
                 pre_clustered=True,
             )
             h1 = stage(
                 "rollup_1h",
                 lambda io: rollup_from_tier(m1, "1m", "1h"),
                 deps=["rollup_1m"],
-                ts_col="bucket_ts",
-                bucketed=False,  # coarse tier: day-only partitioning
             )
             d1 = stage(
                 "rollup_1d",
                 lambda io: rollup_from_tier(h1, "1h", "1d"),
                 deps=["rollup_1h"],
-                ts_col="bucket_ts",
-                bucketed=False,
             )
             # Runs INSIDE this branch: chunks depends only on the tiers, so
             # it must not wait for the treatment branch.
@@ -186,10 +190,6 @@ def run_pipeline(
                 "chunks",
                 lambda io: build_chunks(m1, h1, d1, windows),
                 deps=["rollup_1m", "rollup_1h", "rollup_1d"],
-                # (tier, window-start) dirs — the chunk TTL unit;
-                # write_chunks guarantees no chunk crosses a window, so
-                # retention drops whole partitions (chunk_ttl_sql_predicate)
-                partition_cols=["tier", "p_day"],
             )
 
         # The treatment branch (filled → treated) and the rollup cascade
@@ -215,13 +215,15 @@ def run_pipeline(
             for f in [pool.submit(run) for run in branches]:
                 f.result()  # re-raises a branch failure in the caller
         if ttl_now:
-            for tier, days in DEFAULT_TTLS.items():
-                io.delete_where(f"rollup_{tier}", ttl_sql_predicate(days, ttl_now))
-            if io.exists("chunks"):
-                io.delete_where(
-                    "chunks",
-                    chunk_ttl_sql_predicate(DEFAULT_TTLS, ttl_now, window_days=windows),
-                )
+            sweeps = {
+                f"rollup_{tier}": ttl_sql_predicate(days, ttl_now)
+                for tier, days in DEFAULT_TTLS.items()
+            }
+            sweeps["chunks"] = chunk_ttl_sql_predicate(
+                DEFAULT_TTLS, ttl_now, window_days=windows
+            )
+            for table, predicate in sweeps.items():
+                _ttl_sweep(io, table, predicate)
     except _StopPipeline:
         pass
 
@@ -241,6 +243,22 @@ def run_pipeline(
 
 class _StopPipeline(Exception):
     pass
+
+
+def _ttl_sweep(io: TableIO, table: str, predicate: str) -> None:
+    """Delete ``table``'s expired rows and splice its lineage (manifest
+    rows, per-day counts) the way a backfill merge does, so
+    ``verify_partition_lineage`` stays green. A table with nothing expired
+    is not rewritten."""
+    expired = partition_counts(read_stage(io, table).where(predicate)).collect()
+    if not expired:
+        return
+    io.delete_where(table, predicate)
+    update_lineage(io, table, {
+        "removed": sum(r["rows"] for r in expired),
+        "added": 0,
+        "aff_days": {r["p_day"] for r in expired},
+    })
 
 
 def main() -> None:

@@ -5,9 +5,14 @@ The target deployment stores every engine table in Iceberg, partitioned
 This sandbox has no Iceberg runtime jar, so TableIO implements the identical
 layout and write discipline on plain Parquet:
 
-* partition columns ``p_day`` (date) and ``p_bucket`` (xxhash64(conv_id) mod N)
-  are materialized and used with ``write.partitionBy`` — readers get partition
-  pruning on day ranges and bucket-local joins for free;
+* a table's layout is its list of partition columns, declared by the caller
+  (each pipeline table's once, in ``plans/stages.LAYOUTS``) the way Iceberg
+  declares a partition spec in metadata; the derived columns ``p_day``
+  (date) and ``p_bucket`` (xxhash64(conv_id) mod N) are materialized and
+  used with ``write.partitionBy`` — readers get partition pruning on day
+  ranges and bucket-local joins for free. Only the table-agnostic
+  maintenance ops (:meth:`TableIO.delete_where`, :meth:`TableIO.compact`)
+  detect a layout from the directories;
 * writes are idempotent overwrites: a stage write replaces the whole
   table (re-running a stage never leaves rows of the old run behind), and
   a caller that rewrites a subset of partitions on purpose asks for a
@@ -39,12 +44,17 @@ def _nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def bucket_col(n_buckets: int, key_col: str = "conv_id") -> Column:
-    """The ``p_bucket`` value of a row: ``xxhash64(key) mod n_buckets``.
-    Every writer of a bucketed table and the backfill's bucket pruning
+#: the day x conversation-bucket layout — Iceberg's
+#: ``PARTITIONED BY (days(ts), bucket(conv_id))``
+DAY_BUCKET = ("p_day", "p_bucket")
+
+
+def bucket_col(n_buckets: int) -> Column:
+    """The ``p_bucket`` value of a row: ``xxhash64(conv_id) mod n_buckets``.
+    Every writer of a day x bucket table and the backfill's bucket pruning
     compute it here — a second spelling that drifted would prune the wrong
     ``p_bucket`` dirs and silently duplicate rows."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
 
 def read_schema(schema: T.StructType, partition_cols: list[str]) -> T.StructType:
@@ -78,99 +88,84 @@ class TableIO:
         return f"{self.root}/{table}"
 
     def with_partition_cols(
-        self, df: DataFrame, ts_col: str = "ts", key_col: str = "conv_id"
+        self, df: DataFrame, ts_col: str = "ts", partition_cols=DAY_BUCKET
     ) -> DataFrame:
-        return df.withColumn("p_day", F.to_date(F.col(ts_col))).withColumn(
-            "p_bucket", bucket_col(self.n_buckets, key_col)
-        )
+        """``df`` plus the derived partition columns that ``partition_cols``
+        lists and ``df`` lacks: ``p_day`` is the date of ``ts_col``,
+        ``p_bucket`` is :func:`bucket_col`. Any other partition column (the
+        chunk table's ``tier``) the caller materializes."""
+        if "p_day" in partition_cols and "p_day" not in df.columns:
+            df = df.withColumn("p_day", F.to_date(F.col(ts_col)))
+        if "p_bucket" in partition_cols and "p_bucket" not in df.columns:
+            df = df.withColumn("p_bucket", bucket_col(self.n_buckets))
+        return df
 
     def write(
         self,
         df: DataFrame,
         table: str,
-        partitioned: bool = True,
         ts_col: str = "ts",
-        key_col: str = "conv_id",
-        bucketed: bool = True,
-        partition_cols: list[str] | None = None,
+        partition_cols=DAY_BUCKET,
         pre_clustered: bool = False,
         dynamic: bool = False,
     ) -> T.StructType:
-        """Write ``df`` and return the schema the table reads back with
-        (pass it to :meth:`read`). The write replaces the whole table.
-        ``dynamic=True`` replaces only the partitions present in ``df`` and
-        keeps every other one: for a caller that rewrites a chosen subset
-        (the backfill merge), never for a stage rebuild, whose stale
-        partitions would survive next to the new rows. The mode rides the
-        writer, not the session conf, so concurrent writes cannot race on
-        it. ``bucketed=False`` partitions by day only — right for coarse
-        rollup tiers whose row counts are 1/3600+ of raw (day x bucket dirs
-        would be mostly tiny files). ``partition_cols`` overrides the
-        default day/bucket layout with columns the caller already
-        materialized (e.g. the chunk table's (tier, p_day) — its TTL
-        unit). ``pre_clustered=True`` promises the frame is ALREADY
+        """Write ``df`` partitioned by ``partition_cols`` (the table's
+        declared layout, ``plans/stages.LAYOUTS`` for the pipeline tables)
+        and return the schema the table reads back with (pass it to
+        :meth:`read`). A listed ``p_day``/``p_bucket`` that ``df`` lacks is
+        derived (:meth:`with_partition_cols`). The write replaces the whole
+        table. ``dynamic=True`` replaces only the partitions present in
+        ``df`` and keeps every other one: for a caller that rewrites a
+        chosen subset (the backfill merge), never for a stage rebuild,
+        whose stale partitions would survive next to the new rows. The mode
+        rides the writer, not the session conf, so concurrent writes cannot
+        race on it. ``pre_clustered=True`` promises the frame is ALREADY
         hash-clustered by its partition columns (e.g.
         ``rollup_raw_clustered``, whose aggregation exchange doubles as the
         write clustering) — the writer then adds no exchange of its own."""
-        w = df
-        cols: list[str] = []
-        if partitioned:
-            if partition_cols is not None:
-                cols = list(partition_cols)
-            else:
-                if "p_day" not in df.columns:
-                    w = self.with_partition_cols(df, ts_col, key_col)
-                cols = ["p_day", "p_bucket"] if bucketed else ["p_day"]
-                if not bucketed:
-                    w = w.drop("p_bucket")
-            # Cluster rows by their target partition before the write: without
-            # this every task appends a file to every partition dir —
-            # tasks x dirs tiny files, which then dominates downstream scan
-            # time. REBALANCE (vs plain repartition) keeps the clustering
-            # but lets AQE right-size the writer tasks, and a skewed hot
-            # day SPLITS across tasks instead of pinning one writer. (Same
-            # move as Iceberg's write.distribution-mode=hash.) The hint
-            # only RESOLVES under AQE — with AQE off Spark drops it with a
-            # log line and the tiny-file blowup returns, so fall back to
-            # the unconditional repartition there.
-            #
-            # EXCEPT the day-only coarse-tier path (bucketed=False): those
-            # tables are small by construction (an aggregation grain of
-            # <=24 resp. <=1 rows/conv/day), so their write cost is
-            # file-open/commit-bound, not byte-bound — AQE's byte-sized
-            # rebalance coalesces the writer to ONE task that opens every
-            # p_day file serially (the same bytes-vs-fixed-cost mismatch
-            # seriesmap.map_sorted_series fixes for Python kernels). A keyed
-            # repartition to the session's shuffle partitions is
-            # AQE-exempt, keeps exactly one file per day dir, and measured
-            # 1.6->1.1 s per tier write at bench size with identical file
-            # counts and downstream scan cost. The width scales with the
-            # session conf, not the box; a deployment whose coarse-tier
-            # day outgrows a single writer task should flip that tier to
-            # the bucketed layout (the existing n_buckets scale knob)
-            # rather than retune the writer.
-            aqe = (
-                self.spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
-                == "true"
-            )
-            if pre_clustered:
-                pass  # caller's exchange already clusters by `cols`
-            elif partition_cols is None and not bucketed:
-                try:
-                    nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-                except (TypeError, ValueError):
-                    nparts = self.spark.sparkContext.defaultParallelism
-                w = w.repartition(nparts, *cols)
-            else:
-                w = w.hint("rebalance", *cols) if aqe else w.repartition(*cols)
-            (
-                w.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
-                .partitionBy(*cols)
-                .parquet(self.path(table))
-            )
+        cols = list(partition_cols)
+        w = self.with_partition_cols(df, ts_col, cols)
+        # Cluster rows by their target partition before the write: without
+        # this every task appends a file to every partition dir —
+        # tasks x dirs tiny files, which then dominates downstream scan
+        # time. REBALANCE (vs plain repartition) keeps the clustering
+        # but lets AQE right-size the writer tasks, and a skewed hot
+        # day SPLITS across tasks instead of pinning one writer. (Same
+        # move as Iceberg's write.distribution-mode=hash.) The hint
+        # only RESOLVES under AQE — with AQE off Spark drops it with a
+        # log line and the tiny-file blowup returns, so fall back to
+        # the unconditional repartition there.
+        #
+        # EXCEPT the day-only layout (the coarse rollup tiers): those
+        # tables are small by construction (an aggregation grain of
+        # <=24 resp. <=1 rows/conv/day), so their write cost is
+        # file-open/commit-bound, not byte-bound — AQE's byte-sized
+        # rebalance coalesces the writer to ONE task that opens every
+        # p_day file serially (the same bytes-vs-fixed-cost mismatch
+        # seriesmap.map_sorted_series fixes for Python kernels). A keyed
+        # repartition to the session's shuffle partitions is
+        # AQE-exempt, keeps exactly one file per day dir, and measured
+        # 1.6->1.1 s per tier write at bench size with identical file
+        # counts and downstream scan cost. The width scales with the
+        # session conf, not the box; a deployment whose coarse-tier
+        # day outgrows a single writer task should declare that tier
+        # day x bucket (the existing n_buckets scale knob) rather than
+        # retune the writer.
+        if pre_clustered:
+            pass  # caller's exchange already clusters by `cols`
+        elif cols == ["p_day"]:
+            nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            w = w.repartition(nparts, *cols)
+        elif self.spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true":
+            w = w.hint("rebalance", *cols)
         else:
-            w.write.mode("overwrite").parquet(self.path(table))
+            w = w.repartition(*cols)
+        (
+            w.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+            .partitionBy(*cols)
+            .parquet(self.path(table))
+        )
         return read_schema(w.schema, cols)
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
@@ -181,19 +176,13 @@ class TableIO:
         return reader.parquet(self.path(table))
 
     def _guard_rewrite(self, table: str, op: str) -> None:
-        """Refuse in-place rewrites of layouts they would corrupt — shared
-        by :meth:`delete_where` and :meth:`compact`:
-
-        * a Structured Streaming sink dir: its ``_spark_metadata``
-          transaction log pins exact file names, so a rewrite silently
-          vanishes history from streaming-aware readers (stop the stream
-          and convert the sink to a managed table first);
-        * a Hive-bucketed catalog table: the rewrite would drop the
-          bucket-id file naming the catalog metadata promises, breaking
-          every subsequent exchange-free ``read_table`` join.
-
-        Checks go through the Hadoop FS API (any scheme, not just local
-        paths — same reason as :meth:`exists`)."""
+        """Refuse an in-place rewrite of a Structured Streaming sink dir —
+        shared by :meth:`delete_where` and :meth:`compact`: its
+        ``_spark_metadata`` transaction log pins exact file names, so a
+        rewrite silently vanishes history from streaming-aware readers
+        (stop the stream and convert the sink to a managed table first).
+        The check goes through the Hadoop FS API (any scheme, not just
+        local paths — same reason as :meth:`exists`)."""
         jvm = self.spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(f"{self.path(table)}/_spark_metadata")
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
@@ -202,11 +191,6 @@ class TableIO:
                 f"{table}: refusing to {op} a streaming-sink dir — "
                 "_spark_metadata pins exact file names; rewriting would drop "
                 "history from streaming-aware readers"
-            )
-        if self.spark.catalog.tableExists(self._catalog_name(table)):
-            raise ValueError(
-                f"{table}: refusing to {op} a Hive-bucketed catalog table "
-                "— rewrite with write_bucketed() to keep bucket metadata"
             )
 
     def _rewrite_swap(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
@@ -249,9 +233,12 @@ class TableIO:
         return False
 
     def _partition_dirs(self, table: str) -> list[str]:
-        """Partition columns ACTUALLY present as directories (a table may
-        carry p_day/p_bucket as plain data columns without being
-        directory-partitioned — layout must be detected from the layout)."""
+        """Partition columns ACTUALLY present as directories, for the
+        maintenance ops that serve any table dir (:meth:`delete_where`,
+        :meth:`compact`); a table may carry p_day/p_bucket as plain data
+        columns without being directory-partitioned. The pipeline's own
+        writers and merges never detect a layout: they read the declared
+        one (``plans/stages.LAYOUTS``)."""
         jvm = self.spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(self.path(table))
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
@@ -289,7 +276,7 @@ class TableIO:
         """Partition-level TTL delete (Iceberg ``DELETE WHERE`` analog):
         rewrite the table keeping rows NOT matching the predicate. On real
         Iceberg with a partition-aligned predicate this is metadata-only.
-        Shares :meth:`compact`'s layout guards and directory-detected
+        Shares :meth:`compact`'s streaming-sink guard and directory-detected
         partitioning (a flat table stays flat even if it carries
         p_day/p_bucket as data columns)."""
         self._guard_rewrite(table, "TTL-rewrite")
@@ -342,12 +329,10 @@ class TableIO:
         presence — an unpartitioned table stays unpartitioned) so each dir
         collapses back to few AQE-right-sized files.
 
-        Refuses two layouts it would corrupt: a Structured Streaming sink
-        dir (its ``_spark_metadata`` transaction log lists exact files —
-        rewriting them would silently vanish history from streaming-aware
-        readers; stop the stream and convert the sink to a managed table
-        first) and a Hive-bucketed catalog table (the rewrite would drop
-        the bucket-id file naming the catalog metadata promises).
+        Refuses a Structured Streaming sink dir (its ``_spark_metadata``
+        transaction log lists exact files — rewriting them would silently
+        vanish history from streaming-aware readers; stop the stream and
+        convert the sink to a managed table first).
 
         ``advisory_bytes`` temporarily raises the session's AQE advisory
         partition size for the rewrite (compaction wants FEWER, larger
@@ -379,42 +364,3 @@ class TableIO:
                     self.spark.conf.set(conf_key, old)
                 else:
                     self.spark.conf.unset(conf_key)
-
-    # ------------------------------------------------------------------
-    # Hive-style bucketed tables: exchange-free co-located joins
-    # ------------------------------------------------------------------
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        key_col: str = "conv_id",
-        sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    ) -> None:
-        """Persist as a bucketed+sorted catalog table (Iceberg's
-        ``bucket(N, key)`` transform ≙ Hive bucketing here): two tables
-        bucketed the same way join/aggregate on ``key_col`` with NO exchange
-        — the join that co-locates the fact tables of a 100 TB deployment.
-        The directory-partition layout of :meth:`write` prunes scans; THIS
-        layout kills shuffles. (Plain ``save()`` cannot carry bucket
-        metadata — bucketing lives in the catalog, hence ``saveAsTable``;
-        the catalog name is namespaced by this TableIO's root so two
-        instances sharing a session cannot clobber each other.)"""
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(self.n_buckets, key_col)
-            .sortBy(*sort_cols)
-            .option("path", self.path(table))
-            .saveAsTable(self._catalog_name(table))
-        )
-
-    def _catalog_name(self, table: str) -> str:
-        import hashlib
-
-        suffix = hashlib.md5(self.root.encode()).hexdigest()[:8]
-        return f"{table}__{suffix}"
-
-    def read_table(self, table: str) -> DataFrame:
-        """Read a bucketed catalog table (bucket metadata intact)."""
-        return self.spark.table(self._catalog_name(table))

@@ -123,11 +123,7 @@ def rollup_raw_clustered(
     """
     secs = TIERS[tier]
     b = bucket_ts(F.col("ts"), tier)
-    sess = df.sparkSession
-    try:
-        nparts = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        nparts = sess.sparkContext.defaultParallelism
+    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     pre = (
         df.withColumn("p_day", F.to_date(b))
         .withColumn("p_bucket", bucket_col(n_buckets))

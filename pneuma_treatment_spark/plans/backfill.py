@@ -54,7 +54,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.io.tableio import TableIO, bucket_col
+from pneuma_treatment_spark.io.tableio import DAY_BUCKET, TableIO, bucket_col
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw,
@@ -68,6 +68,7 @@ from pneuma_treatment_spark.plans.lineage import (
     write_partition_counts,
 )
 from pneuma_treatment_spark.plans.stages import (
+    LAYOUTS,
     build_chunks,
     build_filled,
     build_treated,
@@ -120,10 +121,13 @@ def merge_conv_scoped(
     affected: DataFrame,
     *,
     ts_col: str = "ts",
-    key: str = "conv_id",
+    partition_cols=DAY_BUCKET,
 ) -> dict:
     """Replace ``affected`` conversations' rows in ``table`` with
     ``new_rows``, rewriting only the partitions either side touches.
+    ``ts_col``/``partition_cols`` are the table's declared layout
+    (``stages.LAYOUTS``; it must carry ``p_day``), never read off the
+    directories: an emptied table has none left to read it from.
 
     The Iceberg ``MERGE INTO`` (copy-on-write) analog: keep-side rows of
     the affected partitions are rewritten next to the recomputed rows via
@@ -133,37 +137,16 @@ def merge_conv_scoped(
     not written, not touched.
     """
     spark = io.spark
-    pcols = io._partition_dirs(table)
+    pcols = list(partition_cols)
     old = read_stage(io, table)
-
-    nr = new_rows
-    if "p_day" in pcols and "p_day" not in nr.columns:
-        nr = nr.withColumn("p_day", F.to_date(F.col(ts_col)))
-    if "p_bucket" in pcols and "p_bucket" not in nr.columns:
-        nr = nr.withColumn("p_bucket", bucket_col(io.n_buckets, key))
-    nr = nr.persist()
-
-    if not pcols:
-        # layout without partition dirs: no partition-scoped path exists —
-        # fall back to a full anti-join rewrite (still conv-exact)
-        keep = old.join(affected, key, "left_anti")
-        out = keep.unionByName(nr.select(*old.columns))
-        removed = old.count() - keep.count()
-        added = nr.count()
-        io._guard_rewrite(table, "backfill-rewrite")
-        io._rewrite_swap(out, table, [])
-        nr.unpersist()
-        return {
-            "removed": removed, "added": added, "parts_rewritten": None,
-            "stale_dropped": 0, "aff_days": set(), "full_rewrite": True,
-        }
+    nr = io.with_partition_cols(new_rows, ts_col, pcols).persist()
 
     pruned = old
     if "p_bucket" in pcols:
         pruned = old.where(
             F.col("p_bucket").isin(_affected_buckets(affected, io.n_buckets))
         )
-    old_aff = pruned.join(affected, key, "left_semi")
+    old_aff = pruned.join(affected, "conv_id", "left_semi")
 
     # affected partitions = partitions of the affected convs' OLD rows
     # (they must lose those rows even where the conv no longer has any)
@@ -182,7 +165,7 @@ def merge_conv_scoped(
     )
 
     keep = _parts_filter(pruned, pcols, aff_parts, spark).join(
-        affected, key, "left_anti"
+        affected, "conv_id", "left_anti"
     )
     out = keep.unionByName(nr.select(*old.columns))
     # Partitions that lose their last row never appear in the written frame,
@@ -197,21 +180,22 @@ def merge_conv_scoped(
         io.drop_partitions(table, stale, pcols)
 
     nr.unpersist()
-    day_i = pcols.index("p_day") if "p_day" in pcols else None
+    day_i = pcols.index("p_day")
     return {
         "removed": removed,
         "added": added,
         "parts_rewritten": len(aff_parts),
         "stale_dropped": len(stale),
-        "aff_days": {p[day_i] for p in aff_parts} if day_i is not None else set(),
-        "full_rewrite": False,
+        "aff_days": {p[day_i] for p in aff_parts},
     }
 
 
-def _update_lineage(io: TableIO, name: str, stats: dict) -> None:
-    """Keep the stage's lineage contract green after a backfill: splice
-    recounted affected days into the per-partition counts table and adjust
-    the manifest total (``verify_partition_lineage`` recounts
+def update_lineage(io: TableIO, name: str, stats: dict) -> None:
+    """Keep a stage's lineage contract green after a rewrite of some of
+    its days — a backfill merge, or the TTL sweep in
+    ``jobs/rollup_job.run_pipeline``: splice the recounted ``aff_days``
+    into the per-partition counts table and adjust the manifest total by
+    ``removed``/``added`` (``verify_partition_lineage`` recounts
     distributed and cross-checks both)."""
     mpath = Path(io.root) / "_manifest" / f"{name}.json"
     if not mpath.exists():
@@ -371,7 +355,12 @@ def backfill_pipeline(
     # rows; a null key would vanish from the joins
     if check_transcripts(delta, "backfill delta") == 0:
         return {"tables": {}, "affected_convs": 0}
-    affected = delta.select("conv_id").distinct().persist()
+    # The affected set and raw rows are detached from their sources
+    # (local checkpoints, not caches): a write re-caches every cached plan
+    # that reads its path, so a plan over ``ingest`` — the raw rows
+    # always, the delta when it is queried from a pipeline table — would
+    # be re-read once the ingest merge has rewritten those files.
+    affected = delta.select("conv_id").distinct().localCheckpoint()
 
     # --- new raw rows for the affected conversations (upsert) -------------
     old_ing = read_stage(io, "ingest")
@@ -383,9 +372,8 @@ def backfill_pipeline(
         .join(affected, "conv_id", "left_semi")
         .join(delta.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_anti")
         .unionByName(delta)
-        .persist()
+        .localCheckpoint()
     )
-    raw_aff.count()  # materialize BEFORE any table rewrite invalidates scans
 
     # --- recompute every stage for the affected conversations only --------
     # (the pipeline's own stage builds, plans/stages.py; the 1m tier takes
@@ -411,22 +399,9 @@ def backfill_pipeline(
     tables = _merge_tables(io, affected, new_rows.__getitem__)
 
     n_aff = affected.count()
-    for p in (raw_aff, filled_new, m1, h1, d1, affected):
+    for p in (filled_new, m1, h1, d1):
         p.unpersist()
     return {"tables": tables, "affected_convs": n_aff}
-
-
-#: per-table merge timestamp columns — the order backfill/delete walk the
-#: pipeline tables in (chunks uses start_ts: its p_day is the window START)
-_TABLE_TS = (
-    ("ingest", "ts"),
-    ("filled", "ts"),
-    ("treated", "ts"),
-    ("rollup_1m", "bucket_ts"),
-    ("rollup_1h", "bucket_ts"),
-    ("rollup_1d", "bucket_ts"),
-    ("chunks", "start_ts"),
-)
 
 
 def _merge_tables(
@@ -446,12 +421,15 @@ def _merge_tables(
     driver-sync gaps overlap other tables' work)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    jobs = [(name, ts_col) for name, ts_col in _TABLE_TS if io.exists(name)]
+    jobs = [name for name in LAYOUTS if io.exists(name)]
 
-    def _one(job):
-        name, ts_col = job
-        stats = merge_conv_scoped(io, name, new_rows(name), affected, ts_col=ts_col)
-        _update_lineage(io, name, stats)
+    def _one(name):
+        ts_col, partition_cols = LAYOUTS[name]
+        stats = merge_conv_scoped(
+            io, name, new_rows(name), affected,
+            ts_col=ts_col, partition_cols=partition_cols,
+        )
+        update_lineage(io, name, stats)
         return name, {
             k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
         }
@@ -539,18 +517,17 @@ def delete_conversations(
         raise ValueError("delete_conversations needs a conv_id column")
     n_buckets = _adopt_recorded_buckets(_manifest_config(workdir, "filled"), n_buckets)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
-    affected = convs.select("conv_id").distinct().persist()
+    # detached from its source, as in backfill_pipeline: a delete set
+    # queried from a pipeline table would be re-read after its merge
+    affected = convs.select("conv_id").distinct().localCheckpoint()
     if affected.where(F.col("conv_id").isNull()).limit(1).count():
-        affected.unpersist()
         raise ValueError("delete set contains null conv_id")
     n_aff = affected.count()
     if n_aff == 0:
-        affected.unpersist()
         return {"tables": {}, "affected_convs": 0}
 
     tables = _merge_tables(io, affected, lambda name: read_stage(io, name).limit(0))
     scrubbed = {d: scrub_deadletter(spark, d, affected) for d in deadletter_dirs}
-    affected.unpersist()
     out = {"tables": tables, "affected_convs": n_aff}
     if scrubbed:
         out["deadletter"] = scrubbed

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from pneuma_treatment_spark.io.tableio import TableIO
+from pneuma_treatment_spark.io.tableio import DAY_BUCKET, TableIO
 
 
 @dataclass
@@ -61,11 +61,12 @@ class PipelineRunner:
         self.results: dict[str, StageResult] = {}
 
     # -- signatures ---------------------------------------------------------
-    def _signature(self, name: str, deps: list[str], extra: dict | None) -> str:
+    def _signature(self, name: str, deps: list[str]) -> str:
         payload = {
             "stage": name,
             "config": self.config,
-            "extra": extra or {},
+            # no longer settable; kept so workdirs of earlier builds resume
+            "extra": {},
             "deps": {d: self._sigs[d] for d in deps},
         }
         return hashlib.sha256(json.dumps(payload, sort_keys=True, default=str).encode()).hexdigest()[:16]
@@ -82,22 +83,21 @@ class PipelineRunner:
         name: str,
         build,
         deps: list[str] | None = None,
-        extra_sig: dict | None = None,
-        partitioned: bool = True,
         ts_col: str = "ts",
-        key_col: str = "conv_id",
-        bucketed: bool = True,
-        partition_cols: list[str] | None = None,
+        partition_cols=DAY_BUCKET,
         pre_clustered: bool = False,
     ) -> DataFrame:
-        """Run ``build(io) -> DataFrame`` or skip if already complete.
+        """Run ``build(io) -> DataFrame`` or skip if already complete. The
+        table is written in the layout ``ts_col``/``partition_cols`` (see
+        :meth:`TableIO.write`; the pipeline passes its declared
+        ``stages.LAYOUTS`` entry).
 
         Returns the stage output read back from its table (so downstream
         stages never re-execute upstream lineage — each stage boundary is a
         scan, exactly like the reference's CSV boundaries but partitioned).
         """
         deps = deps or []
-        sig = self._signature(name, deps, extra_sig)
+        sig = self._signature(name, deps)
         self._sigs[name] = sig
         mpath = self._manifest_path(name)
 
@@ -116,14 +116,16 @@ class PipelineRunner:
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         schema = self.io.write(
-            df, name, partitioned=partitioned, ts_col=ts_col, key_col=key_col,
-            bucketed=bucketed, partition_cols=partition_cols,
+            df, name, ts_col=ts_col, partition_cols=partition_cols,
             pre_clustered=pre_clustered,
         )
-        rows = int(obs.get["rows"])
         out = self.io.read(name, schema=schema)
+        # A frame with no partitions (an empty parquet scan) runs no task,
+        # so the observation never fires and holds no row: count the
+        # written table instead — one job, and only in that case.
+        rows = int(obs.get["rows"]) if obs._jo.getRow().length() else out.count()
         n_parts = 0
-        if self.stats == "full" and partitioned and "p_day" in out.columns:
+        if self.stats == "full" and "p_day" in out.columns:
             # Per-partition lineage counts are a TABLE, not driver state: at
             # 10^12 turns x years of days a per-stage python dict of counts
             # is a driver-side list per write. The counts DataFrame writes
@@ -160,9 +162,6 @@ class PipelineRunner:
         os.replace(tmp_m, mpath)
         self.results[name] = StageResult(name, sig, rows, False, wall, n_parts)
         return out
-
-    def total_rows(self, name: str) -> int:
-        return self.results[name].rows
 
 
 def manifest_schema(m: dict) -> StructType | None:

@@ -5,6 +5,8 @@ Each function maps its upstream frames to one pipeline table's rows. The
 pipeline feeds them the stage tables it read back; the backfill feeds them
 the affected conversations' recomputed frames. One definition keeps a
 backfilled table bit-equal to a rebuild (``tests/test_backfill.py``).
+Each table's layout is declared here once too (:data:`LAYOUTS`): the stage
+write and the backfill merge both read it.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pneuma_treatment_spark.compression.chunks import DEFAULT_METRICS, write_chunks
+from pneuma_treatment_spark.io.tableio import DAY_BUCKET
 from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.treatment import (
     TreatmentConfig,
@@ -20,6 +23,23 @@ from pneuma_treatment_spark.operators.treatment import (
     raw_anomaly_col,
     treat_transcripts,
 )
+
+#: every pipeline table in stage order -> (ts column, partition columns),
+#: Iceberg's partition spec: ``p_day`` is the date of the ts column,
+#: ``p_bucket`` the conversation bucket. The coarse tiers are day-only:
+#: <=24 resp. <=1 rows per conversation-day would make day x bucket dirs
+#: mostly tiny files. A chunk's ``p_day`` is its window's start; no chunk
+#: crosses a window, so retention drops whole (tier, p_day) dirs
+#: (``chunk_ttl_sql_predicate``).
+LAYOUTS = {
+    "ingest": ("ts", DAY_BUCKET),
+    "filled": ("ts", DAY_BUCKET),
+    "treated": ("ts", DAY_BUCKET),
+    "rollup_1m": ("bucket_ts", DAY_BUCKET),
+    "rollup_1h": ("bucket_ts", ("p_day",)),
+    "rollup_1d": ("bucket_ts", ("p_day",)),
+    "chunks": ("start_ts", ("tier", "p_day")),
+}
 
 
 def _null_key() -> Column:

@@ -102,11 +102,7 @@ def map_sorted_series(
     """``df`` hash-repartitioned on ``key`` to the session's shuffle
     partitions, sorted by ``key + order`` within each partition, then
     ``mapInArrow(fn, schema)`` — see the module docstring."""
-    sess = df.sparkSession
-    try:
-        n = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = sess.sparkContext.defaultParallelism
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         df.repartition(n, F.xxhash64(*key))
         .sortWithinPartitions(*key, *order)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from jobs.rollup_job import run_pipeline
 from pneuma_treatment_spark.io.tableio import TableIO
 from pneuma_treatment_spark.plans.backfill import backfill_pipeline, merge_conv_scoped
-from pneuma_treatment_spark.plans.lineage import verify_partition_lineage
+from pneuma_treatment_spark.plans.lineage import read_stage, verify_partition_lineage
 from pneuma_treatment_spark.synth import generate_transcripts
 
 ARGS = dict(n_convs=30, seed=11, mega_turns=800)
@@ -445,3 +445,72 @@ def test_backfill_adopts_recorded_chunk_windows(spark, tmp_path):
     )
     shutil.rmtree(wd_a, ignore_errors=True)
     shutil.rmtree(wd_b, ignore_errors=True)
+
+
+def _assert_same_rows(a, b, what):
+    a = a.select(*b.columns)
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, what
+
+
+def test_delete_all_then_backfill_equals_fresh_run(spark, tmp_path):
+    """Erasing every conversation leaves seven empty tables, with no
+    partition directory left to read a layout from. A backfill into them
+    lays its rows out by the declared stage layouts and equals a fresh run
+    over the delta, lineage green."""
+    from pneuma_treatment_spark.plans.backfill import delete_conversations
+
+    base_path, delta_path = str(tmp_path / "raw"), str(tmp_path / "delta")
+    generate_transcripts(spark, 4, seed=17).write.parquet(base_path)
+    generate_transcripts(spark, 3, seed=19).write.parquet(delta_path)
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, n_convs=4, seed=17, input_table=base_path)
+    delete_conversations(spark, wd_a, spark.read.parquet(base_path))
+    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
+    for t in TABLES:
+        assert read_stage(io_a, t).count() == 0, t
+        assert verify_partition_lineage(io_a, t), t
+
+    backfill_pipeline(spark, wd_a, spark.read.parquet(delta_path))
+    run_pipeline(spark, wd_b, n_convs=3, seed=19, input_table=delta_path)
+    for t in TABLES:
+        _assert_same_rows(read_stage(io_a, t), read_stage(io_b, t), t)
+        assert verify_partition_lineage(io_a, t), t
+
+
+def test_delete_set_and_delta_read_from_ingest(spark, tmp_path):
+    """An erasure whose delete set is a query over ``ingest`` must not read
+    ``ingest`` again once the first merge has rewritten its files: every
+    victim row leaves all seven tables. The same holds for a correction
+    delta read from ``ingest``: the tables equal a fresh run over the
+    corrected input."""
+    from pneuma_treatment_spark.plans.backfill import delete_conversations
+
+    base_path, fixed_path = str(tmp_path / "raw"), str(tmp_path / "fixed")
+    generate_transcripts(spark, 6, seed=23).write.parquet(base_path)
+    base = spark.read.parquet(base_path)
+    victims = [r["conv_id"] for r in base.select("conv_id").distinct().orderBy("conv_id").limit(2).collect()]
+    fix_conv = [r["conv_id"] for r in base.select("conv_id").distinct().orderBy(F.desc("conv_id")).limit(1).collect()]
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, n_convs=6, seed=23, input_table=base_path)
+    io_a = TableIO(spark, wd_a)
+
+    delete_conversations(
+        spark, wd_a, read_stage(io_a, "ingest").where(F.col("conv_id").isin(victims)).select("conv_id")
+    )
+    for t in TABLES:
+        assert read_stage(io_a, t).where(F.col("conv_id").isin(victims)).count() == 0, t
+        assert verify_partition_lineage(io_a, t), t
+
+    fix = F.col("conv_id").isin(fix_conv) & (F.col("turn_idx") == 1)
+    corrected = F.when(fix, F.lit("a corrected turn of five tokens")).otherwise(F.col("text"))
+    base.where(~F.col("conv_id").isin(victims)).withColumn("text", corrected).write.parquet(fixed_path)
+    backfill_pipeline(
+        spark, wd_a,
+        read_stage(io_a, "ingest").where(fix).withColumn("text", corrected)
+        .select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+    )
+    run_pipeline(spark, wd_b, n_convs=6, seed=23, input_table=fixed_path)
+    io_b = TableIO(spark, wd_b)
+    for t in TABLES:
+        _assert_same_rows(read_stage(io_a, t), read_stage(io_b, t), t)
+        assert verify_partition_lineage(io_a, t), t

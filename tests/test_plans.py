@@ -123,40 +123,6 @@ def test_cascade_avoids_extra_shuffle(spark):
     assert final.count("FileScan parquet") == 1  # raw scanned once
 
 
-def test_bucketed_tables_join_without_exchange(spark, transcripts_df, tmp_path):
-    """Two tables bucketed on conv_id must sort-merge join with ZERO
-    exchanges — the co-located-join layout for a 100 TB deployment."""
-    from pneuma_treatment_spark.operators.rollup import with_turn_metrics
-
-    io = TableIO(spark, str(tmp_path / "bt"), n_buckets=4)
-    m = with_turn_metrics(transcripts_df)
-    io.write_bucketed(m.select("conv_id", "turn_idx", "token_count"), "bt_a")
-    io.write_bucketed(
-        m.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_turns")),
-        "bt_b",
-        sort_cols=("conv_id",),
-    )
-    # disable broadcast so the planner must pick the shuffle-free bucketed
-    # SMJ (at 100 TB neither side broadcasts; this test's tables are tiny).
-    # NB: the join key here IS the bucket key; the session also sets
-    # requireAllClusterKeysForCoPartition=false, which would additionally
-    # let a subset-keyed join reuse this layout (see session.py).
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = io.read_table("bt_a").join(io.read_table("bt_b"), ["conv_id"])
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
-        assert "Exchange" not in final
-        assert "SortMergeJoin" in final
-        assert j.count() == m.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
 def test_chunk_write_single_exchange(spark):
     """write_chunks must add exactly ONE exchange (the conv-keyed shuffle
     feeding the mapInArrow encode) on top of an already-aggregated rollup

@@ -166,10 +166,10 @@ def test_compact_collapses_small_files(spark, tmp_path):
 
 
 def test_compact_guards_and_conf_restore(spark, tmp_path):
-    """compact() must refuse the two layouts it would corrupt (streaming
-    sink dirs and Hive-bucketed catalog tables), must NOT leave its
-    temporary AQE advisory in the session, and must keep an unpartitioned
-    table unpartitioned even when p_day rides as a data column."""
+    """compact() must refuse the layout it would corrupt (a streaming
+    sink dir), must NOT leave its temporary AQE advisory in the session,
+    and must keep an unpartitioned table unpartitioned even when p_day
+    rides as a data column."""
     import os
 
     import pytest
@@ -194,13 +194,6 @@ def test_compact_guards_and_conf_restore(spark, tmp_path):
     with pytest.raises(ValueError, match="streaming-sink"):
         io.delete_where("s", "TRUE")
 
-    # bucketed-catalog refusal — for BOTH in-place rewrite ops
-    io.write_bucketed(e.withColumn("turn_idx", F.lit(0)), "bt")
-    with pytest.raises(ValueError, match="bucketed"):
-        io.compact("bt")
-    with pytest.raises(ValueError, match="bucketed"):
-        io.delete_where("bt", "TRUE")
-
     # advisory restore: set -> restored; unset -> stays unset
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get(key)
@@ -210,7 +203,7 @@ def test_compact_guards_and_conf_restore(spark, tmp_path):
 
     # unpartitioned table carrying p_day as a DATA column stays flat
     flat = io.with_partition_cols(e)
-    io.write(flat, "flat", partitioned=False)
+    flat.write.parquet(io.path("flat"))
     pre_cols = io.read("flat").columns
     io.compact("flat")
     assert io.read("flat").columns == pre_cols
@@ -228,8 +221,10 @@ def test_manifest_write_is_atomic(spark, workdir, monkeypatch):
     from pneuma_treatment_spark.plans.lineage import PipelineRunner
 
     io = TableIO(spark, workdir)
-    build = lambda _io: spark.range(5).selectExpr("id", "'c' AS conv_id")  # noqa: E731
-    PipelineRunner(io, config={"v": 1}).run_stage("t", build, partitioned=False)
+    build = lambda _io: spark.range(5).selectExpr(  # noqa: E731
+        "id", "'c' AS conv_id", "TIMESTAMP'2024-01-01 00:00:00' AS ts"
+    )
+    PipelineRunner(io, config={"v": 1}).run_stage("t", build)
     mpath = Path(workdir) / "_manifest" / "t.json"
     before = mpath.read_text()
 
@@ -241,12 +236,12 @@ def test_manifest_write_is_atomic(spark, workdir, monkeypatch):
 
     monkeypatch.setattr(Path, "write_text", torn_write)
     with pytest.raises(KeyboardInterrupt):
-        PipelineRunner(io, config={"v": 2}).run_stage("t", build, partitioned=False)
+        PipelineRunner(io, config={"v": 2}).run_stage("t", build)
     monkeypatch.undo()
 
     assert mpath.read_text() == before
     assert json.loads(before)["status"] == "COMPLETE"
     runner = PipelineRunner(io, config={"v": 2})
-    runner.run_stage("t", build, partitioned=False)
-    assert not runner.results["t"].skipped and runner.total_rows("t") == 5
+    runner.run_stage("t", build)
+    assert not runner.results["t"].skipped and runner.results["t"].rows == 5
     assert json.loads(mpath.read_text())["signature"] == runner.results["t"].signature
