@@ -94,6 +94,10 @@ class TableIO:
         lists and ``df`` lacks: ``p_day`` is the date of ``ts_col``,
         ``p_bucket`` is :func:`bucket_col`. Any other partition column (the
         chunk table's ``tier``) the caller materializes."""
+        if isinstance(partition_cols, str):
+            raise TypeError(
+                f"partition_cols is a sequence of column names, not {partition_cols!r}"
+            )
         if "p_day" in partition_cols and "p_day" not in df.columns:
             df = df.withColumn("p_day", F.to_date(F.col(ts_col)))
         if "p_bucket" in partition_cols and "p_bucket" not in df.columns:
@@ -123,8 +127,8 @@ class TableIO:
         hash-clustered by its partition columns (e.g.
         ``rollup_raw_clustered``, whose aggregation exchange doubles as the
         write clustering) — the writer then adds no exchange of its own."""
+        w = self.with_partition_cols(df, ts_col, partition_cols)
         cols = list(partition_cols)
-        w = self.with_partition_cols(df, ts_col, cols)
         # Cluster rows by their target partition before the write: without
         # this every task appends a file to every partition dir —
         # tasks x dirs tiny files, which then dominates downstream scan

@@ -137,9 +137,9 @@ def merge_conv_scoped(
     not written, not touched.
     """
     spark = io.spark
+    nr = io.with_partition_cols(new_rows, ts_col, partition_cols).persist()
     pcols = list(partition_cols)
     old = read_stage(io, table)
-    nr = io.with_partition_cols(new_rows, ts_col, pcols).persist()
 
     pruned = old
     if "p_bucket" in pcols:
@@ -359,7 +359,13 @@ def backfill_pipeline(
     # (local checkpoints, not caches): a write re-caches every cached plan
     # that reads its path, so a plan over ``ingest`` — the raw rows
     # always, the delta when it is queried from a pipeline table — would
-    # be re-read once the ingest merge has rewritten those files.
+    # be re-read once the ingest merge has rewritten those files. The
+    # trade-off: checkpoint blocks cannot be recomputed, so an executor
+    # lost mid-merge (or removed by dynamic allocation) fails the backfill,
+    # possibly after earlier tables committed — rerun it with the same
+    # delta, which the merge applies idempotently. Nothing unpersists them;
+    # Spark's ContextCleaner drops the blocks once the frames are
+    # garbage-collected after this call returns.
     affected = delta.select("conv_id").distinct().localCheckpoint()
 
     # --- new raw rows for the affected conversations (upsert) -------------
@@ -517,8 +523,10 @@ def delete_conversations(
         raise ValueError("delete_conversations needs a conv_id column")
     n_buckets = _adopt_recorded_buckets(_manifest_config(workdir, "filled"), n_buckets)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
-    # detached from its source, as in backfill_pipeline: a delete set
-    # queried from a pipeline table would be re-read after its merge
+    # detached from its source, as in backfill_pipeline (and with its
+    # trade-off: a lost checkpoint block fails the erasure; rerun it with
+    # the same conversation ids): a delete set queried from a pipeline table
+    # would be re-read after its merge
     affected = convs.select("conv_id").distinct().localCheckpoint()
     if affected.where(F.col("conv_id").isNull()).limit(1).count():
         raise ValueError("delete set contains null conv_id")

@@ -120,10 +120,9 @@ class PipelineRunner:
             pre_clustered=pre_clustered,
         )
         out = self.io.read(name, schema=schema)
-        # A frame with no partitions (an empty parquet scan) runs no task,
-        # so the observation never fires and holds no row: count the
-        # written table instead — one job, and only in that case.
-        rows = int(obs.get["rows"]) if obs._jo.getRow().length() else out.count()
+        rows = _observed_rows(obs)
+        if rows is None:
+            rows = out.count()  # one job, and only for an empty scan
         n_parts = 0
         if self.stats == "full" and "p_day" in out.columns:
             # Per-partition lineage counts are a TABLE, not driver state: at
@@ -162,6 +161,20 @@ class PipelineRunner:
         os.replace(tmp_m, mpath)
         self.results[name] = StageResult(name, sig, rows, False, wall, n_parts)
         return out
+
+
+def _observed_rows(obs: Observation) -> int | None:
+    """The ``rows`` count ``obs`` observed, or ``None`` when it holds no row.
+
+    A frame with no partitions (an empty parquet scan) runs no task, so its
+    observation never fires; Spark 4.1 then completes it with an EMPTY row
+    rather than blocking, and ``Observation.get`` fails on that row in
+    ``PythonSQLUtils.toPyRow`` (a ``Py4JJavaError``). The row length is read
+    off the JVM observation (``_jo``), so this is classic PySpark only;
+    Spark Connect has no ``_jo``."""
+    if obs._jo.getRow().length() == 0:
+        return None
+    return int(obs.get["rows"])
 
 
 def manifest_schema(m: dict) -> StructType | None:

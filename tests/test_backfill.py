@@ -21,10 +21,11 @@ from jobs.rollup_job import run_pipeline
 from pneuma_treatment_spark.io.tableio import TableIO
 from pneuma_treatment_spark.plans.backfill import backfill_pipeline, merge_conv_scoped
 from pneuma_treatment_spark.plans.lineage import read_stage, verify_partition_lineage
+from pneuma_treatment_spark.plans.stages import LAYOUTS
 from pneuma_treatment_spark.synth import generate_transcripts
 
 ARGS = dict(n_convs=30, seed=11, mega_turns=800)
-TABLES = ("ingest", "filled", "treated", "rollup_1m", "rollup_1h", "rollup_1d", "chunks")
+TABLES = tuple(LAYOUTS)
 SORT_KEYS = {
     "chunks": ["conv_id", "tier", "metric", "start_ts"],
     "rollup_1m": ["conv_id", "tier", "bucket_ts"],

@@ -5,6 +5,7 @@ whole-stage codegen around the hot expressions."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pneuma_treatment_spark import queries as q
@@ -289,7 +290,10 @@ def test_rollup_clustered_single_exchange_and_equality(spark):
     assert flat.exceptAll(cur).count() == 0
     assert cur.exceptAll(flat).count() == 0
     # partition cols must equal what TableIO would derive on the written frame
-    io_cols = TableIO(spark, "/tmp/unused", n_buckets=8).with_partition_cols(
-        cur, "bucket_ts", "conv_id"
-    )
+    io = TableIO(spark, "/tmp/unused", n_buckets=8)
+    io_cols = io.with_partition_cols(cur, "bucket_ts")
+    assert {"p_day", "p_bucket"} <= set(io_cols.columns)
     assert fused.select(*io_cols.columns).exceptAll(io_cols).count() == 0
+    # a bare string is a misplaced argument, not a layout
+    with pytest.raises(TypeError):
+        io.with_partition_cols(cur, "bucket_ts", "p_day")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from jobs.rollup_job import run_pipeline
 from pneuma_treatment_spark.io.tableio import TableIO, read_schema
 from pneuma_treatment_spark.plans.lineage import PipelineRunner, verify_partition_lineage
+from pneuma_treatment_spark.plans.stages import LAYOUTS
 
 ARGS = dict(n_convs=40, seed=11, mega_turns=800)
 
@@ -117,9 +118,6 @@ def test_stage_schemas_equal_inferred(spark, workdir, monkeypatch):
     check({"ingest", "filled", "treated"})
 
 
-STAGES = ("ingest", "filled", "treated", "rollup_1m", "rollup_1h", "rollup_1d", "chunks")
-
-
 def test_empty_input_commits_every_stage(spark, tmp_path):
     """An input with no rows — a table holding one zero-row parquet file, or
     the shard of a sharded run that owns no conversation — scans as a frame
@@ -137,9 +135,9 @@ def test_empty_input_commits_every_stage(spark, tmp_path):
     for what, kw in runs.items():
         wd = str(tmp_path / what)
         summary = run_pipeline(spark, wd, **kw)
-        assert {s: r["rows"] for s, r in summary["stages"].items()} == dict.fromkeys(STAGES, 0), what
+        assert {s: r["rows"] for s, r in summary["stages"].items()} == dict.fromkeys(LAYOUTS, 0), what
         io = TableIO(spark, wd)
-        for s in STAGES:
+        for s in LAYOUTS:
             assert verify_partition_lineage(io, s), (what, s)
 
 
