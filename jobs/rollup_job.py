@@ -38,8 +38,8 @@ from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.backfill import update_lineage
 from pneuma_treatment_spark.plans.lineage import (
     PipelineRunner,
-    partition_counts,
-    read_stage,
+    load_manifest,
+    manifest_schema,
 )
 from pneuma_treatment_spark.plans.stages import (
     LAYOUTS,
@@ -246,18 +246,19 @@ class _StopPipeline(Exception):
 
 
 def _ttl_sweep(io: TableIO, table: str, predicate: str) -> None:
-    """Delete ``table``'s expired rows and splice its lineage (manifest
-    rows, per-day counts) the way a backfill merge does, so
-    ``verify_partition_lineage`` stays green. A table with nothing expired
-    is not rewritten."""
-    expired = partition_counts(read_stage(io, table).where(predicate)).collect()
-    if not expired:
-        return
-    io.delete_where(table, predicate)
+    """Drop ``table``'s expired partitions, record ``predicate`` in its
+    manifest (a later backfill merge drops the recomputed rows it matches)
+    and splice its lineage (manifest rows, per-day counts) the way a
+    backfill merge does, so ``verify_partition_lineage`` stays green."""
+    expired = io.delete_where(
+        table, predicate, LAYOUTS[table][1],
+        manifest_schema(load_manifest(io.root, table)),
+    )
     update_lineage(io, table, {
-        "removed": sum(r["rows"] for r in expired),
+        "removed": sum(r["count"] for r in expired),
         "added": 0,
         "aff_days": {r["p_day"] for r in expired},
+        "ttl": predicate,
     })
 
 
@@ -272,8 +273,8 @@ def main() -> None:
     ap.add_argument("--ttl-now", default=None)
     ap.add_argument(
         "--compact", action="store_true",
-        help="compact the rollup tier tables after the run (small-file "
-        "maintenance; see TableIO.compact)",
+        help="compact the rollup tier and chunk tables after the run "
+        "(small-file maintenance; see TableIO.compact)",
     )
     ap.add_argument(
         "--buckets", type=int, default=None,
@@ -376,20 +377,15 @@ def main() -> None:
             spark, args.workdir,
             n_buckets=args.buckets if args.buckets is not None else 8,
         )
-        for tier in DEFAULT_TTLS:
-            # A tier table may be absent (partial failure, or a future
-            # --stop-after run): skip it with a message instead of letting
-            # io.compact surface a raw path-not-found AnalysisException.
-            if io.exists(f"rollup_{tier}"):
-                io.compact(f"rollup_{tier}")
+        for table in ROLLUP_STAGES:
+            # A table may be absent (partial failure): skip it with a
+            # message instead of letting io.compact surface a raw
+            # path-not-found AnalysisException.
+            if io.exists(table):
+                schema = manifest_schema(load_manifest(io.root, table))
+                io.compact(table, LAYOUTS[table][1], schema)
             else:
-                print(f"compact: rollup_{tier} not built, skipping", file=sys.stderr)
-        # the chunk table accumulates files per write/TTL-rewrite too;
-        # same skip-if-absent contract as the tiers
-        if io.exists("chunks"):
-            io.compact("chunks")
-        else:
-            print("compact: chunks not built, skipping", file=sys.stderr)
+                print(f"compact: {table} not built, skipping", file=sys.stderr)
     summary["total_wall_sec"] = round(time.perf_counter() - t0, 3)
     summary["turns"] = summary["stages"]["ingest"]["rows"]
     summary["turns_per_sec"] = round(summary["turns"] / summary["total_wall_sec"], 1)

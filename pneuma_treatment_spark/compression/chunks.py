@@ -151,15 +151,16 @@ def chunk_ttl_sql_predicate(
     now_date: str,
     window_days: dict[str, int] | None = None,
 ) -> str:
-    """Partition-aligned TTL predicate for a (tier, p_day)-partitioned chunk
+    """Partition-only TTL predicate for a (tier, p_day)-partitioned chunk
     table (TableIO.delete_where / Iceberg DELETE WHERE): a window
     [p_day, p_day + wdays) is dropped only once its LAST covered day is past
     the tier's retention — boundary windows survive until fully expired
     (standard TSDB chunk-retention semantics), so no live point is ever
-    deleted. Both predicate columns are partition columns: the delete's
-    keep-scan prunes dropped partitions entirely, and on real Iceberg the
-    operation is metadata-only. ``window_days`` must match what the table
-    was written with (defaults to TIER_WINDOW_DAYS on both sides)."""
+    deleted. Both predicate columns are partition columns, as
+    ``delete_where`` requires: it drops the matching partition dirs and
+    leaves every other file alone, and on real Iceberg the operation is
+    metadata-only. ``window_days`` must match what the table was written
+    with (defaults to TIER_WINDOW_DAYS on both sides)."""
     windows = window_days if window_days is not None else TIER_WINDOW_DAYS
     parts = [
         f"(tier = '{tier}' AND p_day < date_sub(date'{now_date}', "

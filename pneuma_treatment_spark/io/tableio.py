@@ -10,13 +10,18 @@ layout and write discipline on plain Parquet:
   declares a partition spec in metadata; the derived columns ``p_day``
   (date) and ``p_bucket`` (xxhash64(conv_id) mod N) are materialized and
   used with ``write.partitionBy`` — readers get partition pruning on day
-  ranges and bucket-local joins for free. Only the table-agnostic
-  maintenance ops (:meth:`TableIO.delete_where`, :meth:`TableIO.compact`)
-  detect a layout from the directories;
+  ranges and bucket-local joins for free. Every method that writes, drops
+  or compacts takes the declared layout; none detects one from the
+  directories;
 * writes are idempotent overwrites: a stage write replaces the whole
   table (re-running a stage never leaves rows of the old run behind), and
   a caller that rewrites a subset of partitions on purpose asks for a
   **dynamic partition overwrite** — Iceberg's ``overwritePartitions()``;
+* retention is a partition drop (:meth:`TableIO.delete_where`): the
+  expired partition dirs go, every other file stays as it is;
+* compaction rewrites a table beside itself and swaps it in by
+  rename-aside (:func:`swap_dir`), so a kill at any point leaves the old
+  or the new table restorable;
 * all methods take/return DataFrames only, so flipping to real Iceberg is a
   config change (``writeTo(...).using("iceberg")``), not a rewrite.
 
@@ -27,9 +32,17 @@ idempotence. We keep the restartability, fix the layout.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import shutil
+from pathlib import Path
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: the AQE advisory partition size a compaction writes with: fewer, larger
+#: files than the query-oriented session default
+_COMPACT_ADVISORY_BYTES = "64m"
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -65,6 +78,35 @@ def read_schema(schema: T.StructType, partition_cols: list[str]) -> T.StructType
     fields = [f for f in schema.fields if f.name not in partition_cols]
     fields += [schema[c] for c in partition_cols]
     return _nullable(T.StructType(fields))
+
+
+def swap_dir(orig: Path, tmp: str) -> None:
+    """Replace directory ``orig`` with ``tmp`` via rename-aside: a crash at
+    any point leaves either the old or the new contents restorable
+    (:func:`heal_asides`), never a half-deleted dir. The aside name is
+    DOT-PREFIXED so it is invisible both to Spark's file listing and to
+    any ``batch_id=*``-style glob — a visible aside would let readers
+    resurrect the pre-swap contents (the erasure-undo bug class)."""
+    aside = orig.parent / f".aside.{orig.name}"
+    shutil.rmtree(aside, ignore_errors=True)
+    shutil.move(str(orig), str(aside))
+    shutil.move(tmp, str(orig))
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def heal_asides(root: Path, pattern: str = ".aside.*") -> None:
+    """Recover from a crash inside :func:`swap_dir`: an aside whose
+    original is missing moves back; one whose original exists (crash after
+    the forward move) is stale and is dropped. Callers that run
+    CONCURRENTLY over one directory (the parallel per-table lineage
+    updates) must pass a ``pattern`` scoped to their own name — a global
+    heal would resurrect a sibling thread's mid-swap aside."""
+    for aside in root.glob(pattern):
+        orig = aside.parent / aside.name[len(".aside."):]
+        if not orig.exists():
+            shutil.move(str(aside), str(orig))
+        else:
+            shutil.rmtree(str(aside), ignore_errors=True)
 
 
 class TableIO:
@@ -179,142 +221,62 @@ class TableIO:
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self.path(table))
 
-    def _guard_rewrite(self, table: str, op: str) -> None:
-        """Refuse an in-place rewrite of a Structured Streaming sink dir —
-        shared by :meth:`delete_where` and :meth:`compact`: its
-        ``_spark_metadata`` transaction log pins exact file names, so a
-        rewrite silently vanishes history from streaming-aware readers
-        (stop the stream and convert the sink to a managed table first).
-        The check goes through the Hadoop FS API (any scheme, not just
-        local paths — same reason as :meth:`exists`)."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{self.path(table)}/_spark_metadata")
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
+    def delete_where(
+        self, table: str, predicate: str, partition_cols, schema: T.StructType
+    ) -> list[Row]:
+        """Partition-level TTL delete (Iceberg's metadata-only ``DELETE
+        WHERE <partition predicate>``): drop the partition dirs of ``table``
+        that match ``predicate`` and return one ``Row(*partition_cols,
+        count)`` per dropped partition. ``partition_cols``/``schema`` are
+        the table's declared layout and read-back schema. One job finds the
+        partitions; every other partition is not read, written or renamed.
+
+        ``predicate`` must name partition columns only — one on a data
+        column would drop partitions that still hold live rows — or it is
+        rejected with a ``ValueError`` before anything is read: it is
+        analysed against an empty frame of the partition columns (no job
+        runs; a projection of the table would still resolve a data
+        column)."""
+        cols = list(partition_cols)
+        probe = T.StructType([schema[c] for c in cols])
+        try:
+            self.spark.createDataFrame([], probe).where(predicate)
+        except AnalysisException as e:
             raise ValueError(
-                f"{table}: refusing to {op} a streaming-sink dir — "
-                "_spark_metadata pins exact file names; rewriting would drop "
-                "history from streaming-aware readers"
-            )
-
-    def _rewrite_swap(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
-        """Write ``df`` to a sibling dir and swap it under the table path —
-        the shared atomic-ish rewrite used by :meth:`delete_where` and
-        :meth:`compact` (sandbox-local; real Iceberg commits these
-        transactionally as a new snapshot).
-
-        An EMPTY partitioned write emits no data file at all (only
-        _SUCCESS), leaving an unreadable table — e.g. a TTL delete that
-        expires every row. Iceberg keeps schema in metadata; here the
-        schema lives in parquet footers, so fall back to one flat
-        schema-bearing empty file from the KNOWN schema (no second scan of
-        the source lineage); :meth:`write` takes the static full-overwrite
-        path over such an empty table, so the stale schema file cannot
-        outlive the next real write."""
-        import shutil
-
-        tmp = self.path(table) + ".__rewrite__"
-        wr = df.write.mode("overwrite")
-        if partition_cols:
-            wr = wr.partitionBy(*partition_cols)
-        wr.parquet(tmp)
-        if partition_cols and not self._has_data_file(tmp):
-            self.spark.createDataFrame([], df.schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-        dst = self.path(table)
-        shutil.rmtree(dst, ignore_errors=True)
-        shutil.move(tmp, dst)
-
-    def _has_data_file(self, path: str) -> bool:
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
-
-    def _partition_dirs(self, table: str) -> list[str]:
-        """Partition columns ACTUALLY present as directories, for the
-        maintenance ops that serve any table dir (:meth:`delete_where`,
-        :meth:`compact`); a table may carry p_day/p_bucket as plain data
-        columns without being directory-partitioned. The pipeline's own
-        writers and merges never detect a layout: they read the declared
-        one (``plans/stages.LAYOUTS``)."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(self.path(table))
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        # Walk ONE branch of the Hive layout collecting partition columns in
-        # nesting order (outer→inner): the single top-level listing the old
-        # code did missed every nested level, so a compact/TTL rewrite of a
-        # p_day×p_bucket (or tier×p_day chunk) table silently flattened the
-        # inner level out of the directory layout. The branch to descend is
-        # the first entry that still HAS partition children — an emptied
-        # husk (a dir whose leaf drop_partitions removed) would otherwise
-        # truncate the detected layout at its level.
-        cols: list[str] = []
-        while True:
-            entries = [
-                st
-                for st in fs.listStatus(p)
-                if st.isDirectory() and "=" in st.getPath().getName()
-            ]
-            if not entries:
-                return cols
-            cols.append(entries[0].getPath().getName().split("=", 1)[0])
-            nxt = None
-            for st in entries:
-                if any(
-                    c.isDirectory() and "=" in c.getPath().getName()
-                    for c in fs.listStatus(st.getPath())
-                ):
-                    nxt = st.getPath()
-                    break
-            if nxt is None:
-                return cols  # leaf level everywhere — layout complete
-            p = nxt
-
-    def delete_where(self, table: str, predicate: str) -> None:
-        """Partition-level TTL delete (Iceberg ``DELETE WHERE`` analog):
-        rewrite the table keeping rows NOT matching the predicate. On real
-        Iceberg with a partition-aligned predicate this is metadata-only.
-        Shares :meth:`compact`'s streaming-sink guard and directory-detected
-        partitioning (a flat table stays flat even if it carries
-        p_day/p_bucket as data columns)."""
-        self._guard_rewrite(table, "TTL-rewrite")
-        df = self.read(table).where(f"NOT ({predicate})")
-        self._rewrite_swap(df, table, self._partition_dirs(table))
+                f"{table}: a TTL predicate may name only the partition columns "
+                f"{cols}: {predicate!r}"
+            ) from e
+        expired = (
+            self.read(table, schema).where(predicate).groupBy(*cols).count().collect()
+        )
+        self.drop_partitions(table, [tuple(r[c] for c in cols) for r in expired], cols)
+        return expired
 
     def drop_partitions(
         self, table: str, parts: list[tuple], pcols: list[str]
-    ) -> int:
+    ) -> None:
         """Remove whole partition directories (Iceberg ``dropPartition`` /
         ``DELETE WHERE <partition predicate>`` metadata-delete analog).
 
-        Needed by the backfill merge: dynamic partition overwrite can only
-        REPLACE partitions present in the written frame, so a partition
-        whose last row moved away (e.g. a corrected ``ts`` pulled the only
-        conversation out of a day) survives with stale rows unless dropped
-        explicitly. ``parts`` are value tuples aligned with ``pcols`` in
-        directory nesting order (as :meth:`_partition_dirs` returns them);
+        The TTL delete (:meth:`delete_where`) drops expired partitions with
+        it, and the backfill merge needs it too: dynamic partition overwrite
+        can only REPLACE partitions present in the written frame, so a
+        partition whose last row moved away (e.g. a corrected ``ts`` pulled
+        the only conversation out of a day) survives with stale rows unless
+        dropped explicitly. ``parts`` are value tuples aligned with
+        ``pcols`` in directory nesting order (the declared layout's order);
         values must be Hive-dir-safe (dates/ints/plain strings — the only
-        partition value types this engine writes). Returns the number of
-        directories actually removed."""
+        partition value types this engine writes)."""
         jvm = self.spark._jvm
         root = jvm.org.apache.hadoop.fs.Path(self.path(table))
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        dropped = 0
         for vals in parts:
             sub = "/".join(f"{c}={v}" for c, v in zip(pcols, vals))
             p = jvm.org.apache.hadoop.fs.Path(f"{self.path(table)}/{sub}")
-            if fs.exists(p):
-                fs.delete(p, True)
-                dropped += 1
+            fs.delete(p, True)
             # prune now-empty ancestor dirs: an emptied outer level (e.g.
-            # p_day=X/ after its last p_bucket leaf is dropped) is a husk
-            # that layout detection and future drops must not trip over
+            # p_day=X/ after its last p_bucket leaf is dropped) is a husk;
+            # remove it, so a table's dirs are exactly its partitions
             parent = p.getParent()
             while (
                 str(parent) != str(root)
@@ -323,47 +285,38 @@ class TableIO:
             ):
                 fs.delete(parent, False)
                 parent = parent.getParent()
-        return dropped
 
-    def compact(self, table: str, advisory_bytes: str | None = "64m") -> None:
+    def compact(self, table: str, partition_cols, schema: T.StructType) -> None:
         """Small-file compaction (Iceberg ``rewriteDataFiles`` analog): the
         batch tables' repeated partition overwrites accumulate small files
-        per partition dir; rewrite the table clustered by its DIRECTORY
-        partition keys (detected from the layout, not from column
-        presence — an unpartitioned table stays unpartitioned) so each dir
-        collapses back to few AQE-right-sized files.
+        per partition dir; rewrite the table, read through ``schema`` and
+        rebalanced by its declared ``partition_cols``, so each dir collapses
+        back to few AQE-right-sized files.
 
-        Refuses a Structured Streaming sink dir (its ``_spark_metadata``
-        transaction log lists exact files — rewriting them would silently
-        vanish history from streaming-aware readers; stop the stream and
-        convert the sink to a managed table first).
-
-        ``advisory_bytes`` temporarily raises the session's AQE advisory
-        partition size for the rewrite (compaction wants FEWER, larger
-        files than the query-oriented session default; restored — or unset
-        if the session never set it — afterwards; note the conf is
-        session-global for the duration, so run maintenance in its own
-        session when queries run concurrently). On real Iceberg this is
-        the snapshot-isolated ``rewrite_data_files`` procedure."""
-        self._guard_rewrite(table, "compact")
-        df = self.read(table)
-        cols = self._partition_dirs(table)
+        The rewrite lands beside the table and is swapped in by
+        :func:`swap_dir`; a table a killed compaction left aside is
+        restored first (:func:`heal_asides`). The session's AQE advisory
+        partition size is raised to 64 MB for the rewrite and restored (or
+        unset) afterwards; the conf is session-global meanwhile, so run
+        maintenance in its own session when queries run concurrently. On
+        real Iceberg this is the snapshot-isolated ``rewrite_data_files``
+        procedure."""
+        dst = Path(self.path(table))
+        heal_asides(dst.parent, f".aside.{dst.name}")
+        cols = list(partition_cols)
         conf_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        aqe = (
-            self.spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
-            == "true"
-        )
-        old = self.spark.conf.get(conf_key, None) if advisory_bytes and aqe else None
-        if advisory_bytes and aqe:
-            self.spark.conf.set(conf_key, advisory_bytes)
+        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
+        old = self.spark.conf.get(conf_key, None) if aqe else None
+        if aqe:
+            self.spark.conf.set(conf_key, _COMPACT_ADVISORY_BYTES)
         try:
-            if cols:
-                w = df.hint("rebalance", *cols) if aqe else df.repartition(*cols)
-            else:
-                w = df.hint("rebalance") if aqe else df.coalesce(1)
-            self._rewrite_swap(w, table, cols)
+            df = self.read(table, schema)
+            w = df.hint("rebalance", *cols) if aqe else df.repartition(*cols)
+            tmp = str(dst.parent / f".rewrite.{dst.name}")
+            w.write.mode("overwrite").partitionBy(*cols).parquet(tmp)
+            swap_dir(dst, tmp)
         finally:
-            if advisory_bytes and aqe:
+            if aqe:
                 if old is not None:
                     self.spark.conf.set(conf_key, old)
                 else:

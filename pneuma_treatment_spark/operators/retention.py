@@ -8,8 +8,9 @@
   the engine's load-bearing-null convention (SURVEY.md §1.2).
 * :func:`ttl_sql_predicate` — tier TTL: each retention tier keeps
   ``ttl_days`` of history; finer tiers age out first (raw→1m→1h→1d cascade).
-  Applied via ``TableIO.delete_where`` (partition-aligned predicate so on
-  Iceberg it's a metadata-only delete).
+  Applied via ``TableIO.delete_where``, which drops the expired partition
+  dirs (the predicate names partition columns only, so on Iceberg it is a
+  metadata-only delete).
 
 Scale: masks are per-key interval lists — tiny next to the fact table —
 so the join is an explicit ``broadcast``; the fact side never shuffles.
@@ -59,6 +60,6 @@ def apply_interval_mask(
 
 
 def ttl_sql_predicate(ttl_days: int, now_date: str) -> str:
-    """Partition-aligned TTL predicate for TableIO.delete_where: drop whole
+    """Partition-only TTL predicate for TableIO.delete_where: drop whole
     days older than ``ttl_days`` before ``now_date`` (YYYY-MM-DD)."""
     return f"p_day < date_sub(date'{now_date}', {ttl_days})"

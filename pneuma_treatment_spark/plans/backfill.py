@@ -54,7 +54,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.io.tableio import DAY_BUCKET, TableIO, bucket_col
+from pneuma_treatment_spark.io.tableio import (
+    DAY_BUCKET,
+    TableIO,
+    bucket_col,
+    heal_asides,
+    swap_dir,
+)
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw,
@@ -62,6 +68,7 @@ from pneuma_treatment_spark.operators.rollup import (
 )
 from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import (
+    load_manifest,
     manifest_schema,
     partition_counts,
     read_stage,
@@ -196,7 +203,9 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
     ``jobs/rollup_job.run_pipeline``: splice the recounted ``aff_days``
     into the per-partition counts table and adjust the manifest total by
     ``removed``/``added`` (``verify_partition_lineage`` recounts
-    distributed and cross-checks both)."""
+    distributed and cross-checks both). A sweep passes its predicate as
+    ``ttl``; the manifest records it, and later merges drop the
+    recomputed rows it matches (:func:`_merge_tables`)."""
     mpath = Path(io.root) / "_manifest" / f"{name}.json"
     if not mpath.exists():
         return
@@ -208,7 +217,7 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
     if not ppath.exists() and legacy_aside.exists():
         # heal a crash from a pre-r7 build (old aside naming)
         shutil.move(str(legacy_aside), str(ppath))
-    _heal_asides(mdir, f".aside.{name}_partitions")
+    heal_asides(mdir, f".aside.{name}_partitions")
     days = sorted(stats["aff_days"])
     if ppath.exists() and days:
         recount = partition_counts(
@@ -220,10 +229,12 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
         n_parts = write_partition_counts(newc, tmp)
         # swap via rename-aside, never delete-before-replace: a crash at
         # any point leaves either the old or the new table restorable
-        # (_heal_asides above), so the documented re-run-the-delta
+        # (heal_asides above), so the documented re-run-the-delta
         # recovery actually recovers
-        _swap_dir(ppath, tmp)
+        swap_dir(ppath, tmp)
         m["n_partitions"] = n_parts
+    if "ttl" in stats:
+        m["ttl"] = stats["ttl"]
     m["backfilled_at"] = time.time()
     # crash-atomic: a kill mid-write must never leave truncated JSON (the
     # documented recovery — re-run the delta — would then die at json.loads)
@@ -232,42 +243,10 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
     os.replace(tmp_m, mpath)
 
 
-def _swap_dir(orig: Path, tmp: str) -> None:
-    """Replace directory ``orig`` with ``tmp`` via rename-aside: a crash at
-    any point leaves either the old or the new contents restorable
-    (:func:`_heal_asides`), never a half-deleted dir. The aside name is
-    DOT-PREFIXED so it is invisible both to Spark's file listing and to
-    any ``batch_id=*``-style glob — a visible aside would let readers
-    resurrect the pre-swap contents (the erasure-undo bug class)."""
-    aside = orig.parent / f".aside.{orig.name}"
-    shutil.rmtree(aside, ignore_errors=True)
-    shutil.move(str(orig), str(aside))
-    shutil.move(tmp, str(orig))
-    shutil.rmtree(aside, ignore_errors=True)
-
-
-def _heal_asides(root: Path, pattern: str = ".aside.*") -> None:
-    """Recover from a crash inside :func:`_swap_dir`: an aside whose
-    original is missing moves back; one whose original exists (crash after
-    the forward move) is stale and is dropped. Callers that run
-    CONCURRENTLY over one directory (the parallel per-table lineage
-    updates) must pass a ``pattern`` scoped to their own name — a global
-    heal would resurrect a sibling thread's mid-swap aside."""
-    for aside in root.glob(pattern):
-        orig = aside.parent / aside.name[len(".aside."):]
-        if not orig.exists():
-            shutil.move(str(aside), str(orig))
-        else:
-            shutil.rmtree(str(aside), ignore_errors=True)
-
-
 def _manifest_config(workdir: str, stage: str) -> dict:
     """The raw config dict a stage's manifest recorded ({} when the
     manifest or the config predates recording)."""
-    mp = Path(workdir) / "_manifest" / f"{stage}.json"
-    if not mp.exists():
-        return {}
-    return json.loads(mp.read_text()).get("config") or {}
+    return load_manifest(workdir, stage).get("config") or {}
 
 
 def _adopt_recorded_buckets(rec_cfg: dict, n_buckets: int | None) -> int:
@@ -416,7 +395,10 @@ def _merge_tables(
     """Merge every existing pipeline table over the ``affected``
     conversations — ``new_rows(table)`` gives the table's recomputed rows
     (empty for a deletion) — and re-splice its lineage. Returns each
-    table's merge counts.
+    table's merge counts. The recompute reads ``ingest``, which no TTL
+    sweep touches, so it covers the conversations' whole history: rows
+    matching the predicate the table's last sweep recorded are dropped
+    before the merge, or it would write expired partitions back.
 
     The merges are independent (each rewrites only its own table; the
     recomputes read persisted upstream frames, never the tables being
@@ -431,8 +413,14 @@ def _merge_tables(
 
     def _one(name):
         ts_col, partition_cols = LAYOUTS[name]
+        rows = new_rows(name)
+        ttl = load_manifest(io.root, name).get("ttl")
+        if ttl:
+            rows = io.with_partition_cols(rows, ts_col, partition_cols).where(
+                f"NOT ({ttl})"
+            )
         stats = merge_conv_scoped(
-            io, name, new_rows(name), affected,
+            io, name, rows, affected,
             ts_col=ts_col, partition_cols=partition_cols,
         )
         update_lineage(io, name, stats)
@@ -460,7 +448,7 @@ def scrub_deadletter(spark: SparkSession, dead_path: str, convs: DataFrame) -> d
     out = {"rows_removed": 0, "epochs_rewritten": [], "epochs_removed": []}
     if not root.exists():
         return out
-    _heal_asides(root)  # a crash inside a previous scrub's swap
+    heal_asides(root)  # a crash inside a previous scrub's swap
     aff = convs.select("conv_id").distinct()
     for epoch in sorted(root.glob("batch_id=*")):
         if not epoch.is_dir():
@@ -477,7 +465,7 @@ def scrub_deadletter(spark: SparkSession, dead_path: str, convs: DataFrame) -> d
             # dot-prefixed tmp: never visible to readers mid-rewrite
             tmp = str(epoch.parent / f".rewrite.{epoch.name}")
             keep.write.mode("overwrite").parquet(tmp)
-            _swap_dir(epoch, tmp)
+            swap_dir(epoch, tmp)
             out["epochs_rewritten"].append(epoch.name)
         else:
             shutil.rmtree(str(epoch))

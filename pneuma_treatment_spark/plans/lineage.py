@@ -183,12 +183,16 @@ def manifest_schema(m: dict) -> StructType | None:
     return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
 
 
+def load_manifest(root: str, name: str) -> dict:
+    """The manifest of stage ``name`` under workdir ``root`` ({} if none)."""
+    mpath = Path(root) / "_manifest" / f"{name}.json"
+    return json.loads(mpath.read_text()) if mpath.exists() else {}
+
+
 def read_stage(io: TableIO, name: str) -> DataFrame:
     """A stage table read through the schema its manifest recorded; inferred
     only when there is no manifest or it predates the recorded schema."""
-    mpath = Path(io.root) / "_manifest" / f"{name}.json"
-    m = json.loads(mpath.read_text()) if mpath.exists() else {}
-    return io.read(name, schema=manifest_schema(m))
+    return io.read(name, schema=manifest_schema(load_manifest(io.root, name)))
 
 
 def partition_counts(df: DataFrame) -> DataFrame:

@@ -182,6 +182,44 @@ def test_backfill_rejects_duplicate_keys(spark, env):
         backfill_pipeline(spark, env["wd_a"], delta.unionByName(delta.limit(1)))
 
 
+@pytest.mark.parametrize("horizon", ["some_days", "every_row"])
+def test_backfill_keeps_ttl_expired_rows_out(spark, tmp_path, horizon):
+    """A correcting backfill after a TTL sweep recomputes the affected
+    conversations' whole history from ``ingest``, which the sweep never
+    touches; the merge must not write the expired partitions back. Every
+    swept table keeps its swept rows, with lineage green."""
+    import datetime as dt
+
+    from jobs.rollup_job import DEFAULT_TTLS
+    from pneuma_treatment_spark.compression.chunks import chunk_ttl_sql_predicate
+    from pneuma_treatment_spark.operators.retention import ttl_sql_predicate
+
+    wd = str(tmp_path / "wd")
+    kw = dict(n_convs=4, seed=5, mega_turns=0)
+    run_pipeline(spark, wd, **kw)
+    io = TableIO(spark, wd)
+    days = read_stage(io, "rollup_1d").agg(F.min("p_day"), F.max("p_day")).first()
+    unswept_1m = read_stage(io, "rollup_1m").count()
+    now = str(
+        days[0] + dt.timedelta(days=91) if horizon == "some_days"
+        else days[1] + dt.timedelta(days=4000)
+    )
+    run_pipeline(spark, wd, **kw, ttl_now=now)
+    preds = {f"rollup_{t}": ttl_sql_predicate(d, now) for t, d in DEFAULT_TTLS.items()}
+    preds["chunks"] = chunk_ttl_sql_predicate(DEFAULT_TTLS, now)
+    swept = {t: read_stage(io, t).count() for t in preds}
+    assert swept["rollup_1m"] < unswept_1m
+
+    fix = read_stage(io, "ingest").where(F.col("turn_idx") == 0).withColumn(
+        "text", F.lit("a corrected first turn")
+    )
+    backfill_pipeline(spark, wd, fix)
+    for t, pred in preds.items():
+        assert read_stage(io, t).count() == swept[t], t
+        assert read_stage(io, t).where(pred).count() == 0, t
+        assert verify_partition_lineage(io, t), t
+
+
 def test_merge_drops_emptied_partition(spark, tmp_path):
     """A corrected ts that pulls the ONLY conversation out of a day must
     drop that (day, bucket) dir — dynamic overwrite alone cannot (it only
@@ -204,10 +242,12 @@ def test_merge_drops_emptied_partition(spark, tmp_path):
     out = io.read("tab").toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert sorted(out["p_day"].astype(str).unique()) == ["2024-01-11", "2024-02-01"]
     assert len(out) == 3
-    # the emptied dir is physically gone, INCLUDING its emptied day parent
-    # (an empty husk would later truncate _partition_dirs' layout walk)
-    assert not os.path.exists(os.path.join(str(tmp_path / "t"), "tab", "p_day=2024-01-01"))
-    assert io._partition_dirs("tab") == ["p_day", "p_bucket"]
+    # the emptied dir is physically gone, INCLUDING its emptied day parent,
+    # and every day dir left holds a bucket dir (no empty husk)
+    tab = tmp_path / "t" / "tab"
+    assert not (tab / "p_day=2024-01-01").exists()
+    assert all(any(b.name.startswith("p_bucket=") for b in d.iterdir())
+               for d in tab.glob("p_day=*"))
 
 
 def test_backfill_rejects_contradicting_cfg(spark, env):

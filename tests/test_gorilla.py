@@ -338,10 +338,10 @@ def test_chunk_ttl_prunes_window_partitions(spark, tmp_path):
     tier (TIER_WINDOW_DAYS) and written partitioned by (tier, p_day =
     window start), so a TTL delete (a) never touches a live point — a
     boundary window whose coverage extends past the cutoff survives until
-    FULLY expired, (b) drops whole partition dirs, (c) prunes the rewrite's
-    keep-scan to surviving partitions (on real Iceberg: metadata-only),
-    and (d) preserves the nested tier/p_day directory layout through the
-    rewrite."""
+    FULLY expired, (b) drops whole partition dirs, (c) prunes the scan
+    that selects them by partition columns (on real Iceberg:
+    metadata-only), and (d) keeps the nested tier/p_day directory layout
+    of the surviving partitions."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -371,8 +371,8 @@ def test_chunk_ttl_prunes_window_partitions(spark, tmp_path):
     ).withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
 
     io = TableIO(spark, str(tmp_path))
-    io.write(write_chunks(df), "chunks",
-             partition_cols=["tier", "p_day"])
+    schema = io.write(write_chunks(df), "chunks",
+                      partition_cols=["tier", "p_day"])
 
     before = io.read("chunks").toPandas()
     # no chunk crosses its window: [p_day, p_day + wdays)
@@ -382,14 +382,14 @@ def test_chunk_ttl_prunes_window_partitions(spark, tmp_path):
         assert lo <= r.start_ts <= r.end_ts < lo + pd.Timedelta(days=w)
 
     pred = chunk_ttl_sql_predicate({"1m": 1, "1h": 10}, "2024-01-05")
-    # (c) the keep-scan prunes on partition columns only
+    # (c) the drop's selection scan prunes on partition columns only
     plan = (
-        io.read("chunks").where(f"NOT ({pred})")
+        io.read("chunks", schema).where(pred)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters" in plan and "p_day" in plan.split("PartitionFilters")[1][:400]
 
-    io.delete_where("chunks", pred)
+    io.delete_where("chunks", pred, ["tier", "p_day"], schema)
     after = io.read("chunks").toPandas()
 
     # (a) exact survivor set at the 7d/45d default windows:

@@ -5,10 +5,11 @@ from __future__ import annotations
 
 import shutil
 
+import pandas as pd
 import pytest
 
 from jobs.rollup_job import run_pipeline
-from pneuma_treatment_spark.io.tableio import TableIO
+from pneuma_treatment_spark.io.tableio import DAY_BUCKET, TableIO
 from pneuma_treatment_spark.plans.lineage import verify_partition_lineage
 
 ARGS = dict(n_convs=40, seed=11, mega_turns=800)
@@ -129,7 +130,7 @@ def test_compact_collapses_small_files(spark, tmp_path):
             "value",
         )
     )
-    io.write(e, "t")
+    schema = io.write(e, "t")
     # fragment it: 6 appends of 4-way-split slices -> many files per dir
     frag = io.with_partition_cols(e.limit(2000))
     for _ in range(6):
@@ -151,7 +152,7 @@ def test_compact_collapses_small_files(spark, tmp_path):
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
     ).toPandas().sort_values("conv_id").reset_index(drop=True)
 
-    io.compact("t")
+    io.compact("t", DAY_BUCKET, schema)
     after_files = nfiles()
     assert after_files < before_files / 2, (before_files, after_files)
     assert io.read("t").count() == before_rows
@@ -166,13 +167,8 @@ def test_compact_collapses_small_files(spark, tmp_path):
 
 
 def test_compact_guards_and_conf_restore(spark, tmp_path):
-    """compact() must refuse the layout it would corrupt (a streaming
-    sink dir), must NOT leave its temporary AQE advisory in the session,
-    and must keep an unpartitioned table unpartitioned even when p_day
-    rides as a data column."""
-    import os
-
-    import pytest
+    """compact() must NOT leave its temporary AQE advisory in the
+    session."""
     from pyspark.sql import functions as F
 
     io = TableIO(spark, str(tmp_path / "cg"), n_buckets=2)
@@ -186,29 +182,62 @@ def test_compact_guards_and_conf_restore(spark, tmp_path):
         )
     )
 
-    # streaming-sink refusal — for BOTH in-place rewrite ops
-    io.write(e, "s")
-    os.makedirs(os.path.join(io.path("s"), "_spark_metadata"))
-    with pytest.raises(ValueError, match="streaming-sink"):
-        io.compact("s")
-    with pytest.raises(ValueError, match="streaming-sink"):
-        io.delete_where("s", "TRUE")
-
-    # advisory restore: set -> restored; unset -> stays unset
+    # advisory restore: set -> restored
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get(key)
-    io.write(e, "t")
-    io.compact("t")
+    schema = io.write(e, "t")
+    io.compact("t", DAY_BUCKET, schema)
     assert spark.conf.get(key) == before
 
-    # unpartitioned table carrying p_day as a DATA column stays flat
-    flat = io.with_partition_cols(e)
-    flat.write.parquet(io.path("flat"))
-    pre_cols = io.read("flat").columns
-    io.compact("flat")
-    assert io.read("flat").columns == pre_cols
-    assert not any(
-        d.startswith("p_day=") for d in os.listdir(io.path("flat"))
+
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("kill_after", [1, 2, 3])
+def test_compact_swap_crash_heals(spark, tmp_path, monkeypatch, kill_after):
+    """A compaction killed inside its directory swap (after the swap's
+    ``kill_after``-th move or delete) must leave the table restorable: the
+    next compact() restores it with identical rows and no leftover dir.
+    Replacing the table by delete-then-move loses it to a kill between
+    the two."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    io = TableIO(spark, str(tmp_path / "cs"), n_buckets=2)
+    e = spark.range(2000).select(
+        (F.col("id") % 37).cast("string").alias("conv_id"),
+        F.timestamp_seconds(1_700_000_000 + F.col("id") * 600).alias("ts"),
+        (F.col("id") * 0.5).alias("value"),
+    )
+    schema = io.write(e, "t")
+    want = io.read("t", schema).toPandas()
+
+    calls = []
+
+    def killing(fn):
+        def wrapped(*a, **kw):
+            out = fn(*a, **kw)
+            calls.append(fn.__name__)
+            if len(calls) == kill_after:
+                raise _Killed(calls)
+            return out
+        return wrapped
+
+    monkeypatch.setattr(shutil, "move", killing(shutil.move))
+    monkeypatch.setattr(shutil, "rmtree", killing(shutil.rmtree))
+    with pytest.raises(_Killed):
+        io.compact("t", DAY_BUCKET, schema)
+    monkeypatch.undo()
+
+    io.compact("t", DAY_BUCKET, schema)
+    assert os.listdir(tmp_path / "cs") == ["t"]
+    got = io.read("t", schema).toPandas()
+    key = ["conv_id", "ts", "value"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
     )
 
 

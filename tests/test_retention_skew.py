@@ -3,14 +3,19 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.io.tableio import TableIO
+from jobs.rollup_job import run_pipeline
+from pneuma_treatment_spark.io.tableio import DAY_BUCKET, TableIO
 from pneuma_treatment_spark.operators.retention import apply_interval_mask, ttl_sql_predicate
 from pneuma_treatment_spark.operators.rollup import rollup_raw, with_turn_metrics
 from pneuma_treatment_spark.operators.skew import salted_agg
+from pneuma_treatment_spark.plans.lineage import read_stage, verify_partition_lineage
+from pneuma_treatment_spark.plans.stages import LAYOUTS
 
 
 def test_interval_mask_nulling(spark):
@@ -89,8 +94,10 @@ def test_ttl_delete(spark, tmp_path):
         ("c1", dt.datetime(2024, 1, d, 12, 0), 1.0) for d in range(1, 21)
     ]
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp, v double")
-    io.write(df, "tier")
-    io.delete_where("tier", ttl_sql_predicate(ttl_days=5, now_date="2024-01-20"))
+    schema = io.write(df, "tier")
+    io.delete_where(
+        "tier", ttl_sql_predicate(ttl_days=5, now_date="2024-01-20"), DAY_BUCKET, schema
+    )
     left = io.read("tier").toPandas()
     assert len(left) == 6  # days 15..20 survive (p_day >= now - 5)
     assert left["ts"].dt.day.min() == 15
@@ -123,39 +130,76 @@ def test_salted_agg_exact(spark, transcripts_df):
     pd.testing.assert_frame_equal(plain, salted[plain.columns], check_dtype=False)
 
 
+def test_delete_where_rejects_data_column_predicate(spark, tmp_path):
+    """A TTL predicate naming a data column would drop whole partitions
+    that still hold live rows: it is rejected before anything is read or
+    dropped."""
+    io = TableIO(spark, str(tmp_path / "t"))
+    rows = [("c1", dt.datetime(2024, 1, d, 12, 0), float(d)) for d in range(1, 6)]
+    df = spark.createDataFrame(rows, "conv_id string, ts timestamp, v double")
+    schema = io.write(df, "tier")
+    before = sorted(os.listdir(io.path("tier")))
+    for pred in ("v > 2", "p_day < date'2024-01-03' AND v > 1"):
+        with pytest.raises(ValueError, match="partition columns"):
+            io.delete_where("tier", pred, DAY_BUCKET, schema)
+    assert sorted(os.listdir(io.path("tier"))) == before
+    assert io.read("tier", schema).count() == 5
+
+
+def _files(io, table):
+    """{partition dir: {file name: size}} of a table's data files."""
+    root = io.path(table)
+    out = {}
+    for d, _, fs in os.walk(root):
+        got = {f: os.path.getsize(os.path.join(d, f)) for f in fs if f.endswith(".parquet")}
+        if got:
+            out[os.path.relpath(d, root)] = got
+    return out
+
+
+SWEPT = ("rollup_1m", "rollup_1h", "rollup_1d", "chunks")
+PIPE = dict(n_convs=6, seed=11, mega_turns=0)
+
+
+def test_ttl_sweep_touches_only_expired_partitions(spark, tmp_path):
+    """The sweep drops expired partition dirs and leaves every surviving
+    partition's files exactly as they were (same names and sizes): it
+    does not rewrite the table."""
+    wd = str(tmp_path / "wd")
+    run_pipeline(spark, wd, **PIPE)
+    io = TableIO(spark, wd)
+    before = {t: _files(io, t) for t in SWEPT}
+    first_day = read_stage(io, "rollup_1m").agg(F.min("p_day")).first()[0]
+    run_pipeline(spark, wd, **PIPE, ttl_now=str(first_day + dt.timedelta(days=91)))
+    after = {t: _files(io, t) for t in SWEPT}
+    assert set(after["rollup_1m"]) < set(before["rollup_1m"])  # some days expired
+    for t in SWEPT:
+        assert after[t], t
+        for part, files in after[t].items():
+            assert files == before[t].get(part), (t, part)
+        assert verify_partition_lineage(io, t), t
+
+
 def test_ttl_expiring_every_row_keeps_table_readable(spark, tmp_path):
-    """A TTL pass that expires EVERY row must leave a readable,
-    schema-bearing empty table (an empty partitioned parquet write emits
-    no data file — the rewrite falls back to one flat schema file), and
-    the table must accept a subsequent write and a compact()."""
-    from pyspark.sql import functions as F
-
-    from pneuma_treatment_spark.io.tableio import TableIO
-
-    io = TableIO(spark, str(tmp_path / "ttl_all"), n_buckets=2)
-    e = (
-        spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-        .limit(500)
-        .select(
-            F.col("user_id").cast("string").alias("conv_id"),
-            F.col("ts").cast("timestamp").alias("ts"),
-            "value",
-        )
-    )
-    io.write(e, "t")
-    io.delete_where("t", "TRUE")  # everything expires
-    empty = io.read("t")
+    """A sweep that expires EVERY row of a tier leaves that tier reading
+    empty through its manifest schema with lineage green; compact() on it
+    does not crash, and a rerun whose config changed regrows it (with no
+    stray data file left at the table root)."""
+    wd = str(tmp_path / "wd")
+    run_pipeline(spark, wd, **PIPE)
+    io = TableIO(spark, wd)
+    last_day = read_stage(io, "rollup_1m").agg(F.max("p_day")).first()[0]
+    run_pipeline(spark, wd, **PIPE, ttl_now=str(last_day + dt.timedelta(days=91)))
+    empty = read_stage(io, "rollup_1m")
     assert empty.count() == 0
-    assert set(("conv_id", "ts", "value")) <= set(empty.columns)
-    io.compact("t")  # maintenance on the empty table must not crash
-    assert io.read("t").count() == 0
-    io.write(e, "t")  # and the table regrows on the next write
-    assert io.read("t").count() == 500
-    # the regrow takes the STATIC path over the empty table, so the flat
-    # schema file cannot survive at the root next to partition dirs (a
-    # stale-schema hazard once columns evolve)
-    import os as _os
+    assert {"conv_id", "bucket_ts", "p_day", "p_bucket"} <= set(empty.columns)
+    assert verify_partition_lineage(io, "rollup_1m")
+    schema = empty.schema
+    io.compact("rollup_1m", LAYOUTS["rollup_1m"][1], schema)
+    assert read_stage(io, "rollup_1m").count() == 0
+    assert verify_partition_lineage(io, "rollup_1m")
 
-    assert not any(
-        f.endswith(".parquet") for f in _os.listdir(io.path("t"))
-    )
+    run_pipeline(spark, wd, **{**PIPE, "seed": 12})
+    assert read_stage(io, "rollup_1m").count() > 0
+    assert verify_partition_lineage(io, "rollup_1m")
+    assert not any(f.endswith(".parquet") for f in os.listdir(io.path("rollup_1m")))
