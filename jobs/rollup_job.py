@@ -27,7 +27,7 @@ from pneuma_treatment_spark.compression.chunks import (
     TIER_WINDOW_DAYS,
     chunk_ttl_sql_predicate,
 )
-from pneuma_treatment_spark.io.tableio import TableIO
+from pneuma_treatment_spark.io.tableio import TableIO, heal_asides
 from pneuma_treatment_spark.operators.retention import ttl_sql_predicate
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
@@ -94,6 +94,9 @@ def run_pipeline(
     cfg = cfg or TreatmentConfig()
     windows = chunk_window_days or dict(TIER_WINDOW_DAYS)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
+    # tables a killed compaction swap left aside; healed here, before any
+    # read, since a heal inside TableIO.read could race a concurrent swap
+    heal_asides(Path(workdir))
     runner = PipelineRunner(
         io,
         stats=stats,

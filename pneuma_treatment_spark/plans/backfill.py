@@ -21,10 +21,10 @@ Cost model at scale (what makes this 100 TB-viable):
 * recompute is O(sum of affected conversations' turns) — independent of
   table size;
 * the merge reads only affected partitions: bucket-pruned where the
-  layout carries ``p_bucket`` (derivable from the affected conv_ids —
-  k/N of the table for k affected buckets), and partition-pruned to the
-  affected (day, bucket) set for the keep-side scan; on real Iceberg the
-  same predicate is metadata-pruned;
+  layout carries ``p_bucket`` (k/N of the table for k affected buckets),
+  one census per table finds the affected partitions, and one flat
+  predicate prunes the keep-side scan to them; on real Iceberg the same
+  predicate is metadata-pruned;
 * the rewrite touches only affected partitions (dynamic overwrite), so
   write amplification is bounded by the affected conversations'
   partition footprint, not the table.
@@ -36,14 +36,16 @@ turns). Whole-conversation DELETION (the compliance shape: a user
 erasure request must remove every derived row too) is
 :func:`delete_conversations` — the same partition-scoped merge with an
 empty recompute side. Re-running the same delta is idempotent, which is
-also the crash-recovery story: a backfill killed between table merges is
-healed by re-running it (each per-table merge is independently
-idempotent).
+also the crash-recovery story: a backfill killed between table merges,
+or between a merge and its lineage splice, is healed by re-running it
+(each per-table merge and splice is independently idempotent). Not
+healed: a kill before the splice of a merge that moved the affected
+conversations' last rows out of a day — the re-run's census no longer
+holds that day, so its stale count stays in the counts table.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -87,14 +89,10 @@ from pneuma_treatment_spark.plans.stages import (
 #: feed straight into --backfill-table
 _DELTA_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
-#: OR-of-ANDs partition predicates stay pushdown-able up to this many
-#: partitions; beyond it the plan-size (Catalyst literal) tax outweighs the
-#: scan pruning and a broadcast semi-join takes over (bucket pruning still
-#: applies on bucketed layouts either way).
-_MAX_LITERAL_PARTS = 64
-
 
 def _affected_buckets(affected: DataFrame, n_buckets: int) -> list[int]:
+    """The affected conversations' ``p_bucket`` values: one collect per
+    backfill or erasure, shared by every table's merge."""
     rows = (
         affected.select(bucket_col(n_buckets).alias("b"))
         .distinct()
@@ -103,35 +101,20 @@ def _affected_buckets(affected: DataFrame, n_buckets: int) -> list[int]:
     return sorted(r["b"] for r in rows)
 
 
-def _parts_filter(
-    df: DataFrame, pcols: list[str], parts: list[tuple], spark: SparkSession
-) -> DataFrame:
-    """Restrict ``df`` to the given partition-value tuples."""
-    if not parts:
-        return df.where(F.lit(False))
-    if len(parts) <= _MAX_LITERAL_PARTS:
-        pred = F.lit(False)
-        for vals in parts:
-            pred = pred | functools.reduce(
-                lambda a, b: a & b,
-                [F.col(c) == F.lit(v) for c, v in zip(pcols, vals)],
-            )
-        return df.where(pred)
-    pdf = spark.createDataFrame(parts, schema=df.select(*pcols).schema)
-    return df.join(F.broadcast(pdf), pcols, "left_semi")
-
-
 def merge_conv_scoped(
     io: TableIO,
     table: str,
     new_rows: DataFrame,
     affected: DataFrame,
+    buckets: list[int],
     *,
     ts_col: str = "ts",
     partition_cols=DAY_BUCKET,
 ) -> dict:
     """Replace ``affected`` conversations' rows in ``table`` with
     ``new_rows``, rewriting only the partitions either side touches.
+    ``buckets`` are the affected conversations' ``p_bucket`` values
+    (:func:`_affected_buckets`; unused on a layout without ``p_bucket``).
     ``ts_col``/``partition_cols`` are the table's declared layout
     (``stages.LAYOUTS``; it must carry ``p_day``), never read off the
     directories: an emptied table has none left to read it from.
@@ -141,59 +124,56 @@ def merge_conv_scoped(
     dynamic partition overwrite; partitions whose last row moved away are
     dropped explicitly (dynamic overwrite can only replace partitions
     present in the written frame). Unaffected partitions are not read,
-    not written, not touched.
-    """
-    spark = io.spark
+    not written, not touched. Both sets come from one collected census
+    per partition: old rows, old rows of the affected conversations
+    (removed) and recomputed rows (added) — bounded metadata, what
+    Iceberg's planner holds."""
     nr = io.with_partition_cols(new_rows, ts_col, partition_cols).persist()
     pcols = list(partition_cols)
     old = read_stage(io, table)
-
-    pruned = old
     if "p_bucket" in pcols:
-        pruned = old.where(
-            F.col("p_bucket").isin(_affected_buckets(affected, io.n_buckets))
-        )
-    old_aff = pruned.join(affected, "conv_id", "left_semi")
+        old = old.where(F.col("p_bucket").isin(buckets))
 
-    # affected partitions = partitions of the affected convs' OLD rows
-    # (they must lose those rows even where the conv no longer has any)
-    # ∪ partitions of the recomputed rows. Only partition VALUES cross to
-    # the driver — bounded metadata, the same thing Iceberg's planner holds.
-    # The removed/added row counts ride the same two jobs as the partition
-    # discovery (the ops wall is dominated by fixed per-job overhead at
-    # small deltas — BENCH/run_backfill.py measures it).
-    old_parts = old_aff.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
-    new_parts = nr.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
-    removed = sum(r["__n"] for r in old_parts)
-    added = sum(r["__n"] for r in new_parts)
-    aff_parts = list(
-        {tuple(r[c] for c in pcols) for r in old_parts}
-        | {tuple(r[c] for c in pcols) for r in new_parts}
+    # the census: every old row marks `rows`, an affected conversation's
+    # also `removed`, every recomputed row `added`; count() counts marks
+    flag = F.broadcast(affected.select("conv_id", F.lit(1).alias("__aff")))
+    none = F.lit(None).cast("int")
+    old_side = old.join(flag, "conv_id", "left").select(
+        *pcols, F.lit(1).alias("rows"), F.col("__aff").alias("removed"), none.alias("added")
     )
+    new_side = nr.select(
+        *pcols, none.alias("rows"), none.alias("removed"), F.lit(1).alias("added")
+    )
+    counts = (
+        old_side.unionByName(new_side)
+        .groupBy(*pcols)
+        .agg(*[F.count(c).alias(c) for c in ("rows", "removed", "added")])
+        .where("removed > 0 OR added > 0")
+        .collect()
+    )
+    census = {tuple(r[c] for c in pcols): (r["rows"], r["removed"], r["added"]) for r in counts}
+    stale = [p for p, (rows, removed, added) in census.items() if rows == removed and not added]
 
-    keep = _parts_filter(pruned, pcols, aff_parts, spark).join(
-        affected, "conv_id", "left_anti"
-    )
+    # one flat partition predicate at any set size: Spark pushes it into
+    # the scan's PartitionFilters (IN, or INSET above 10 values)
+    lits = [
+        F.struct(*[F.lit(v).cast(old.schema[c].dataType).alias(c) for c, v in zip(pcols, p)])
+        for p in census
+    ]
+    keep = old.where(F.struct(*pcols).isin(lits)).join(affected, "conv_id", "left_anti")
     out = keep.unionByName(nr.select(*old.columns))
-    # Partitions that lose their last row never appear in the written frame,
-    # so dynamic overwrite leaves their old files in place — they must be
-    # dropped explicitly. Collect the surviving-partition set from the
-    # frame BEFORE the write: afterwards `keep`'s captured file index
-    # points at files the overwrite just replaced.
-    present = {tuple(r) for r in out.select(*pcols).distinct().collect()}
     io.write(out, table, partition_cols=pcols, dynamic=True)  # aff parts only
-    stale = [p for p in aff_parts if p not in present]
     if stale:
         io.drop_partitions(table, stale, pcols)
 
     nr.unpersist()
     day_i = pcols.index("p_day")
     return {
-        "removed": removed,
-        "added": added,
-        "parts_rewritten": len(aff_parts),
+        "removed": sum(n[1] for n in census.values()),
+        "added": sum(n[2] for n in census.values()),
+        "parts_rewritten": len(census),
         "stale_dropped": len(stale),
-        "aff_days": {p[day_i] for p in aff_parts},
+        "aff_days": {p[day_i] for p in census},
     }
 
 
@@ -201,10 +181,12 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
     """Keep a stage's lineage contract green after a rewrite of some of
     its days — a backfill merge, or the TTL sweep in
     ``jobs/rollup_job.run_pipeline``: splice the recounted ``aff_days``
-    into the per-partition counts table and adjust the manifest total by
-    ``removed``/``added`` (``verify_partition_lineage`` recounts
-    distributed and cross-checks both). A sweep passes its predicate as
-    ``ttl``; the manifest records it, and later merges drop the
+    into the per-partition counts table and set the manifest total to its
+    sum (``verify_partition_lineage`` recounts distributed and
+    cross-checks both); only without a counts table (``stats="fast"``)
+    is the total adjusted by ``removed``/``added``, which cancel on a
+    re-run after a kill before the splice. A sweep passes its predicate
+    as ``ttl``; the manifest records it, and later merges drop the
     recomputed rows it matches (:func:`_merge_tables`)."""
     mpath = Path(io.root) / "_manifest" / f"{name}.json"
     if not mpath.exists():
@@ -226,7 +208,7 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
         old = io.spark.read.schema(recount.schema).parquet(str(ppath))
         newc = old.where(~F.col("p_day").isin(days)).unionByName(recount)
         tmp = str(mdir / f".rewrite.{ppath.name}")
-        n_parts = write_partition_counts(newc, tmp)
+        n_parts, m["rows"] = write_partition_counts(newc, tmp)
         # swap via rename-aside, never delete-before-replace: a crash at
         # any point leaves either the old or the new table restorable
         # (heal_asides above), so the documented re-run-the-delta
@@ -302,6 +284,7 @@ def backfill_pipeline(
     single-shard workdir (sharded deployments backfill through the shard
     that owns the conversations; the CLI rejects ``--shard-count > 1``).
     """
+    heal_asides(Path(workdir))  # tables a killed compaction swap left aside
     rec_cfg = _manifest_config(workdir, "filled")
     recorded = rec_cfg.get("treatment")
     if recorded is not None:
@@ -347,13 +330,13 @@ def backfill_pipeline(
     # garbage-collected after this call returns.
     affected = delta.select("conv_id").distinct().localCheckpoint()
 
+    buckets = _affected_buckets(affected, io.n_buckets)
+
     # --- new raw rows for the affected conversations (upsert) -------------
-    old_ing = read_stage(io, "ingest")
-    pruned = old_ing.where(
-        F.col("p_bucket").isin(_affected_buckets(affected, io.n_buckets))
-    )
     raw_aff = (
-        pruned.drop("p_day", "p_bucket")
+        read_stage(io, "ingest")
+        .where(F.col("p_bucket").isin(buckets))
+        .drop("p_day", "p_bucket")
         .join(affected, "conv_id", "left_semi")
         .join(delta.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"], "left_anti")
         .unionByName(delta)
@@ -363,12 +346,14 @@ def backfill_pipeline(
     # --- recompute every stage for the affected conversations only --------
     # (the pipeline's own stage builds, plans/stages.py; the 1m tier takes
     # rollup_raw — rollup_raw_clustered's fused write clustering has no
-    # use here, merge_conv_scoped lays the rows out)
-    filled_new = build_filled(raw_aff, cfg).persist()
+    # use here, merge_conv_scoped lays the rows out). Frames that several
+    # merges or builds read are local checkpoints too, so the merge threads
+    # do not race to fill them.
+    filled_new = build_filled(raw_aff, cfg).localCheckpoint()
     treated_new = build_treated(filled_new, cfg)
-    m1 = rollup_raw(raw_aff, "1m").persist()
-    h1 = rollup_from_tier(m1, "1m", "1h").persist()
-    d1 = rollup_from_tier(h1, "1h", "1d").persist()
+    m1 = rollup_raw(raw_aff, "1m").localCheckpoint()
+    h1 = rollup_from_tier(m1, "1m", "1h").localCheckpoint()
+    d1 = rollup_from_tier(h1, "1h", "1d").localCheckpoint()
     chunks_new = build_chunks(m1, h1, d1, chunk_windows)
 
     # --- partition-scoped merges + lineage upkeep --------------------------
@@ -381,30 +366,29 @@ def backfill_pipeline(
         "rollup_1d": d1,
         "chunks": chunks_new,
     }
-    tables = _merge_tables(io, affected, new_rows.__getitem__)
-
-    n_aff = affected.count()
-    for p in (filled_new, m1, h1, d1):
-        p.unpersist()
-    return {"tables": tables, "affected_convs": n_aff}
+    tables = _merge_tables(io, affected, buckets, new_rows.__getitem__)
+    return {"tables": tables, "affected_convs": affected.count()}
 
 
 def _merge_tables(
-    io: TableIO, affected: DataFrame, new_rows: Callable[[str], DataFrame]
+    io: TableIO,
+    affected: DataFrame,
+    buckets: list[int],
+    new_rows: Callable[[str], DataFrame],
 ) -> dict:
     """Merge every existing pipeline table over the ``affected``
-    conversations — ``new_rows(table)`` gives the table's recomputed rows
-    (empty for a deletion) — and re-splice its lineage. Returns each
-    table's merge counts. The recompute reads ``ingest``, which no TTL
+    conversations (``p_bucket`` values ``buckets``) — ``new_rows(table)``
+    gives the table's recomputed rows (empty for a deletion) — and
+    re-splice its lineage. Returns each table's merge counts. The recompute reads ``ingest``, which no TTL
     sweep touches, so it covers the conversations' whole history: rows
     matching the predicate the table's last sweep recorded are dropped
     before the merge, or it would write expired partitions back.
 
     The merges are independent (each rewrites only its own table; the
-    recomputes read persisted upstream frames, never the tables being
-    rewritten), so they run concurrently: the ops wall is max(table merge),
-    not the sum of ~30 driver-synchronous small jobs (the wall is
-    fixed-overhead-dominated at small deltas; concurrent jobs interleave at
+    recomputes read upstream frames checkpointed before the merges start,
+    never the tables being rewritten), so they run concurrently: the ops
+    wall is max(table merge), not the sum of every table's
+    driver-synchronous small jobs (the wall is fixed-overhead-dominated at small deltas; concurrent jobs interleave at
     task granularity even under the default FIFO scheduler, so idle
     driver-sync gaps overlap other tables' work)."""
     from concurrent.futures import ThreadPoolExecutor
@@ -420,7 +404,7 @@ def _merge_tables(
                 f"NOT ({ttl})"
             )
         stats = merge_conv_scoped(
-            io, name, rows, affected,
+            io, name, rows, affected, buckets,
             ts_col=ts_col, partition_cols=partition_cols,
         )
         update_lineage(io, name, stats)
@@ -509,6 +493,7 @@ def delete_conversations(
     checkpoint reset), not by in-place rewrites of their epoch dirs."""
     if "conv_id" not in convs.columns:
         raise ValueError("delete_conversations needs a conv_id column")
+    heal_asides(Path(workdir))  # tables a killed compaction swap left aside
     n_buckets = _adopt_recorded_buckets(_manifest_config(workdir, "filled"), n_buckets)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
     # detached from its source, as in backfill_pipeline (and with its
@@ -522,7 +507,10 @@ def delete_conversations(
     if n_aff == 0:
         return {"tables": {}, "affected_convs": 0}
 
-    tables = _merge_tables(io, affected, lambda name: read_stage(io, name).limit(0))
+    tables = _merge_tables(
+        io, affected, _affected_buckets(affected, io.n_buckets),
+        lambda name: read_stage(io, name).limit(0),
+    )
     scrubbed = {d: scrub_deadletter(spark, d, affected) for d in deadletter_dirs}
     out = {"tables": tables, "affected_convs": n_aff}
     if scrubbed:

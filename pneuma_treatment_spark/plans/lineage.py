@@ -130,7 +130,7 @@ class PipelineRunner:
             # is a driver-side list per write. The counts DataFrame writes
             # straight to parquet; only the O(1) partition COUNT crosses to
             # the driver (for the summary), never the rows.
-            n_parts = write_partition_counts(
+            n_parts, _ = write_partition_counts(
                 partition_counts(out), self._partitions_path(name)
             )
         wall = time.perf_counter() - t0
@@ -200,16 +200,18 @@ def partition_counts(df: DataFrame) -> DataFrame:
     return df.groupBy("p_day").agg(F.count(F.lit(1)).alias("rows"))
 
 
-def write_partition_counts(counts: DataFrame, path: str) -> int:
+def write_partition_counts(counts: DataFrame, path: str) -> tuple[int, int]:
     """Write a (p_day, rows) counts table as one file and return its row
-    count — the stage's partition count — observed on the write itself, so
-    the table is never read back to count it. ``coalesce(1)`` narrows the
-    aggregate's output to one writer task without another shuffle."""
+    count — the stage's partition count — and the sum of its ``rows``,
+    both observed on the write itself, so the table is never read back to
+    count it. ``coalesce(1)`` narrows the aggregate's output to one writer
+    task without another shuffle."""
     obs = Observation()
-    counts.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return int(obs.get["n"])
+    counts.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("rows").alias("rows")
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    got = obs.get
+    return int(got["n"]), int(got["rows"] or 0)
 
 
 def verify_partition_lineage(io: TableIO, name: str) -> bool:

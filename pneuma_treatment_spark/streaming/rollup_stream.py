@@ -145,13 +145,15 @@ def run_deadletter_capture(
     ``09lane_node.py:303-318``).
 
     A tee of the same file source the rollup aggregation reads: each
-    micro-batch recomputes Spark's own watermark rule — ``max event time
-    over all PRIOR batches − delay`` (exactly how the engine derives the
-    bound the agg drops against; the agg's ms-floor of max only lowers its
-    bound, so matching on raw max never under-captures a batch-aligned
-    row) — and writes rows older than that bound to
-    ``dead_path/batch_id=<epoch>`` with ``mode("overwrite")`` (the same
-    replayed-epoch idempotence pattern as :func:`run_rollup_chunk_sink`).
+    micro-batch bounds its rows by ``max event time over all PRIOR
+    batches − delay`` (the watermark Spark records for the batch) and
+    writes rows older than that to ``dead_path/batch_id=<epoch>`` with
+    ``mode("overwrite")`` (the same replayed-epoch idempotence pattern as
+    :func:`run_rollup_chunk_sink`). Spark drops late input against a lower
+    bound, the PREVIOUS batch's watermark (and the agg's ms-floor of max
+    lowers it further), so no batch-aligned row is under-captured; a drain
+    of several data batches over-captures (harmless: the heal upsert is
+    idempotent).
     Malformed rows (:func:`..plans.stages.malformed_row`) are never
     captured — the backfill delta check would reject the whole heal — and
     never count toward the max (:func:`stream_rollup_1m` drops them before
@@ -165,8 +167,10 @@ def run_deadletter_capture(
 
     Alignment contract: each ``availableNow`` drain (one per cycle —
     it processes the files that exist) shows the capture the same arrival
-    boundaries as the aggregation, so the captured set equals the dropped
-    set. ``run_stream_cycle`` starts both drains together, so both list
+    boundaries as the aggregation; a drain of one data batch ends with a
+    no-data batch that lifts the late-input bound to the recorded
+    watermark, so the captured set equals the dropped set.
+    ``run_stream_cycle`` starts both drains together, so both list
     the source at almost the same instant and a file landing mid-cycle is
     rarely seen by one drain but not the other. If the two queries'
     micro-batches interleave differently WITHIN a drain (one spanning

@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 
 from jobs.rollup_job import run_pipeline
 from pneuma_treatment_spark.io.tableio import TableIO
-from pneuma_treatment_spark.plans.backfill import backfill_pipeline, merge_conv_scoped
+from pneuma_treatment_spark.plans.backfill import (
+    _affected_buckets,
+    backfill_pipeline,
+    merge_conv_scoped,
+)
 from pneuma_treatment_spark.plans.lineage import read_stage, verify_partition_lineage
 from pneuma_treatment_spark.plans.stages import LAYOUTS
 from pneuma_treatment_spark.synth import generate_transcripts
@@ -235,9 +239,8 @@ def test_merge_drops_emptied_partition(spark, tmp_path):
     moved = rows.where(F.col("conv_id") == "cx").withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 10 DAYS")
     )
-    stats = merge_conv_scoped(
-        io, "tab", moved, spark.createDataFrame([("cx",)], ["conv_id"])
-    )
+    aff = spark.createDataFrame([("cx",)], ["conv_id"])
+    stats = merge_conv_scoped(io, "tab", moved, aff, _affected_buckets(aff, io.n_buckets))
     assert stats["stale_dropped"] == 1
     out = io.read("tab").toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert sorted(out["p_day"].astype(str).unique()) == ["2024-01-11", "2024-02-01"]
@@ -248,6 +251,105 @@ def test_merge_drops_emptied_partition(spark, tmp_path):
     assert not (tab / "p_day=2024-01-01").exists()
     assert all(any(b.name.startswith("p_bucket=") for b in d.iterdir())
                for d in tab.glob("p_day=*"))
+
+
+def test_merge_one_predicate_over_many_partitions(spark, tmp_path):
+    """An affected conversation spanning 70 partitions of a day-only
+    table merges through the one flat partition predicate: the table
+    equals a rebuild, and every other partition keeps its file names and
+    sizes."""
+    import datetime as dt
+
+    io = TableIO(spark, str(tmp_path / "t"), n_buckets=2)
+    day0 = dt.datetime(2024, 1, 1, 10)
+    rows = spark.createDataFrame(
+        [("cx", d, day0 + dt.timedelta(days=d), 1.0) for d in range(70)]
+        + [("cy", d, day0 + dt.timedelta(days=d, hours=1), 2.0) for d in range(80)],
+        "conv_id string, turn_idx int, ts timestamp, v double",
+    )
+    io.write(rows, "tab", partition_cols=("p_day",))
+    tab = tmp_path / "t" / "tab"
+
+    def files(days):
+        return {
+            str(f.relative_to(tab)): f.stat().st_size
+            for d in days for f in (tab / f"p_day={d}").glob("*.parquet")
+        }
+
+    untouched = [(day0 + dt.timedelta(days=d)).date() for d in range(70, 80)]
+    before = files(untouched)
+    assert len(before) >= len(untouched)
+    fixed = rows.where(F.col("conv_id") == "cx").withColumn("v", F.lit(3.0))
+    stats = merge_conv_scoped(
+        io, "tab", fixed, spark.createDataFrame([("cx",)], ["conv_id"]), [],
+        partition_cols=("p_day",),
+    )
+    assert stats["parts_rewritten"] == 70 and stats["stale_dropped"] == 0
+    assert stats["removed"] == stats["added"] == 70
+    assert files(untouched) == before
+
+    want_io = TableIO(spark, str(tmp_path / "want"), n_buckets=2)
+    want_io.write(
+        rows.where(F.col("conv_id") == "cy").unionByName(fixed), "tab",
+        partition_cols=("p_day",),
+    )
+    _assert_same_rows(io.read("tab"), want_io.read("tab"), "tab")
+
+
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("table", ["ingest", "rollup_1h"])
+def test_rerun_heals_backfill_killed_before_lineage_splice(
+    spark, tmp_path, monkeypatch, table
+):
+    """A backfill killed after ``table``'s merge wrote the table but before
+    its lineage splice is healed by re-running the same delta (the
+    documented recovery): every table equals a fresh run over the updated
+    input, and all seven lineages are green. The re-run's merge sees
+    removed == added, so a manifest total adjusted by those counts would
+    keep the total of the killed run."""
+    from pneuma_treatment_spark.plans import backfill
+
+    args = dict(n_convs=12, seed=3, mega_turns=0)
+    base_path, delta_path = str(tmp_path / "raw"), str(tmp_path / "delta")
+    generate_transcripts(spark, 12, seed=3).write.parquet(base_path)
+    base = spark.read.parquet(base_path)
+    c = base.select("conv_id").distinct().orderBy("conv_id").first()["conv_id"]
+    last = base.where(F.col("conv_id") == c).orderBy(F.col("turn_idx").desc()).limit(1)
+    last.select(
+        "conv_id",
+        (F.col("turn_idx") + 1).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.lit("a late turn three hours on").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        (F.col("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
+    ).write.parquet(delta_path)
+    delta = spark.read.parquet(delta_path)
+    upd_path = str(tmp_path / "upd")
+    base.unionByName(delta).write.parquet(upd_path)
+
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, **args, input_table=base_path)
+    splice = backfill.update_lineage
+
+    def killed_at(io, name, stats):
+        if name == table:
+            raise _Killed(name)
+        splice(io, name, stats)
+
+    monkeypatch.setattr(backfill, "update_lineage", killed_at)
+    with pytest.raises(_Killed):
+        backfill_pipeline(spark, wd_a, delta)
+    monkeypatch.undo()
+    backfill_pipeline(spark, wd_a, delta)
+
+    run_pipeline(spark, wd_b, **args, input_table=upd_path)
+    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
+    for t in TABLES:
+        _assert_same_rows(read_stage(io_a, t), read_stage(io_b, t), t)
+        assert verify_partition_lineage(io_a, t), t
 
 
 def test_backfill_rejects_contradicting_cfg(spark, env):

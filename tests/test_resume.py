@@ -241,6 +241,51 @@ def test_compact_swap_crash_heals(spark, tmp_path, monkeypatch, kill_after):
     )
 
 
+def test_resume_after_killed_compaction_equals_fresh_run(spark, workdir, monkeypatch):
+    """A compaction killed after its swap's first move leaves ``rollup_1h``
+    parked aside; the next ``run_pipeline`` on the workdir moves it back
+    before any stage reads it, and every table equals a fresh run with
+    lineage green. The resumed stages read their tables, so without that
+    heal the run fails on the missing path."""
+    import os
+
+    from pneuma_treatment_spark.plans.lineage import load_manifest, manifest_schema
+    from pneuma_treatment_spark.plans.stages import LAYOUTS
+
+    args = dict(n_convs=3, seed=1, mega_turns=0)
+    run_pipeline(spark, workdir, **args)
+    io = TableIO(spark, workdir)
+    move, moves = shutil.move, []
+
+    def killed_after_first(src, dst, *a, **kw):
+        move(src, dst, *a, **kw)
+        moves.append(src)
+        raise _Killed(moves)
+
+    monkeypatch.setattr(shutil, "move", killed_after_first)
+    with pytest.raises(_Killed):
+        io.compact(
+            "rollup_1h", LAYOUTS["rollup_1h"][1],
+            manifest_schema(load_manifest(workdir, "rollup_1h")),
+        )
+    monkeypatch.undo()
+    assert not os.path.exists(io.path("rollup_1h"))
+
+    run_pipeline(spark, workdir, **args)
+    fresh_dir = workdir + "_fresh"
+    run_pipeline(spark, fresh_dir, **args)
+    fresh = TableIO(spark, fresh_dir)
+    try:
+        for table in sorted(ALL_STAGES):
+            got = io.read(table)
+            want = fresh.read(table).select(*got.columns)
+            assert got.exceptAll(want).count() == 0, table
+            assert want.exceptAll(got).count() == 0, table
+            assert verify_partition_lineage(io, table), table
+    finally:
+        shutil.rmtree(fresh_dir, ignore_errors=True)
+
+
 def test_manifest_write_is_atomic(spark, workdir, monkeypatch):
     """A crash while a stage manifest is being written leaves the previous
     manifest whole (never torn JSON), and the next run completes the stage."""

@@ -596,6 +596,101 @@ def test_deadletter_capture_heals_batch_tables(spark, tmp_path):
         pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)], check_dtype=False), t
 
 
+def test_deadletter_capture_covers_multi_batch_drain(spark, tmp_path):
+    """A drain that spans several data batches (one file per trigger):
+    Spark drops late input against the PREVIOUS batch's watermark, so the
+    aggregation keeps rows the capture's prior-batch bound captures. Every
+    source row of a closed bucket is either counted in the rollup sink or
+    captured (over-capture, never under-capture), and the heal of the
+    over-captured delta equals a rebuild on the full input."""
+    import glob as _glob
+    import os
+    import shutil as _sh
+    import time as _time
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from jobs.rollup_job import run_pipeline
+    from pneuma_treatment_spark.io.tableio import TableIO
+    from pneuma_treatment_spark.plans.backfill import backfill_pipeline
+    from pneuma_treatment_spark.plans.stages import LAYOUTS
+    from pneuma_treatment_spark.streaming.rollup_stream import (
+        read_dead_letter,
+        read_transcript_stream,
+        run_deadletter_capture,
+        run_rollup_chunk_sink,
+        stream_rollup_1m,
+    )
+    from pneuma_treatment_spark.synth import generate_transcripts
+
+    args = dict(n_convs=8, seed=29, mega_turns=0)
+    full_path = str(tmp_path / "full")
+    generate_transcripts(spark, 8, seed=29).write.parquet(full_path)
+    full = spark.read.parquet(full_path)
+    # three arrival files in event-time order; the six earliest rows arrive
+    # late, three in each later file
+    pdf = full.toPandas().sort_values(["ts", "conv_id", "turn_idx"]).reset_index(drop=True)
+    third = len(pdf) // 3
+    files = [
+        pdf.iloc[6:third],
+        pd.concat([pdf.iloc[third:2 * third], pdf.iloc[0:3]]),
+        pd.concat([pdf.iloc[2 * third:], pdf.iloc[3:6]]),
+    ]
+    src, sink, chunk_sink = (str(tmp_path / d) for d in ("src", "sink", "chunks"))
+    dead = str(tmp_path / "dead")
+    os.makedirs(src)
+    now = _time.time()
+    for i, part in enumerate(files):
+        rows = full.join(
+            spark.createDataFrame(part[["conv_id", "turn_idx"]]), ["conv_id", "turn_idx"], "left_semi"
+        )
+        rows.coalesce(1).write.parquet(f"{src}/__stage")
+        _sh.move(_glob.glob(f"{src}/__stage/part-*.parquet")[0], f"{src}/{i:03d}.parquet")
+        _sh.rmtree(f"{src}/__stage")
+        os.utime(f"{src}/{i:03d}.parquet", (now - 90 + 30 * i, now - 90 + 30 * i))
+
+    q = run_rollup_chunk_sink(
+        stream_rollup_1m(read_transcript_stream(spark, src, max_files=1)),
+        sink, chunk_sink, str(tmp_path / "ck_r"),
+    )
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    run_deadletter_capture(spark, src, dead, str(tmp_path / "ck_c"), max_files=1)
+
+    cap = read_dead_letter(spark, dead).toPandas()
+    got = spark.read.option("basePath", sink).parquet(sink).toPandas()
+    got = got.groupby(["conv_id", "bucket_ts"]).turn_count.sum()
+    pdf["bucket_ts"] = pdf.ts.dt.floor("min")
+    src_n = pdf.groupby(["conv_id", "bucket_ts"]).size()
+    cap["bucket_ts"] = cap.ts.dt.floor("min")
+    cap_n = cap.groupby(["conv_id", "bucket_ts"]).size()
+    # the closing watermark (max event time - 10 min) closed these buckets
+    closed = src_n[
+        src_n.index.get_level_values(1) + pd.Timedelta(minutes=1)
+        <= pdf.ts.max().floor("ms") - pd.Timedelta(minutes=10)
+    ]
+    dropped = closed - got.reindex(closed.index, fill_value=0)
+    covered = cap_n.reindex(closed.index, fill_value=0)
+    assert (dropped >= 0).all() and (covered >= dropped).all()
+    assert dropped.sum() == 3  # the last file's late rows
+    assert len(cap) > dropped.sum()  # the middle file's were kept, and captured
+
+    # heal: batch tables on the uncaptured rows + the captured delta
+    kept_path = str(tmp_path / "kept")
+    full.join(
+        spark.createDataFrame(cap[["conv_id", "turn_idx"]]), ["conv_id", "turn_idx"], "left_anti"
+    ).write.parquet(kept_path)
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, **args, input_table=kept_path)
+    backfill_pipeline(spark, wd_a, read_dead_letter(spark, dead))
+    run_pipeline(spark, wd_b, **args, input_table=full_path)
+    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
+    for t in LAYOUTS:
+        a, b = io_a.read(t), io_b.read(t)
+        b = b.select(*a.columns)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+
+
 def test_stream_ingest_job_cycles(spark, transcripts_df, tmp_path):
     """The ops surface (jobs/stream_ingest_job.run_stream_cycle): one drain
     fills the rollup + chunk sinks and captures nothing; a late arrival in
