@@ -49,7 +49,6 @@ def run_once(
         "--seed", str(seed),
         "--cpus", str(cpus),
         "--buckets", "8",
-        "--stats", "fast",
     ]
     if compact:
         cmd.append("--compact")

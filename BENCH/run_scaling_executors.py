@@ -140,7 +140,6 @@ def _cmd(core_list: list[int], wd: str, n_convs: int, mega: int, seed: int,
         "--seed", str(seed),
         "--cpus", str(len(core_list)),
         "--buckets", "8",
-        "--stats", "fast",
         "--shard-index", str(shard),
         "--shard-count", str(nshards),
     ]

@@ -59,7 +59,6 @@ def main() -> None:
             t0 = time.perf_counter()
             summary = run_pipeline(
                 spark, wd, n_convs=args.pipe_convs, seed=42, mega_turns=100000,
-                stats="fast",
             )
             wall = time.perf_counter() - t0
         finally:

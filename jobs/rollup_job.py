@@ -35,7 +35,7 @@ from pneuma_treatment_spark.operators.rollup import (
     with_turn_metrics,
 )
 from pneuma_treatment_spark.operators.treatment import TreatmentConfig
-from pneuma_treatment_spark.plans.backfill import update_lineage
+from pneuma_treatment_spark.plans.backfill import record_unspliced, update_lineage
 from pneuma_treatment_spark.plans.lineage import (
     PipelineRunner,
     load_manifest,
@@ -79,8 +79,10 @@ def run_pipeline(
 
     ``input_table``: optional path to an existing transcripts parquet table;
     default synthesizes deterministically; malformed rows are rejected
-    before any write (``stages.check_transcripts``). ``chunked=True`` is
-    the only accepted value. ``stop_after``: stage name to halt
+    before any write (``stages.check_transcripts``). ``chunked=True`` and
+    ``stats="full"`` are the only accepted values (every stage commit
+    writes its per-day counts table; callers that still pass the keyword
+    keep working). ``stop_after``: stage name to halt
     after (used by the resume tests to simulate a mid-job kill) — only that
     stage and its upstream stages run, on the same two-branch executor as a
     full run; the branch not holding it is never submitted, and the TTL
@@ -91,15 +93,19 @@ def run_pipeline(
         raise ValueError(f"stop_after={stop_after!r} is not a stage: {stages}")
     if not chunked:
         raise ValueError("chunked=False is gone: the treatment always runs chunk+halo")
+    if stats != "full":
+        raise ValueError(f"stats={stats!r} is gone: every stage writes its per-day counts")
     cfg = cfg or TreatmentConfig()
     windows = chunk_window_days or dict(TIER_WINDOW_DAYS)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
     # tables a killed compaction swap left aside; healed here, before any
     # read, since a heal inside TableIO.read could race a concurrent swap
     heal_asides(Path(workdir))
+    # and counts tables a killed lineage splice left aside: a stage whose
+    # counts table is missing still skips, and its lineage reads red
+    heal_asides(Path(workdir) / "_manifest")
     runner = PipelineRunner(
         io,
-        stats=stats,
         config={
             "n_convs": n_convs,
             "seed": seed,
@@ -252,17 +258,15 @@ def _ttl_sweep(io: TableIO, table: str, predicate: str) -> None:
     """Drop ``table``'s expired partitions, record ``predicate`` in its
     manifest (a later backfill merge drops the recomputed rows it matches)
     and splice its lineage (manifest rows, per-day counts) the way a
-    backfill merge does, so ``verify_partition_lineage`` stays green."""
-    expired = io.delete_where(
+    backfill merge does, so ``verify_partition_lineage`` stays green. The
+    expired days are recorded as unspliced before the drop, so a sweep
+    killed before its splice is healed by the next one."""
+    io.delete_where(
         table, predicate, LAYOUTS[table][1],
         manifest_schema(load_manifest(io.root, table)),
+        before_drop=lambda rows: record_unspliced(io, table, {r["p_day"] for r in rows}),
     )
-    update_lineage(io, table, {
-        "removed": sum(r["count"] for r in expired),
-        "added": 0,
-        "aff_days": {r["p_day"] for r in expired},
-        "ttl": predicate,
-    })
+    update_lineage(io, table, ttl=predicate)
 
 
 def main() -> None:
@@ -285,7 +289,6 @@ def main() -> None:
         "with no --buckets ADOPTS the count recorded in the table manifests, "
         "and an explicit contradicting value is a loud error)",
     )
-    ap.add_argument("--stats", default="full", choices=["full", "fast"])
     ap.add_argument("--shard-index", type=int, default=0)
     ap.add_argument("--shard-count", type=int, default=1)
     ap.add_argument(
@@ -371,7 +374,6 @@ def main() -> None:
         input_table=args.input_table,
         ttl_now=args.ttl_now,
         n_buckets=args.buckets if args.buckets is not None else 8,
-        stats=args.stats,
         shard_index=args.shard_index,
         shard_count=args.shard_count,
     )

@@ -33,6 +33,7 @@ idempotence. We keep the restartability, fix the layout.
 from __future__ import annotations
 
 import shutil
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.errors import AnalysisException
@@ -222,7 +223,12 @@ class TableIO:
         return reader.parquet(self.path(table))
 
     def delete_where(
-        self, table: str, predicate: str, partition_cols, schema: T.StructType
+        self,
+        table: str,
+        predicate: str,
+        partition_cols,
+        schema: T.StructType,
+        before_drop: Callable[[list[Row]], None] | None = None,
     ) -> list[Row]:
         """Partition-level TTL delete (Iceberg's metadata-only ``DELETE
         WHERE <partition predicate>``): drop the partition dirs of ``table``
@@ -236,7 +242,9 @@ class TableIO:
         rejected with a ``ValueError`` before anything is read: it is
         analysed against an empty frame of the partition columns (no job
         runs; a projection of the table would still resolve a data
-        column)."""
+        column). ``before_drop``, if given, gets those rows before any dir
+        is dropped (the TTL sweep records their days for its lineage
+        splice, which a re-run after a kill would no longer find)."""
         cols = list(partition_cols)
         probe = T.StructType([schema[c] for c in cols])
         try:
@@ -249,6 +257,8 @@ class TableIO:
         expired = (
             self.read(table, schema).where(predicate).groupBy(*cols).count().collect()
         )
+        if before_drop is not None:
+            before_drop(expired)
         self.drop_partitions(table, [tuple(r[c] for c in cols) for r in expired], cols)
         return expired
 

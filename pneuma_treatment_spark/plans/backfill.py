@@ -38,19 +38,18 @@ erasure request must remove every derived row too) is
 empty recompute side. Re-running the same delta is idempotent, which is
 also the crash-recovery story: a backfill killed between table merges,
 or between a merge and its lineage splice, is healed by re-running it
-(each per-table merge and splice is independently idempotent). Not
-healed: a kill before the splice of a merge that moved the affected
-conversations' last rows out of a day — the re-run's census no longer
-holds that day, so its stale count stays in the counts table.
+(each per-table merge and splice is independently idempotent). A day
+the merge moved the affected conversations' last rows out of is in no
+re-run's census, so each merge records its days in the table's manifest
+before it writes, and the splice recounts and clears them.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
 import time
 from collections.abc import Callable
+from datetime import date
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,6 +73,7 @@ from pneuma_treatment_spark.plans.lineage import (
     manifest_schema,
     partition_counts,
     read_stage,
+    write_manifest,
     write_partition_counts,
 )
 from pneuma_treatment_spark.plans.stages import (
@@ -88,6 +88,10 @@ from pneuma_treatment_spark.plans.stages import (
 #: dropped so dead-letter sink dirs (which carry a batch_id partition level)
 #: feed straight into --backfill-table
 _DELTA_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+#: the manifest key of the days a merge rewrote whose lineage splice has
+#: not run yet: a kill between the two leaves them for the re-run's splice
+_UNSPLICED = "unspliced_days"
 
 
 def _affected_buckets(affected: DataFrame, n_buckets: int) -> list[int]:
@@ -127,7 +131,9 @@ def merge_conv_scoped(
     not written, not touched. Both sets come from one collected census
     per partition: old rows, old rows of the affected conversations
     (removed) and recomputed rows (added) — bounded metadata, what
-    Iceberg's planner holds."""
+    Iceberg's planner holds. The census days are added to the manifest's
+    ``unspliced_days`` before the write; :func:`update_lineage` clears
+    them."""
     nr = io.with_partition_cols(new_rows, ts_col, partition_cols).persist()
     pcols = list(partition_cols)
     old = read_stage(io, table)
@@ -153,6 +159,8 @@ def merge_conv_scoped(
     )
     census = {tuple(r[c] for c in pcols): (r["rows"], r["removed"], r["added"]) for r in counts}
     stale = [p for p, (rows, removed, added) in census.items() if rows == removed and not added]
+    day_i = pcols.index("p_day")
+    record_unspliced(io, table, {p[day_i] for p in census})
 
     # one flat partition predicate at any set size: Spark pushes it into
     # the scan's PartitionFilters (IN, or INSET above 10 values)
@@ -167,41 +175,49 @@ def merge_conv_scoped(
         io.drop_partitions(table, stale, pcols)
 
     nr.unpersist()
-    day_i = pcols.index("p_day")
     return {
         "removed": sum(n[1] for n in census.values()),
         "added": sum(n[2] for n in census.values()),
         "parts_rewritten": len(census),
         "stale_dropped": len(stale),
-        "aff_days": {p[day_i] for p in census},
     }
 
 
-def update_lineage(io: TableIO, name: str, stats: dict) -> None:
+def record_unspliced(io: TableIO, name: str, days) -> None:
+    """Add ``days`` to the ``unspliced_days`` of ``name``'s manifest, in one
+    crash-atomic manifest write, before a backfill merge or a TTL drop
+    rewrites them: a kill between that rewrite and its
+    :func:`update_lineage` leaves them for the next splice, which a re-run
+    census no longer finds once a day was emptied or dropped."""
+    m = load_manifest(io.root, name)
+    if m and days:
+        m[_UNSPLICED] = sorted({*m.get(_UNSPLICED, ()), *map(str, days)})
+        write_manifest(io.root, name, m)
+
+
+def update_lineage(io: TableIO, name: str, ttl: str | None = None) -> None:
     """Keep a stage's lineage contract green after a rewrite of some of
     its days — a backfill merge, or the TTL sweep in
-    ``jobs/rollup_job.run_pipeline``: splice the recounted ``aff_days``
-    into the per-partition counts table and set the manifest total to its
-    sum (``verify_partition_lineage`` recounts distributed and
-    cross-checks both); only without a counts table (``stats="fast"``)
-    is the total adjusted by ``removed``/``added``, which cancel on a
-    re-run after a kill before the splice. A sweep passes its predicate
-    as ``ttl``; the manifest records it, and later merges drop the
-    recomputed rows it matches (:func:`_merge_tables`)."""
-    mpath = Path(io.root) / "_manifest" / f"{name}.json"
-    if not mpath.exists():
+    ``jobs/rollup_job.run_pipeline``: splice the recounted days the
+    manifest records as unspliced (:func:`record_unspliced`; this rewrite's
+    and any a killed one left) into the per-day counts table, set the
+    manifest total to its sum (``verify_partition_lineage`` recounts
+    distributed and cross-checks both) and clear those days in the same
+    manifest write. A table with days to splice and no counts table is a
+    ``ValueError``: its lineage is already lost (``verify_partition_lineage``
+    reads it red). A sweep passes its predicate as ``ttl``; the manifest
+    records it, and later merges drop the recomputed rows it matches
+    (:func:`_merge_tables`)."""
+    m = load_manifest(io.root, name)
+    if not m:
         return
-    m = json.loads(mpath.read_text())
-    m["rows"] = int(m["rows"]) - stats["removed"] + stats["added"]
     mdir = Path(io.root) / "_manifest"
     ppath = mdir / f"{name}_partitions"
-    legacy_aside = Path(str(ppath) + ".__old__")
-    if not ppath.exists() and legacy_aside.exists():
-        # heal a crash from a pre-r7 build (old aside naming)
-        shutil.move(str(legacy_aside), str(ppath))
     heal_asides(mdir, f".aside.{name}_partitions")
-    days = sorted(stats["aff_days"])
-    if ppath.exists() and days:
+    days = sorted(map(date.fromisoformat, m.pop(_UNSPLICED, ())))
+    if days:
+        if not ppath.exists():
+            raise ValueError(f"{name} has days to splice but no counts table {ppath}")
         recount = partition_counts(
             io.read(name, schema=manifest_schema(m)).where(F.col("p_day").isin(days))
         )
@@ -215,14 +231,10 @@ def update_lineage(io: TableIO, name: str, stats: dict) -> None:
         # recovery actually recovers
         swap_dir(ppath, tmp)
         m["n_partitions"] = n_parts
-    if "ttl" in stats:
-        m["ttl"] = stats["ttl"]
+    if ttl is not None:
+        m["ttl"] = ttl
     m["backfilled_at"] = time.time()
-    # crash-atomic: a kill mid-write must never leave truncated JSON (the
-    # documented recovery — re-run the delta — would then die at json.loads)
-    tmp_m = mpath.with_suffix(".json.tmp")
-    tmp_m.write_text(json.dumps(m, indent=2))
-    os.replace(tmp_m, mpath)
+    write_manifest(io.root, name, m)
 
 
 def _manifest_config(workdir: str, stage: str) -> dict:
@@ -285,6 +297,7 @@ def backfill_pipeline(
     that owns the conversations; the CLI rejects ``--shard-count > 1``).
     """
     heal_asides(Path(workdir))  # tables a killed compaction swap left aside
+    heal_asides(Path(workdir) / "_manifest")  # counts tables a killed splice left aside
     rec_cfg = _manifest_config(workdir, "filled")
     recorded = rec_cfg.get("treatment")
     if recorded is not None:
@@ -407,7 +420,7 @@ def _merge_tables(
             io, name, rows, affected, buckets,
             ts_col=ts_col, partition_cols=partition_cols,
         )
-        update_lineage(io, name, stats)
+        update_lineage(io, name)
         return name, {
             k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
         }
@@ -494,6 +507,7 @@ def delete_conversations(
     if "conv_id" not in convs.columns:
         raise ValueError("delete_conversations needs a conv_id column")
     heal_asides(Path(workdir))  # tables a killed compaction swap left aside
+    heal_asides(Path(workdir) / "_manifest")  # counts tables a killed splice left aside
     n_buckets = _adopt_recorded_buckets(_manifest_config(workdir, "filled"), n_buckets)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
     # detached from its source, as in backfill_pipeline (and with its

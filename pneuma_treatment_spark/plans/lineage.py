@@ -47,14 +47,13 @@ class StageResult:
 
 
 class PipelineRunner:
-    def __init__(self, io: TableIO, config: dict | None = None, stats: str = "full"):
-        # stats: "full" collects per-partition row counts into the manifest
-        # (the lineage contract); "fast" records total rows only (parquet
-        # footer metadata count — used by throughput benches where the extra
-        # per-stage count job is measurable overhead).
+    """Every stage commit writes its table, its per-day counts table
+    (``_manifest/<name>_partitions``) and its manifest, so a stage layout
+    must carry ``p_day`` (every ``stages.LAYOUTS`` entry does)."""
+
+    def __init__(self, io: TableIO, config: dict | None = None):
         self.io = io
         self.config = config or {}
-        self.stats = stats
         self.manifest_dir = Path(io.root) / "_manifest"
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
         self._sigs: dict[str, str] = {}
@@ -123,42 +122,30 @@ class PipelineRunner:
         rows = _observed_rows(obs)
         if rows is None:
             rows = out.count()  # one job, and only for an empty scan
-        n_parts = 0
-        if self.stats == "full" and "p_day" in out.columns:
-            # Per-partition lineage counts are a TABLE, not driver state: at
-            # 10^12 turns x years of days a per-stage python dict of counts
-            # is a driver-side list per write. The counts DataFrame writes
-            # straight to parquet; only the O(1) partition COUNT crosses to
-            # the driver (for the summary), never the rows.
-            n_parts, _ = write_partition_counts(
-                partition_counts(out), self._partitions_path(name)
-            )
-        wall = time.perf_counter() - t0
-        # crash-atomic: a kill mid-write must never leave torn JSON for the
-        # next resume's json.loads — write aside, then rename into place
-        tmp_m = mpath.with_suffix(".json.tmp")
-        tmp_m.write_text(
-            json.dumps(
-                {
-                    "status": "COMPLETE",
-                    "stage": name,
-                    "signature": sig,
-                    "rows": rows,
-                    "n_partitions": n_parts,
-                    "schema": schema.json(),
-                    "wall_sec": round(wall, 3),
-                    "finished_at": time.time(),
-                    # the raw config, not just its signature hash: ops
-                    # tooling that recomputes this stage (plans/backfill.py)
-                    # must reproduce the recorded parameters exactly, and a
-                    # hash can be compared but not adopted
-                    "config": self.config,
-                },
-                indent=2,
-                default=str,
-            )
+        # Per-partition lineage counts are a TABLE, not driver state: at
+        # 10^12 turns x years of days a per-stage python dict of counts is a
+        # driver-side list per write. The counts DataFrame writes straight
+        # to parquet; only the O(1) partition COUNT crosses to the driver
+        # (for the summary), never the rows.
+        n_parts, _ = write_partition_counts(
+            partition_counts(out), self._partitions_path(name)
         )
-        os.replace(tmp_m, mpath)
+        wall = time.perf_counter() - t0
+        write_manifest(self.io.root, name, {
+            "status": "COMPLETE",
+            "stage": name,
+            "signature": sig,
+            "rows": rows,
+            "n_partitions": n_parts,
+            "schema": schema.json(),
+            "wall_sec": round(wall, 3),
+            "finished_at": time.time(),
+            # the raw config, not just its signature hash: ops tooling that
+            # recomputes this stage (plans/backfill.py) must reproduce the
+            # recorded parameters exactly, and a hash can be compared but
+            # not adopted
+            "config": self.config,
+        })
         self.results[name] = StageResult(name, sig, rows, False, wall, n_parts)
         return out
 
@@ -181,6 +168,16 @@ def manifest_schema(m: dict) -> StructType | None:
     """The read-back schema a stage manifest recorded (None for manifests
     written before it was recorded — those tables fall back to inference)."""
     return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
+
+
+def write_manifest(root: str, name: str, m: dict) -> None:
+    """Write ``m`` as the manifest of stage ``name`` under workdir ``root``,
+    crash-atomically: a kill mid-write must never leave torn JSON for the
+    next run's ``json.loads`` — write aside, then rename into place."""
+    mpath = Path(root) / "_manifest" / f"{name}.json"
+    tmp_m = mpath.with_suffix(".json.tmp")
+    tmp_m.write_text(json.dumps(m, indent=2, default=str))
+    os.replace(tmp_m, mpath)
 
 
 def load_manifest(root: str, name: str) -> dict:
@@ -224,8 +221,7 @@ def verify_partition_lineage(io: TableIO, name: str) -> bool:
     m = json.loads((Path(io.root) / "_manifest" / f"{name}.json").read_text())
     ppath = Path(io.root) / "_manifest" / f"{name}_partitions"
     if not ppath.exists():
-        # stats="fast" runs (bench) and pre-table-format manifests have no
-        # partitions table — that is a failed integrity check, not a crash
+        # a lost counts table is a failed integrity check, not a crash
         return False
     actual = partition_counts(io.read(name, schema=manifest_schema(m)))
     stored = io.spark.read.schema(actual.schema).parquet(str(ppath))

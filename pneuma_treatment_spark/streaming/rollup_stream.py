@@ -64,13 +64,11 @@ def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFr
     Malformed rows (:func:`..plans.stages.malformed_row`) are dropped
     before the watermark, so they neither reach a bucket nor move the
     watermark; :func:`run_deadletter_capture` counts them."""
-    m = with_turn_metrics(stream.where(~malformed_row())).withWatermark("ts", watermark)
-    agg = m.groupBy(
-        F.col("conv_id"), F.window("ts", "1 minute").alias("win")
-    ).agg(*raw_partials())
-    out = agg.select(
-        "conv_id", F.col("win.start").alias("bucket_ts"), *PARTIAL_COLS
-    ).withColumn("tier", F.lit("1m"))
+    agg = stream_tumbling_rollup(
+        with_turn_metrics(stream.where(~malformed_row())),
+        ["conv_id"], raw_partials(), watermark=watermark,
+    )
+    out = agg.select("conv_id", "bucket_ts", *PARTIAL_COLS).withColumn("tier", F.lit("1m"))
     return _with_rates(out, 60)
 
 
@@ -82,8 +80,8 @@ def stream_tumbling_rollup(
     window: str = "1 minute",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Generic watermarked tumbling rollup over any keyed stream (the
-    event-table counterpart of :func:`stream_rollup_1m`). Append-mode
+    """Generic watermarked tumbling rollup over any keyed stream
+    (:func:`stream_rollup_1m` is its transcript instance). Append-mode
     semantics: a bucket is emitted once the watermark passes its window end
     — on a bounded run, output = exactly the closed-window region of the
     batch rollup (the equality the batch-twin driver query hash-gates)."""

@@ -10,6 +10,7 @@ partially-merged backfill)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 
@@ -23,8 +24,14 @@ from pneuma_treatment_spark.plans.backfill import (
     _affected_buckets,
     backfill_pipeline,
     merge_conv_scoped,
+    record_unspliced,
+    update_lineage,
 )
-from pneuma_treatment_spark.plans.lineage import read_stage, verify_partition_lineage
+from pneuma_treatment_spark.plans.lineage import (
+    PipelineRunner,
+    read_stage,
+    verify_partition_lineage,
+)
 from pneuma_treatment_spark.plans.stages import LAYOUTS
 from pneuma_treatment_spark.synth import generate_transcripts
 
@@ -300,16 +307,22 @@ class _Killed(Exception):
     pass
 
 
-@pytest.mark.parametrize("table", ["ingest", "rollup_1h"])
+@pytest.mark.parametrize(
+    "table, shift",
+    [("ingest", False), ("rollup_1h", False), ("ingest", True), ("rollup_1h", True)],
+    ids=["ingest", "rollup_1h", "ingest-shift30d", "rollup_1h-shift30d"],
+)
 def test_rerun_heals_backfill_killed_before_lineage_splice(
-    spark, tmp_path, monkeypatch, table
+    spark, tmp_path, monkeypatch, table, shift
 ):
     """A backfill killed after ``table``'s merge wrote the table but before
     its lineage splice is healed by re-running the same delta (the
     documented recovery): every table equals a fresh run over the updated
-    input, and all seven lineages are green. The re-run's merge sees
-    removed == added, so a manifest total adjusted by those counts would
-    keep the total of the killed run."""
+    input, and all seven lineages are green. The delta is a late turn
+    (the re-run's merge sees removed == added, so a manifest total
+    adjusted by those counts would keep the total of the killed run) or,
+    with ``shift``, one conversation moved 30 days on (the re-run's census
+    no longer holds the days the conversation left)."""
     from pneuma_treatment_spark.plans import backfill
 
     args = dict(n_convs=12, seed=3, mega_turns=0)
@@ -317,27 +330,34 @@ def test_rerun_heals_backfill_killed_before_lineage_splice(
     generate_transcripts(spark, 12, seed=3).write.parquet(base_path)
     base = spark.read.parquet(base_path)
     c = base.select("conv_id").distinct().orderBy("conv_id").first()["conv_id"]
-    last = base.where(F.col("conv_id") == c).orderBy(F.col("turn_idx").desc()).limit(1)
-    last.select(
-        "conv_id",
-        (F.col("turn_idx") + 1).alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit("a late turn three hours on").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        (F.col("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-    ).write.parquet(delta_path)
+    conv = base.where(F.col("conv_id") == c)
+    if shift:
+        conv.withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS")).write.parquet(
+            delta_path
+        )
+    else:
+        conv.orderBy(F.col("turn_idx").desc()).limit(1).select(
+            "conv_id",
+            (F.col("turn_idx") + 1).alias("turn_idx"),
+            F.lit("user").alias("role"),
+            F.lit("a late turn three hours on").alias("text"),
+            F.lit(None).cast("string").alias("tool"),
+            (F.col("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
+        ).write.parquet(delta_path)
     delta = spark.read.parquet(delta_path)
     upd_path = str(tmp_path / "upd")
-    base.unionByName(delta).write.parquet(upd_path)
+    base.join(delta, ["conv_id", "turn_idx"], "left_anti").unionByName(delta).write.parquet(
+        upd_path
+    )
 
     wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
     run_pipeline(spark, wd_a, **args, input_table=base_path)
     splice = backfill.update_lineage
 
-    def killed_at(io, name, stats):
+    def killed_at(io, name):
         if name == table:
             raise _Killed(name)
-        splice(io, name, stats)
+        splice(io, name)
 
     monkeypatch.setattr(backfill, "update_lineage", killed_at)
     with pytest.raises(_Killed):
@@ -350,6 +370,21 @@ def test_rerun_heals_backfill_killed_before_lineage_splice(
     for t in TABLES:
         _assert_same_rows(read_stage(io_a, t), read_stage(io_b, t), t)
         assert verify_partition_lineage(io_a, t), t
+
+
+def test_update_lineage_without_counts_table_raises(spark, tmp_path):
+    """A splice with days to recount into a table whose per-day counts
+    table is lost raises a ``ValueError`` naming the table, instead of
+    adjusting the manifest total by the merge's counts."""
+    io = TableIO(spark, str(tmp_path / "wd"))
+    build = lambda _io: spark.range(5).selectExpr(  # noqa: E731
+        "id", "'c' AS conv_id", "TIMESTAMP'2024-01-01 00:00:00' AS ts"
+    )
+    PipelineRunner(io).run_stage("lost_counts", build)
+    record_unspliced(io, "lost_counts", {dt.date(2024, 1, 1)})
+    shutil.rmtree(tmp_path / "wd" / "_manifest" / "lost_counts_partitions")
+    with pytest.raises(ValueError, match="lost_counts"):
+        update_lineage(io, "lost_counts")
 
 
 def test_backfill_rejects_contradicting_cfg(spark, env):

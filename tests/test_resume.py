@@ -96,7 +96,7 @@ def test_config_change_invalidates_downstream(spark, workdir):
 def test_lineage_detects_tampered_table(spark, workdir):
     """The distributed recount must FAIL (cleanly, not crash) when a
     stage's data no longer matches its recorded per-partition counts, and
-    when the counts table is absent (stats='fast' workdirs)."""
+    when the counts table is absent (a lost counts table)."""
     import shutil as _sh
     from pathlib import Path
 
@@ -108,7 +108,7 @@ def test_lineage_detects_tampered_table(spark, workdir):
     victim = sorted(p for p in table_dir.iterdir() if p.name.startswith("p_day="))[0]
     _sh.rmtree(victim)
     assert verify_partition_lineage(io, "rollup_1d") is False
-    # missing counts table (fast-stats manifests) -> clean False
+    # missing counts table -> clean False
     _sh.rmtree(Path(io.root) / "_manifest" / "ingest_partitions")
     assert verify_partition_lineage(io, "ingest") is False
 

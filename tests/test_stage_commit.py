@@ -156,3 +156,63 @@ def test_ttl_sweep_keeps_lineage_green(spark, workdir):
         m = json.loads((Path(workdir) / "_manifest" / f"{t}.json").read_text())
         assert m["rows"] == io.read(t).count(), t
         assert verify_partition_lineage(io, t), t
+
+
+def test_stats_other_than_full_raises_before_any_write(spark, tmp_path):
+    """``stats`` accepts only ``"full"``: every stage commit writes its
+    per-day counts, so ``"fast"`` is rejected before the workdir exists."""
+    wd = tmp_path / "wd"
+    with pytest.raises(ValueError, match="stats='fast'"):
+        run_pipeline(spark, str(wd), n_convs=2, seed=3, mega_turns=0, stats="fast")
+    assert not wd.exists()
+
+
+
+class _Killed(Exception):
+    pass
+
+
+def test_sweep_killed_inside_counts_swap_heals(spark, tmp_path, monkeypatch):
+    """A TTL sweep killed inside ``rollup_1h``'s counts-table swap, after its
+    first move (the counts table is aside, the expired partitions are gone),
+    is healed by the next ``run_pipeline`` with the same ``ttl_now``: the
+    aside moves back, no stage is rebuilt (a rebuilt ``rollup_1h`` would
+    roll up the already swept ``rollup_1m`` and lose every hour the 1m TTL
+    expired), the sweep splices the days it recorded before its drop, and
+    every table equals that of a sweep that was not killed, lineage green."""
+    from pneuma_treatment_spark.plans import backfill
+    from pneuma_treatment_spark.plans.lineage import read_stage
+
+    kw = dict(n_convs=6, seed=11, mega_turns=0)
+    wd_a, wd_b = str(tmp_path / "wa"), str(tmp_path / "wb")
+    run_pipeline(spark, wd_a, **kw)
+    run_pipeline(spark, wd_b, **kw)
+    io_a, io_b = TableIO(spark, wd_a), TableIO(spark, wd_b)
+    first, last = io_a.read("rollup_1h").agg(F.min("p_day"), F.max("p_day")).first()
+    # the first half of rollup_1h's days expire, and every day of rollup_1m
+    ttl_now = str(first + (last - first) // 2 + dt.timedelta(days=366))
+    run_pipeline(spark, wd_b, **kw, ttl_now=ttl_now)
+    kept = read_stage(io_b, "rollup_1h").count()
+    assert 0 < kept < read_stage(io_a, "rollup_1h").count()
+    assert read_stage(io_b, "rollup_1m").count() == 0
+
+    swap_dir = backfill.swap_dir
+
+    def killed_after_first_move(orig, tmp):
+        if orig.name != "rollup_1h_partitions":
+            return swap_dir(orig, tmp)
+        shutil.move(str(orig), str(orig.parent / f".aside.{orig.name}"))
+        raise _Killed(orig)
+
+    monkeypatch.setattr(backfill, "swap_dir", killed_after_first_move)
+    with pytest.raises(_Killed):
+        run_pipeline(spark, wd_a, **kw, ttl_now=ttl_now)
+    monkeypatch.undo()
+
+    summary = run_pipeline(spark, wd_a, **kw, ttl_now=ttl_now)
+    assert all(r["skipped"] for r in summary["stages"].values())
+    assert read_stage(io_a, "rollup_1h").count() == kept
+    for t in LAYOUTS:
+        a, b = read_stage(io_a, t), read_stage(io_b, t)
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), t
+        assert verify_partition_lineage(io_a, t), t
